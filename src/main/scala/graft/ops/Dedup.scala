@@ -266,8 +266,9 @@ object Dedup {
     * ADAPTIVE two-level pigeonhole banding (round 10): a template-heavy
     * corpus concentrates fingerprints — at the sf1 probe ONE 8-bit band
     * bucket held 9 250 docs and the one-level band join probed 167.6 M
-    * collision rows for 2.26 M surviving pairs (74× overhead,
-    * `tools/ProbeCollisions`). But the second pigeonhole level is not
+    * collision rows for 2.26 M surviving pairs (74× overhead; the
+    * adjudication is bench/README.md "Round-10 adjudication: the
+    * SimHash-family regression"). But the second pigeonhole level is not
     * free either: exploding bands² composite keys per doc cost the whole
     * SimHash family 1.6–2.7× at sf0.1 (BENCH_r09 vs the one-level
     * round-8 baseline), where buckets are small and the wider shuffle

@@ -145,8 +145,9 @@ object AsOfRewrite extends Rule[LogicalPlan] {
   * PER-TASK index build — every task sorts all |R| rows into its
   * per-key version lists, so total work is |R| log |R| × tasks,
   * where BroadcastHashJoin's per-task hash build is nearer O(|R|).
-  * The `graft.tools.ProbeAsOf` measurement (bench/README.md): at a
-  * ~10k-row right side broadcast wins (0.182 s vs 0.216 s merge);
+  * The round-11 as-of probe (bench/README.md, "Round-11 operators at
+  * sf0.1 → sf1"): at a ~10k-row right side broadcast wins (0.182 s
+  * vs 0.216 s merge);
   * at ~100k rows — still comfortably inside 10 MB — it LOSES
   * (0.748 s vs 0.488 s), because 32 tasks each re-sorted 100k rows.
   * The default row limit (32768) sits between the probe's two

@@ -474,7 +474,6 @@ object IndexQueries {
       // the residue split vec_id ≡ 0 / ≡ 3 (mod 6) over the same set.
       val feedDf = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"))
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
       // Segment-append fold (round 21): code rows are append-only (each
       // vec_id arrives once) — writeOnce the batch's encode only and
       // resolve the standing index with readAll, instead of re-writing
@@ -486,19 +485,9 @@ object IndexQueries {
           idxPath, "q226", bid)
         ()
       }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") % 6 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") % 6 === 3))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      graft.streaming.Streams.fold(root, Seq(
+        feedDf.filter(col("vec_id") % 6 === 0),
+        feedDf.filter(col("vec_id") % 6 === 3)))(fold)
       graft.Meta.Versioned.readAll(spark, idxPath)
         .select(col("vec_id"), col("cid"))
     },
@@ -1109,7 +1098,6 @@ object IndexQueries {
       // vec_id is the embeddings PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = graft.streaming.Streams.halfCutoffByKey(feedDf, "vec_id")
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
       val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
         val row = scores(batch.toDF("vec_id", "embedding"))
           .crossJoin(broadcast(thr))
@@ -1127,19 +1115,9 @@ object IndexQueries {
         graft.Meta.Versioned.writeOnce(row, resPath, "q232", bid)
         ()
       }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") <= cutoff))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") > cutoff))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      graft.streaming.Streams.fold(root, Seq(
+        feedDf.filter(col("vec_id") <= cutoff),
+        feedDf.filter(col("vec_id") > cutoff)))(fold)
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -1712,7 +1690,6 @@ object IndexQueries {
           lit("u").as("op"))
       val dels = e.filter(col("vec_id") % 7 === 1)
         .select(col("vec_id"), col("embedding"), lit("d").as("op"))
-      val feed = new graft.streaming.Streams.FileFeed(spark, adds.schema, root)
       val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
         val b = batch.toDF("vec_id", "embedding", "op")
         val ups = IndexLog.upserts(
@@ -1730,21 +1707,10 @@ object IndexQueries {
           ups.unionByName(tmb), idxPath, "q241", bid)
         ()
       }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(adds.filter(col("vec_id") % 6 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(adds.filter(col("vec_id") % 6 === 3).unionByName(upd))
-          q.processAllAvailable()
-          feed.add(dels)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      graft.streaming.Streams.fold(root, Seq(
+        adds.filter(col("vec_id") % 6 === 0),
+        adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
+        dels))(fold)
       // the compaction pass: squash the segment log (the union of every
       // retained version), publish as the next version; the post-compact
       // snapshot must equal the one-shot encode of the live corpus (the
@@ -2063,7 +2029,6 @@ object IndexQueries {
       // batch 1 = the remaining evens.
       val feedDf = e.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 2 === 0)
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
       // Segment-append fold (round 21, guide §2.3/§6): the moment state
       // is additive (per-pos long counts + exact DECIMAL power sums, both
       // order-free), so each batch writeOnces only its OWN aggregate and
@@ -2075,19 +2040,9 @@ object IndexQueries {
           moments(batch.toDF("vec_id", "embedding")), statePath, "q248", bid)
         ()
       }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") % 4 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") % 4 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      graft.streaming.Streams.fold(root, Seq(
+        feedDf.filter(col("vec_id") % 4 === 0),
+        feedDf.filter(col("vec_id") % 4 =!= 0)))(fold)
       // resolve the segment log: the same reduce the old fold ran per
       // batch, once — long and exact-decimal sums are order-free
       val st = graft.Meta.Versioned.readAll(spark, statePath)

@@ -405,26 +405,10 @@ object RetrievalQueries {
         bp.unpersist()
         ()
       }
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
-      @volatile var lastBid = -1L
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("doc_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            if (bid > lastBid) lastBid = bid
-            fold(b, bid)
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("doc_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
+        feedDf.filter(col("doc_id") % 2 =!= 0))
       // deliberate at-least-once replay of the final batch — must no-op
-      fold(feedDf.filter(col("doc_id") % 2 =!= 0), lastBid)
+      fold(odd, graft.streaming.Streams.fold(root, Seq(even, odd))(fold))
       // resolve the segment logs: counts re-aggregate (long sums —
       // order-free), postings union as-is
       val qterms = workloadTerms(

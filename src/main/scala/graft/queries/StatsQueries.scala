@@ -723,7 +723,6 @@ object StatsQueries {
       // collect() in the measured path — the whole corpus used to
       // round-trip through the driver as tuples. Batch membership
       // unchanged: batch b = doc_id ≡ b (mod 4).
-      val feed = new graft.streaming.Streams.FileFeed(spark, docs.schema, root)
       // Segment-append fold (round 21): per-bin (n, pos) counts are
       // additive long sums — writeOnce the batch's partial only,
       // re-reduce the retained segments at read. Same txn markers.
@@ -733,21 +732,8 @@ object StatsQueries {
           path, "q272", bid)
         ()
       }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") % 4 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          (1L until 4L).foreach { b =>
-            feed.add(docs.filter(col("doc_id") % 4 === b))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
+      graft.streaming.Streams.fold(root,
+        (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)))(fold)
       Stats.isotonicFit(
         graft.Meta.Versioned.readAll(spark, path)
           .groupBy("bin").agg(sum("n").as("n"), sum("pos").as("pos")),

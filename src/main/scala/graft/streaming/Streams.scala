@@ -45,12 +45,12 @@ object Streams {
     * standing weak spot: a collected sf10 embeddings feed is ~250 MB of
     * driver heap, and the collect+re-serialize cost taxes the measured
     * fold). Data never visits the driver: `add` is a distributed write,
-    * the source lists files and reads them in executors. One `add` per
-    * intended micro-batch + `processAllAvailable()` between adds
-    * reproduces MemoryStream's deterministic batch boundaries (the file
-    * source drains ALL newly-listed files into the next batch when no
-    * `maxFilesPerTrigger` is set). The real-connector swap stays trivial:
-    * downstream code sees an unbounded DataFrame either way.
+    * the source lists files and reads them in executors. [[fold]]
+    * drains the query after every `add`, which reproduces MemoryStream's
+    * deterministic batch boundaries: one add is one micro-batch (the
+    * file source drains ALL newly-listed files into the next batch when
+    * no `maxFilesPerTrigger` is set). The real-connector swap stays
+    * trivial: downstream code sees an unbounded DataFrame either way.
     *
     * Adds publish ATOMICALLY (round 17): the consumers run under the
     * default polling trigger, so the source can list the feed while an
@@ -92,6 +92,46 @@ object Streams {
         java.nio.file.Paths.get(s"$dir/b$id"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
+  }
+
+  /** The file-fed micro-batch fold every streaming fold query runs:
+    * stages `batches` through a [[FileFeed]] at `root`, one add per
+    * batch, and drives one `foreachBatch(step)` query (checkpoint
+    * `$root/cp`) that is drained after every add, so batch i arrives as
+    * micro-batch i. The query stops in a `finally`, so a throwing
+    * `step` reaches the caller with no query left running. Delivery is
+    * at-least-once; commit modes (`write`, `writeOnce`, segment append)
+    * and replay guards belong to `step`. Returns the last batch id
+    * delivered (-1 if none): callers that replay their final batch
+    * pass it back to `step` themselves, outside this scope.
+    *
+    * The adds and the query run 4 shuffle partitions wide, not the
+    * batch-tuned 32: a batch is a few thousand rows, and stateful
+    * streaming ops instantiate one state store (with its own checkpoint
+    * delta files) PER shuffle partition PER micro-batch. The width is
+    * frozen into the checkpoint at first start, so it is set before the
+    * query begins; size it to state volume, not CPU count. */
+  def fold(root: String, batches: Seq[DataFrame])(
+      step: (DataFrame, Long) => Unit): Long = {
+    val spark = batches.head.sparkSession
+    val feed = new FileFeed(spark, batches.head.schema, root)
+    @volatile var lastBid = -1L
+    graft.Sessions.withShufflePartitions(spark, 4) {
+      feed.add(batches.head)
+      val q = feed.stream.writeStream
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          if (bid > lastBid) lastBid = bid
+          step(batch, bid)
+        }
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/cp")
+        .start()
+      try {
+        q.processAllAvailable()
+        batches.tail.foreach { b => feed.add(b); q.processAllAvailable() }
+      } finally q.stop()
+    }
+    lastBid
   }
 
   /** Harness-side batch-staging cutoff for FileFeed consumers: the
@@ -249,14 +289,4 @@ object Streams {
   /** T6: block until any active query terminates (kafka_DLQ.py:93). */
   def awaitAnyTermination(spark: SparkSession, timeoutMs: Long): Boolean =
     spark.streams.awaitAnyTermination(timeoutMs)
-
-  /** Stateful streaming ops instantiate one state store (with its own
-    * checkpoint delta files) PER shuffle partition PER micro-batch — a
-    * low-rate stream with the batch-tuned width pays 32 state commits
-    * per trigger for a handful of rows. The width is frozen into the
-    * checkpoint at first start, so it must be set before the query
-    * begins; size it to state volume, not CPU count. Delegates to the
-    * shared [[graft.Sessions.withShufflePartitions]]. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    graft.Sessions.withShufflePartitions(spark, n)(body)
 }

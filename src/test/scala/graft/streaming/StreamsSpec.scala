@@ -422,4 +422,53 @@ class StreamsSpec extends SparkSuite {
     // both adds visible, nothing overwritten
     assert(seen.values.flatten.toSet == Set(1L, 2L), s"lost an add: $seen")
   }
+
+  // Three residue batches of 0..29 for the fold harness specs.
+  private def foldBatches = {
+    val src = spark.range(0, 30).toDF("id")
+    (0L until 3L).map(b => src.filter(col("id") % 3 === b))
+  }
+  private val widthKey = "spark.sql.shuffle.partitions"
+  // Runs `body` with the session width at 7, so the fold's 4-wide scope
+  // and its restore are both observable, then puts the old width back.
+  private def atWidth7(body: => Unit): Unit = {
+    val prev = spark.conf.get(widthKey)
+    spark.conf.set(widthKey, "7")
+    try body finally spark.conf.set(widthKey, prev)
+  }
+
+  test("fold: one step per batch in order, ids from 0, returns the last id, " +
+      "restores the shuffle width") {
+    val batches = foldBatches
+    val seen = scala.collection.mutable.Buffer[(Long, Set[Long], String)]()
+    atWidth7 {
+      val last = Streams.fold(tmp("fold").toString, batches) { (batch, bid) =>
+        seen += ((bid, batch.select("id").as[Long].collect().toSet,
+          batch.sparkSession.conf.get(widthKey)))
+        ()
+      }
+      assert(last == 2L)
+      assert(spark.conf.get(widthKey) == "7", "fold must restore the width")
+    }
+    assert(seen.map(_._1) == Seq(0L, 1L, 2L), s"batch ids: $seen")
+    assert(seen.map(_._2) ==
+      batches.map(_.select("id").as[Long].collect().toSet))
+    assert(seen.forall(_._3 == "4"), s"steps must run 4 wide: $seen")
+  }
+
+  test("fold: a throwing step reaches the caller, leaves no query running " +
+      "and restores the shuffle width") {
+    try atWidth7 {
+      val e = intercept[Exception] {
+        Streams.fold(tmp("fold-throw").toString, foldBatches) { (_, bid) =>
+          if (bid == 1L) throw new IllegalStateException("step failed at 1")
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("step failed at 1")),
+        s"the step's failure must reach the caller: $e")
+      assert(spark.streams.active.isEmpty)
+      assert(spark.conf.get(widthKey) == "7", "fold must restore the width")
+    } finally spark.streams.resetTerminated()
+  }
 }

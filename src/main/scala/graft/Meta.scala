@@ -242,17 +242,10 @@ object Meta {
       * FOLD-side replay guard. [[writeOnce]] already skips the WRITE of
       * a replayed batch, but it can only check the marker after the
       * caller has built (and for eager folds, computed) the frame to
-      * write; a fold whose body materializes intermediates
-      * (localCheckpoint, cached kernels) pays the whole recompute just
-      * to have the commit skipped. A redelivered batch whose EVERY
-      * output table already records its txn marker can skip the
-      * recompute outright — pure driver-side listing, the same check
-      * Delta's idempotent-write consumers run against `txn` actions
-      * before doing batch work. Callers with several output tables must
-      * require ALL of them committed (a crash between two writeOnce
-      * calls leaves the markers split; recomputing then is the correct,
-      * conservative path — each writeOnce still skips or applies
-      * per-table). */
+      * write. `graft.streaming.Streams.foldOnce` runs this check for
+      * every output table before calling its step, and skips the step
+      * when all of them record the batch; folds get the guard from that
+      * harness instead of calling this themselves. */
     def committed(spark: SparkSession, path: String, appId: String,
         batchId: Long): Boolean =
       lastTxn(spark, path, appId).exists(_ >= batchId)

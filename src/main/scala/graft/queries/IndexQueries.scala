@@ -441,7 +441,7 @@ object IndexQueries {
     // each encodes against the BROADCAST standing codebook (a pure
     // projection; the codebook is k·d doubles, the only state the
     // encode step ever needs) and appends its codes to the versioned
-    // index table exactly-once (writeOnce per batch id). The query
+    // index table exactly-once (Streams.foldOnce). The query
     // returns the FOLDED CODE TABLE itself and the oracle computes the
     // ONE-SHOT assignment of the whole corpus — so the fold identity
     // fold(encode(b₁), encode(b₂), …) == encode(corpus) is pinned
@@ -475,19 +475,15 @@ object IndexQueries {
       val feedDf = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"))
       // Segment-append fold (round 21): code rows are append-only (each
-      // vec_id arrives once) — writeOnce the batch's encode only and
+      // vec_id arrives once) — commit the batch's encode only and
       // resolve the standing index with readAll, instead of re-writing
-      // the full code table every micro-batch. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        graft.Meta.Versioned.writeOnce(
-          Similarity.ivfEncode(
-            batch.toDF("vec_id", "embedding"), "vec_id", "embedding", stale),
-          idxPath, "q226", bid)
-        ()
+      // the full code table every micro-batch.
+      graft.streaming.Streams.foldOnce(root, Seq(
+          feedDf.filter(col("vec_id") % 6 === 0),
+          feedDf.filter(col("vec_id") % 6 === 3)), Seq(idxPath)) { (batch, _) =>
+        Seq(Similarity.ivfEncode(
+          batch.toDF("vec_id", "embedding"), "vec_id", "embedding", stale))
       }
-      graft.streaming.Streams.fold(root, Seq(
-        feedDf.filter(col("vec_id") % 6 === 0),
-        feedDf.filter(col("vec_id") % 6 === 3)))(fold)
       graft.Meta.Versioned.readAll(spark, idxPath)
         .select(col("vec_id"), col("cid"))
     },
@@ -1098,8 +1094,12 @@ object IndexQueries {
       // vec_id is the embeddings PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = graft.streaming.Streams.halfCutoffByKey(feedDf, "vec_id")
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        val row = scores(batch.toDF("vec_id", "embedding"))
+      // segment-append fold (round 21): one result row per batch is
+      // append-only — commit the delta, resolve with readAll
+      graft.streaming.Streams.foldOnce(root, Seq(
+          feedDf.filter(col("vec_id") <= cutoff),
+          feedDf.filter(col("vec_id") > cutoff)), Seq(resPath)) { (batch, bid) =>
+        Seq(scores(batch.toDF("vec_id", "embedding"))
           .crossJoin(broadcast(thr))
           .agg(count(lit(1)).as("n"),
             sum(when(col("s") > col("thr"), 1L).otherwise(0L))
@@ -1109,15 +1109,8 @@ object IndexQueries {
           .select(lit(bid).as("batch"), col("n"), col("n_flagged"),
             ExactRound.roundRatio(col("n_cov"), col("n"), 6)
               .cast("double").as("coverage"),
-            (col("n_cov") * 100 < col("n") * 85).as("breach"))
-        // segment-append fold (round 21): one result row per batch is
-        // append-only — writeOnce the delta, resolve with readAll
-        graft.Meta.Versioned.writeOnce(row, resPath, "q232", bid)
-        ()
+            (col("n_cov") * 100 < col("n") * 85).as("breach")))
       }
-      graft.streaming.Streams.fold(root, Seq(
-        feedDf.filter(col("vec_id") <= cutoff),
-        feedDf.filter(col("vec_id") > cutoff)))(fold)
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -1640,7 +1633,7 @@ object IndexQueries {
     // UPSERT re-embedded vectors and TOMBSTONE deleted ones, then
     // periodically COMPACT its segment log. The log is data
     // (id, cid, seg, deleted) — ops/IndexLog.scala; three stream
-    // batches fold exactly-once via writeOnce: (1) first half of the
+    // batches fold exactly-once via Streams.foldOnce: (1) first half of the
     // new vectors, (2) second half PLUS re-embeds (vec_id % 9 = 1
     // vectors arrive re-encoded with their embedding reversed — a
     // model-refresh upsert), (3) tombstones for vec_id % 7 = 1. Each
@@ -1690,7 +1683,15 @@ object IndexQueries {
           lit("u").as("op"))
       val dels = e.filter(col("vec_id") % 7 === 1)
         .select(col("vec_id"), col("embedding"), lit("d").as("op"))
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      // segment-append fold (round 21): the IndexLog is append-only by
+      // design (resolve/compact pick the latest seg per key), so each
+      // batch commits only its delta rows; the standing log is the
+      // union of retained segments. The full-rewrite fold re-wrote the
+      // whole log every batch.
+      graft.streaming.Streams.foldOnce(root, Seq(
+          adds.filter(col("vec_id") % 6 === 0),
+          adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
+          dels), Seq(idxPath)) { (batch, bid) =>
         val b = batch.toDF("vec_id", "embedding", "op")
         val ups = IndexLog.upserts(
           Similarity.ivfEncode(b.filter(col("op") === "u")
@@ -1698,19 +1699,8 @@ object IndexQueries {
           "vec_id", bid + 1)
         val tmb = IndexLog.tombstones(
           b.filter(col("op") === "d").select("vec_id"), "vec_id", bid + 1)
-        // segment-append fold (round 21): the IndexLog is append-only by
-        // design (resolve/compact pick the latest seg per key), so each
-        // batch writeOnces only its delta rows; the standing log is the
-        // union of retained segments. The full-rewrite fold re-wrote the
-        // whole log every batch. Same txn markers.
-        graft.Meta.Versioned.writeOnce(
-          ups.unionByName(tmb), idxPath, "q241", bid)
-        ()
+        Seq(ups.unionByName(tmb))
       }
-      graft.streaming.Streams.fold(root, Seq(
-        adds.filter(col("vec_id") % 6 === 0),
-        adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
-        dels))(fold)
       // the compaction pass: squash the segment log (the union of every
       // retained version), publish as the next version; the post-compact
       // snapshot must equal the one-shot encode of the live corpus (the
@@ -1962,7 +1952,7 @@ object IndexQueries {
     // maintains incrementally with a state table bounded by d² — 2 080
     // rows at ANY corpus size, the ideal fold: per batch, one compiled
     // pair-products pass over the batch plus a 2 080-row re-aggregate,
-    // exactly-once via writeOnce. Dim moments ride the same table at
+    // exactly-once via Streams.foldOnce. Dim moments ride the same table at
     // pos = −i (pairs at pos ≥ 0) so one fold commits one snapshot.
     // Because every sum is an exact integer, fold == one-shot to the
     // BIT — the oracle is q243's one-shot SQL verbatim, so the folded
@@ -2031,18 +2021,15 @@ object IndexQueries {
         .filter(col("vec_id") % 2 === 0)
       // Segment-append fold (round 21, guide §2.3/§6): the moment state
       // is additive (per-pos long counts + exact DECIMAL power sums, both
-      // order-free), so each batch writeOnces only its OWN aggregate and
+      // order-free), so each batch commits only its OWN aggregate and
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
-      // re-writing the full dims+pairs grid. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        graft.Meta.Versioned.writeOnce(
-          moments(batch.toDF("vec_id", "embedding")), statePath, "q248", bid)
-        ()
+      // re-writing the full dims+pairs grid.
+      graft.streaming.Streams.foldOnce(root, Seq(
+          feedDf.filter(col("vec_id") % 4 === 0),
+          feedDf.filter(col("vec_id") % 4 =!= 0)), Seq(statePath)) {
+        (batch, _) => Seq(moments(batch.toDF("vec_id", "embedding")))
       }
-      graft.streaming.Streams.fold(root, Seq(
-        feedDf.filter(col("vec_id") % 4 === 0),
-        feedDf.filter(col("vec_id") % 4 =!= 0)))(fold)
       // resolve the segment log: the same reduce the old fold ran per
       // batch, once — long and exact-decimal sums are order-free
       val st = graft.Meta.Versioned.readAll(spark, statePath)

@@ -343,12 +343,12 @@ object RetrievalQueries {
     // the anchor matcher never needs cross-batch state because a
     // phrase cannot span documents) and the trigram count table (an
     // abelian sum fold — batch partials merge by key, so batch
-    // MEMBERSHIP cannot move it). Both folds commit through
-    // Versioned.writeOnce txn markers (a postings re-append would
-    // duplicate hits, a count re-fold would double-count — neither is
-    // idempotent), and the query REPLAYS its final batch under the
-    // original batch id after the stream stops: the oracle only matches
-    // because the replay no-ops. Final answer = workload from the
+    // MEMBERSHIP cannot move it). Both folds commit exactly-once
+    // through Streams.foldOnce (a postings re-append would duplicate
+    // hits, a count re-fold would double-count — neither is
+    // idempotent), which REPLAYS the final batch under its original
+    // batch id after the stream stops: the oracle only matches because
+    // the replay no-ops. Final answer = workload from the
     // RESOLVED count state + anchor match over the RESOLVED postings —
     // the oracle is q281's one-shot SQL VERBATIM, pinning
     // fold(b₁) ⊕ fold(b₂) == one-shot row-for-row.
@@ -388,27 +388,22 @@ object RetrievalQueries {
         postings(toks(feedDf)).limit(0), postPath)
       Versioned.write(
         ngramCounts(toks(feedDf), 3).limit(0), cntPath)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        // one tokenize+posexplode of the batch shared by both folds
-        // (the postings append and the trigram-count delta each built
-        // their own before); released after the two commits.
-        // Segment-append fold (round 21, guide §2.3/§6): both artifacts
-        // take the batch's DELTA only — postings rows are append-only
-        // and trigram counts are additive, so the standing tables are
-        // the union of retained segments (counts re-aggregated at read).
-        // The full-rewrite fold re-wrote the corpus-token-sized postings
-        // table every micro-batch; now a batch writes O(|batch|). Same
-        // txn markers, same replay-no-op contract.
-        val bp = postings(toks(batch.toDF("doc_id", "text"))).cache()
-        Versioned.writeOnce(bp, postPath, "q286post", bid)
-        Versioned.writeOnce(ngramCountsFrom(bp, 3), cntPath, "q286cnt", bid)
-        bp.unpersist()
-        ()
+      // Segment-append fold (round 21, guide §2.3/§6): both artifacts
+      // take the batch's DELTA only — postings rows are append-only
+      // and trigram counts are additive, so the standing tables are
+      // the union of retained segments (counts re-aggregated at read).
+      // The full-rewrite fold re-wrote the corpus-token-sized postings
+      // table every micro-batch; now a batch writes O(|batch|).
+      graft.streaming.Streams.foldOnce(root, Seq(
+          feedDf.filter(col("doc_id") % 2 === 0),
+          feedDf.filter(col("doc_id") % 2 =!= 0)), Seq(postPath, cntPath)) {
+        (batch, _) =>
+        // one tokenize+posexplode of the batch, materialized once and
+        // read by both commits (the postings append and the trigram-
+        // count delta)
+        val bp = postings(toks(batch.toDF("doc_id", "text"))).localCheckpoint()
+        Seq(bp, ngramCountsFrom(bp, 3))
       }
-      val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
-        feedDf.filter(col("doc_id") % 2 =!= 0))
-      // deliberate at-least-once replay of the final batch — must no-op
-      fold(odd, graft.streaming.Streams.fold(root, Seq(even, odd))(fold))
       // resolve the segment logs: counts re-aggregate (long sums —
       // order-free), postings union as-is
       val qterms = workloadTerms(

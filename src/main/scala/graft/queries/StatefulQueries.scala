@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.{Dedup, Merge, Sessionize, Similarity, Text}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Stateful-streaming and embedding-dedup queries beyond the reference's
@@ -29,6 +30,33 @@ object StatefulQueries {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** The events fixture of `dir` as a file stream. The file source wants
+    * a directory, so the single parquet file is symlinked into a fresh
+    * temp dir; each call is an independent scan. */
+  private def eventsStream(spark: SparkSession, dir: String,
+      tsLong: Boolean): DataFrame = {
+    val staged = graft.Tmp.dir("graft-events-in")
+    java.nio.file.Files.createSymbolicLink(staged.resolve("events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    spark.readStream.schema(eventsRawSchema(tsLong)).parquet(staged.toString)
+  }
+
+  /** Runs `df` to completion (AvailableNow) into a memory table named
+    * `graft_<tag>_<uuid>` and returns that table. The state width is
+    * sized to the key volume (a few hundred groups), not the batch CPU
+    * count — see Streams.fold. */
+  private def drainToMemory(df: DataFrame, tag: String,
+      mode: OutputMode): DataFrame = {
+    val spark = df.sparkSession
+    val name = s"graft_${tag}_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    graft.Sessions.withShufflePartitions(spark, 4) {
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    spark.table(name)
+  }
+
   val all: Seq[Q] = Seq(
 
     // ---- Stateful streaming aggregation: event-time daily windows over
@@ -43,30 +71,14 @@ object StatefulQueries {
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
-      // the fixture is a single parquet file; the file stream source wants
-      // a directory — stage a symlink to it in a temp dir
-      val streamDir = graft.Tmp.dir("graft-q31-in")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
       val tsLong = Tables.eventsTsIsNanosLong(spark, dir)
-      val raw = spark.readStream.schema(eventsRawSchema(tsLong))
-        .parquet(streamDir.toString)
-      val ev = raw.withColumn("ts", Tables.eventsTsNtz(tsLong))
-      val agg = ev
+      val agg = eventsStream(spark, dir, tsLong)
+        .withColumn("ts", Tables.eventsTsNtz(tsLong))
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(
           count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(12, 2))).cast("double").as("total_value"))
-      val name = "graft_q31_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      // state width sized to the window-key volume (~few hundred groups),
-      // not the batch CPU count — see Streams.fold
-      graft.Sessions.withShufflePartitions(spark, 4) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name).select(
+      drainToMemory(agg, "q31", OutputMode.Complete()).select(
         col("w.start").as("day"), col("event_type"),
         col("n_events"), col("total_value"))
     },
@@ -222,15 +234,10 @@ object StatefulQueries {
         |  SELECT event_id, value AS flag_value FROM e WHERE event_id % 10 = 0)
         |SELECT e.event_id, e.user_id, e.ts, e.value, f.flag_value
         |FROM e JOIN f USING (event_id)""".stripMargin) { (spark, dir) =>
-      val streamDir = graft.Tmp.dir("graft-q45-in")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
       // watermarks require TIMESTAMP (not NTZ); the session runs in UTC so
       // the wall-clock values are identical — cast to NTZ only on output
       val tsLong45 = Tables.eventsTsIsNanosLong(spark, dir)
-      def src = spark.readStream.schema(eventsRawSchema(tsLong45))
-        .parquet(streamDir.toString)
+      def src = eventsStream(spark, dir, tsLong45)
         .withColumn("ts", Tables.eventsTsLtz(tsLong45))
       val left = src.select("event_id", "user_id", "ts", "value")
         .withWatermark("ts", "1 day")
@@ -244,13 +251,7 @@ object StatefulQueries {
           col("f_ts") <= col("ts") + expr("INTERVAL 1 HOUR"))
         .select(col("event_id"), col("user_id"),
           col("ts").cast("timestamp_ntz").as("ts"), col("value"), col("flag_value"))
-      val name = "graft_q45_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.Sessions.withShufflePartitions(spark, 4) {
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name)
+      drainToMemory(joined, "q45", OutputMode.Append())
     },
 
     // ---- Streaming dedup: dropDuplicates keyed on (user_id, event_type)
@@ -260,25 +261,14 @@ object StatefulQueries {
     Q(
       "q46_stream_dedup",
       "SELECT DISTINCT user_id, event_type FROM events") { (spark, dir) =>
-      val streamDir = graft.Tmp.dir("graft-q46-in")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
       // TIMESTAMP (not NTZ) for the watermark column; it is not emitted
       val tsLong46 = Tables.eventsTsIsNanosLong(spark, dir)
-      val src = spark.readStream.schema(eventsRawSchema(tsLong46))
-        .parquet(streamDir.toString)
+      val src = eventsStream(spark, dir, tsLong46)
         .withColumn("ts", Tables.eventsTsLtz(tsLong46))
         .withWatermark("ts", "1 day")
         .dropDuplicates("user_id", "event_type")
         .select("user_id", "event_type")
-      val name = "graft_q46_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.Sessions.withShufflePartitions(spark, 4) {
-        val q = src.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name)
+      drainToMemory(src, "q46", OutputMode.Append())
     },
 
     // ---- Stream-static join: the event stream enriched against a
@@ -293,25 +283,13 @@ object StatefulQueries {
         |  CAST(sum(CAST(e.value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
         |GROUP BY 1""".stripMargin) { (spark, dir) =>
-      val streamDir = graft.Tmp.dir("graft-q59-in")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
       val dim = Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val joined = spark.readStream
-        .schema(eventsRawSchema(Tables.eventsTsIsNanosLong(spark, dir)))
-        .parquet(streamDir.toString)
+      val joined = eventsStream(spark, dir, Tables.eventsTsIsNanosLong(spark, dir))
         .select(col("user_id"), col("value"))
         .join(dim, col("user_id") === col("c_custkey"))
         .select("c_mktsegment", "value")
-      val name = "graft_q59_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.Sessions.withShufflePartitions(spark, 4) {
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name)
+      drainToMemory(joined, "q59", OutputMode.Append())
         .groupBy("c_mktsegment")
         .agg(
           count(lit(1)).as("n_events"),
@@ -340,25 +318,13 @@ object StatefulQueries {
         |SELECT user_id, min(ts) AS session_start,
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM s GROUP BY user_id, session_id""".stripMargin) { (spark, dir) =>
-      val streamDir = graft.Tmp.dir("graft-q61-in")
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
       val tsLong61 = Tables.eventsTsIsNanosLong(spark, dir)
-      val src = spark.readStream.schema(eventsRawSchema(tsLong61))
-        .parquet(streamDir.toString)
+      val agg = eventsStream(spark, dir, tsLong61)
         .withColumn("ts", Tables.eventsTsLtz(tsLong61))
         .withWatermark("ts", "1 day")
-      val agg = src
         .groupBy(col("user_id"), session_window(col("ts"), "24 hours").as("w"))
         .agg(count(lit(1)).as("n_events"))
-      val name = "graft_q61_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.Sessions.withShufflePartitions(spark, 4) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name).select(
+      drainToMemory(agg, "q61", OutputMode.Complete()).select(
         col("user_id"),
         col("w.start").cast("timestamp_ntz").as("session_start"),
         col("n_events"))
@@ -443,12 +409,10 @@ object StatefulQueries {
     // aggregate of v2, same contract as q100. Per-batch cost is
     // |micro-batch| + |groups|; the orders snapshot is never rescanned.
     // Delivery (round 8): foreachBatch is at-least-once and a sum fold
-    // is NOT idempotent, so each fold commits through Versioned
-    // .writeOnce — the Delta `txn` pattern, batchId recorded atomically
-    // with the snapshot — and the query itself REPLAYS its final batch
-    // under the original batchId after the stream stops; the oracle
-    // only matches because the replay no-ops (q115 pins the idempotent
-    // sketch twin; this pins the non-idempotent one).
+    // is NOT idempotent, so each fold commits exactly-once through
+    // Streams.foldOnce, whose final-batch replay the oracle match pins
+    // (q115 pins the idempotent sketch twin; this pins the
+    // non-idempotent one).
     Q(
       "q103_stream_incremental_agg",
       """SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt,
@@ -474,22 +438,17 @@ object StatefulQueries {
         Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
       // two deterministic key-parity batches (update pre/post images of
       // one key may land in DIFFERENT batches; the abelian fold absorbs
-      // it) + at-least-once replay of the final batch under its original
-      // batch id — writeOnce's txn markers must make it a no-op
+      // it)
       val feedDf = graft.Meta.Versioned
         .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("change_type"))
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        val standing = graft.Meta.Versioned.read(spark, aggPath)
-        graft.Meta.Versioned.writeOnce(
-          Incremental.maintainSumCount(standing, batch,
-            Seq("o_custkey"), "o_totalprice"), aggPath, "q103", bid)
-        ()
-      }
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      fold(odd, Streams.fold(root, Seq(even, odd))(fold))
+      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
+        Seq(Incremental.maintainSumCount(graft.Meta.Versioned.read(spark, aggPath),
+          batch, Seq("o_custkey"), "o_totalprice"))
+      }
       graft.Meta.Versioned.read(spark, aggPath)
         .select(col("o_custkey"), col("cnt"), col("total").cast("double"))
     },
@@ -498,13 +457,13 @@ object StatefulQueries {
     // sketches of the shingle stream folded into a standing per-source
     // sketch table through foreachBatch + versioned snapshots — the
     // sketch twin of q103's sum fold, with an ALGEBRAIC replay shield
-    // rather than a transactional one: bottom-k union is idempotent as
-    // well as abelian, so at-least-once replay of a whole batch is
-    // absorbed by the math itself (byte-level merge idempotence pinned
-    // in KmvSpec), where q103's non-idempotent sums need writeOnce's
-    // txn markers. Both delivery shapes are now exactly-once.
-    // The query replays
-    // one batch deliberately; the streamed estimate must still EQUAL the
+    // on top of the transactional one: bottom-k union is idempotent as
+    // well as abelian, so a whole batch redelivered under a NEW batch
+    // id (which no txn marker can recognise) is absorbed by the math
+    // itself (byte-level merge idempotence pinned in KmvSpec), where
+    // q103's non-idempotent sums rely on the markers alone.
+    // The query stages
+    // one batch twice deliberately; the streamed estimate must still EQUAL the
     // one-shot direct sketch bit for bit (bottom-k of a union is
     // order- and multiplicity-invariant), which the rolled_matches
     // boolean pins. Oracle: exact per-source NDV + bound booleans.
@@ -526,7 +485,7 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q115").toString
       val skPath = s"$root/sketches"
       val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
-      def sketchOf(df: org.apache.spark.sql.DataFrame) =
+      def sketchOf(df: DataFrame) =
         Dedup.withShingleHashes(df, "text", 3)
           .select(col("source"), explode(col("hv")).as("h"))
           .groupBy("source")
@@ -535,18 +494,17 @@ object StatefulQueries {
       graft.Meta.Versioned.write(sketchOf(docs.limit(0)), skPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the corpus text; batch membership unchanged
-      // (key parity, with the first half replayed verbatim as its own
-      // batch — KMV merge is idempotent set union, so the doubled
-      // batch must be absorbed)
+      // (key parity, with the first half staged verbatim as its own
+      // batch — it arrives under a NEW batch id, so the txn markers
+      // cannot skip it and KMV merge, idempotent set union, must absorb
+      // the doubled batch)
       val even = docs.filter(col("doc_id") % 2 === 0)
-      // at-least-once: the SAME half staged again — idempotent fold
-      Streams.fold(root, Seq(even, even,
-          docs.filter(col("doc_id") % 2 =!= 0))) { (batch, _) =>
-        val standing = graft.Meta.Versioned.read(spark, skPath)
-        val merged = standing.unionByName(sketchOf(batch))
+      Streams.foldOnce(root, Seq(even, even,
+          docs.filter(col("doc_id") % 2 =!= 0)), Seq(skPath)) { (batch, _) =>
+        Seq(graft.Meta.Versioned.read(spark, skPath)
+          .unionByName(sketchOf(batch))
           .groupBy("source")
-          .agg(call_function("graft_kmv_merge", col("sk")).as("sk"))
-        graft.Meta.Versioned.write(merged, skPath)
+          .agg(call_function("graft_kmv_merge", col("sk")).as("sk")))
       }
       val streamed = graft.Meta.Versioned.read(spark, skPath)
         .select(col("source"),
@@ -577,8 +535,8 @@ object StatefulQueries {
     // continuous ingest — the production shape of a standing data-card
     // (per-group mean/variance maintained from the change feed, never a
     // rescan). Composes the round-8 pieces end to end: maintainMoments
-    // per micro-batch, committed exactly-once through writeOnce (the
-    // final batch is REPLAYED in-query under its original batchId — a
+    // per micro-batch, committed exactly-once through Streams.foldOnce
+    // (which REPLAYS the final batch under its original batchId — a
     // doubled Σv² would corrupt the variance, so the oracle match IS
     // the exactly-once proof), and the mean/var presentation goes
     // through ExactRound's integer-space rounding, same contract and
@@ -613,22 +571,19 @@ object StatefulQueries {
       val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
       graft.Meta.Versioned.write(
         Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
-      // key-parity batches + at-least-once replay (Σv² doubling would
-      // be visible in var_price, so the oracle match pins exactly-once)
+      // key-parity batches; foldOnce replays the last one (Σv² doubling
+      // would be visible in var_price, so the oracle match pins
+      // exactly-once)
       val feedDf = graft.Meta.Versioned
         .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("change_type"))
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        graft.Meta.Versioned.writeOnce(
-          Incremental.maintainMoments(
-            graft.Meta.Versioned.read(spark, aggPath), batch,
-            Seq("o_custkey"), "o_totalprice"), aggPath, "q124", bid)
-        ()
-      }
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      fold(odd, Streams.fold(root, Seq(even, odd))(fold))
+      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
+        Seq(Incremental.maintainMoments(graft.Meta.Versioned.read(spark, aggPath),
+          batch, Seq("o_custkey"), "o_totalprice"))
+      }
       val m = graft.Meta.Versioned.read(spark, aggPath)
       val s1c = col("s1") * 100
       val s2c4 = col("s2") * 10000
@@ -649,9 +604,9 @@ object StatefulQueries {
     // table maintained from the v1→v2 change feed instead of recomputed
     // — the standing data-observability dashboard shape. The per-cell
     // (cnt, Σ n_chars) fold is Incremental.maintainSumCount through
-    // foreachBatch with Versioned.writeOnce (batchId txn markers, the
-    // exactly-once contract), the final batch is replayed in-query as
-    // the proof, and the presentation joins the maintained table
+    // Streams.foldOnce (batchId txn markers, the exactly-once contract,
+    // with the final batch replayed as the proof), and the presentation
+    // joins the maintained table
     // against the direct v1 aggregate. The oracle IS q127's SQL — the
     // streamed maintenance must land on the recompute's exact values.
     Q(
@@ -667,23 +622,19 @@ object StatefulQueries {
       val v2 = docs.filter(col("doc_id") % 7 =!= 0)
       graft.Meta.Versioned.write(
         Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars"), aggPath)
-      // key-parity batches + at-least-once replay (a double-applied
-      // delta would shift n_v2/chars_v2 in every touched cell — the
-      // oracle match against the direct recompute pins exactly-once)
+      // key-parity batches; foldOnce replays the last one (a double-
+      // applied delta would shift n_v2/chars_v2 in every touched cell —
+      // the oracle match against the direct recompute pins exactly-once)
       val feedDf = graft.Meta.Versioned
         .snapshotDiff(v1, v2, Seq("doc_id"), preimages = true)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars"), col("change_type"))
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        graft.Meta.Versioned.writeOnce(
-          Incremental.maintainSumCount(
-            graft.Meta.Versioned.read(spark, aggPath), batch,
-            Seq("lang", "source"), "n_chars"), aggPath, "q133", bid)
-        ()
-      }
       val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
         feedDf.filter(col("doc_id") % 2 =!= 0))
-      fold(odd, Streams.fold(root, Seq(even, odd))(fold))
+      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
+        Seq(Incremental.maintainSumCount(graft.Meta.Versioned.read(spark, aggPath),
+          batch, Seq("lang", "source"), "n_chars"))
+      }
       val maintained = graft.Meta.Versioned.read(spark, aggPath)
         .select(col("lang"), col("source"), col("cnt").as("n_v2"),
           col("total").cast("long").as("chars_v2"))
@@ -714,7 +665,7 @@ object StatefulQueries {
     // across micro-batches (ingest-by-id, the natural shape for an
     // append-only corpus), each micro-batch scores its docs against
     // the standing shingle-ownership table and folds its own minima
-    // back in with exactly-once `writeOnce` per batch id. Ascending
+    // back in with exactly-once commits per batch id. Ascending
     // arrival makes per-arrival scoring equal the full-union scoring
     // (a later doc can never steal ownership from an earlier one —
     // its id is larger), so the streamed result is BIT-identical to
@@ -762,54 +713,42 @@ object StatefulQueries {
       // doc_id is the documents PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = Streams.halfCutoffByKey(feedDf, "doc_id")
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        // Replay guard (round 21, §5): the fold materializes two
-        // localCheckpoints before writeOnce can consult the txn markers,
-        // so the in-query redelivery paid a full shingle+fold pass for
-        // two skipped commits. Skip up front when BOTH tables already
-        // record this batchId (see Versioned.committed).
-        if (!(graft.Meta.Versioned.committed(spark, ownPath, "q165own", bid)
-            && graft.Meta.Versioned.committed(spark, resPath, "q165res",
-              bid))) {
-          val bsh = Dedup.withShingleHashes(
-            batch.toDF("doc_id", "text"), "text", 3)
-            .filter(size(col("hv")) > 0)
-            .select(col("doc_id"), explode(col("hv")).as("h"))
-            .localCheckpoint()
-          val bOwn = bsh.groupBy("h").agg(min("doc_id").as("b_owner"))
-          val standing = graft.Meta.Versioned.read(spark, ownPath)
-          val folded = bOwn.join(standing, Seq("h"), "left")
-            .select(col("h"),
-              least(coalesce(col("owner"), col("b_owner")), col("b_owner"))
-                .as("owner"))
-            .localCheckpoint()
-          val scored = bsh.join(folded, Seq("h"))
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_shingles"),
-              sum(when(col("owner") === col("doc_id"), 1L).otherwise(0L))
-                .as("n_novel"))
-            .withColumn("novelty",
-              graft.functions.ExactRound
-                .roundRatio(col("n_novel"), col("n_shingles"), 6)
-                .cast("double"))
-          // own stays a full-rewrite fold: a batch doc with a smaller id
-          // can STEAL ownership of a standing hash (least() below), so the
-          // table is a keyed upsert, not an append-only log. res IS
-          // append-only (per-doc scores, batch doc sets disjoint) — the
-          // round-21 segment-append shape: writeOnce the delta, resolve
-          // with readAll.
-          graft.Meta.Versioned.writeOnce(
-            standing.join(bOwn, Seq("h"), "left_anti").unionByName(folded),
-            ownPath, "q165own", bid)
-          graft.Meta.Versioned.writeOnce(scored, resPath, "q165res", bid)
-        }
-        ()
+      // The fold materializes two localCheckpoints, so foldOnce's replay
+      // guard (skip a batch both tables already record) is what keeps
+      // the final-batch replay from paying a full shingle+fold pass.
+      Streams.foldOnce(root, Seq(feedDf.filter(col("doc_id") <= cutoff),
+          feedDf.filter(col("doc_id") > cutoff)), Seq(ownPath, resPath)) {
+        (batch, _) =>
+        val bsh = Dedup.withShingleHashes(
+          batch.toDF("doc_id", "text"), "text", 3)
+          .filter(size(col("hv")) > 0)
+          .select(col("doc_id"), explode(col("hv")).as("h"))
+          .localCheckpoint()
+        val bOwn = bsh.groupBy("h").agg(min("doc_id").as("b_owner"))
+        val standing = graft.Meta.Versioned.read(spark, ownPath)
+        val folded = bOwn.join(standing, Seq("h"), "left")
+          .select(col("h"),
+            least(coalesce(col("owner"), col("b_owner")), col("b_owner"))
+              .as("owner"))
+          .localCheckpoint()
+        val scored = bsh.join(folded, Seq("h"))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_shingles"),
+            sum(when(col("owner") === col("doc_id"), 1L).otherwise(0L))
+              .as("n_novel"))
+          .withColumn("novelty",
+            graft.functions.ExactRound
+              .roundRatio(col("n_novel"), col("n_shingles"), 6)
+              .cast("double"))
+        // own stays a full-rewrite fold: a batch doc with a smaller id
+        // can STEAL ownership of a standing hash (least() above), so the
+        // table is a keyed upsert, not an append-only log. res IS
+        // append-only (per-doc scores, batch doc sets disjoint) — the
+        // round-21 segment-append shape: commit the delta, resolve with
+        // readAll.
+        Seq(standing.join(bOwn, Seq("h"), "left_anti").unionByName(folded),
+          scored)
       }
-      val (lo, hi) = (feedDf.filter(col("doc_id") <= cutoff),
-        feedDf.filter(col("doc_id") > cutoff))
-      // at-least-once replay of the final batch: writeOnce must make the
-      // double-applied fold a no-op on both tables
-      fold(hi.toDF("doc_id", "text"), Streams.fold(root, Seq(lo, hi))(fold))
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -819,14 +758,15 @@ object StatefulQueries {
     // state (h → owner site; strings re-derived from the lake at
     // hash-hits only, so state stays ~24 B/window — the scale story on
     // Dedup.exactSubstrBatch) and appends its rewrite + new owners
-    // with exactly-once writeOnce markers. Ascending arrival makes
-    // per-batch ownership equal the global (doc, pos) order, so the
-    // streamed result is BIT-identical to q277's one-shot rewrite —
-    // the oracle IS q277's SQL. The final batch replays in-query:
-    // the fold is algebraically a no-op on re-application (every
-    // window matches state, owner sites excluded from cover, empty
-    // owner append) AND the txn markers skip the writes — both halves
-    // of the exactly-once contract exercised.
+    // with exactly-once txn markers (Streams.foldOnce). Ascending
+    // arrival makes per-batch ownership equal the global (doc, pos)
+    // order, so the streamed result is BIT-identical to q277's one-shot
+    // rewrite — the oracle IS q277's SQL. foldOnce replays the final
+    // batch; its guard finds both tables' markers and skips the step,
+    // so what the oracle pins is the marker skip. (Re-applying the fold
+    // would also be an algebraic no-op — every window matches state,
+    // owner sites are excluded from cover, the owner append is empty —
+    // but the replay never executes it.)
     Q(
       "q280_stream_exact_substring",
       CurationQueries.exactSubstrOracleSql) { (spark, dir) =>
@@ -861,40 +801,23 @@ object StatefulQueries {
       val cutoff = Streams.halfCutoffByKey(docs, "doc_id")
       // Segment-append fold (round 21, guide §2.3/§6 — write the DELTA,
       // not the snapshot): ownership rows and rewrite rows are append-
-      // only, so each fold writeOnces only its batch's new rows and the
+      // only, so each fold commits only its batch's new rows and the
       // standing state is the union of retained segments
       // (Versioned.readAll). Identical rows to the full-rewrite fold —
       // union of deltas == last rewritten snapshot — but each batch
       // writes O(|delta|) instead of re-writing the corpus-sized
       // ownership table (at 100 TB, the difference between a micro-batch
-      // and a corpus rewrite per trigger). Same txn markers, same
-      // replay-no-op contract.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        // Replay guard (round 21, §5 — skip compute the txn log proves
-        // redundant): exactSubstrBatch materializes its kernels eagerly
-        // (caches + localCheckpoints), so a redelivered batch used to pay
-        // the whole fold just for writeOnce to skip both commits. When
-        // EVERY output table already records this batchId, the fold
-        // no-ops up front — two driver-side marker listings. A split
-        // marker state (crash between the two commits) fails the guard
-        // and recomputes; writeOnce then skips/applies per table.
-        if (!(graft.Meta.Versioned.committed(spark, ownPath, "q280own", bid)
-            && graft.Meta.Versioned.committed(spark, resPath, "q280res",
-              bid))) {
-          val standing = graft.Meta.Versioned.readAll(spark, ownPath)
-          val (rewritten, newOwners) = Dedup.exactSubstrBatch(
-            standing, batch.toDF("doc_id", "text"), docs,
-            "doc_id", "text", minLen = 20)
-          graft.Meta.Versioned.writeOnce(newOwners, ownPath, "q280own", bid)
-          graft.Meta.Versioned.writeOnce(rewritten, resPath, "q280res", bid)
-        }
-        ()
+      // and a corpus rewrite per trigger). exactSubstrBatch materializes
+      // its kernels eagerly (caches + localCheckpoints), so foldOnce's
+      // replay guard is what spares the final-batch replay that work.
+      Streams.foldOnce(root, Seq(docs.filter(col("doc_id") <= cutoff),
+          docs.filter(col("doc_id") > cutoff)), Seq(ownPath, resPath)) {
+        (batch, _) =>
+        val (rewritten, newOwners) = Dedup.exactSubstrBatch(
+          graft.Meta.Versioned.readAll(spark, ownPath),
+          batch.toDF("doc_id", "text"), docs, "doc_id", "text", minLen = 20)
+        Seq(newOwners, rewritten)
       }
-      val (lo, hi) = (docs.filter(col("doc_id") <= cutoff),
-        docs.filter(col("doc_id") > cutoff))
-      // at-least-once replay of the final batch: algebraic no-op + txn
-      // markers, both pinned by the oracle match downstream
-      fold(hi.toDF("doc_id", "text"), Streams.fold(root, Seq(lo, hi))(fold))
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -924,11 +847,11 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q121").toString
       val cmPath = s"$root/cm"; val candPath = s"$root/cands"
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      def toksOf(df: org.apache.spark.sql.DataFrame) =
+      def toksOf(df: DataFrame) =
         df.select(explode(Text.tokens(col("text"))).as("term"))
-      def cmOf(df: org.apache.spark.sql.DataFrame) =
+      def cmOf(df: DataFrame) =
         toksOf(df).agg(call_function("graft_cm_sketch", col("term")).as("sk"))
-      def candsOf(df: org.apache.spark.sql.DataFrame) =
+      def candsOf(df: DataFrame) =
         toksOf(df)
           .agg(call_function("graft_freq_sketch", col("term"), lit(400)).as("c"))
           .select(explode(col("c")).as("term"))
@@ -937,19 +860,19 @@ object StatefulQueries {
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect(); key-parity batch membership unchanged
       // CM merge is elementwise ADDITION — a replayed batch would
-      // double its counts — so both folds commit through writeOnce
-      // (txn markers, round 8). The two tables are separate commit
-      // points: a crash between them replays the batch, the cm fold
-      // no-ops on its marker, and only the missing cands fold runs.
+      // double its counts — so both folds commit exactly-once through
+      // foldOnce (txn markers, round 8). The two tables are separate
+      // commit points: a crash between them replays the batch, the cm
+      // commit no-ops on its marker, and only the missing cands commit
+      // applies.
       // Segment-append folds (round 21): CM merge is associative
       // elementwise addition and the candidate set is a distinct
       // union — both resolve order-free from per-batch segments, so
-      // each batch writeOnces only its OWN sketch / candidate rows
+      // each batch commits only its OWN sketch / candidate rows
       // and the standing read+rewrite per trigger disappears.
-      Streams.fold(root, Seq(docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 =!= 0))) { (batch, bid) =>
-        graft.Meta.Versioned.writeOnce(cmOf(batch), cmPath, "q121", bid)
-        graft.Meta.Versioned.writeOnce(candsOf(batch), candPath, "q121", bid)
+      Streams.foldOnce(root, Seq(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)), Seq(cmPath, candPath)) {
+        (batch, _) => Seq(cmOf(batch), candsOf(batch))
       }
       // resolve the segment logs: one CM merge over all per-batch
       // sketches (== the old per-batch fold chain, by associativity),
@@ -981,8 +904,8 @@ object StatefulQueries {
     // bitmaps folded per micro-batch into a standing per-type table —
     // the continuous form of the exact distinct-users cube, with q115's
     // ALGEBRAIC replay shield (page-OR is idempotent as well as
-    // abelian, so at-least-once redelivery of a whole batch is absorbed
-    // by the math, no txn marker needed). Where the KMV twin pins
+    // abelian, so a whole batch redelivered under a new batch id, which
+    // no txn marker recognises, is absorbed by the math). Where the KMV twin pins
     // bounds booleans, this pins EQUALITY: the streamed bitmap must
     // match the one-shot corpus bitmap BYTE FOR BYTE (page-sorted
     // serialization), and the count must equal COUNT(DISTINCT) — the
@@ -997,22 +920,21 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q184").toString
       val bmPath = s"$root/bitmaps"
       val ev = Tables.events(spark, dir).select("event_id", "event_type", "user_id")
-      def bitmapOf(df: org.apache.spark.sql.DataFrame) =
+      def bitmapOf(df: DataFrame) =
         df.groupBy("event_type")
           .agg(call_function("graft_bitmap_sketch", col("user_id")).as("bm"))
       graft.Meta.Versioned.write(bitmapOf(ev.limit(0)), bmPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the events slice; key-parity membership unchanged,
-      // with the first half staged TWICE (at-least-once — OR absorbs it)
+      // with the first half staged TWICE — the copy arrives under a new
+      // batch id, so no txn marker skips it and OR must absorb it
       val even = ev.filter(col("event_id") % 2 === 0)
-      // at-least-once: the SAME batch redelivered — OR absorbs it
-      Streams.fold(root, Seq(even, even,
-          ev.filter(col("event_id") % 2 =!= 0))) { (batch, _) =>
-        val standing = graft.Meta.Versioned.read(spark, bmPath)
-        val merged = standing.unionByName(bitmapOf(batch))
+      Streams.foldOnce(root, Seq(even, even,
+          ev.filter(col("event_id") % 2 =!= 0)), Seq(bmPath)) { (batch, _) =>
+        Seq(graft.Meta.Versioned.read(spark, bmPath)
+          .unionByName(bitmapOf(batch))
           .groupBy("event_type")
-          .agg(call_function("graft_bitmap_merge", col("bm")).as("bm"))
-        graft.Meta.Versioned.write(merged, bmPath)
+          .agg(call_function("graft_bitmap_merge", col("bm")).as("bm")))
       }
       val streamed = graft.Meta.Versioned.read(spark, bmPath)
         .select(col("event_type"), col("bm").as("bm_stream"))
@@ -1132,7 +1054,7 @@ object StatefulQueries {
       val ev = Tables.events(spark, dir).select(
         col("event_id"), col("event_type"),
         length(col("props")).cast("long").as("nbytes"))
-      def partials(df: org.apache.spark.sql.DataFrame, bid: Long) =
+      def partials(df: DataFrame, bid: Long) =
         df.groupBy(col("event_type").as("part"),
             (col("event_id") % 64).as("seg"))
           .agg(sum("nbytes").as("bytes"))
@@ -1140,7 +1062,7 @@ object StatefulQueries {
       // the fold every commit runs: replace THIS batch's rows, keep the
       // rest — re-running the same (batch, bid) is a no-op by
       // construction, which IS the at-least-once shield
-      def commit(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
+      def commit(batch: DataFrame, bid: Long): Unit = {
         val standing = graft.Meta.Versioned.read(spark, manPath)
           .filter(col("_bid") =!= bid)
         graft.Meta.Versioned.write(
@@ -1159,7 +1081,7 @@ object StatefulQueries {
       val direct = ev.groupBy(col("event_type").as("part"),
           (col("event_id") % 64).as("seg"))
         .agg(sum("nbytes").as("bytes"))
-      def plan(segs: org.apache.spark.sql.DataFrame) =
+      def plan(segs: DataFrame) =
         graft.ops.Scale.compactionPlan(segs, "part", "seg", "bytes",
           filesPerPartition = 8).drop("fill_pct")
       plan(folded)
@@ -1175,7 +1097,7 @@ object StatefulQueries {
     // so top-(n+1) of (state ∪ batch-top-(n+1)) == top-(n+1) of
     // everything seen. Each micro-batch pays a bounded-heap TakeOrdered
     // over ITS rows plus a 2(n+1)-row merge, folded exactly-once via
-    // writeOnce; the oracle is the ONE-SHOT q112 draw over the full
+    // Streams.foldOnce; the oracle is the ONE-SHOT q112 draw over the full
     // corpus — fold == one-shot pinned row-for-row, τ and estimator
     // weights included.
     Q(
@@ -1209,15 +1131,14 @@ object StatefulQueries {
       // irrelevant to the final sample — the old sorted-half split
       // becomes the residue split doc_id ≡ 0 ∕ ≡ 3 (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      graft.streaming.Streams.fold(root, Seq(
+      graft.streaming.Streams.foldOnce(root, Seq(
           feedDf.filter(col("doc_id") % 6 === 0),
-          feedDf.filter(col("doc_id") % 6 === 3))) { (batch, bid) =>
+          feedDf.filter(col("doc_id") % 6 === 3)), Seq(path)) { (batch, _) =>
         val bt = Sample.priorityTopK(batch.toDF("doc_id", "n_chars"),
           "doc_id", "n_chars", n)
-        val merged = graft.Meta.Versioned.read(spark, path)
+        Seq(graft.Meta.Versioned.read(spark, path)
           .unionByName(bt)
-          .orderBy(col("priority").desc, col("doc_id")).limit(n + 1)
-        graft.Meta.Versioned.writeOnce(merged, path, "q267", bid)
+          .orderBy(col("priority").desc, col("doc_id")).limit(n + 1))
       }
       Sample.priorityFinish(graft.Meta.Versioned.read(spark, path),
           "doc_id", "n_chars", n)
@@ -1239,7 +1160,7 @@ object StatefulQueries {
     // 2944438979 at α = β = 5% — minted once, shared verbatim, the
     // whole monitor pure integer arithmetic on fold-able (n, k)
     // counts. Stream side folds per-batch counts exactly-once via
-    // writeOnce; the oracle replays the 4 deterministic doc_id % 4
+    // Streams.foldOnce; the oracle replays the 4 deterministic doc_id % 4
     // batches and must reproduce every per-batch verdict and the
     // stopping flag.
     Q(
@@ -1303,16 +1224,15 @@ object StatefulQueries {
       // collect() of the corpus text. Batch membership unchanged:
       // batch b = doc_id ≡ b (mod 4), exactly the oracle's blog CTE.
       val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
-      graft.streaming.Streams.fold(root, batches) { (batch, bid) =>
-        val agg = batch.toDF("doc_id", "text")
+      // segment-append fold (round 21): one (bid, n, k) row per batch
+      // is append-only — commit the delta, resolve with readAll
+      graft.streaming.Streams.foldOnce(root, batches, Seq(path)) { (batch, bid) =>
+        Seq(batch.toDF("doc_id", "text")
           .select(col("doc_id"),
             Text.gopherSignals(col("text")).last.cast("int").cast("long")
               .as("keep"))
           .agg(count(lit(1)).as("n"), coalesce(sum("keep"), lit(0L)).as("k"))
-          .select(lit(bid).as("bid"), col("n"), col("k"))
-        // segment-append fold (round 21): one (bid, n, k) row per batch
-        // is append-only — writeOnce the delta, resolve with readAll
-        graft.Meta.Versioned.writeOnce(agg, path, "q270", bid)
+          .select(lit(bid).as("bid"), col("n"), col("k")))
       }
       // unpartitioned window over the |batches|-row version manifest only
       val w = Window.orderBy("bid")
@@ -1343,10 +1263,11 @@ object StatefulQueries {
     // a pure CONTINUATION of the batch fold: the next batch's first
     // doc lands in the current open window if it fits). Exactly-once
     // is doubly shielded: rows at or below the shard's standing max_id
-    // drop up front (an at-least-once replay folds to an algebraic
-    // no-op) AND the Versioned writeOnce txn marker skips the commit —
-    // the final batch replays in-query to exercise both halves (the
-    // q280 discipline). Ascending arrival makes the streamed state
+    // drop up front (a redelivery that reached the fold would be an
+    // algebraic no-op) AND the txn markers of Streams.foldOnce skip
+    // it. foldOnce replays the final batch, and its guard skips the
+    // step on the markers before the fold runs, so what the oracle
+    // pins is the marker skip. Ascending arrival makes the streamed state
     // BIT-identical to the one-shot q299 fold, so the oracle IS q299's
     // SQL — the row-for-row hash match is the fold == rebuild proof.
     Q(
@@ -1361,20 +1282,11 @@ object StatefulQueries {
           size(graft.ops.Text.tokens(col("text"))).cast("long").as("ntok"))
       graft.Meta.Versioned.write(Packing.emptyState(spark), stPath)
       val cutoff = Streams.halfCutoffByKey(t, "doc_id")
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        val standing = graft.Meta.Versioned.read(spark, stPath)
-        graft.Meta.Versioned.writeOnce(
-          Packing.packFold(standing,
-            batch.toDF("source", "doc_id", "ntok"), 512L),
-          stPath, "q307state", bid)
-        ()
+      Streams.foldOnce(root, Seq(t.filter(col("doc_id") <= cutoff),
+          t.filter(col("doc_id") > cutoff)), Seq(stPath)) { (batch, _) =>
+        Seq(Packing.packFold(graft.Meta.Versioned.read(spark, stPath),
+          batch.toDF("source", "doc_id", "ntok"), 512L))
       }
-      val (lo, hi) = (t.filter(col("doc_id") <= cutoff),
-        t.filter(col("doc_id") > cutoff))
-      // at-least-once replay of the final batch: the max_id guard folds
-      // it to a no-op AND the txn marker skips the write
-      fold(hi.toDF("source", "doc_id", "ntok"),
-        Streams.fold(root, Seq(lo, hi))(fold))
       Packing.economics(graft.Meta.Versioned.read(spark, stPath), 512L)
     })
 

@@ -704,7 +704,7 @@ object StatsQueries {
     // isotonic fit kept ALIVE over the stream — the bin table is
     // abelian (per-bin counts add), so each micro-batch folds its own
     // (bin, n, pos) partials into the 16-row standing state
-    // exactly-once via writeOnce and the PAVA fit re-runs on the
+    // exactly-once via Streams.foldOnce and the PAVA fit re-runs on the
     // resolved state in O(k³) driver math. The oracle is q259's
     // ONE-SHOT SQL verbatim: fold == one-shot pinned row-for-row,
     // iso rates included — the calibration curve a live gate
@@ -724,16 +724,13 @@ object StatsQueries {
       // round-trip through the driver as tuples. Batch membership
       // unchanged: batch b = doc_id ≡ b (mod 4).
       // Segment-append fold (round 21): per-bin (n, pos) counts are
-      // additive long sums — writeOnce the batch's partial only,
-      // re-reduce the retained segments at read. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        graft.Meta.Versioned.writeOnce(
-          lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")),
-          path, "q272", bid)
-        ()
+      // additive long sums — commit the batch's partial only,
+      // re-reduce the retained segments at read.
+      graft.streaming.Streams.foldOnce(root,
+          (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)),
+          Seq(path)) { (batch, _) =>
+        Seq(lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")))
       }
-      graft.streaming.Streams.fold(root,
-        (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)))(fold)
       Stats.isotonicFit(
         graft.Meta.Versioned.readAll(spark, path)
           .groupBy("bin").agg(sum("n").as("n"), sum("pos").as("pos")),

@@ -100,10 +100,10 @@ object Streams {
     * `$root/cp`) that is drained after every add, so batch i arrives as
     * micro-batch i. The query stops in a `finally`, so a throwing
     * `step` reaches the caller with no query left running. Delivery is
-    * at-least-once; commit modes (`write`, `writeOnce`, segment append)
-    * and replay guards belong to `step`. Returns the last batch id
-    * delivered (-1 if none): callers that replay their final batch
-    * pass it back to `step` themselves, outside this scope.
+    * at-least-once and `step` owns its commits; folds that commit
+    * through `Meta.Versioned.writeOnce` use [[foldOnce]] instead.
+    * `batches` must be non-empty. Returns the last batch id delivered,
+    * or -1 if the query delivered none.
     *
     * The adds and the query run 4 shuffle partitions wide, not the
     * batch-tuned 32: a batch is a few thousand rows, and stateful
@@ -113,6 +113,7 @@ object Streams {
     * query begins; size it to state volume, not CPU count. */
   def fold(root: String, batches: Seq[DataFrame])(
       step: (DataFrame, Long) => Unit): Long = {
+    require(batches.nonEmpty, s"fold at $root needs at least one batch")
     val spark = batches.head.sparkSession
     val feed = new FileFeed(spark, batches.head.schema, root)
     @volatile var lastBid = -1L
@@ -132,6 +133,42 @@ object Streams {
       } finally q.stop()
     }
     lastBid
+  }
+
+  /** The txn appId every [[foldOnce]] commit carries. Markers are per
+    * table path, so one constant is enough. */
+  private[graft] val FoldAppId = "fold"
+
+  /** [[fold]] with the exactly-once commit (the Delta `txn` pattern of
+    * an idempotent `foreachBatch` write): `step` returns one frame per
+    * path in `tables`, in order, and the harness commits each with
+    * `Meta.Versioned.writeOnce(frame, table, FoldAppId, bid)`.
+    *
+    * Replay guard: a delivered `(batch, bid)` whose every table already
+    * records `bid` skips `step` outright, so a redelivery pays only the
+    * driver-side marker listings, not the fold's compute. A split marker
+    * state (a crash between two table commits) fails the guard; `step`
+    * then recomputes and `writeOnce` skips or applies per table.
+    *
+    * Replay self-test: after the stream stops, `batches.last` is
+    * delivered once more under the last batch id, through the same
+    * guard and outside the 4-wide scope. The skip is what a fold's
+    * oracle match pins: applying that batch twice would change any
+    * non-idempotent output. */
+  def foldOnce(root: String, batches: Seq[DataFrame], tables: Seq[String])(
+      step: (DataFrame, Long) => Seq[DataFrame]): Unit = {
+    def commit(batch: DataFrame, bid: Long): Unit = {
+      val spark = batch.sparkSession
+      if (!tables.forall(Meta.Versioned.committed(spark, _, FoldAppId, bid))) {
+        val frames = step(batch, bid)
+        require(frames.length == tables.length,
+          s"fold step returned ${frames.length} frames for ${tables.length} tables")
+        tables.zip(frames).foreach { case (t, f) =>
+          Meta.Versioned.writeOnce(f, t, FoldAppId, bid) }
+      }
+    }
+    val last = fold(root, batches)(commit)
+    if (last >= 0) commit(batches.last, last)
   }
 
   /** Harness-side batch-staging cutoff for FileFeed consumers: the

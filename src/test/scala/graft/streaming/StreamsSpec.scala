@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Streaming semantics: DLQ fork (T5), exactly-once checkpoint replay
   * (T2/T3), foreachBatch SCD2 (K6), console tee (K5) and multi-query
@@ -469,6 +470,69 @@ class StreamsSpec extends SparkSuite {
         s"the step's failure must reach the caller: $e")
       assert(spark.streams.active.isEmpty)
       assert(spark.conf.get(widthKey) == "7", "fold must restore the width")
+    } finally spark.streams.resetTerminated()
+  }
+
+  test("fold: an empty batch list fails with IllegalArgumentException") {
+    intercept[IllegalArgumentException] {
+      Streams.fold(tmp("fold-empty").toString, Seq.empty)((_, _) => ())
+    }
+  }
+
+  test("foldOnce: a non-idempotent sum equals the one-shot sum and the " +
+      "guarded final-batch replay never reaches the step") {
+    val root = tmp("fold-once").toString
+    val path = s"$root/sum"
+    graft.Meta.Versioned.write(Seq(0L).toDF("total"), path)
+    val calls = new AtomicInteger()
+    // a NON-idempotent step: any batch applied twice shows in the total
+    Streams.foldOnce(root, foldBatches, Seq(path)) { (batch, _) =>
+      calls.incrementAndGet()
+      Seq(graft.Meta.Versioned.read(spark, path)
+        .unionByName(batch.agg(sum("id").as("total")))
+        .agg(sum("total").as("total")))
+    }
+    assert(graft.Meta.Versioned.read(spark, path).as[Long].collect().toSeq ==
+      Seq((0L until 30L).sum))
+    assert(calls.get == 3, s"step runs once per batch, ran ${calls.get}")
+  }
+
+  test("foldOnce: a split marker state recomputes, and each table " +
+      "skips or applies on its own marker") {
+    // the crash window between two table commits: A already records
+    // bid 0, B does not
+    val root = tmp("fold-split").toString
+    val (a, b) = (s"$root/a", s"$root/b")
+    graft.Meta.Versioned.writeOnce(Seq(-1L).toDF("total"), a,
+      Streams.FoldAppId, 0L)
+    val calls = new AtomicInteger()
+    Streams.foldOnce(root, foldBatches.take(1), Seq(a, b)) { (batch, _) =>
+      calls.incrementAndGet()
+      Seq.fill(2)(batch.agg(sum("id").as("total")))
+    }
+    assert(calls.get == 1, s"step must run once, ran ${calls.get}")
+    assert(graft.Meta.Versioned.latestVersion(spark, a).contains(1L),
+      "A already recorded bid 0 and must gain no version")
+    assert(graft.Meta.Versioned.read(spark, a).as[Long].collect().toSeq == Seq(-1L))
+    assert(graft.Meta.Versioned.latestVersion(spark, b).contains(1L),
+      "B must gain exactly one version")
+    assert(graft.Meta.Versioned.read(spark, b).as[Long].collect().toSeq ==
+      Seq((0L until 30L by 3).sum))
+  }
+
+  test("foldOnce: a step returning the wrong number of frames fails with " +
+      "IllegalArgumentException and leaves no query running") {
+    val root = tmp("fold-count").toString
+    try {
+      val e = intercept[Exception] {
+        Streams.foldOnce(root, foldBatches, Seq(s"$root/a", s"$root/b")) {
+          (batch, _) => Seq(batch)
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]),
+        s"the frame-count check must reach the caller: $e")
+      assert(spark.streams.active.isEmpty)
     } finally spark.streams.resetTerminated()
   }
 }

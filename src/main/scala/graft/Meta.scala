@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table-maintenance / metadata operators (SURVEY.md §2.11 M1-M4).
   *
@@ -205,7 +206,9 @@ object Meta {
       * skips. One writer per (path, appId) — concurrent folds of the
       * same table need the manifest CAS layer, not this. Retention
       * caveat (same as Delta's): [[vacuum]] must keep at least the
-      * newest marker-bearing version while the stream can still retry. */
+      * newest marker-bearing version while the stream can still retry.
+      * `graft.streaming.Streams.foldOnce` commits through this, and seeds
+      * each declared `Streams.FoldTable` with it under the shape appId. */
     def writeOnce(df: DataFrame, path: String, appId: String,
         batchId: Long): Option[Long] = {
       require(TxnFile.pattern.matcher(s"_txn_${appId}_0").matches,
@@ -243,9 +246,9 @@ object Meta {
       * a replayed batch, but it can only check the marker after the
       * caller has built (and for eager folds, computed) the frame to
       * write. `graft.streaming.Streams.foldOnce` runs this check for
-      * every output table before calling its step, and skips the step
-      * when all of them record the batch; folds get the guard from that
-      * harness instead of calling this themselves. */
+      * every declared `Streams.FoldTable` before calling its step, and
+      * skips the step when all of them record the batch; folds get the
+      * guard from that harness instead of calling this themselves. */
     def committed(spark: SparkSession, path: String, appId: String,
         batchId: Long): Boolean =
       lastTxn(spark, path, appId).exists(_ >= batchId)
@@ -269,20 +272,28 @@ object Meta {
       * skip, and every crash window are unchanged — the marker scan
       * ([[lastTxn]]) already walks all retained versions. Retention
       * caveat: [[vacuum]] on a segment log would DROP DATA (old versions
-      * are segments, not superseded snapshots) — a segment-log path must
-      * not be vacuumed, only compacted-then-rewritten. */
-    def readAll(spark: SparkSession, path: String): DataFrame = {
+      * are segments, not superseded snapshots), so it refuses a path
+      * seeded as `Streams.Segments`; compact-then-rewrite instead. Folds
+      * declare such a table as a `Streams.Segments` `FoldTable`, which
+      * passes its seed's schema as `schema` instead of inferring it. */
+    def readAll(spark: SparkSession, path: String,
+        schema: Option[StructType] = None): DataFrame = {
       val vs = versions(spark, path)
       require(vs.nonEmpty, s"no versions at $path")
-      spark.read.parquet(vs.map(v => s"$path/v=$v"): _*)
+      schema.fold(spark.read)(spark.read.schema).parquet(vs.map(v => s"$path/v=$v"): _*)
     }
 
-    /** Read latest (version = None) or a specific retained snapshot. */
-    def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
+    /** Read latest (version = None) or a specific retained snapshot;
+      * a given `schema` replaces the inference job (see [[readAll]]). */
+    def read(spark: SparkSession, path: String, version: Option[Long] = None,
+        schema: Option[StructType] = None): DataFrame = {
       val v = version.orElse(latestVersion(spark, path)).getOrElse(
         throw new IllegalArgumentException(s"no versions at $path"))
-      spark.read.parquet(s"$path/v=$v")
+      schema.fold(spark.read)(spark.read.schema).parquet(s"$path/v=$v")
     }
+
+    /** The seed appId that marks a `Streams.Segments` log. */
+    private[graft] val SegmentsAppId = "segments"
 
     /** Drop all but the newest `keep` snapshots (VACUUM). Also reclaims
       * pre-publish crash debris: a [[writeOnce]] that died before its
@@ -303,10 +314,14 @@ object Meta {
       * keeps the doomed writer's failure mode clean: staging dirs
       * modified within the grace window are skipped this cycle and
       * collected by any later vacuum (Delta's VACUUM has the same
-      * recent-file retention check, for the same reason). */
+      * recent-file retention check, for the same reason).
+      * Refuses a segment log (a `Streams.Segments` seed marker), see
+      * [[readAll]]. */
     private val StagingDir = "^v=(\\d+)_staging_.*$".r
     def vacuum(spark: SparkSession, path: String, keep: Int,
         stagingGraceMs: Long = 10 * 60 * 1000L): Seq[Long] = {
+      require(lastTxn(spark, path, SegmentsAppId).isEmpty,
+        s"$path is a segment log: vacuum would drop its data")
       val all = versions(spark, path)
       val dead = all.dropRight(keep)
       val (f, p) = fs(spark, path)

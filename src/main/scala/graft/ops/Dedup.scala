@@ -70,17 +70,6 @@ object Dedup {
       .withColumnRenamed("col", "band_key")
   }
 
-  /** (id, hv, sig) for docs with ≥1 shingle. Exposed for tests. */
-  def lshBands(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, k: Int, bands: Int): DataFrame = {
-    val sigs = withShingleHashes(df, textCol, shingleN)
-      .filter(size(col("hv")) > 0)
-      .withColumn("sig", minhashSignature(col("hv"), k))
-      .select(col(idCol), col("hv"), col("sig"))
-    bandKeys(sigs, idCol, k, bands)
-      .join(sigs.select(col(idCol), col("hv")), Seq(idCol))
-  }
-
   /** Candidate pairs = docs sharing any (band, band_key) bucket — the
     * banded LSH join (shuffle on the bucket key), then exact Jaccard on
     * the candidates only. Returns (id_a, id_b, jaccard) with id_a < id_b,

@@ -465,8 +465,6 @@ object IndexQueries {
         k = 4, iters = 2)
       val root = graft.Tmp.dir("graft-q226").toString
       val idxPath = s"$root/codes"
-      graft.Meta.Versioned.write(
-        Similarity.ivfEncode(hist, "vec_id", "embedding", stale), idxPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() in the measured path. The fold is per-row encode +
       // union (no per-batch output), so the final index is independent
@@ -475,17 +473,17 @@ object IndexQueries {
       val feedDf = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"))
       // Segment-append fold (round 21): code rows are append-only (each
-      // vec_id arrives once) — commit the batch's encode only and
-      // resolve the standing index with readAll, instead of re-writing
-      // the full code table every micro-batch.
-      graft.streaming.Streams.foldOnce(root, Seq(
+      // vec_id arrives once) — commit the batch's encode only, instead
+      // of re-writing the full code table every micro-batch.
+      val Seq(codes) = graft.streaming.Streams.foldOnce(root, Seq(
           feedDf.filter(col("vec_id") % 6 === 0),
-          feedDf.filter(col("vec_id") % 6 === 3)), Seq(idxPath)) { (batch, _) =>
-        Seq(Similarity.ivfEncode(
+          feedDf.filter(col("vec_id") % 6 === 3)),
+          Seq(graft.streaming.Streams.Segments(idxPath,
+            Similarity.ivfEncode(hist, "vec_id", "embedding", stale)))) {
+        (batch, _, _) => Seq(Similarity.ivfEncode(
           batch.toDF("vec_id", "embedding"), "vec_id", "embedding", stale))
       }
-      graft.Meta.Versioned.readAll(spark, idxPath)
-        .select(col("vec_id"), col("cid"))
+      codes.select(col("vec_id"), col("cid"))
     },
 
     // ---- L208 per-dimension embedding variance / anisotropy audit:
@@ -1067,20 +1065,6 @@ object IndexQueries {
       // the stream: test rows arrive in two vec_id-ordered micro-batches
       val root = graft.Tmp.dir("graft-q232").toString
       val resPath = s"$root/res"
-      graft.Meta.Versioned.write(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("batch",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_flagged",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("coverage",
-              org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("breach",
-              org.apache.spark.sql.types.BooleanType)))), resPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the embedding payload. The oracle pins batch
       // membership to the sorted-half split (rn ≤ n div 2 over
@@ -1095,11 +1079,15 @@ object IndexQueries {
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = graft.streaming.Streams.halfCutoffByKey(feedDf, "vec_id")
       // segment-append fold (round 21): one result row per batch is
-      // append-only — commit the delta, resolve with readAll
-      graft.streaming.Streams.foldOnce(root, Seq(
+      // append-only — commit the delta only
+      import spark.implicits._
+      val Seq(res) = graft.streaming.Streams.foldOnce(root, Seq(
           feedDf.filter(col("vec_id") <= cutoff),
-          feedDf.filter(col("vec_id") > cutoff)), Seq(resPath)) { (batch, bid) =>
-        Seq(scores(batch.toDF("vec_id", "embedding"))
+          feedDf.filter(col("vec_id") > cutoff)),
+          Seq(graft.streaming.Streams.Segments(resPath,
+            Seq.empty[(Long, Long, Long, Double, Boolean)]
+              .toDF("batch", "n", "n_flagged", "coverage", "breach")))) {
+        (batch, bid, _) => Seq(scores(batch.toDF("vec_id", "embedding"))
           .crossJoin(broadcast(thr))
           .agg(count(lit(1)).as("n"),
             sum(when(col("s") > col("thr"), 1L).otherwise(0L))
@@ -1111,7 +1099,7 @@ object IndexQueries {
               .cast("double").as("coverage"),
             (col("n_cov") * 100 < col("n") * 85).as("breach")))
       }
-      graft.Meta.Versioned.readAll(spark, resPath)
+      res
     },
 
     // ---- L214 head-vocabulary rank stability (Rank-Biased Overlap,
@@ -1664,10 +1652,6 @@ object IndexQueries {
         k = 4, iters = 2)
       val root = graft.Tmp.dir("graft-q241").toString
       val idxPath = s"$root/codes"
-      graft.Meta.Versioned.write(
-        IndexLog.initial(
-          Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id"),
-        idxPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the embedding payload. Batch membership of the
       // adds halves is irrelevant to the post-compact snapshot (each
@@ -1688,10 +1672,12 @@ object IndexQueries {
       // batch commits only its delta rows; the standing log is the
       // union of retained segments. The full-rewrite fold re-wrote the
       // whole log every batch.
-      graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(log) = graft.streaming.Streams.foldOnce(root, Seq(
           adds.filter(col("vec_id") % 6 === 0),
           adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
-          dels), Seq(idxPath)) { (batch, bid) =>
+          dels), Seq(graft.streaming.Streams.Segments(idxPath, IndexLog.initial(
+            Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")))) {
+        (batch, bid, _) =>
         val b = batch.toDF("vec_id", "embedding", "op")
         val ups = IndexLog.upserts(
           Similarity.ivfEncode(b.filter(col("op") === "u")
@@ -1705,10 +1691,7 @@ object IndexQueries {
       // retained version), publish as the next version; the post-compact
       // snapshot must equal the one-shot encode of the live corpus (the
       // oracle's side). Readers from here on use the latest version only.
-      graft.Meta.Versioned.write(
-        IndexLog.compact(
-          graft.Meta.Versioned.readAll(spark, idxPath), "vec_id"),
-        idxPath)
+      graft.Meta.Versioned.write(IndexLog.compact(log, "vec_id"), idxPath)
       graft.Meta.Versioned.read(spark, idxPath)
         .select(col("vec_id"), col("cid"))
     },
@@ -2008,8 +1991,6 @@ object IndexQueries {
       }
       val root = graft.Tmp.dir("graft-q248").toString
       val statePath = s"$root/moments"
-      graft.Meta.Versioned.write(
-        moments(e.filter(col("vec_id") % 2 === 1)), statePath)
       // file-backed feed (Streams.FileFeed, round 16): batches staged
       // as parquet executor-side and re-entering through the file-
       // stream source — no driver collect() in the measured path (the
@@ -2025,15 +2006,16 @@ object IndexQueries {
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
       // re-writing the full dims+pairs grid.
-      graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(segs) = graft.streaming.Streams.foldOnce(root, Seq(
           feedDf.filter(col("vec_id") % 4 === 0),
-          feedDf.filter(col("vec_id") % 4 =!= 0)), Seq(statePath)) {
-        (batch, _) => Seq(moments(batch.toDF("vec_id", "embedding")))
+          feedDf.filter(col("vec_id") % 4 =!= 0)),
+          Seq(graft.streaming.Streams.Segments(statePath,
+            moments(e.filter(col("vec_id") % 2 === 1))))) {
+        (batch, _, _) => Seq(moments(batch.toDF("vec_id", "embedding")))
       }
       // resolve the segment log: the same reduce the old fold ran per
       // batch, once — long and exact-decimal sums are order-free
-      val st = graft.Meta.Versioned.readAll(spark, statePath)
-        .groupBy("pos").agg(sum("n").as("n"), sum("s").cast(I).as("s"))
+      val st = segs.groupBy("pos").agg(sum("n").as("n"), sum("s").cast(I).as("s"))
       val posMap = (for (i <- 1 to 64; j <- (i + 1) to 64) yield (i, j))
         .zipWithIndex
         .map { case ((i, j), p) => (p.toLong, i.toLong, j.toLong) }

@@ -376,28 +376,26 @@ object RetrievalQueries {
          |  FROM pd) r
          |JOIN nd USING (q)
          |WHERE rk <= 3""".stripMargin) { (spark, dir) =>
-      import graft.Meta.Versioned
+      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q286").toString
       val postPath = s"$root/postings"
       val cntPath = s"$root/tricnt"
       val feedDf = Tables.documents(spark, dir).select("doc_id", "text")
       def toks(df: org.apache.spark.sql.DataFrame) =
         df.select(col("doc_id"), Text.tokens(col("text")).as("t"))
-      // seed: empty index + empty count state (version 1)
-      Versioned.write(
-        postings(toks(feedDf)).limit(0), postPath)
-      Versioned.write(
-        ngramCounts(toks(feedDf), 3).limit(0), cntPath)
       // Segment-append fold (round 21, guide §2.3/§6): both artifacts
       // take the batch's DELTA only — postings rows are append-only
       // and trigram counts are additive, so the standing tables are
       // the union of retained segments (counts re-aggregated at read).
       // The full-rewrite fold re-wrote the corpus-token-sized postings
       // table every micro-batch; now a batch writes O(|batch|).
-      graft.streaming.Streams.foldOnce(root, Seq(
+      // Seeds: an empty index and an empty count state.
+      val Seq(posts, counts) = Streams.foldOnce(root, Seq(
           feedDf.filter(col("doc_id") % 2 === 0),
-          feedDf.filter(col("doc_id") % 2 =!= 0)), Seq(postPath, cntPath)) {
-        (batch, _) =>
+          feedDf.filter(col("doc_id") % 2 =!= 0)),
+          Seq(Streams.Segments(postPath, postings(toks(feedDf)).limit(0)),
+            Streams.Segments(cntPath, ngramCounts(toks(feedDf), 3).limit(0)))) {
+        (batch, _, _) =>
         // one tokenize+posexplode of the batch, materialized once and
         // read by both commits (the postings append and the trigram-
         // count delta)
@@ -407,9 +405,8 @@ object RetrievalQueries {
       // resolve the segment logs: counts re-aggregate (long sums —
       // order-free), postings union as-is
       val qterms = workloadTerms(
-        Versioned.readAll(spark, cntPath)
-          .groupBy("q").agg(sum("cnt").as("cnt")), k = 10)
-      phraseTopDocs(Versioned.readAll(spark, postPath), qterms, phraseLen = 3)
+        counts.groupBy("q").agg(sum("cnt").as("cnt")), k = 10)
+      phraseTopDocs(posts, qterms, phraseLen = 3)
     },
 
     // ---- L275 INCREMENTAL BM25 index maintenance under a CDC batch

@@ -430,12 +430,6 @@ object StatefulQueries {
           when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
             .otherwise(col("o_totalprice")))
       val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
-      // seed: direct aggregate of v1 as snapshot version 1. The feed
-      // diffs the two frames directly (snapshotDiff — q100 covers the
-      // committed-chain path); only the MAINTAINED aggregate needs the
-      // version-chain machinery here.
-      graft.Meta.Versioned.write(
-        Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
       // two deterministic key-parity batches (update pre/post images of
       // one key may land in DIFFERENT batches; the abelian fold absorbs
       // it)
@@ -445,12 +439,15 @@ object StatefulQueries {
           col("o_totalprice"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
-        Seq(Incremental.maintainSumCount(graft.Meta.Versioned.read(spark, aggPath),
-          batch, Seq("o_custkey"), "o_totalprice"))
+      // seed: direct aggregate of v1. The feed diffs the two frames
+      // directly (snapshotDiff — q100 covers the committed-chain path);
+      // only the MAINTAINED aggregate needs the version-chain machinery.
+      val Seq(agg) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+          aggPath, Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice")))) {
+        case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
+          standing, batch, Seq("o_custkey"), "o_totalprice"))
       }
-      graft.Meta.Versioned.read(spark, aggPath)
-        .select(col("o_custkey"), col("cnt"), col("total").cast("double"))
+      agg.select(col("o_custkey"), col("cnt"), col("total").cast("double"))
     },
 
     // ---- Streaming SKETCH maintenance (L97): per-micro-batch KMV
@@ -490,25 +487,23 @@ object StatefulQueries {
           .select(col("source"), explode(col("hv")).as("h"))
           .groupBy("source")
           .agg(call_function("graft_kmv_sketch", col("h"), lit(1024)).as("sk"))
-      // seed: an empty standing table (schema only) as snapshot v1
-      graft.Meta.Versioned.write(sketchOf(docs.limit(0)), skPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the corpus text; batch membership unchanged
       // (key parity, with the first half staged verbatim as its own
       // batch — it arrives under a NEW batch id, so the txn markers
       // cannot skip it and KMV merge, idempotent set union, must absorb
-      // the doubled batch)
+      // the doubled batch); the seed is an empty standing table
       val even = docs.filter(col("doc_id") % 2 === 0)
-      Streams.foldOnce(root, Seq(even, even,
-          docs.filter(col("doc_id") % 2 =!= 0)), Seq(skPath)) { (batch, _) =>
-        Seq(graft.Meta.Versioned.read(spark, skPath)
-          .unionByName(sketchOf(batch))
-          .groupBy("source")
-          .agg(call_function("graft_kmv_merge", col("sk")).as("sk")))
+      val Seq(sketches) = Streams.foldOnce(root, Seq(even, even,
+          docs.filter(col("doc_id") % 2 =!= 0)),
+          Seq(Streams.Snapshot(skPath, sketchOf(docs.limit(0))))) {
+        case (batch, _, Seq(sk)) =>
+          Seq(sk.unionByName(sketchOf(batch))
+            .groupBy("source")
+            .agg(call_function("graft_kmv_merge", col("sk")).as("sk")))
       }
-      val streamed = graft.Meta.Versioned.read(spark, skPath)
-        .select(col("source"),
-          call_function("graft_kmv_estimate", col("sk")).as("est_stream"))
+      val streamed = sketches.select(col("source"),
+        call_function("graft_kmv_estimate", col("sk")).as("est_stream"))
       // one shared hash stream feeds BOTH the exact NDV and the direct
       // sketch (bottom-k is set-semantics — q110's argument), instead of
       // running the shingle kernel over the corpus twice
@@ -569,8 +564,6 @@ object StatefulQueries {
           when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
             .otherwise(col("o_totalprice")))
       val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
-      graft.Meta.Versioned.write(
-        Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
       // key-parity batches; foldOnce replays the last one (Σv² doubling
       // would be visible in var_price, so the oracle match pins
       // exactly-once)
@@ -580,11 +573,11 @@ object StatefulQueries {
           col("o_totalprice"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
-        Seq(Incremental.maintainMoments(graft.Meta.Versioned.read(spark, aggPath),
-          batch, Seq("o_custkey"), "o_totalprice"))
+      val Seq(m) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+          aggPath, Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")))) {
+        case (batch, _, Seq(standing)) => Seq(Incremental.maintainMoments(
+          standing, batch, Seq("o_custkey"), "o_totalprice"))
       }
-      val m = graft.Meta.Versioned.read(spark, aggPath)
       val s1c = col("s1") * 100
       val s2c4 = col("s2") * 10000
       val n = s2c4 * col("cnt") - s1c * s1c
@@ -620,8 +613,6 @@ object StatefulQueries {
         .select("doc_id", "lang", "source", "n_chars")
       val v1 = docs.filter(col("doc_id") % 10 =!= 0)
       val v2 = docs.filter(col("doc_id") % 7 =!= 0)
-      graft.Meta.Versioned.write(
-        Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars"), aggPath)
       // key-parity batches; foldOnce replays the last one (a double-
       // applied delta would shift n_v2/chars_v2 in every touched cell —
       // the oracle match against the direct recompute pins exactly-once)
@@ -631,13 +622,13 @@ object StatefulQueries {
           col("n_chars"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
         feedDf.filter(col("doc_id") % 2 =!= 0))
-      Streams.foldOnce(root, Seq(even, odd), Seq(aggPath)) { (batch, _) =>
-        Seq(Incremental.maintainSumCount(graft.Meta.Versioned.read(spark, aggPath),
-          batch, Seq("lang", "source"), "n_chars"))
+      val Seq(agg) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+          aggPath, Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars")))) {
+        case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
+          standing, batch, Seq("lang", "source"), "n_chars"))
       }
-      val maintained = graft.Meta.Versioned.read(spark, aggPath)
-        .select(col("lang"), col("source"), col("cnt").as("n_v2"),
-          col("total").cast("long").as("chars_v2"))
+      val maintained = agg.select(col("lang"), col("source"),
+        col("cnt").as("n_v2"), col("total").cast("long").as("chars_v2"))
       val a = v1.groupBy("lang", "source")
         .agg(count(lit(1)).as("n_v1"), sum("n_chars").as("chars_v1"))
       val t1 = v1.agg(count(lit(1)).as("t1"))
@@ -689,19 +680,7 @@ object StatefulQueries {
       val standing0 = hvAll.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), explode(col("hv")).as("h"))
         .groupBy("h").agg(min("doc_id").as("owner"))
-      graft.Meta.Versioned.write(standing0, ownPath)
-      graft.Meta.Versioned.write(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_shingles",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_novel",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("novelty",
-              org.apache.spark.sql.types.DoubleType)))), resPath)
+      import spark.implicits._
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the document text. Batch membership MATTERS here
       // (novelty scores read the standing owner state as of the doc's
@@ -716,16 +695,24 @@ object StatefulQueries {
       // The fold materializes two localCheckpoints, so foldOnce's replay
       // guard (skip a batch both tables already record) is what keeps
       // the final-batch replay from paying a full shingle+fold pass.
-      Streams.foldOnce(root, Seq(feedDf.filter(col("doc_id") <= cutoff),
-          feedDf.filter(col("doc_id") > cutoff)), Seq(ownPath, resPath)) {
-        (batch, _) =>
+      // own stays a full-rewrite fold: a batch doc with a smaller id
+      // can STEAL ownership of a standing hash (least() below), so the
+      // table is a keyed upsert, not an append-only log. res IS
+      // append-only (per-doc scores, batch doc sets disjoint) — the
+      // round-21 segment-append shape: commit the delta only.
+      val Seq(_, res) = Streams.foldOnce(root,
+          Seq(feedDf.filter(col("doc_id") <= cutoff),
+            feedDf.filter(col("doc_id") > cutoff)),
+          Seq(Streams.Snapshot(ownPath, standing0),
+            Streams.Segments(resPath, Seq.empty[(Long, Long, Long, Double)]
+              .toDF("doc_id", "n_shingles", "n_novel", "novelty")))) {
+        case (batch, _, Seq(standing, _)) =>
         val bsh = Dedup.withShingleHashes(
           batch.toDF("doc_id", "text"), "text", 3)
           .filter(size(col("hv")) > 0)
           .select(col("doc_id"), explode(col("hv")).as("h"))
           .localCheckpoint()
         val bOwn = bsh.groupBy("h").agg(min("doc_id").as("b_owner"))
-        val standing = graft.Meta.Versioned.read(spark, ownPath)
         val folded = bOwn.join(standing, Seq("h"), "left")
           .select(col("h"),
             least(coalesce(col("owner"), col("b_owner")), col("b_owner"))
@@ -740,16 +727,10 @@ object StatefulQueries {
             graft.functions.ExactRound
               .roundRatio(col("n_novel"), col("n_shingles"), 6)
               .cast("double"))
-        // own stays a full-rewrite fold: a batch doc with a smaller id
-        // can STEAL ownership of a standing hash (least() above), so the
-        // table is a keyed upsert, not an append-only log. res IS
-        // append-only (per-doc scores, batch doc sets disjoint) — the
-        // round-21 segment-append shape: commit the delta, resolve with
-        // readAll.
         Seq(standing.join(bOwn, Seq("h"), "left_anti").unionByName(folded),
           scored)
       }
-      graft.Meta.Versioned.readAll(spark, resPath)
+      res
     },
 
     // ---- Streamed EXACT-SUBSTRING dedup (L261): q277's rewrite as
@@ -775,50 +756,32 @@ object StatefulQueries {
       val ownPath = s"$root/own"
       val resPath = s"$root/res"
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      graft.Meta.Versioned.write(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("h",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("own_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("own_spos",
-              org.apache.spark.sql.types.IntegerType)))), ownPath)
-      graft.Meta.Versioned.write(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("clean_text",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_tokens",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_removed",
-              org.apache.spark.sql.types.LongType)))), resPath)
+      import spark.implicits._
       // doc_id is the documents PK — distinctness asserted inside
       val cutoff = Streams.halfCutoffByKey(docs, "doc_id")
       // Segment-append fold (round 21, guide §2.3/§6 — write the DELTA,
       // not the snapshot): ownership rows and rewrite rows are append-
       // only, so each fold commits only its batch's new rows and the
-      // standing state is the union of retained segments
-      // (Versioned.readAll). Identical rows to the full-rewrite fold —
+      // standing state is the union of retained segments. Identical rows to the full-rewrite fold —
       // union of deltas == last rewritten snapshot — but each batch
       // writes O(|delta|) instead of re-writing the corpus-sized
       // ownership table (at 100 TB, the difference between a micro-batch
       // and a corpus rewrite per trigger). exactSubstrBatch materializes
       // its kernels eagerly (caches + localCheckpoints), so foldOnce's
       // replay guard is what spares the final-batch replay that work.
-      Streams.foldOnce(root, Seq(docs.filter(col("doc_id") <= cutoff),
-          docs.filter(col("doc_id") > cutoff)), Seq(ownPath, resPath)) {
-        (batch, _) =>
-        val (rewritten, newOwners) = Dedup.exactSubstrBatch(
-          graft.Meta.Versioned.readAll(spark, ownPath),
+      val Seq(_, res) = Streams.foldOnce(root,
+          Seq(docs.filter(col("doc_id") <= cutoff),
+            docs.filter(col("doc_id") > cutoff)),
+          Seq(Streams.Segments(ownPath, Seq.empty[(Long, Long, Int)]
+              .toDF("h", "own_id", "own_spos")),
+            Streams.Segments(resPath, Seq.empty[(Long, String, Long, Long)]
+              .toDF("doc_id", "clean_text", "n_tokens", "n_removed")))) {
+        case (batch, _, Seq(own, _)) =>
+        val (rewritten, newOwners) = Dedup.exactSubstrBatch(own,
           batch.toDF("doc_id", "text"), docs, "doc_id", "text", minLen = 20)
         Seq(newOwners, rewritten)
       }
-      graft.Meta.Versioned.readAll(spark, resPath)
+      res
     },
 
     // ---- Streaming HEAVY HITTERS (L103): q53 run as continuous ingest.
@@ -855,8 +818,6 @@ object StatefulQueries {
         toksOf(df)
           .agg(call_function("graft_freq_sketch", col("term"), lit(400)).as("c"))
           .select(explode(col("c")).as("term"))
-      graft.Meta.Versioned.write(cmOf(docs.limit(0)), cmPath)
-      graft.Meta.Versioned.write(candsOf(docs.limit(0)), candPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect(); key-parity batch membership unchanged
       // CM merge is elementwise ADDITION — a replayed batch would
@@ -870,16 +831,18 @@ object StatefulQueries {
       // union — both resolve order-free from per-batch segments, so
       // each batch commits only its OWN sketch / candidate rows
       // and the standing read+rewrite per trigger disappears.
-      Streams.foldOnce(root, Seq(docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 =!= 0)), Seq(cmPath, candPath)) {
-        (batch, _) => Seq(cmOf(batch), candsOf(batch))
+      val Seq(cms, candSegs) = Streams.foldOnce(root,
+          Seq(docs.filter(col("doc_id") % 2 === 0),
+            docs.filter(col("doc_id") % 2 =!= 0)),
+          Seq(Streams.Segments(cmPath, cmOf(docs.limit(0))),
+            Streams.Segments(candPath, candsOf(docs.limit(0))))) {
+        (batch, _, _) => Seq(cmOf(batch), candsOf(batch))
       }
       // resolve the segment logs: one CM merge over all per-batch
       // sketches (== the old per-batch fold chain, by associativity),
       // distinct over the candidate segments
-      val cands = graft.Meta.Versioned.readAll(spark, candPath).distinct()
-      val streamedCm = graft.Meta.Versioned.readAll(spark, cmPath)
-        .agg(call_function("graft_cm_merge", col("sk")).as("sk"))
+      val cands = candSegs.distinct()
+      val streamedCm = cms.agg(call_function("graft_cm_merge", col("sk")).as("sk"))
         .select(col("sk").as("sk_s"))
       val directCm = cmOf(docs).select(col("sk").as("sk_d"))
       val est = call_function("graft_cm_estimate", col("sk_s"), col("term"))
@@ -923,21 +886,20 @@ object StatefulQueries {
       def bitmapOf(df: DataFrame) =
         df.groupBy("event_type")
           .agg(call_function("graft_bitmap_sketch", col("user_id")).as("bm"))
-      graft.Meta.Versioned.write(bitmapOf(ev.limit(0)), bmPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the events slice; key-parity membership unchanged,
       // with the first half staged TWICE — the copy arrives under a new
       // batch id, so no txn marker skips it and OR must absorb it
       val even = ev.filter(col("event_id") % 2 === 0)
-      Streams.foldOnce(root, Seq(even, even,
-          ev.filter(col("event_id") % 2 =!= 0)), Seq(bmPath)) { (batch, _) =>
-        Seq(graft.Meta.Versioned.read(spark, bmPath)
-          .unionByName(bitmapOf(batch))
-          .groupBy("event_type")
-          .agg(call_function("graft_bitmap_merge", col("bm")).as("bm")))
+      val Seq(bitmaps) = Streams.foldOnce(root, Seq(even, even,
+          ev.filter(col("event_id") % 2 =!= 0)),
+          Seq(Streams.Snapshot(bmPath, bitmapOf(ev.limit(0))))) {
+        case (batch, _, Seq(bm)) =>
+          Seq(bm.unionByName(bitmapOf(batch))
+            .groupBy("event_type")
+            .agg(call_function("graft_bitmap_merge", col("bm")).as("bm")))
       }
-      val streamed = graft.Meta.Versioned.read(spark, bmPath)
-        .select(col("event_type"), col("bm").as("bm_stream"))
+      val streamed = bitmaps.select(col("event_type"), col("bm").as("bm_stream"))
       val direct = bitmapOf(ev)
         .select(col("event_type"), col("bm").as("bm_direct"))
       streamed.join(direct, "event_type")
@@ -1122,26 +1084,24 @@ object StatefulQueries {
       val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")
       val root = graft.Tmp.dir("graft-q267").toString
       val path = s"$root/sample"
-      graft.Meta.Versioned.write(
-        Sample.priorityTopK(docs.filter(col("doc_id") % 3 =!= 0),
-          "doc_id", "n_chars", n), path)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect(). The top-(n+1) priority fold is an associative
       // merge (top-of-tops == top-of-all), so batch MEMBERSHIP is
       // irrelevant to the final sample — the old sorted-half split
       // becomes the residue split doc_id ≡ 0 ∕ ≡ 3 (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(sample) = graft.streaming.Streams.foldOnce(root, Seq(
           feedDf.filter(col("doc_id") % 6 === 0),
-          feedDf.filter(col("doc_id") % 6 === 3)), Seq(path)) { (batch, _) =>
-        val bt = Sample.priorityTopK(batch.toDF("doc_id", "n_chars"),
-          "doc_id", "n_chars", n)
-        Seq(graft.Meta.Versioned.read(spark, path)
-          .unionByName(bt)
-          .orderBy(col("priority").desc, col("doc_id")).limit(n + 1))
+          feedDf.filter(col("doc_id") % 6 === 3)),
+          Seq(graft.streaming.Streams.Snapshot(path, Sample.priorityTopK(
+            docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "n_chars", n)))) {
+        case (batch, _, Seq(standing)) =>
+          val bt = Sample.priorityTopK(batch.toDF("doc_id", "n_chars"),
+            "doc_id", "n_chars", n)
+          Seq(standing.unionByName(bt)
+            .orderBy(col("priority").desc, col("doc_id")).limit(n + 1))
       }
-      Sample.priorityFinish(graft.Meta.Versioned.read(spark, path),
-          "doc_id", "n_chars", n)
+      Sample.priorityFinish(sample, "doc_id", "n_chars", n)
         .select(col("doc_id"), col("n_chars"),
           round(col("priority"), 6).as("priority"),
           round(col("est_weight"), 6).as("est_weight"))
@@ -1218,16 +1178,16 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q270").toString
       val path = s"$root/sprt"
       import spark.implicits._
-      graft.Meta.Versioned.write(
-        Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k"), path)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() of the corpus text. Batch membership unchanged:
       // batch b = doc_id ≡ b (mod 4), exactly the oracle's blog CTE.
       val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
       // segment-append fold (round 21): one (bid, n, k) row per batch
-      // is append-only — commit the delta, resolve with readAll
-      graft.streaming.Streams.foldOnce(root, batches, Seq(path)) { (batch, bid) =>
-        Seq(batch.toDF("doc_id", "text")
+      // is append-only — commit the delta only
+      val Seq(log) = graft.streaming.Streams.foldOnce(root, batches,
+          Seq(graft.streaming.Streams.Segments(path,
+            Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k")))) {
+        (batch, bid, _) => Seq(batch.toDF("doc_id", "text")
           .select(col("doc_id"),
             Text.gopherSignals(col("text")).last.cast("int").cast("long")
               .as("keep"))
@@ -1237,8 +1197,7 @@ object StatefulQueries {
       // unpartitioned window over the |batches|-row version manifest only
       val w = Window.orderBy("bid")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      graft.Meta.Versioned.readAll(spark, path)
-        .withColumn("n_cum", sum("n").over(w))
+      log.withColumn("n_cum", sum("n").over(w))
         .withColumn("k_cum", sum("k").over(w))
         .withColumn("llr9", col("k_cum") * C1 + (col("n_cum") - col("k_cum")) * C2)
         .withColumn("verdict",
@@ -1280,14 +1239,14 @@ object StatefulQueries {
       val t = Tables.documents(spark, dir)
         .select(col("source"), col("doc_id"),
           size(graft.ops.Text.tokens(col("text"))).cast("long").as("ntok"))
-      graft.Meta.Versioned.write(Packing.emptyState(spark), stPath)
       val cutoff = Streams.halfCutoffByKey(t, "doc_id")
-      Streams.foldOnce(root, Seq(t.filter(col("doc_id") <= cutoff),
-          t.filter(col("doc_id") > cutoff)), Seq(stPath)) { (batch, _) =>
-        Seq(Packing.packFold(graft.Meta.Versioned.read(spark, stPath),
-          batch.toDF("source", "doc_id", "ntok"), 512L))
+      val Seq(state) = Streams.foldOnce(root, Seq(t.filter(col("doc_id") <= cutoff),
+          t.filter(col("doc_id") > cutoff)),
+          Seq(Streams.Snapshot(stPath, Packing.emptyState(spark)))) {
+        case (batch, _, Seq(st)) =>
+          Seq(Packing.packFold(st, batch.toDF("source", "doc_id", "ntok"), 512L))
       }
-      Packing.economics(graft.Meta.Versioned.read(spark, stPath), 512L)
+      Packing.economics(state, 512L)
     })
 
   /** The Gopher stop-word list as a SQL IN-list fragment (shared by the

@@ -717,8 +717,6 @@ object StatsQueries {
       val root = graft.Tmp.dir("graft-q272").toString
       val path = s"$root/bins"
       import spark.implicits._
-      graft.Meta.Versioned.write(
-        Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos"), path)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect() in the measured path — the whole corpus used to
       // round-trip through the driver as tuples. Batch membership
@@ -726,14 +724,14 @@ object StatsQueries {
       // Segment-append fold (round 21): per-bin (n, pos) counts are
       // additive long sums — commit the batch's partial only,
       // re-reduce the retained segments at read.
-      graft.streaming.Streams.foldOnce(root,
+      val Seq(bins) = graft.streaming.Streams.foldOnce(root,
           (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)),
-          Seq(path)) { (batch, _) =>
-        Seq(lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")))
+          Seq(graft.streaming.Streams.Segments(path,
+            Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos")))) {
+        (batch, _, _) => Seq(lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")))
       }
       Stats.isotonicFit(
-        graft.Meta.Versioned.readAll(spark, path)
-          .groupBy("bin").agg(sum("n").as("n"), sum("pos").as("pos")),
+        bins.groupBy("bin").agg(sum("n").as("n"), sum("pos").as("pos")),
         "bin", "n", "pos")
     },
 

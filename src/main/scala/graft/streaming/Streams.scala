@@ -5,7 +5,7 @@ import graft.ops.{Cdc, Merge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Structured Streaming layer (SURVEY.md §2.1 S4/K2-K6, §2.10 T1-T6;
   * reference: kafka/consumer/kafka_DLQ.py:38-93,
@@ -139,10 +139,61 @@ object Streams {
     * table path, so one constant is enough. */
   private[graft] val FoldAppId = "fold"
 
+  /** A table a [[foldOnce]] maintains: a `Meta.Versioned` chain at
+    * `path` whose first version is `seed`. The seed's schema, made
+    * nullable, is pinned: every version is read with it, so no read
+    * infers a schema from the files. */
+  sealed trait FoldTable {
+    def path: String
+    def seed: DataFrame
+    /** The seed commit's appId; it records the table's shape on disk. */
+    private[graft] def shape: String
+    private[graft] def pinned: StructType = seed.schema.toNullable
+    /** The standing state `step` sees, read with [[pinned]]. */
+    private[graft] def standing: DataFrame
+  }
+
+  /** Each batch rewrites the table; the standing state is its latest
+    * version. */
+  final case class Snapshot(path: String, seed: DataFrame) extends FoldTable {
+    private[graft] def shape = "snapshot"
+    private[graft] def standing =
+      Meta.Versioned.read(seed.sparkSession, path, schema = Some(pinned))
+  }
+
+  /** An append-only segment log: each batch commits only its delta, and
+    * the standing state is the union of every version. */
+  final case class Segments(path: String, seed: DataFrame) extends FoldTable {
+    private[graft] def shape = Meta.Versioned.SegmentsAppId
+    private[graft] def standing =
+      Meta.Versioned.readAll(seed.sparkSession, path, Some(pinned))
+  }
+
+  /** Fails unless `f` has `t`'s pinned column names, order and types,
+    * nullability aside, naming the table and the first column off. */
+  private def conform(t: FoldTable, f: DataFrame): Unit = {
+    val (want, got) = (t.pinned.fields.lift, f.schema.toNullable.fields.lift)
+    def key(c: Option[StructField]) = c.map(c => (c.name, c.dataType))
+    def show(c: Option[StructField]) =
+      c.fold("absent")(c => s"${c.name} ${c.dataType.simpleString}")
+    (0 until (t.pinned.length max f.schema.length))
+      .find(i => key(want(i)) != key(got(i)))
+      .foreach { i =>
+        throw new IllegalArgumentException(s"fold table ${t.path}: column " +
+          s"${want(i).orElse(got(i)).get.name} is ${show(got(i))}, pinned ${show(want(i))}")
+      }
+  }
+
   /** [[fold]] with the exactly-once commit (the Delta `txn` pattern of
-    * an idempotent `foreachBatch` write): `step` returns one frame per
-    * path in `tables`, in order, and the harness commits each with
-    * `Meta.Versioned.writeOnce(frame, table, FoldAppId, bid)`.
+    * an idempotent `foreachBatch` write) over the declared `tables`.
+    *
+    * A table whose path has no version yet is first seeded with
+    * `Meta.Versioned.writeOnce(seed, path, shape, 0)`, so a crash
+    * mid-seed leaves only staging debris; an existing table is never
+    * reseeded. `step(batch, bid, standing)` gets each table's standing
+    * state, in order, and returns one frame per table. Every frame must
+    * match its table's pinned schema before any is committed with
+    * `Meta.Versioned.writeOnce(frame, path, FoldAppId, bid)`.
     *
     * Replay guard: a delivered `(batch, bid)` whose every table already
     * records `bid` skips `step` outright, so a redelivery pays only the
@@ -154,21 +205,28 @@ object Streams {
     * delivered once more under the last batch id, through the same
     * guard and outside the 4-wide scope. The skip is what a fold's
     * oracle match pins: applying that batch twice would change any
-    * non-idempotent output. */
-  def foldOnce(root: String, batches: Seq[DataFrame], tables: Seq[String])(
-      step: (DataFrame, Long) => Seq[DataFrame]): Unit = {
+    * non-idempotent output. Returns each table's standing state after
+    * that replay. */
+  def foldOnce(root: String, batches: Seq[DataFrame], tables: Seq[FoldTable])(
+      step: (DataFrame, Long, Seq[DataFrame]) => Seq[DataFrame]): Seq[DataFrame] = {
+    tables.foreach { t =>
+      if (Meta.Versioned.latestVersion(t.seed.sparkSession, t.path).isEmpty)
+        Meta.Versioned.writeOnce(t.seed, t.path, t.shape, 0L)
+    }
     def commit(batch: DataFrame, bid: Long): Unit = {
       val spark = batch.sparkSession
-      if (!tables.forall(Meta.Versioned.committed(spark, _, FoldAppId, bid))) {
-        val frames = step(batch, bid)
+      if (!tables.forall(t => Meta.Versioned.committed(spark, t.path, FoldAppId, bid))) {
+        val frames = step(batch, bid, tables.map(_.standing))
         require(frames.length == tables.length,
           s"fold step returned ${frames.length} frames for ${tables.length} tables")
+        tables.zip(frames).foreach { case (t, f) => conform(t, f) }
         tables.zip(frames).foreach { case (t, f) =>
-          Meta.Versioned.writeOnce(f, t, FoldAppId, bid) }
+          Meta.Versioned.writeOnce(f, t.path, FoldAppId, bid) }
       }
     }
     val last = fold(root, batches)(commit)
     if (last >= 0) commit(batches.last, last)
+    tables.map(_.standing)
   }
 
   /** Harness-side batch-staging cutoff for FileFeed consumers: the

@@ -133,6 +133,29 @@ class MetaSpec extends SparkSuite {
     assert(!inflight.exists(), "published-over staging debris must go")
   }
 
+  test("Versioned.vacuum: refuses a foldOnce Segments log and deletes " +
+      "nothing; a Snapshot table vacuums as before") {
+    import graft.streaming.Streams
+    val root = Files.createTempDirectory("meta-vac-fold").toString
+    val (snap, segs) = (s"$root/snap", s"$root/segs")
+    val seed = Seq(0L).toDF("id")
+    Streams.foldOnce(root, Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
+        Seq(Streams.Snapshot(snap, seed), Streams.Segments(segs, seed))) {
+      (batch, _, _) => Seq(batch, batch)
+    }
+    val e = intercept[IllegalArgumentException] {
+      Meta.Versioned.vacuum(spark, segs, keep = 1)
+    }
+    assert(e.getMessage.contains("segment log"), e.getMessage)
+    assert((1L to 3L).forall(v => new java.io.File(s"$segs/v=$v").isDirectory),
+      "a refused vacuum must delete nothing")
+    assert(Meta.Versioned.readAll(spark, segs).as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 2L))
+    assert(Meta.Versioned.vacuum(spark, snap, keep = 1) == Seq(1L, 2L))
+    assert(Meta.Versioned.latestVersion(spark, snap).contains(3L))
+    assert(Meta.Versioned.read(spark, snap).as[Long].collect().toSeq == Seq(2L))
+  }
+
   test("Versioned.publishAll: readers never observe a torn multi-table publish") {
     val root = Files.createTempDirectory("meta-multi").toString
     val c1 = Meta.Versioned.publishAll(root, Seq(

@@ -479,21 +479,24 @@ class StreamsSpec extends SparkSuite {
     }
   }
 
+  // A NON-idempotent sum step: any batch applied twice shows in the total.
+  private def sumStep(calls: AtomicInteger)(batch: org.apache.spark.sql.DataFrame,
+      bid: Long, standing: Seq[org.apache.spark.sql.DataFrame]) = {
+    calls.incrementAndGet()
+    Seq(standing.head.unionByName(batch.agg(sum("id").as("total")))
+      .agg(sum("total").as("total")))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
   test("foldOnce: a non-idempotent sum equals the one-shot sum and the " +
       "guarded final-batch replay never reaches the step") {
     val root = tmp("fold-once").toString
-    val path = s"$root/sum"
-    graft.Meta.Versioned.write(Seq(0L).toDF("total"), path)
     val calls = new AtomicInteger()
-    // a NON-idempotent step: any batch applied twice shows in the total
-    Streams.foldOnce(root, foldBatches, Seq(path)) { (batch, _) =>
-      calls.incrementAndGet()
-      Seq(graft.Meta.Versioned.read(spark, path)
-        .unionByName(batch.agg(sum("id").as("total")))
-        .agg(sum("total").as("total")))
-    }
-    assert(graft.Meta.Versioned.read(spark, path).as[Long].collect().toSeq ==
-      Seq((0L until 30L).sum))
+    val Seq(total) = Streams.foldOnce(root, foldBatches,
+      Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(calls))
+    assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum))
     assert(calls.get == 3, s"step runs once per batch, ran ${calls.get}")
   }
 
@@ -506,7 +509,9 @@ class StreamsSpec extends SparkSuite {
     graft.Meta.Versioned.writeOnce(Seq(-1L).toDF("total"), a,
       Streams.FoldAppId, 0L)
     val calls = new AtomicInteger()
-    Streams.foldOnce(root, foldBatches.take(1), Seq(a, b)) { (batch, _) =>
+    val seed = Seq.empty[Long].toDF("total")
+    Streams.foldOnce(root, foldBatches.take(1),
+        Seq(Streams.Snapshot(a, seed), Streams.Snapshot(b, seed))) { (batch, _, _) =>
       calls.incrementAndGet()
       Seq.fill(2)(batch.agg(sum("id").as("total")))
     }
@@ -514,8 +519,8 @@ class StreamsSpec extends SparkSuite {
     assert(graft.Meta.Versioned.latestVersion(spark, a).contains(1L),
       "A already recorded bid 0 and must gain no version")
     assert(graft.Meta.Versioned.read(spark, a).as[Long].collect().toSeq == Seq(-1L))
-    assert(graft.Meta.Versioned.latestVersion(spark, b).contains(1L),
-      "B must gain exactly one version")
+    assert(graft.Meta.Versioned.latestVersion(spark, b).contains(2L),
+      "B must gain exactly one version over its seed")
     assert(graft.Meta.Versioned.read(spark, b).as[Long].collect().toSeq ==
       Seq((0L until 30L by 3).sum))
   }
@@ -523,16 +528,122 @@ class StreamsSpec extends SparkSuite {
   test("foldOnce: a step returning the wrong number of frames fails with " +
       "IllegalArgumentException and leaves no query running") {
     val root = tmp("fold-count").toString
+    val seed = Seq.empty[Long].toDF("id")
     try {
       val e = intercept[Exception] {
-        Streams.foldOnce(root, foldBatches, Seq(s"$root/a", s"$root/b")) {
-          (batch, _) => Seq(batch)
+        Streams.foldOnce(root, foldBatches, Seq(Streams.Snapshot(s"$root/a", seed),
+            Streams.Snapshot(s"$root/b", seed))) {
+          (batch, _, _) => Seq(batch)
         }
       }
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(_.isInstanceOf[IllegalArgumentException]),
+      assert(causes(e).exists(_.isInstanceOf[IllegalArgumentException]),
         s"the frame-count check must reach the caller: $e")
       assert(spark.streams.active.isEmpty)
     } finally spark.streams.resetTerminated()
+  }
+
+  test("foldOnce: a Snapshot passes only its latest version, a Segments " +
+      "table its seed and every delta, and both are returned") {
+    val root = tmp("fold-shapes").toString
+    val seen = scala.collection.mutable.Buffer[(Long, Seq[Long], Seq[Long])]()
+    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().sorted.toSeq
+    val Seq(snap, segs) = Streams.foldOnce(root, foldBatches, Seq(
+        Streams.Snapshot(s"$root/snap", Seq(-1L).toDF("id")),
+        Streams.Segments(s"$root/segs", Seq(-1L).toDF("id")))) {
+      case (batch, bid, Seq(snap, segs)) =>
+        seen += ((bid, ids(snap), ids(segs)))
+        Seq(batch.agg(max("id").as("id")), batch)
+    }
+    val b = foldBatches.map(ids)
+    assert(seen.toSeq == Seq(
+      (0L, Seq(-1L), Seq(-1L)),
+      (1L, Seq(27L), (-1L +: b(0)).sorted),
+      (2L, Seq(28L), (-1L +: (b(0) ++ b(1))).sorted)))
+    assert(ids(snap) == Seq(29L))
+    assert(ids(segs) == -1L +: (0L until 30L))
+    assert(graft.Meta.Versioned.latestVersion(spark, s"$root/snap").contains(4L),
+      "the seed and one version per batch")
+  }
+
+  test("foldOnce: a table that already exists is not reseeded") {
+    val root = tmp("fold-existing").toString
+    val path = s"$root/sum"
+    // an existing chain without any seed marker
+    graft.Meta.Versioned.write(Seq(100L).toDF("total"), path)
+    val calls = new AtomicInteger()
+    val Seq(total) = Streams.foldOnce(root, foldBatches,
+      Seq(Streams.Snapshot(path, Seq(0L).toDF("total"))))(sumStep(calls))
+    assert(total.as[Long].collect().toSeq == Seq(100L + (0L until 30L).sum))
+    assert(graft.Meta.Versioned.latestVersion(spark, path).contains(4L),
+      "no seed version, one version per batch")
+  }
+
+  test("foldOnce: a frame that changes a column's type fails naming the " +
+      "table and column, publishes nothing and leaves no query running") {
+    val root = tmp("fold-type").toString
+    val path = s"$root/sum"
+    try {
+      val e = intercept[Exception] {
+        Streams.foldOnce(root, foldBatches,
+            Seq(Streams.Snapshot(path, Seq(0L).toDF("total")))) { (batch, _, _) =>
+          Seq(batch.agg(sum("id").cast("double").as("total")))
+        }
+      }
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(s"fold table $path: column total is total double")),
+        s"the schema check must name table and column: $e")
+      assert(graft.Meta.Versioned.latestVersion(spark, path).contains(1L),
+        "only the seed may be published")
+      assert(spark.streams.active.isEmpty)
+    } finally spark.streams.resetTerminated()
+  }
+
+  test("foldOnce: a standing read launches no Spark job") {
+    val root = tmp("fold-jobs").toString
+    val seed = Seq((1L, "a")).toDF("id", "v")
+    val tables = Seq(Streams.Snapshot(s"$root/snap", seed),
+      Streams.Segments(s"$root/segs", seed))
+    Streams.foldOnce(root, foldBatches.take(1), tables) { (batch, _, _) =>
+      Seq.fill(2)(batch.select(col("id"), lit("b").as("v")))
+    }
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      tables.foreach(_.standing)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(jobs.get == 0, s"standing reads launched ${jobs.get} jobs")
+      // the listener does see the job an unpinned read runs to infer
+      spark.read.parquet(s"$root/snap/v=2")
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(jobs.get >= 1, "an unpinned read infers its schema with a job")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("halfCutoffByKey: `<= cutoff` keeps exactly the n/2 smallest keys") {
+    for (keys <- Seq(Seq(50L, 3L, 17L, 9L, 41L, 22L, 5L),
+        Seq(50L, 3L, 17L, 9L, 41L, 22L, 5L, 1L))) {
+      val df = keys.toDF("k")
+      val cutoff = Streams.halfCutoffByKey(df, "k")
+      assert(df.filter(col("k") <= cutoff).as[Long].collect().sorted.toSeq ==
+        keys.sorted.take(keys.size / 2), s"n = ${keys.size}")
+    }
+  }
+
+  test("halfCutoffByKey: a duplicated key fails with IllegalArgumentException") {
+    intercept[IllegalArgumentException] {
+      Streams.halfCutoffByKey(Seq(1L, 2L, 2L, 3L).toDF("k"), "k")
+    }
+  }
+
+  test("halfCutoffByKey: a one-row and an empty feed return Long.MinValue") {
+    assert(Streams.halfCutoffByKey(Seq(7L).toDF("k"), "k") == Long.MinValue)
+    assert(Streams.halfCutoffByKey(Seq.empty[Long].toDF("k"), "k") == Long.MinValue)
   }
 }

@@ -156,10 +156,30 @@ object Meta {
         .sorted
     }
 
-    /** Publish `df` as the next version; returns the new version number. */
-    def write(df: DataFrame, path: String): Long = {
-      val next = versions(df.sparkSession, path).lastOption.getOrElse(0L) + 1
-      df.write.mode("errorifexists").parquet(s"$path/v=$next")
+    /** Publish `df` as the next version ([[publish]]); returns the new
+      * version number. */
+    def write(df: DataFrame, path: String): Long = publish(df, path, None)
+
+    /** Stage `df` (and the `marker` file, if any) in `v=N_staging_<uuid>`,
+      * N = latest + 1, then rename it to `v=N` (fail-if-exists): readers
+      * see the whole version or none of it, and a write that fails
+      * before the rename leaves only debris for [[sweepStaging]]. */
+    private def publish(df: DataFrame, path: String, marker: Option[String]): Long = {
+      val spark = df.sparkSession
+      val next = versions(spark, path).lastOption.getOrElse(0L) + 1
+      val (f, _) = fs(spark, path)
+      val staging = new org.apache.hadoop.fs.Path(
+        s"$path/v=${next}_staging_${java.util.UUID.randomUUID}")
+      df.write.mode("errorifexists").parquet(staging.toString)
+      marker.foreach(m => f.create(new org.apache.hadoop.fs.Path(staging, m), true).close())
+      val dst = new org.apache.hadoop.fs.Path(s"$path/v=$next")
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+        f.getUri, spark.sparkContext.hadoopConfiguration)
+      try fc.rename(staging, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+      catch { case e: java.io.IOException =>
+        f.delete(staging, true)
+        throw e
+      }
       next
     }
 
@@ -213,28 +233,8 @@ object Meta {
         batchId: Long): Option[Long] = {
       require(TxnFile.pattern.matcher(s"_txn_${appId}_0").matches,
         s"appId '$appId' must match [A-Za-z0-9.-]+ (no underscores)")
-      val spark = df.sparkSession
-      if (lastTxn(spark, path, appId).exists(_ >= batchId)) None
-      else {
-        val next = versions(spark, path).lastOption.getOrElse(0L) + 1
-        val (f, _) = fs(spark, path)
-        // staging name deliberately fails the strict ^v=\d+$ surface
-        // regex, so readers never see the half-written snapshot
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$path/v=${next}_staging_${java.util.UUID.randomUUID}")
-        df.write.mode("errorifexists").parquet(staging.toString)
-        f.create(new org.apache.hadoop.fs.Path(staging, s"_txn_${appId}_$batchId"),
-          true).close()
-        val dst = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          f.getUri, spark.sparkContext.hadoopConfiguration)
-        try fc.rename(staging, dst, org.apache.hadoop.fs.Options.Rename.NONE)
-        catch { case e: java.io.IOException =>
-          f.delete(staging, true)
-          throw e
-        }
-        Some(next)
-      }
+      if (lastTxn(df.sparkSession, path, appId).exists(_ >= batchId)) None
+      else Some(publish(df, path, Some(s"_txn_${appId}_$batchId")))
     }
 
     /** Latest version number, if any snapshot exists. */
@@ -296,47 +296,55 @@ object Meta {
     private[graft] val SegmentsAppId = "segments"
 
     /** Drop all but the newest `keep` snapshots (VACUUM). Also reclaims
-      * pre-publish crash debris: a [[writeOnce]] that died before its
-      * rename leaves a `v=N_staging_<uuid>` dir with full parquet data.
-      * Any staging dir whose N is ≤ the latest PUBLISHED version is
-      * provably dead (writeOnce only publishes latest+1, so that N has
-      * either published from a different staging dir or been skipped) —
-      * delete it. A staging dir with N = latest+1 may be an in-flight
-      * write and is left alone; it becomes dead — and collectable on
-      * the next vacuum — as soon as any later write publishes.
-      *
-      * "Dead" is about OUTCOME, not quiescence: a still-running
-      * writeOnce whose target N was published first by a faster writer
-      * is doomed either way (its rename would refuse the existing
-      * `v=N`), but deleting its staging dir mid-write turns that clean
-      * rename refusal into task IO errors, and its own error-path
-      * cleanup then deletes an already-deleted path. `stagingGraceMs`
-      * keeps the doomed writer's failure mode clean: staging dirs
-      * modified within the grace window are skipped this cycle and
-      * collected by any later vacuum (Delta's VACUUM has the same
-      * recent-file retention check, for the same reason).
-      * Refuses a segment log (a `Streams.Segments` seed marker), see
-      * [[readAll]]. */
-    private val StagingDir = "^v=(\\d+)_staging_.*$".r
+      * pre-publish crash debris older than `stagingGraceMs`
+      * ([[sweepStaging]]). Refuses a segment log (a `Streams.Segments`
+      * seed marker), see [[readAll]]. */
     def vacuum(spark: SparkSession, path: String, keep: Int,
         stagingGraceMs: Long = 10 * 60 * 1000L): Seq[Long] = {
       require(lastTxn(spark, path, SegmentsAppId).isEmpty,
         s"$path is a segment log: vacuum would drop its data")
-      val all = versions(spark, path)
-      val dead = all.dropRight(keep)
-      val (f, p) = fs(spark, path)
+      val dead = versions(spark, path).dropRight(keep)
+      val (f, _) = fs(spark, path)
       dead.foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$path/v=$v"), true))
-      val latest = all.lastOption.getOrElse(-1L)
-      val cutoff = System.currentTimeMillis() - stagingGraceMs
-      if (f.exists(p)) f.listStatus(p).toSeq.foreach { st =>
+      sweepStaging(spark, path, stagingGraceMs)
+      dead
+    }
+
+    /** Reclaims pre-publish crash debris: a [[publish]] that died before its
+      * rename leaves a `v=N_staging_<uuid>` dir with full parquet data.
+      * Any staging dir whose N is ≤ the latest PUBLISHED version is
+      * provably dead (a publish only claims latest+1, so that N has
+      * either published from a different staging dir or been skipped) —
+      * delete it. A staging dir with N = latest+1 may be an in-flight
+      * write and is left alone; it becomes dead — and collectable on
+      * the next sweep — as soon as any later write publishes.
+      *
+      * "Dead" is about OUTCOME, not quiescence: a still-running
+      * write whose target N was published first by a faster writer
+      * is doomed either way (its rename would refuse the existing
+      * `v=N`), but deleting its staging dir mid-write turns that clean
+      * rename refusal into task IO errors, and its own error-path
+      * cleanup then deletes an already-deleted path. `graceMs`
+      * keeps the doomed writer's failure mode clean: staging dirs
+      * modified within the grace window are skipped this cycle and
+      * collected by any later sweep (Delta's VACUUM has the same
+      * recent-file retention check, for the same reason). Returns the
+      * names of the dirs deleted; a published version is never touched. */
+    private val StagingDir = "^v=(\\d+)_staging_.*$".r
+    private def sweepStaging(spark: SparkSession, path: String,
+        graceMs: Long): Seq[String] = {
+      val (f, p) = fs(spark, path)
+      val latest = versions(spark, path).lastOption.getOrElse(-1L)
+      val cutoff = System.currentTimeMillis() - graceMs
+      if (!f.exists(p)) Seq.empty
+      else f.listStatus(p).toSeq.flatMap { st =>
         st.getPath.getName match {
-          case StagingDir(n) if n.toLong <= latest &&
-              st.getModificationTime < cutoff =>
-            f.delete(st.getPath, true)
-          case _ => ()
+          case name @ StagingDir(n) if n.toLong <= latest &&
+              st.getModificationTime < cutoff && f.delete(st.getPath, true) =>
+            Some(name)
+          case _ => None
         }
       }
-      dead
     }
 
     // ------- cross-table ATOMIC publish (manifest pointer) -------
@@ -550,14 +558,15 @@ object Meta {
     /** Reclaim unreferenced storage under the manifest layout: drop all
       * but the newest `keepCommits` manifests, then delete every version
       * dir no retained manifest references — vacuumed snapshots,
-      * torn-publish debris, and lost-race staged dirs alike. The min-age
+      * torn-publish debris, lost-race staged dirs and (with `minAgeMs`
+      * as grace) [[sweepStaging]]'s dead staging dirs. The min-age
       * guard (same mitigation as Delta VACUUM's retention window) keeps
       * a version dir a CONCURRENT in-flight publishAll just staged but
       * has not yet committed: fresh dirs are never deleted, so gc is
       * safe to run alongside writers as long as a stage→commit never
       * takes `minAgeMs`. Readers of retained commits are unaffected;
       * a reader pinned to a dropped commit fails explicitly. Returns
-      * (droppedCommitIds, deletedVersionDirs). */
+      * (droppedCommitIds, deleted dirs as `table/name`). */
     def gc(spark: SparkSession, root: String, keepCommits: Int,
         minAgeMs: Long = 3600000L): (Seq[Long], Seq[String]) = {
       require(keepCommits >= 1, "gc must retain at least the newest commit")
@@ -577,6 +586,7 @@ object Meta {
           .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_"))
           .flatMap { t =>
             val table = t.getPath.getName
+            sweepStaging(spark, s"$root/$table", minAgeMs).map(n => s"$table/$n") ++
             versions(spark, s"$root/$table")
               .filterNot(v => live.contains(table -> v))
               .filter { v =>

@@ -436,12 +436,12 @@ object IndexQueries {
             .cast("double"))
     },
 
-    // ---- L207 STREAMING index fold: q223's continuous-ingest loop as
-    // an actual stream — embedding micro-batches arrive via foreachBatch,
-    // each encodes against the BROADCAST standing codebook (a pure
+    // ---- L207 STREAMING index fold: q223's continuous-ingest loop
+    // folded batch by batch through Streams.foldOnce — each embedding
+    // micro-batch encodes against the BROADCAST standing codebook (a pure
     // projection; the codebook is k·d doubles, the only state the
     // encode step ever needs) and appends its codes to the versioned
-    // index table exactly-once (Streams.foldOnce). The query
+    // index table exactly-once. The query
     // returns the FOLDED CODE TABLE itself and the oracle computes the
     // ONE-SHOT assignment of the whole corpus — so the fold identity
     // fold(encode(b₁), encode(b₂), …) == encode(corpus) is pinned
@@ -465,17 +465,15 @@ object IndexQueries {
         k = 4, iters = 2)
       val root = graft.Tmp.dir("graft-q226").toString
       val idxPath = s"$root/codes"
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() in the measured path. The fold is per-row encode +
-      // union (no per-batch output), so the final index is independent
-      // of batch MEMBERSHIP — the old sorted-half split is replaced by
-      // the residue split vec_id ≡ 0 / ≡ 3 (mod 6) over the same set.
+      // The fold is per-row encode + union (no per-batch output), so
+      // the final index is independent of batch MEMBERSHIP — the
+      // residue split vec_id ≡ 0 / ≡ 3 (mod 6) over the feed.
       val feedDf = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"))
       // Segment-append fold (round 21): code rows are append-only (each
       // vec_id arrives once) — commit the batch's encode only, instead
       // of re-writing the full code table every micro-batch.
-      val Seq(codes) = graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(codes) = graft.streaming.Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") % 6 === 0),
           feedDf.filter(col("vec_id") % 6 === 3)),
           Seq(graft.streaming.Streams.Segments(idxPath,
@@ -1062,17 +1060,15 @@ object IndexQueries {
         .join(broadcast(nc), col("rk") === col("k_rank"))
         .select(col("s").as("thr"))
         .localCheckpoint()
-      // the stream: test rows arrive in two vec_id-ordered micro-batches
+      // test rows fold in two vec_id-ordered micro-batches
       val root = graft.Tmp.dir("graft-q232").toString
       val resPath = s"$root/res"
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the embedding payload. The oracle pins batch
-      // membership to the sorted-half split (rn ≤ n div 2 over
-      // vec_id), reproduced here via the exact ⌊n∕2⌋-th-smallest
-      // vec_id cutoff — the cutoff probe is harness-side batch
-      // STAGING (a top-k scan + one scalar to the driver), not part
-      // of the monitored fold; a real connector defines its own
-      // batch boundaries.
+      // The oracle pins batch membership to the sorted-half split
+      // (rn ≤ n div 2 over vec_id), reproduced here via the exact
+      // ⌊n∕2⌋-th-smallest vec_id cutoff — the cutoff probe is
+      // harness-side batch STAGING (a top-k scan + one scalar to the
+      // driver), not part of the monitored fold; a real connector
+      // defines its own batch boundaries.
       val feedDf = e.filter(col("vec_id") % 5 === 0)
         .select(col("vec_id"), col("embedding"))
       // vec_id is the embeddings PK — distinctness (which the value-
@@ -1081,7 +1077,7 @@ object IndexQueries {
       // segment-append fold (round 21): one result row per batch is
       // append-only — commit the delta only
       import spark.implicits._
-      val Seq(res) = graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(res) = graft.streaming.Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") <= cutoff),
           feedDf.filter(col("vec_id") > cutoff)),
           Seq(graft.streaming.Streams.Segments(resPath,
@@ -1652,14 +1648,12 @@ object IndexQueries {
         k = 4, iters = 2)
       val root = graft.Tmp.dir("graft-q241").toString
       val idxPath = s"$root/codes"
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the embedding payload. Batch membership of the
-      // adds halves is irrelevant to the post-compact snapshot (each
-      // add id appears once; upserts/tombstones arrive in strictly
-      // later batches and IndexLog keeps the highest version), so the
-      // old sorted-half split becomes the residue split ≡ 0 ∕ ≡ 3
+      // Batch membership of the adds halves is irrelevant to the
+      // post-compact snapshot (each add id appears once; upserts and
+      // tombstones arrive in strictly later batches and IndexLog keeps
+      // the highest version), so the adds split by residue ≡ 0 ∕ ≡ 3
       // (mod 6); upd rides batch 1 with the second adds half and dels
-      // are batch 2, exactly as before.
+      // are batch 2.
       val adds = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"), lit("u").as("op"))
       val upd = e.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1)
@@ -1672,7 +1666,7 @@ object IndexQueries {
       // batch commits only its delta rows; the standing log is the
       // union of retained segments. The full-rewrite fold re-wrote the
       // whole log every batch.
-      val Seq(log) = graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(log) = graft.streaming.Streams.foldOnce(Seq(
           adds.filter(col("vec_id") % 6 === 0),
           adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
           dels), Seq(graft.streaming.Streams.Segments(idxPath, IndexLog.initial(
@@ -1991,13 +1985,8 @@ object IndexQueries {
       }
       val root = graft.Tmp.dir("graft-q248").toString
       val statePath = s"$root/moments"
-      // file-backed feed (Streams.FileFeed, round 16): batches staged
-      // as parquet executor-side and re-entering through the file-
-      // stream source — no driver collect() in the measured path (the
-      // MemoryStream feed collected ~250 MB onto the driver at sf10;
-      // A/B in bench/README.md "Round-16: the file-backed feed A/B").
-      // Batch membership is unchanged: batch 0 = vec_id ≡ 0 (mod 4),
-      // batch 1 = the remaining evens.
+      // Batch membership: batch 0 = vec_id ≡ 0 (mod 4), batch 1 = the
+      // remaining evens.
       val feedDf = e.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 2 === 0)
       // Segment-append fold (round 21, guide §2.3/§6): the moment state
@@ -2006,7 +1995,7 @@ object IndexQueries {
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
       // re-writing the full dims+pairs grid.
-      val Seq(segs) = graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(segs) = graft.streaming.Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") % 4 === 0),
           feedDf.filter(col("vec_id") % 4 =!= 0)),
           Seq(graft.streaming.Streams.Segments(statePath,

@@ -347,7 +347,7 @@ object RetrievalQueries {
     // through Streams.foldOnce (a postings re-append would duplicate
     // hits, a count re-fold would double-count — neither is
     // idempotent), which REPLAYS the final batch under its original
-    // batch id after the stream stops: the oracle only matches because
+    // batch id after the last batch: the oracle only matches because
     // the replay no-ops. Final answer = workload from the
     // RESOLVED count state + anchor match over the RESOLVED postings —
     // the oracle is q281's one-shot SQL VERBATIM, pinning
@@ -390,7 +390,7 @@ object RetrievalQueries {
       // The full-rewrite fold re-wrote the corpus-token-sized postings
       // table every micro-batch; now a batch writes O(|batch|).
       // Seeds: an empty index and an empty count state.
-      val Seq(posts, counts) = Streams.foldOnce(root, Seq(
+      val Seq(posts, counts) = Streams.foldOnce(Seq(
           feedDf.filter(col("doc_id") % 2 === 0),
           feedDf.filter(col("doc_id") % 2 =!= 0)),
           Seq(Streams.Segments(postPath, postings(toks(feedDf)).limit(0)),

@@ -399,8 +399,8 @@ object StatefulQueries {
     },
 
     // ---- L85 STREAMING incremental-view maintenance: the L83 fold run
-    // continuously — each micro-batch of the change feed folds into the
-    // standing (cnt, total) aggregate via foreachBatch, written as a new
+    // continuously — the change feed folds batch by batch through
+    // Streams.foldOnce into the standing (cnt, total) aggregate, a new
     // snapshot version per batch (the maintenance history is a version
     // chain, never an in-place overwrite). count/sum form an abelian
     // group, so ANY batching of the feed — here two deterministic
@@ -408,9 +408,9 @@ object StatefulQueries {
     // batches — folds to the same final table; the oracle is the direct
     // aggregate of v2, same contract as q100. Per-batch cost is
     // |micro-batch| + |groups|; the orders snapshot is never rescanned.
-    // Delivery (round 8): foreachBatch is at-least-once and a sum fold
-    // is NOT idempotent, so each fold commits exactly-once through
-    // Streams.foldOnce, whose final-batch replay the oracle match pins
+    // Delivery (round 8): a redelivered batch must not reach a sum fold,
+    // which is NOT idempotent, so each fold commits exactly-once under
+    // foldOnce's txn markers, whose final-batch replay the oracle match pins
     // (q115 pins the idempotent sketch twin; this pins the
     // non-idempotent one).
     Q(
@@ -442,7 +442,7 @@ object StatefulQueries {
       // seed: direct aggregate of v1. The feed diffs the two frames
       // directly (snapshotDiff — q100 covers the committed-chain path);
       // only the MAINTAINED aggregate needs the version-chain machinery.
-      val Seq(agg) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+      val Seq(agg) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
           aggPath, Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
           standing, batch, Seq("o_custkey"), "o_totalprice"))
@@ -451,8 +451,8 @@ object StatefulQueries {
     },
 
     // ---- Streaming SKETCH maintenance (L97): per-micro-batch KMV
-    // sketches of the shingle stream folded into a standing per-source
-    // sketch table through foreachBatch + versioned snapshots — the
+    // sketches of the shingle stream folded batch by batch through
+    // Streams.foldOnce into a standing per-source sketch table — the
     // sketch twin of q103's sum fold, with an ALGEBRAIC replay shield
     // on top of the transactional one: bottom-k union is idempotent as
     // well as abelian, so a whole batch redelivered under a NEW batch
@@ -487,14 +487,13 @@ object StatefulQueries {
           .select(col("source"), explode(col("hv")).as("h"))
           .groupBy("source")
           .agg(call_function("graft_kmv_sketch", col("h"), lit(1024)).as("sk"))
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the corpus text; batch membership unchanged
-      // (key parity, with the first half staged verbatim as its own
-      // batch — it arrives under a NEW batch id, so the txn markers
-      // cannot skip it and KMV merge, idempotent set union, must absorb
-      // the doubled batch); the seed is an empty standing table
+      // Batch membership: key parity, with the first half staged
+      // verbatim as its own batch — it arrives under a NEW batch id, so
+      // the txn markers cannot skip it and KMV merge, idempotent set
+      // union, must absorb the doubled batch. The seed is an empty
+      // standing table.
       val even = docs.filter(col("doc_id") % 2 === 0)
-      val Seq(sketches) = Streams.foldOnce(root, Seq(even, even,
+      val Seq(sketches) = Streams.foldOnce(Seq(even, even,
           docs.filter(col("doc_id") % 2 =!= 0)),
           Seq(Streams.Snapshot(skPath, sketchOf(docs.limit(0))))) {
         case (batch, _, Seq(sk)) =>
@@ -573,7 +572,7 @@ object StatefulQueries {
           col("o_totalprice"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      val Seq(m) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+      val Seq(m) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
           aggPath, Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainMoments(
           standing, batch, Seq("o_custkey"), "o_totalprice"))
@@ -622,7 +621,7 @@ object StatefulQueries {
           col("n_chars"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
         feedDf.filter(col("doc_id") % 2 =!= 0))
-      val Seq(agg) = Streams.foldOnce(root, Seq(even, odd), Seq(Streams.Snapshot(
+      val Seq(agg) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
           aggPath, Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
           standing, batch, Seq("lang", "source"), "n_chars"))
@@ -681,12 +680,11 @@ object StatefulQueries {
         .select(col("doc_id"), explode(col("hv")).as("h"))
         .groupBy("h").agg(min("doc_id").as("owner"))
       import spark.implicits._
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the document text. Batch membership MATTERS here
-      // (novelty scores read the standing owner state as of the doc's
-      // batch), so the oracle's sorted-half split is reproduced
-      // exactly via the ⌊n∕2⌋-th-smallest doc_id cutoff — a harness-
-      // side staging probe, not part of the measured fold.
+      // Batch membership MATTERS here (novelty scores read the
+      // standing owner state as of the doc's batch), so the oracle's
+      // sorted-half split is reproduced exactly via the
+      // ⌊n∕2⌋-th-smallest doc_id cutoff — a harness-side staging
+      // probe, not part of the measured fold.
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
       // doc_id is the documents PK — distinctness (which the value-
@@ -700,9 +698,8 @@ object StatefulQueries {
       // table is a keyed upsert, not an append-only log. res IS
       // append-only (per-doc scores, batch doc sets disjoint) — the
       // round-21 segment-append shape: commit the delta only.
-      val Seq(_, res) = Streams.foldOnce(root,
-          Seq(feedDf.filter(col("doc_id") <= cutoff),
-            feedDf.filter(col("doc_id") > cutoff)),
+      val Seq(_, res) = Streams.foldOnce(Seq(feedDf.filter(col("doc_id") <= cutoff),
+          feedDf.filter(col("doc_id") > cutoff)),
           Seq(Streams.Snapshot(ownPath, standing0),
             Streams.Segments(resPath, Seq.empty[(Long, Long, Long, Double)]
               .toDF("doc_id", "n_shingles", "n_novel", "novelty")))) {
@@ -769,9 +766,8 @@ object StatefulQueries {
       // and a corpus rewrite per trigger). exactSubstrBatch materializes
       // its kernels eagerly (caches + localCheckpoints), so foldOnce's
       // replay guard is what spares the final-batch replay that work.
-      val Seq(_, res) = Streams.foldOnce(root,
-          Seq(docs.filter(col("doc_id") <= cutoff),
-            docs.filter(col("doc_id") > cutoff)),
+      val Seq(_, res) = Streams.foldOnce(Seq(docs.filter(col("doc_id") <= cutoff),
+          docs.filter(col("doc_id") > cutoff)),
           Seq(Streams.Segments(ownPath, Seq.empty[(Long, Long, Int)]
               .toDF("h", "own_id", "own_spos")),
             Streams.Segments(resPath, Seq.empty[(Long, String, Long, Long)]
@@ -818,11 +814,9 @@ object StatefulQueries {
         toksOf(df)
           .agg(call_function("graft_freq_sketch", col("term"), lit(400)).as("c"))
           .select(explode(col("c")).as("term"))
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(); key-parity batch membership unchanged
-      // CM merge is elementwise ADDITION — a replayed batch would
-      // double its counts — so both folds commit exactly-once through
-      // foldOnce (txn markers, round 8). The two tables are separate
+      // Key-parity batch membership. CM merge is elementwise ADDITION
+      // — a replayed batch would double its counts — so both folds
+      // commit exactly-once through foldOnce (txn markers, round 8). The two tables are separate
       // commit points: a crash between them replays the batch, the cm
       // commit no-ops on its marker, and only the missing cands commit
       // applies.
@@ -831,9 +825,8 @@ object StatefulQueries {
       // union — both resolve order-free from per-batch segments, so
       // each batch commits only its OWN sketch / candidate rows
       // and the standing read+rewrite per trigger disappears.
-      val Seq(cms, candSegs) = Streams.foldOnce(root,
-          Seq(docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0)),
+      val Seq(cms, candSegs) = Streams.foldOnce(Seq(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)),
           Seq(Streams.Segments(cmPath, cmOf(docs.limit(0))),
             Streams.Segments(candPath, candsOf(docs.limit(0))))) {
         (batch, _, _) => Seq(cmOf(batch), candsOf(batch))
@@ -886,12 +879,11 @@ object StatefulQueries {
       def bitmapOf(df: DataFrame) =
         df.groupBy("event_type")
           .agg(call_function("graft_bitmap_sketch", col("user_id")).as("bm"))
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the events slice; key-parity membership unchanged,
-      // with the first half staged TWICE — the copy arrives under a new
-      // batch id, so no txn marker skips it and OR must absorb it
+      // Key-parity batch membership, with the first half staged TWICE
+      // — the copy arrives under a new batch id, so no txn marker
+      // skips it and OR must absorb it
       val even = ev.filter(col("event_id") % 2 === 0)
-      val Seq(bitmaps) = Streams.foldOnce(root, Seq(even, even,
+      val Seq(bitmaps) = Streams.foldOnce(Seq(even, even,
           ev.filter(col("event_id") % 2 =!= 0)),
           Seq(Streams.Snapshot(bmPath, bitmapOf(ev.limit(0))))) {
         case (batch, _, Seq(bm)) =>
@@ -1084,13 +1076,12 @@ object StatefulQueries {
       val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")
       val root = graft.Tmp.dir("graft-q267").toString
       val path = s"$root/sample"
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(). The top-(n+1) priority fold is an associative
-      // merge (top-of-tops == top-of-all), so batch MEMBERSHIP is
-      // irrelevant to the final sample — the old sorted-half split
-      // becomes the residue split doc_id ≡ 0 ∕ ≡ 3 (mod 6).
+      // The top-(n+1) priority fold is an associative merge
+      // (top-of-tops == top-of-all), so batch MEMBERSHIP is irrelevant
+      // to the final sample — the residue split doc_id ≡ 0 ∕ ≡ 3
+      // (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      val Seq(sample) = graft.streaming.Streams.foldOnce(root, Seq(
+      val Seq(sample) = graft.streaming.Streams.foldOnce(Seq(
           feedDf.filter(col("doc_id") % 6 === 0),
           feedDf.filter(col("doc_id") % 6 === 3)),
           Seq(graft.streaming.Streams.Snapshot(path, Sample.priorityTopK(
@@ -1178,13 +1169,12 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q270").toString
       val path = s"$root/sprt"
       import spark.implicits._
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the corpus text. Batch membership unchanged:
-      // batch b = doc_id ≡ b (mod 4), exactly the oracle's blog CTE.
+      // Batch membership: batch b = doc_id ≡ b (mod 4), exactly the
+      // oracle's blog CTE.
       val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
       // segment-append fold (round 21): one (bid, n, k) row per batch
       // is append-only — commit the delta only
-      val Seq(log) = graft.streaming.Streams.foldOnce(root, batches,
+      val Seq(log) = graft.streaming.Streams.foldOnce(batches,
           Seq(graft.streaming.Streams.Segments(path,
             Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k")))) {
         (batch, bid, _) => Seq(batch.toDF("doc_id", "text")
@@ -1240,7 +1230,7 @@ object StatefulQueries {
         .select(col("source"), col("doc_id"),
           size(graft.ops.Text.tokens(col("text"))).cast("long").as("ntok"))
       val cutoff = Streams.halfCutoffByKey(t, "doc_id")
-      val Seq(state) = Streams.foldOnce(root, Seq(t.filter(col("doc_id") <= cutoff),
+      val Seq(state) = Streams.foldOnce(Seq(t.filter(col("doc_id") <= cutoff),
           t.filter(col("doc_id") > cutoff)),
           Seq(Streams.Snapshot(stPath, Packing.emptyState(spark)))) {
         case (batch, _, Seq(st)) =>

@@ -717,14 +717,11 @@ object StatsQueries {
       val root = graft.Tmp.dir("graft-q272").toString
       val path = s"$root/bins"
       import spark.implicits._
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() in the measured path — the whole corpus used to
-      // round-trip through the driver as tuples. Batch membership
-      // unchanged: batch b = doc_id ≡ b (mod 4).
+      // Batch membership: batch b = doc_id ≡ b (mod 4).
       // Segment-append fold (round 21): per-bin (n, pos) counts are
       // additive long sums — commit the batch's partial only,
       // re-reduce the retained segments at read.
-      val Seq(bins) = graft.streaming.Streams.foldOnce(root,
+      val Seq(bins) = graft.streaming.Streams.foldOnce(
           (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)),
           Seq(graft.streaming.Streams.Segments(path,
             Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos")))) {

@@ -57,12 +57,12 @@ object Streams {
     * `add` is mid-write — a multi-file write committed file-by-file
     * into the watched directory could surface a PARTIAL file set and
     * split one intended add across two micro-batches (MemoryStream's
-    * `addData` was atomic; the bid-/membership-sensitive folds rely on
-    * the one-add-one-batch boundary). Each add therefore writes its
-    * part-files to a sibling NON-watched staging directory first and
-    * enters the watched glob via ONE directory rename: any listing
-    * either sees the whole batch directory (files already inside) or
-    * none of it. The write stays fully distributed — no `coalesce(1)`
+    * `addData` was atomic; [[fold]] steps and q196 rely on the
+    * one-add-one-batch boundary; [[foldOnce]] needs no feed). Each add
+    * therefore writes its part-files to a sibling NON-watched staging
+    * directory first and enters the watched glob via ONE directory
+    * rename: any listing either sees the whole batch directory (files
+    * already inside) or none of it. The write stays fully distributed — no `coalesce(1)`
     * funnel — and file paths are rename-stable, so the source's
     * seen-files checkpoint (the T2/T3 restart contract) is unaffected. */
   final class FileFeed(spark: SparkSession, schema: StructType, root: String) {
@@ -94,14 +94,15 @@ object Streams {
     }
   }
 
-  /** The file-fed micro-batch fold every streaming fold query runs:
-    * stages `batches` through a [[FileFeed]] at `root`, one add per
-    * batch, and drives one `foreachBatch(step)` query (checkpoint
+  /** The file-fed micro-batch fold for steps that own their commits
+    * (q37, q218, whose subject is Structured Streaming): stages
+    * `batches` through a [[FileFeed]] at `root`, one add per batch, and
+    * drives one `foreachBatch(step)` query (checkpoint
     * `$root/cp`) that is drained after every add, so batch i arrives as
     * micro-batch i. The query stops in a `finally`, so a throwing
     * `step` reaches the caller with no query left running. Delivery is
     * at-least-once and `step` owns its commits; folds that commit
-    * through `Meta.Versioned.writeOnce` use [[foldOnce]] instead.
+    * exactly-once use [[foldOnce]], which runs no stream at all.
     * `batches` must be non-empty. Returns the last batch id delivered,
     * or -1 if the query delivered none.
     *
@@ -184,8 +185,14 @@ object Streams {
       }
   }
 
-  /** [[fold]] with the exactly-once commit (the Delta `txn` pattern of
-    * an idempotent `foreachBatch` write) over the declared `tables`.
+  /** The exactly-once micro-batch fold (the Delta `txn` pattern of an
+    * idempotent `foreachBatch` write) over the declared `tables`: batch
+    * i of `batches` (non-empty) is applied under batch id i, 4 shuffle
+    * partitions wide (a batch is a few thousand rows), and the
+    * `Meta.Versioned.writeOnce` markers are the only bookkeeping, so a
+    * re-run on the same tables resumes where they stop. `step` gets the
+    * caller's frame itself, so batches must be deterministic: a step
+    * that reads its batch twice evaluates it twice.
     *
     * A table whose path has no version yet is first seeded with
     * `Meta.Versioned.writeOnce(seed, path, shape, 0)`, so a crash
@@ -195,20 +202,20 @@ object Streams {
     * match its table's pinned schema before any is committed with
     * `Meta.Versioned.writeOnce(frame, path, FoldAppId, bid)`.
     *
-    * Replay guard: a delivered `(batch, bid)` whose every table already
-    * records `bid` skips `step` outright, so a redelivery pays only the
-    * driver-side marker listings, not the fold's compute. A split marker
-    * state (a crash between two table commits) fails the guard; `step`
-    * then recomputes and `writeOnce` skips or applies per table.
+    * Replay guard: a `(batch, bid)` whose every table already records
+    * `bid` skips `step` outright, so a re-run pays only the driver-side
+    * marker listings, not the fold's compute. A split marker state (a
+    * crash between two table commits) fails the guard; `step` then
+    * recomputes and `writeOnce` skips or applies per table.
     *
-    * Replay self-test: after the stream stops, `batches.last` is
-    * delivered once more under the last batch id, through the same
-    * guard and outside the 4-wide scope. The skip is what a fold's
-    * oracle match pins: applying that batch twice would change any
-    * non-idempotent output. Returns each table's standing state after
-    * that replay. */
-  def foldOnce(root: String, batches: Seq[DataFrame], tables: Seq[FoldTable])(
+    * Replay self-test: after the last batch, `batches.last` is applied
+    * once more under the last batch id, through the same guard and
+    * outside the 4-wide scope. The skip is what a fold's oracle match
+    * pins: applying that batch twice would change any non-idempotent
+    * output. Returns each table's standing state after that replay. */
+  def foldOnce(batches: Seq[DataFrame], tables: Seq[FoldTable])(
       step: (DataFrame, Long, Seq[DataFrame]) => Seq[DataFrame]): Seq[DataFrame] = {
+    require(batches.nonEmpty, "foldOnce needs at least one batch")
     tables.foreach { t =>
       if (Meta.Versioned.latestVersion(t.seed.sparkSession, t.path).isEmpty)
         Meta.Versioned.writeOnce(t.seed, t.path, t.shape, 0L)
@@ -224,12 +231,14 @@ object Streams {
           Meta.Versioned.writeOnce(f, t.path, FoldAppId, bid) }
       }
     }
-    val last = fold(root, batches)(commit)
-    if (last >= 0) commit(batches.last, last)
+    graft.Sessions.withShufflePartitions(batches.head.sparkSession, 4) {
+      batches.zipWithIndex.foreach { case (b, i) => commit(b, i.toLong) }
+    }
+    commit(batches.last, batches.length - 1L)
     tables.map(_.standing)
   }
 
-  /** Harness-side batch-staging cutoff for FileFeed consumers: the
+  /** Harness-side batch-staging cutoff for [[foldOnce]] callers: the
     * ⌊n∕2⌋-th-smallest `keyCol` value, reproducing the oracle's
     * sorted-half split (`rn <= n div 2` over the key). The
     * value-cutoff ⇔ row-rank-split equivalence REQUIRES the key to be

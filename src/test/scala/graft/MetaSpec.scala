@@ -102,6 +102,26 @@ class MetaSpec extends SparkSuite {
     assert(Meta.Versioned.writeOnce(Seq(9L).toDF("x"), dir, "app", 1L).isEmpty)
   }
 
+  test("Versioned.write: after a write that fails mid-job, the latest " +
+      "version and its rows are unchanged") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dir = Files.createTempDirectory("meta-failwrite").toString + "/t"
+    Meta.Versioned.write(Seq(1L, 2L).toDF("x"), dir)
+    intercept[Exception] {
+      // a Range, not a local relation: the optimizer cannot fold the
+      // raise_error away, so the write job starts and fails in a task
+      Meta.Versioned.write(spark.range(3L, 5L).toDF("x").select(
+        when(col("x") === 4L, raise_error(lit("failed mid-job")))
+          .otherwise(col("x")).as("x")), dir)
+    }
+    assert(Meta.Versioned.latestVersion(spark, dir).contains(1L))
+    assert(Meta.Versioned.read(spark, dir).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    val pinned = Some(Seq(0L).toDF("x").schema)
+    assert(Meta.Versioned.read(spark, dir, schema = pinned).as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("Versioned.vacuum: reclaims dead writeOnce staging debris, " +
       "leaves a possibly-in-flight staging dir alone") {
     val dir = Files.createTempDirectory("meta-stag").toString + "/t"
@@ -139,7 +159,7 @@ class MetaSpec extends SparkSuite {
     val root = Files.createTempDirectory("meta-vac-fold").toString
     val (snap, segs) = (s"$root/snap", s"$root/segs")
     val seed = Seq(0L).toDF("id")
-    Streams.foldOnce(root, Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
+    Streams.foldOnce(Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
         Seq(Streams.Snapshot(snap, seed), Streams.Segments(segs, seed))) {
       (batch, _, _) => Seq(batch, batch)
     }
@@ -446,6 +466,27 @@ class MetaSpec extends SparkSuite {
     intercept[Exception] {
       Meta.Versioned.readCommitted(spark, root, "t", commit = Some(1L)).count()
     }
+  }
+
+  test("Versioned.gc: reclaims a table's dead staging debris once a " +
+      "later version publishes, like vacuum") {
+    val root = Files.createTempDirectory("meta-gc-stag").toString
+    Meta.Versioned.publishAll(root, Seq("t" -> Seq(1).toDF("x")))
+    // crash debris of a write that died before publishing v=2
+    val debris = new java.io.File(s"$root/t/v=2_staging_deadbeef")
+    assert(debris.mkdirs())
+    new java.io.File(debris, "part-0.parquet").createNewFile()
+    // v=2 may still be in flight until a later version publishes
+    assert(Meta.Versioned.gc(spark, root, 1, minAgeMs = 0L)._2.isEmpty)
+    assert(debris.exists())
+    Meta.Versioned.publishAll(root, Seq("t" -> Seq(3).toDF("x")))
+    assert(Meta.Versioned.gc(spark, root, 1)._2.isEmpty,
+      "fresh debris sits out the min-age guard")
+    val (_, deleted) = Meta.Versioned.gc(spark, root, 1, minAgeMs = 0L)
+    assert(deleted.toSet == Set("t/v=2_staging_deadbeef", "t/v=1"), s"$deleted")
+    assert(!debris.exists())
+    assert(Meta.Versioned.readCommitted(spark, root, "t").as[Int].collect().toSeq ==
+      Seq(3))
   }
 
   test("Versioned.changes: snapshot-diff CDF tags insert/update/delete, " +

@@ -44,8 +44,7 @@ class StatefulStreamsSpec extends SparkSuite {
     // file source + running count. The restarted query must NOT re-read
     // file 1 (offset log) yet still knows its counts — i.e. the state
     // store, not the input, carries them across the restart.
-    val root = java.nio.file.Files.createTempDirectory("graft-stateful-restart")
-    root.toFile.deleteOnExit()
+    val root = graft.Tmp.dir("graft-stateful-restart")
     val in = root.resolve("in"); val cp = root.resolve("cp").toString
     java.nio.file.Files.createDirectories(in)
     def writeFile(name: String, lines: Seq[String]): Unit =
@@ -79,8 +78,7 @@ class StatefulStreamsSpec extends SparkSuite {
 
   test("transformWithState (state v2): ValueState accumulates across a " +
       "restart from the RocksDB checkpoint; only touched keys emit") {
-    val root = java.nio.file.Files.createTempDirectory("graft-twstate")
-    root.toFile.deleteOnExit()
+    val root = graft.Tmp.dir("graft-twstate")
     val in = root.resolve("in"); val cp = root.resolve("cp").toString
     java.nio.file.Files.createDirectories(in)
     def writeFile(name: String, lines: Seq[String]): Unit =
@@ -138,8 +136,7 @@ class StatefulStreamsSpec extends SparkSuite {
   test("sketch-fold restart: the standing KMV table resumes from the " +
       "checkpoint — streamed across a kill/restart equals one-shot, bit " +
       "for bit (the q115 production resume contract)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-sketch-restart")
-    root.toFile.deleteOnExit()
+    val root = graft.Tmp.dir("graft-sketch-restart")
     val in = root.resolve("in"); val cp = root.resolve("cp").toString
     val skPath = root.resolve("sk").toString
     java.nio.file.Files.createDirectories(in)
@@ -195,8 +192,7 @@ class StatefulStreamsSpec extends SparkSuite {
       "(the q103/q121 at-least-once window): streamed over a RANDOMIZED " +
       "batching, with one batch replayed, equals the direct aggregate") {
     import graft.ops.Incremental
-    val root = java.nio.file.Files.createTempDirectory("graft-writeonce")
-    root.toFile.deleteOnExit()
+    val root = graft.Tmp.dir("graft-writeonce")
     val aggPath = root.resolve("agg").toString
     val cp = root.resolve("cp").toString
     val o = graft.Tables.orders(spark, sfDir())
@@ -260,8 +256,7 @@ class StatefulStreamsSpec extends SparkSuite {
 
   test("writeOnce crash window: a staging dir left by a pre-publish failure " +
       "is invisible to readers and does not block the retry") {
-    val root = java.nio.file.Files.createTempDirectory("graft-writeonce-crash")
-    root.toFile.deleteOnExit()
+    val root = graft.Tmp.dir("graft-writeonce-crash")
     val p = root.resolve("t").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     graft.Meta.Versioned.write(df, p)

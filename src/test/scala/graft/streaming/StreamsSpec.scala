@@ -20,11 +20,7 @@ class StreamsSpec extends SparkSuite {
     StructField("payload", StringType),
     StructField("kafka_ts", StringType)))
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmp(prefix: String): Path = graft.Tmp.dir(prefix)
 
   private def writeInput(dir: Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), String.join("\n", lines: _*).getBytes)
@@ -494,10 +490,65 @@ class StreamsSpec extends SparkSuite {
       "guarded final-batch replay never reaches the step") {
     val root = tmp("fold-once").toString
     val calls = new AtomicInteger()
-    val Seq(total) = Streams.foldOnce(root, foldBatches,
+    val Seq(total) = Streams.foldOnce(foldBatches,
       Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(calls))
     assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum))
     assert(calls.get == 3, s"step runs once per batch, ran ${calls.get}")
+  }
+
+  test("foldOnce: a re-run on the same tables with the same batches " +
+      "leaves the sum unchanged and never reaches the step") {
+    val root = tmp("fold-rerun").toString
+    val calls = new AtomicInteger()
+    def run() = Streams.foldOnce(foldBatches,
+      Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(calls))
+    run()
+    val Seq(total) = run()
+    assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum))
+    assert(calls.get == 3, s"step runs once per batch in total, ran ${calls.get}")
+  }
+
+  test("foldOnce: a step that throws at batch k, then a re-run, equals " +
+      "the uninterrupted sum and applies only the batches from k on") {
+    for (k <- 0L to 2L) {
+      val root = tmp(s"fold-crash$k").toString
+      val tables = Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total")))
+      val e = intercept[Exception] {
+        Streams.foldOnce(foldBatches, tables) { (batch, bid, standing) =>
+          if (bid == k) throw new IllegalStateException(s"step failed at $k")
+          sumStep(new AtomicInteger())(batch, bid, standing)
+        }
+      }
+      assert(causes(e).exists(c => String.valueOf(c.getMessage)
+        .contains(s"step failed at $k")), s"k = $k: $e")
+      val calls = new AtomicInteger()
+      val Seq(total) = Streams.foldOnce(foldBatches, tables)(sumStep(calls))
+      assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum), s"k = $k")
+      assert(calls.get == 3 - k, s"k = $k: the re-run ran the step ${calls.get} times")
+    }
+  }
+
+  test("foldOnce: starts no streaming query") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val started = new AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val root = tmp("fold-nostream").toString
+    spark.streams.addListener(listener)
+    try {
+      Streams.foldOnce(foldBatches,
+        Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(new AtomicInteger()))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(started.get == 0, s"foldOnce started ${started.get} streaming queries")
+      // the listener does see the query a stream-driven fold starts
+      Streams.fold(s"$root/feed", foldBatches.take(1))((_, _) => ())
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(started.get == 1, "Streams.fold starts one query")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("foldOnce: a split marker state recomputes, and each table " +
@@ -510,7 +561,7 @@ class StreamsSpec extends SparkSuite {
       Streams.FoldAppId, 0L)
     val calls = new AtomicInteger()
     val seed = Seq.empty[Long].toDF("total")
-    Streams.foldOnce(root, foldBatches.take(1),
+    Streams.foldOnce(foldBatches.take(1),
         Seq(Streams.Snapshot(a, seed), Streams.Snapshot(b, seed))) { (batch, _, _) =>
       calls.incrementAndGet()
       Seq.fill(2)(batch.agg(sum("id").as("total")))
@@ -531,7 +582,7 @@ class StreamsSpec extends SparkSuite {
     val seed = Seq.empty[Long].toDF("id")
     try {
       val e = intercept[Exception] {
-        Streams.foldOnce(root, foldBatches, Seq(Streams.Snapshot(s"$root/a", seed),
+        Streams.foldOnce(foldBatches, Seq(Streams.Snapshot(s"$root/a", seed),
             Streams.Snapshot(s"$root/b", seed))) {
           (batch, _, _) => Seq(batch)
         }
@@ -547,7 +598,7 @@ class StreamsSpec extends SparkSuite {
     val root = tmp("fold-shapes").toString
     val seen = scala.collection.mutable.Buffer[(Long, Seq[Long], Seq[Long])]()
     def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().sorted.toSeq
-    val Seq(snap, segs) = Streams.foldOnce(root, foldBatches, Seq(
+    val Seq(snap, segs) = Streams.foldOnce(foldBatches, Seq(
         Streams.Snapshot(s"$root/snap", Seq(-1L).toDF("id")),
         Streams.Segments(s"$root/segs", Seq(-1L).toDF("id")))) {
       case (batch, bid, Seq(snap, segs)) =>
@@ -571,7 +622,7 @@ class StreamsSpec extends SparkSuite {
     // an existing chain without any seed marker
     graft.Meta.Versioned.write(Seq(100L).toDF("total"), path)
     val calls = new AtomicInteger()
-    val Seq(total) = Streams.foldOnce(root, foldBatches,
+    val Seq(total) = Streams.foldOnce(foldBatches,
       Seq(Streams.Snapshot(path, Seq(0L).toDF("total"))))(sumStep(calls))
     assert(total.as[Long].collect().toSeq == Seq(100L + (0L until 30L).sum))
     assert(graft.Meta.Versioned.latestVersion(spark, path).contains(4L),
@@ -584,7 +635,7 @@ class StreamsSpec extends SparkSuite {
     val path = s"$root/sum"
     try {
       val e = intercept[Exception] {
-        Streams.foldOnce(root, foldBatches,
+        Streams.foldOnce(foldBatches,
             Seq(Streams.Snapshot(path, Seq(0L).toDF("total")))) { (batch, _, _) =>
           Seq(batch.agg(sum("id").cast("double").as("total")))
         }
@@ -603,7 +654,7 @@ class StreamsSpec extends SparkSuite {
     val seed = Seq((1L, "a")).toDF("id", "v")
     val tables = Seq(Streams.Snapshot(s"$root/snap", seed),
       Streams.Segments(s"$root/segs", seed))
-    Streams.foldOnce(root, foldBatches.take(1), tables) { (batch, _, _) =>
+    Streams.foldOnce(foldBatches.take(1), tables) { (batch, _, _) =>
       Seq.fill(2)(batch.select(col("id"), lit("b").as("v")))
     }
     val sc = spark.sparkContext

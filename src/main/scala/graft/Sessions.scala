@@ -199,8 +199,7 @@ object Sessions {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", Tmp.dir("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
       .withExtensions(registerGraftFunctions)
 }

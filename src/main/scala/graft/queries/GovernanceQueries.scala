@@ -305,12 +305,9 @@ object GovernanceQueries {
         import org.apache.spark.sql.streaming.Trigger
         val docsSchema = Tables.documents(spark, dir).schema
         val bench = Tables.documents(spark, dir).filter(col("doc_id") % 97 === 0)
-        val streamDir = graft.Tmp.dir("graft-q97-in")
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve("documents.parquet"),
-          java.nio.file.Paths.get(s"$dir/documents.parquet"))
         val outDir = graft.Tmp.dir("graft-q97-out").toString
-        val src = spark.readStream.schema(docsSchema).parquet(streamDir.toString)
+        val src = graft.streaming.Streams.fixtureStream(spark,
+          s"$dir/documents.parquet", docsSchema)
         graft.Sessions.withShufflePartitions(spark, 4) {
           val q = src.writeStream.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.ExactRound
 import graft.ops.{Components, Dedup, IndexLog, Similarity, Stats}
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -107,7 +108,7 @@ object IndexQueries {
     // table = history encoded once; a NEW batch (vec_id % 3 = 0)
     // encodes against the STANDING codebook — a pure projection, no
     // retrain, no corpus re-scan — and folds in exactly-once via
-    // Versioned.writeOnce (the duplicate call is the replay shield).
+    // Streams.foldOnce (its final-batch replay is the redelivery).
     // Because the code is a per-row function of (vector, codebook),
     // fold == one-shot-encode; the oracle computes the ONE-SHOT
     // assignment of the whole corpus and searches it, so the folded
@@ -163,18 +164,15 @@ object IndexQueries {
       // stale codebook: trained on history only
       val (_, stale) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
         k = 4, iters = 2)
-      // standing versioned index: history encoded once
+      // history seeds the standing index; the batch encodes against the
+      // STANDING codebook and folds in exactly-once (the final-batch
+      // replay is the redelivery; its marker skip keeps the codes single)
       val idxPath = graft.Tmp.dir("graft-q223").toString + "/codes"
-      graft.Meta.Versioned.write(
-        Similarity.ivfEncode(hist, "vec_id", "embedding", stale), idxPath)
-      // the batch folds in: encode against the STANDING codebook,
-      // append exactly-once; the second call is a redelivery and must
-      // no-op (writeOnce's txn marker)
-      val folded = graft.Meta.Versioned.read(spark, idxPath).unionByName(
-        Similarity.ivfEncode(batch, "vec_id", "embedding", stale))
-      graft.Meta.Versioned.writeOnce(folded, idxPath, "q223", 0L)
-      graft.Meta.Versioned.writeOnce(folded, idxPath, "q223", 0L)
-      val codes = graft.Meta.Versioned.read(spark, idxPath)
+      val Seq(codes) = Streams.foldOnce(Seq(batch), Seq(Streams.Snapshot(idxPath,
+          Similarity.ivfEncode(hist, "vec_id", "embedding", stale)))) {
+        case (b, _, Seq(s)) =>
+          Seq(s.unionByName(Similarity.ivfEncode(b, "vec_id", "embedding", stale)))
+      }
       val qs = e.filter(col("vec_id") < 10)
       val exact = Similarity
         .topKBruteForce(e, qs, "vec_id", "embedding", 5)
@@ -473,13 +471,12 @@ object IndexQueries {
       // Segment-append fold (round 21): code rows are append-only (each
       // vec_id arrives once) — commit the batch's encode only, instead
       // of re-writing the full code table every micro-batch.
-      val Seq(codes) = graft.streaming.Streams.foldOnce(Seq(
+      val Seq(codes) = Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") % 6 === 0),
           feedDf.filter(col("vec_id") % 6 === 3)),
-          Seq(graft.streaming.Streams.Segments(idxPath,
+          Seq(Streams.Segments(idxPath,
             Similarity.ivfEncode(hist, "vec_id", "embedding", stale)))) {
-        (batch, _, _) => Seq(Similarity.ivfEncode(
-          batch.toDF("vec_id", "embedding"), "vec_id", "embedding", stale))
+        (batch, _, _) => Seq(Similarity.ivfEncode(batch, "vec_id", "embedding", stale))
       }
       codes.select(col("vec_id"), col("cid"))
     },
@@ -1073,17 +1070,17 @@ object IndexQueries {
         .select(col("vec_id"), col("embedding"))
       // vec_id is the embeddings PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
-      val cutoff = graft.streaming.Streams.halfCutoffByKey(feedDf, "vec_id")
+      val cutoff = Streams.halfCutoffByKey(feedDf, "vec_id")
       // segment-append fold (round 21): one result row per batch is
       // append-only — commit the delta only
       import spark.implicits._
-      val Seq(res) = graft.streaming.Streams.foldOnce(Seq(
+      val Seq(res) = Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") <= cutoff),
           feedDf.filter(col("vec_id") > cutoff)),
-          Seq(graft.streaming.Streams.Segments(resPath,
+          Seq(Streams.Segments(resPath,
             Seq.empty[(Long, Long, Long, Double, Boolean)]
               .toDF("batch", "n", "n_flagged", "coverage", "breach")))) {
-        (batch, bid, _) => Seq(scores(batch.toDF("vec_id", "embedding"))
+        (batch, bid, _) => Seq(scores(batch)
           .crossJoin(broadcast(thr))
           .agg(count(lit(1)).as("n"),
             sum(when(col("s") > col("thr"), 1L).otherwise(0L))
@@ -1366,14 +1363,14 @@ object IndexQueries {
           .cast("long").as("code0"),
         element_at(Similarity.pqEncode(col("embedding"), cbs, 64), 2)
           .cast("long").as("code1"))
+      // history seeds the standing index; the batch folds in through
+      // Streams.foldOnce, whose final-batch replay is its redelivery
       val idxPath = graft.Tmp.dir("graft-q236").toString + "/codes"
-      graft.Meta.Versioned.write(codes(hist), idxPath)
-      val folded = graft.Meta.Versioned.read(spark, idxPath)
-        .unionByName(codes(batch))
-      graft.Meta.Versioned.writeOnce(folded, idxPath, "q236", 0L)
-      graft.Meta.Versioned.writeOnce(folded, idxPath, "q236", 0L)
-      graft.Meta.Versioned.read(spark, idxPath)
-        .select("vec_id", "code0", "code1")
+      val Seq(folded) = Streams.foldOnce(Seq(batch),
+          Seq(Streams.Snapshot(idxPath, codes(hist)))) {
+        case (b, _, Seq(s)) => Seq(s.unionByName(codes(b)))
+      }
+      folded.select("vec_id", "code0", "code1")
     },
 
     // ---- L218 near-dup decision evidence: the EXPLAINABILITY record
@@ -1666,13 +1663,12 @@ object IndexQueries {
       // batch commits only its delta rows; the standing log is the
       // union of retained segments. The full-rewrite fold re-wrote the
       // whole log every batch.
-      val Seq(log) = graft.streaming.Streams.foldOnce(Seq(
+      val Seq(log) = Streams.foldOnce(Seq(
           adds.filter(col("vec_id") % 6 === 0),
           adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
-          dels), Seq(graft.streaming.Streams.Segments(idxPath, IndexLog.initial(
+          dels), Seq(Streams.Segments(idxPath, IndexLog.initial(
             Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")))) {
-        (batch, bid, _) =>
-        val b = batch.toDF("vec_id", "embedding", "op")
+        (b, bid, _) =>
         val ups = IndexLog.upserts(
           Similarity.ivfEncode(b.filter(col("op") === "u")
             .select("vec_id", "embedding"), "vec_id", "embedding", cb),
@@ -1995,12 +1991,12 @@ object IndexQueries {
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
       // re-writing the full dims+pairs grid.
-      val Seq(segs) = graft.streaming.Streams.foldOnce(Seq(
+      val Seq(segs) = Streams.foldOnce(Seq(
           feedDf.filter(col("vec_id") % 4 === 0),
           feedDf.filter(col("vec_id") % 4 =!= 0)),
-          Seq(graft.streaming.Streams.Segments(statePath,
+          Seq(Streams.Segments(statePath,
             moments(e.filter(col("vec_id") % 2 === 1))))) {
-        (batch, _, _) => Seq(moments(batch.toDF("vec_id", "embedding")))
+        (batch, _, _) => Seq(moments(batch))
       }
       // resolve the segment log: the same reduce the old fold ran per
       // batch, once — long and exact-decimal sums are order-free

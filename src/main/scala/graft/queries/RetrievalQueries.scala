@@ -399,7 +399,7 @@ object RetrievalQueries {
         // one tokenize+posexplode of the batch, materialized once and
         // read by both commits (the postings append and the trigram-
         // count delta)
-        val bp = postings(toks(batch.toDF("doc_id", "text"))).localCheckpoint()
+        val bp = postings(toks(batch)).localCheckpoint()
         Seq(bp, ngramCountsFrom(bp, 3))
       }
       // resolve the segment logs: counts re-aggregate (long sums —

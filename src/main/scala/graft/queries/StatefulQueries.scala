@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.{Dedup, Merge, Sessionize, Similarity, Text}
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -30,16 +31,11 @@ object StatefulQueries {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The events fixture of `dir` as a file stream. The file source wants
-    * a directory, so the single parquet file is symlinked into a fresh
-    * temp dir; each call is an independent scan. */
+  /** The events fixture of `dir` as a file stream; each call is an
+    * independent scan. */
   private def eventsStream(spark: SparkSession, dir: String,
-      tsLong: Boolean): DataFrame = {
-    val staged = graft.Tmp.dir("graft-events-in")
-    java.nio.file.Files.createSymbolicLink(staged.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    spark.readStream.schema(eventsRawSchema(tsLong)).parquet(staged.toString)
-  }
+      tsLong: Boolean): DataFrame =
+    Streams.fixtureStream(spark, s"$dir/events.parquet", eventsRawSchema(tsLong))
 
   /** Runs `df` to completion (AvailableNow) into a memory table named
     * `graft_<tag>_<uuid>` and returns that table. The state width is
@@ -156,7 +152,6 @@ object StatefulQueries {
            |  ${pass("m1", "s2")})
            |SELECT * FROM m2""".stripMargin
       }) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q37")
       val target = s"$root/scd2"
       val c = Tables.customer(spark, dir)
@@ -419,7 +414,6 @@ object StatefulQueries {
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
         |FROM orders WHERE o_orderkey % 11 <> 0
         |GROUP BY o_custkey""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q103").toString
       val aggPath = s"$root/agg"
@@ -478,7 +472,6 @@ object StatefulQueries {
          |SELECT source, CAST(count(*) AS BIGINT) AS exact_ndv,
          |  TRUE AS est_ok, TRUE AS rolled_matches
          |FROM sh GROUP BY source""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q115").toString
       val skPath = s"$root/sketches"
       val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
@@ -552,7 +545,6 @@ object StatefulQueries {
         |      // (2 * cnt * (cnt - 1) * 10000))
         |      * CAST(0.01 AS DECIMAL(3,2)) END AS DOUBLE) AS var_price
         |FROM s""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q124").toString
       val aggPath = s"$root/agg"
@@ -604,7 +596,6 @@ object StatefulQueries {
     Q(
       "q133_stream_drift",
       LinkageQueries.driftSql) { (spark, dir) =>
-      import graft.streaming.Streams
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q133").toString
       val aggPath = s"$root/agg"
@@ -667,7 +658,6 @@ object StatefulQueries {
       "q165_stream_novelty",
       CorpusStatsQueries.noveltyOracleSql("WHERE doc_id % 3 = 0")) {
       (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q165").toString
       val ownPath = s"$root/own"
       val resPath = s"$root/res"
@@ -704,8 +694,7 @@ object StatefulQueries {
             Streams.Segments(resPath, Seq.empty[(Long, Long, Long, Double)]
               .toDF("doc_id", "n_shingles", "n_novel", "novelty")))) {
         case (batch, _, Seq(standing, _)) =>
-        val bsh = Dedup.withShingleHashes(
-          batch.toDF("doc_id", "text"), "text", 3)
+        val bsh = Dedup.withShingleHashes(batch, "text", 3)
           .filter(size(col("hv")) > 0)
           .select(col("doc_id"), explode(col("hv")).as("h"))
           .localCheckpoint()
@@ -748,7 +737,6 @@ object StatefulQueries {
     Q(
       "q280_stream_exact_substring",
       CurationQueries.exactSubstrOracleSql) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q280").toString
       val ownPath = s"$root/own"
       val resPath = s"$root/res"
@@ -773,8 +761,8 @@ object StatefulQueries {
             Streams.Segments(resPath, Seq.empty[(Long, String, Long, Long)]
               .toDF("doc_id", "clean_text", "n_tokens", "n_removed")))) {
         case (batch, _, Seq(own, _)) =>
-        val (rewritten, newOwners) = Dedup.exactSubstrBatch(own,
-          batch.toDF("doc_id", "text"), docs, "doc_id", "text", minLen = 20)
+        val (rewritten, newOwners) =
+          Dedup.exactSubstrBatch(own, batch, docs, "doc_id", "text", minLen = 20)
         Seq(newOwners, rewritten)
       }
       res
@@ -802,7 +790,6 @@ object StatefulQueries {
          |FROM toks, tot
          |GROUP BY term, n_total
          |HAVING count(*) * 200 > n_total""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q121").toString
       val cmPath = s"$root/cm"; val candPath = s"$root/cands"
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
@@ -872,7 +859,6 @@ object StatefulQueries {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  TRUE AS rolled_matches
         |FROM events GROUP BY 1""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q184").toString
       val bmPath = s"$root/bitmaps"
       val ev = Tables.events(spark, dir).select("event_id", "event_type", "user_id")
@@ -904,17 +890,19 @@ object StatefulQueries {
     // v2): per-user running (event count, latest event time) maintained
     // by a StatefulProcessor ValueState over the RocksDB store — the
     // successor API to mapGroupsWithState (typed state handles, TTL,
-    // timers), exercised with the same exactly-once discipline as the
-    // v1 folds: per-batch emissions upsert a standing keyed table, and
-    // the FINAL per-user rows must equal the batch count/max aggregate
-    // (both folds commutative+associative, so the streamed fixpoint is
-    // the batch answer).
+    // timers). The operator runs between Streams.fold's file feed and
+    // its foreachBatch; each batch's emissions max-merge into a standing
+    // keyed table with a plain Versioned.write. The merge is idempotent
+    // (both columns are monotone per key), so a redelivered batch changes
+    // nothing, and the FINAL per-user rows must equal the batch count/max
+    // aggregate (both folds commutative+associative, so the streamed
+    // fixpoint is the batch answer).
     Q(
       "q196_transform_with_state",
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(max(epoch_us(CAST(ts AS TIMESTAMP))) AS BIGINT) AS last_us
         |FROM events GROUP BY 1""".stripMargin) { (spark, dir) =>
-      import graft.streaming.{StateV2, Streams}
+      import graft.streaming.StateV2
       val root = graft.Tmp.dir("graft-q196").toString
       val tblPath = s"$root/profiles"
       val ev = Tables.events(spark, dir).select(col("user_id"),
@@ -923,39 +911,20 @@ object StatefulQueries {
       graft.Meta.Versioned.write(
         ev.limit(0).select(col("user_id"), lit(0L).as("n_events"),
           col("event_us").as("last_us")), tblPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(). The old split was by collect()-order INDEX mod 3 —
-      // replaced by a deterministic row-hash split; the final per-user
-      // count/max fixpoint is batch-membership-independent (both folds
-      // commutative+associative), which the oracle match pins.
-      val feed = new Streams.FileFeed(spark, ev.schema, root)
-      val src = feed.stream.as[StateV2.EventIn]
+      // a deterministic row-hash split into 3 batches; the final
+      // per-user count/max fixpoint is batch-membership-independent,
+      // which the oracle match pins
       StateV2.withRocksDbState(spark) {
-        graft.Sessions.withShufflePartitions(spark, 4) {
-          val q = StateV2.runningUserStats(src)
-            .writeStream
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[StateV2.UserRunning],
-                  _: Long) =>
-                val standing = graft.Meta.Versioned.read(spark, tblPath)
-                val merged = standing.unionByName(batch.toDF())
-                  .groupBy("user_id")
-                  // both columns are monotone per key, so max = latest
-                  .agg(max("n_events").as("n_events"),
-                    max("last_us").as("last_us"))
-                graft.Meta.Versioned.write(merged, tblPath)
-                ()
-            }
-            .outputMode("update")
-            .option("checkpointLocation", s"$root/cp")
-            .start()
-          try {
-            (0 until 3).foreach { b =>
-              feed.add(ev.filter(
-                pmod(xxhash64(col("user_id"), col("event_us")), lit(3)) === b))
-              q.processAllAvailable()
-            }
-          } finally q.stop()
+        Streams.fold(root, (0 until 3).map(b => ev.filter(
+            pmod(xxhash64(col("user_id"), col("event_us")), lit(3)) === b)),
+          via = s => StateV2.runningUserStats(s.as[StateV2.EventIn]).toDF()) {
+          (batch, _) =>
+            val merged = graft.Meta.Versioned.read(spark, tblPath)
+              .unionByName(batch)
+              .groupBy("user_id")
+              // both columns are monotone per key, so max = latest
+              .agg(max("n_events").as("n_events"), max("last_us").as("last_us"))
+            graft.Meta.Versioned.write(merged, tblPath)
         }
       }
       graft.Meta.Versioned.read(spark, tblPath)
@@ -1002,7 +971,6 @@ object StatefulQueries {
         |  CAST(sum(bytes) AS BIGINT) AS bytes_in,
         |  TRUE AS fold_matches
         |FROM cand GROUP BY part, bin, target""".stripMargin) { (spark, dir) =>
-      import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q218").toString
       val manPath = s"$root/manifest"
       val ev = Tables.events(spark, dir).select(
@@ -1081,13 +1049,13 @@ object StatefulQueries {
       // to the final sample — the residue split doc_id ≡ 0 ∕ ≡ 3
       // (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      val Seq(sample) = graft.streaming.Streams.foldOnce(Seq(
+      val Seq(sample) = Streams.foldOnce(Seq(
           feedDf.filter(col("doc_id") % 6 === 0),
           feedDf.filter(col("doc_id") % 6 === 3)),
-          Seq(graft.streaming.Streams.Snapshot(path, Sample.priorityTopK(
+          Seq(Streams.Snapshot(path, Sample.priorityTopK(
             docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "n_chars", n)))) {
         case (batch, _, Seq(standing)) =>
-          val bt = Sample.priorityTopK(batch.toDF("doc_id", "n_chars"),
+          val bt = Sample.priorityTopK(batch,
             "doc_id", "n_chars", n)
           Seq(standing.unionByName(bt)
             .orderBy(col("priority").desc, col("doc_id")).limit(n + 1))
@@ -1174,10 +1142,10 @@ object StatefulQueries {
       val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
       // segment-append fold (round 21): one (bid, n, k) row per batch
       // is append-only — commit the delta only
-      val Seq(log) = graft.streaming.Streams.foldOnce(batches,
-          Seq(graft.streaming.Streams.Segments(path,
+      val Seq(log) = Streams.foldOnce(batches,
+          Seq(Streams.Segments(path,
             Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k")))) {
-        (batch, bid, _) => Seq(batch.toDF("doc_id", "text")
+        (batch, bid, _) => Seq(batch
           .select(col("doc_id"),
             Text.gopherSignals(col("text")).last.cast("int").cast("long")
               .as("keep"))
@@ -1222,7 +1190,6 @@ object StatefulQueries {
     Q(
       "q307_stream_packing",
       SelectionQueries.packingOracleSql) { (spark, dir) =>
-      import graft.streaming.Streams
       import graft.ops.Packing
       val root = graft.Tmp.dir("graft-q307").toString
       val stPath = s"$root/state"
@@ -1234,7 +1201,7 @@ object StatefulQueries {
           t.filter(col("doc_id") > cutoff)),
           Seq(Streams.Snapshot(stPath, Packing.emptyState(spark)))) {
         case (batch, _, Seq(st)) =>
-          Seq(Packing.packFold(st, batch.toDF("source", "doc_id", "ntok"), 512L))
+          Seq(Packing.packFold(st, batch, 512L))
       }
       Packing.economics(state, 512L)
     })

@@ -725,7 +725,7 @@ object StatsQueries {
           (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)),
           Seq(graft.streaming.Streams.Segments(path,
             Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos")))) {
-        (batch, _, _) => Seq(lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")))
+        (batch, _, _) => Seq(lengthBinnedGate(batch))
       }
       Stats.isotonicFit(
         bins.groupBy("bin").agg(sum("n").as("n"), sum("pos").as("pos")),

@@ -19,12 +19,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * functions reused verbatim: Structured Streaming's unified Dataset API
   * means one tested implementation serves both paths.
   *
-  * Scale notes: every stream here is stateless (the reference has no
-  * watermarks or stateful aggregation — batchWatermarkMs=0 in its
-  * checkpoints), so throughput is bounded by source listing + sink commit,
-  * both embarrassingly parallel. Checkpointing gives exactly-once into
-  * file sinks; the DLQ fork follows the reference in running the
-  * source+parse once per started query.
+  * Scale notes: the sinks here are stateless, like the reference's
+  * streams (no watermarks or stateful aggregation — batchWatermarkMs=0 in
+  * its checkpoints), so their throughput is bounded by source listing +
+  * sink commit, both embarrassingly parallel. A fold's stateful operator
+  * (q196's) enters as [[fold]]'s `via`, at fold's state-sized width.
+  * Checkpointing gives exactly-once into file sinks; the DLQ fork follows
+  * the reference in running the source+parse once per started query.
   */
 object Streams {
 
@@ -37,6 +38,16 @@ object Streams {
   /** S4 substitute over parquet input (for re-streaming lake tables). */
   def parquetFileSource(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream.schema(schema).parquet(dir)
+
+  /** A single-file fixture as a file stream over `schema`. The file
+    * source wants a directory, so `file` is symlinked into a fresh
+    * [[graft.Tmp.dir]]; each call is an independent scan. */
+  def fixtureStream(spark: SparkSession, file: String, schema: StructType): DataFrame = {
+    val p = java.nio.file.Paths.get(file).toAbsolutePath
+    val staged = graft.Tmp.dir("graft-fixture-in")
+    java.nio.file.Files.createSymbolicLink(staged.resolve(p.getFileName), p)
+    parquetFileSource(spark, staged.toString, schema)
+  }
 
   /** File-backed streaming feed: stage batches as parquet files appended
     * to a directory ENTIRELY executor-side and read them back through the
@@ -57,15 +68,15 @@ object Streams {
     * `add` is mid-write — a multi-file write committed file-by-file
     * into the watched directory could surface a PARTIAL file set and
     * split one intended add across two micro-batches (MemoryStream's
-    * `addData` was atomic; [[fold]] steps and q196 rely on the
-    * one-add-one-batch boundary; [[foldOnce]] needs no feed). Each add
+    * `addData` was atomic; [[fold]] steps rely on the one-add-one-batch
+    * boundary; [[foldOnce]] needs no feed). Each add
     * therefore writes its part-files to a sibling NON-watched staging
     * directory first and enters the watched glob via ONE directory
     * rename: any listing either sees the whole batch directory (files
     * already inside) or none of it. The write stays fully distributed — no `coalesce(1)`
     * funnel — and file paths are rename-stable, so the source's
     * seen-files checkpoint (the T2/T3 restart contract) is unaffected. */
-  final class FileFeed(spark: SparkSession, schema: StructType, root: String) {
+  private[streaming] final class FileFeed(spark: SparkSession, schema: StructType, root: String) {
     private val dir = s"$root/feed"
     private val staging = s"$root/feed-stage"
     // pre-create one (empty) batch dir so the glob below matches even
@@ -95,12 +106,14 @@ object Streams {
   }
 
   /** The file-fed micro-batch fold for steps that own their commits
-    * (q37, q218, whose subject is Structured Streaming): stages
+    * (q37, q218 and q196, whose subject is Structured Streaming): stages
     * `batches` through a [[FileFeed]] at `root`, one add per batch, and
-    * drives one `foreachBatch(step)` query (checkpoint
-    * `$root/cp`) that is drained after every add, so batch i arrives as
-    * micro-batch i. The query stops in a `finally`, so a throwing
-    * `step` reaches the caller with no query left running. Delivery is
+    * drives one `foreachBatch(step)` query (checkpoint `$root/cp`) over
+    * `via(feed)` that is drained after every add, so batch i arrives as
+    * micro-batch i. `via` is the streaming operator between source and
+    * sink (q196's `transformWithState`); the identity hands `step` the
+    * staged rows. The query stops in a `finally`, so a throwing `step`
+    * reaches the caller with no query left running. Delivery is
     * at-least-once and `step` owns its commits; folds that commit
     * exactly-once use [[foldOnce]], which runs no stream at all.
     * `batches` must be non-empty. Returns the last batch id delivered,
@@ -108,11 +121,12 @@ object Streams {
     *
     * The adds and the query run 4 shuffle partitions wide, not the
     * batch-tuned 32: a batch is a few thousand rows, and stateful
-    * streaming ops instantiate one state store (with its own checkpoint
-    * delta files) PER shuffle partition PER micro-batch. The width is
-    * frozen into the checkpoint at first start, so it is set before the
-    * query begins; size it to state volume, not CPU count. */
-  def fold(root: String, batches: Seq[DataFrame])(
+    * streaming ops (q196's) instantiate one state store (with its own
+    * checkpoint delta files) PER shuffle partition PER micro-batch. The
+    * width is frozen into the checkpoint at first start, so it is set
+    * before the query begins; size it to state volume, not CPU count. */
+  def fold(root: String, batches: Seq[DataFrame],
+      via: DataFrame => DataFrame = identity)(
       step: (DataFrame, Long) => Unit): Long = {
     require(batches.nonEmpty, s"fold at $root needs at least one batch")
     val spark = batches.head.sparkSession
@@ -120,7 +134,7 @@ object Streams {
     @volatile var lastBid = -1L
     graft.Sessions.withShufflePartitions(spark, 4) {
       feed.add(batches.head)
-      val q = feed.stream.writeStream
+      val q = via(feed.stream).writeStream
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           if (bid > lastBid) lastBid = bid
           step(batch, bid)

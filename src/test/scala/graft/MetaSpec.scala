@@ -6,7 +6,7 @@ class MetaSpec extends SparkSuite {
   import spark.implicits._
 
   test("tableExists: false for missing/empty dir, true after a write (M1)") {
-    val dir = Files.createTempDirectory("meta").toString
+    val dir = graft.Tmp.dir("meta").toString
     assert(!Meta.tableExists(spark, s"$dir/nope"))
     Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty"))
     assert(!Meta.tableExists(spark, s"$dir/empty"))
@@ -21,7 +21,7 @@ class MetaSpec extends SparkSuite {
   }
 
   test("snapshotVersion advances across rewrites (M3)") {
-    val dir = Files.createTempDirectory("meta").toString + "/t"
+    val dir = graft.Tmp.dir("meta").toString + "/t"
     assert(Meta.snapshotVersion(spark, dir).isEmpty)
     Seq(1).toDF("x").write.parquet(dir)
     val v1 = Meta.snapshotVersion(spark, dir).get
@@ -38,7 +38,7 @@ class MetaSpec extends SparkSuite {
   }
 
   test("Versioned: publish, time travel, latest, vacuum (M3 time travel)") {
-    val dir = Files.createTempDirectory("meta-ver").toString + "/t"
+    val dir = graft.Tmp.dir("meta-ver").toString + "/t"
     assert(Meta.Versioned.latestVersion(spark, dir).isEmpty)
     assert(Meta.Versioned.write(Seq(1, 2).toDF("x"), dir) == 1L)
     assert(Meta.Versioned.write(Seq(3).toDF("x"), dir) == 2L)
@@ -53,7 +53,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.readAll: segment-append fold == full-rewrite fold, " +
       "row for row; replayed delta skips by marker (round-21 fold shape)") {
-    val base = Files.createTempDirectory("meta-seg").toString
+    val base = graft.Tmp.dir("meta-seg").toString
     val (segPath, snapPath) = (s"$base/seg", s"$base/snap")
     val seed = Seq.empty[(Long, String)].toDF("id", "v")
     Meta.Versioned.write(seed, segPath)
@@ -82,7 +82,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.committed: the fold-side replay guard tracks writeOnce " +
       "markers exactly (round-21 eager-fold skip)") {
-    val dir = Files.createTempDirectory("meta-comm").toString + "/t"
+    val dir = graft.Tmp.dir("meta-comm").toString + "/t"
     assert(!Meta.Versioned.committed(spark, dir, "app", 0L),
       "no table yet => nothing committed")
     Meta.Versioned.write(Seq(0L).toDF("x"), dir) // plain seed, no marker
@@ -105,7 +105,7 @@ class MetaSpec extends SparkSuite {
   test("Versioned.write: after a write that fails mid-job, the latest " +
       "version and its rows are unchanged") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
-    val dir = Files.createTempDirectory("meta-failwrite").toString + "/t"
+    val dir = graft.Tmp.dir("meta-failwrite").toString + "/t"
     Meta.Versioned.write(Seq(1L, 2L).toDF("x"), dir)
     intercept[Exception] {
       // a Range, not a local relation: the optimizer cannot fold the
@@ -124,7 +124,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.vacuum: reclaims dead writeOnce staging debris, " +
       "leaves a possibly-in-flight staging dir alone") {
-    val dir = Files.createTempDirectory("meta-stag").toString + "/t"
+    val dir = graft.Tmp.dir("meta-stag").toString + "/t"
     Meta.Versioned.write(Seq(1).toDF("x"), dir)  // v=1
     Meta.Versioned.write(Seq(2).toDF("x"), dir)  // v=2
     val root = new java.io.File(dir)
@@ -156,7 +156,7 @@ class MetaSpec extends SparkSuite {
   test("Versioned.vacuum: refuses a foldOnce Segments log and deletes " +
       "nothing; a Snapshot table vacuums as before") {
     import graft.streaming.Streams
-    val root = Files.createTempDirectory("meta-vac-fold").toString
+    val root = graft.Tmp.dir("meta-vac-fold").toString
     val (snap, segs) = (s"$root/snap", s"$root/segs")
     val seed = Seq(0L).toDF("id")
     Streams.foldOnce(Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
@@ -177,7 +177,7 @@ class MetaSpec extends SparkSuite {
   }
 
   test("Versioned.publishAll: readers never observe a torn multi-table publish") {
-    val root = Files.createTempDirectory("meta-multi").toString
+    val root = graft.Tmp.dir("meta-multi").toString
     val c1 = Meta.Versioned.publishAll(root, Seq(
       "dim" -> Seq((1L, "a")).toDF("id", "name"),
       "fact" -> Seq((1L, 10.0)).toDF("id", "v")))
@@ -221,7 +221,7 @@ class MetaSpec extends SparkSuite {
     // absorbs residual scheduler skew (a serialized outcome ids 1,2 is a
     // LEGAL linearization, just not the one under test).
     def attempt(): (String, Seq[scala.util.Try[Long]]) = {
-      val root = Files.createTempDirectory("meta-race").toString
+      val root = graft.Tmp.dir("meta-race").toString
       MetaSpecRaceGate.latch = new java.util.concurrent.CountDownLatch(2)
       def slowDf = spark.range(1)
         .map { (x: java.lang.Long) =>
@@ -266,7 +266,7 @@ class MetaSpec extends SparkSuite {
   test("compactTable: commits through the manifest — a reader holding the " +
       "old commit observes old files, a new reader the rewrite, never neither") {
     import spark.implicits._
-    val root = Files.createTempDirectory("meta-compact").toString
+    val root = graft.Tmp.dir("meta-compact").toString
     val n = 1000
     val c1 = Meta.Versioned.publishAll(root, Seq(
       "t" -> (1 to n).toDF("x").repartition(8),
@@ -336,7 +336,7 @@ class MetaSpec extends SparkSuite {
   test("compactTable conflict: a commit landing between the read and the " +
       "claim throws CommitConflictException instead of silently reverting it") {
     import spark.implicits._
-    val root = Files.createTempDirectory("meta-compact-race").toString
+    val root = graft.Tmp.dir("meta-compact-race").toString
     Meta.Versioned.publishAll(root, Seq("t" -> (1 to 100).toDF("x").repartition(4)))
     // the compactor reads base commit 1 ... then a concurrent writer
     // lands commit 2 (t advances to v=2, 200 rows) before it commits
@@ -362,7 +362,7 @@ class MetaSpec extends SparkSuite {
       "reconstructs the new one exactly (randomized tables with nulls)") {
     val rnd = new scala.util.Random(20260812L)
     for (round <- 1 to 3) {
-      val root = Files.createTempDirectory(s"meta-cdf-prop$round").toString
+      val root = graft.Tmp.dir(s"meta-cdf-prop$round").toString
       // a NULL key appears in roughly half the rounds on each side: the
       // feed must tag it delete+insert (nulls never equi-join) and the
       // apply side must still reconstruct exactly
@@ -441,7 +441,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.gc: reclaims dropped commits, torn-publish debris and " +
       "lost-race staging — but never a fresh dir inside the min-age guard") {
-    val root = Files.createTempDirectory("meta-gc").toString
+    val root = graft.Tmp.dir("meta-gc").toString
     (1 to 3).foreach { i =>
       Meta.Versioned.publishAll(root, Seq(
         "t" -> (1 to i).toDF("x"), "u" -> Seq(i).toDF("y")))
@@ -470,7 +470,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.gc: reclaims a table's dead staging debris once a " +
       "later version publishes, like vacuum") {
-    val root = Files.createTempDirectory("meta-gc-stag").toString
+    val root = graft.Tmp.dir("meta-gc-stag").toString
     Meta.Versioned.publishAll(root, Seq("t" -> Seq(1).toDF("x")))
     // crash debris of a write that died before publishing v=2
     val debris = new java.io.File(s"$root/t/v=2_staging_deadbeef")
@@ -491,7 +491,7 @@ class MetaSpec extends SparkSuite {
 
   test("Versioned.changes: snapshot-diff CDF tags insert/update/delete, " +
       "excludes unchanged rows, compares null-safely, rejects schema drift") {
-    val root = Files.createTempDirectory("meta-cdf").toString
+    val root = graft.Tmp.dir("meta-cdf").toString
     val v1 = Seq(1L -> Some("a"), 2L -> Some("b"), 3L -> None,
       4L -> Some("d"), 6L -> None, 7L -> Some("g")).toDF("id", "v")
     val v2 = Seq(1L -> Some("a"), 2L -> Some("B"), 3L -> Some("c"),

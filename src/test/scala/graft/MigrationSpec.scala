@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import java.nio.file.Files
-
 /** MIGRATION.md executed: every reference-script → graft-API mapping in
   * the migration guide is compiled and asserted here, so the documented
   * migration surface cannot drift from the code. One test per guide row;
@@ -20,7 +18,7 @@ class MigrationSpec extends SparkSuite {
   import spark.implicits._
 
   test("bootstrap_delta.py → Tables.load + overwrite write (K1)") {
-    val out = Files.createTempDirectory("mig-k1").toString + "/t"
+    val out = graft.Tmp.dir("mig-k1").toString + "/t"
     val region = Tables.load(spark, sfDir(), "region")
     region.write.mode("overwrite").parquet(out)
     assert(spark.read.parquet(out).count() == region.count())
@@ -89,7 +87,7 @@ class MigrationSpec extends SparkSuite {
     Seq("orders", "customer", "nation").foreach(t =>
       Tables.load(spark, sfDir(), t).createOrReplaceTempView(t))
     assert(graft.sql.GoldModels.run(spark, graft.sql.GoldModels.attritionMonthly).count() > 0)
-    val out = Files.createTempDirectory("mig-gold").toString + "/g"
+    val out = graft.Tmp.dir("mig-gold").toString + "/g"
     val mat = graft.sql.GoldModels.materialize(spark,
       graft.sql.GoldModels.attritionSummary, out)
     assert(spark.read.parquet(out).count() == mat.count())
@@ -112,7 +110,7 @@ class MigrationSpec extends SparkSuite {
   }
 
   test("delta_schema_inspector.py + silver_reader.py → Meta probes + Versioned time travel") {
-    val dir = Files.createTempDirectory("mig-meta").toString + "/t"
+    val dir = graft.Tmp.dir("mig-meta").toString + "/t"
     assert(!Meta.tableExists(spark, dir))
     assert(Meta.Versioned.write(Seq(1).toDF("x"), dir) == 1L)
     assert(Meta.Versioned.write(Seq(1, 2).toDF("x"), dir) == 2L)
@@ -126,7 +124,7 @@ class MigrationSpec extends SparkSuite {
   }
 
   test("kafka_DLQ.py:38-46 → kafkaShapedSource keeps the exact connector contract") {
-    val in = Files.createTempDirectory("mig-kafka").toString
+    val in = graft.Tmp.dir("mig-kafka").toString
     val src = Streams.kafkaShapedSource(spark, in, StructType(Seq(
       StructField("id", LongType), StructField("payload", StringType),
       StructField("kafka_ts", StringType))),
@@ -156,7 +154,7 @@ class MigrationSpec extends SparkSuite {
   test("incremental-view/maintenance layer (q100-q123 guide table): " +
       "txn folds, feed compose, moments maintenance") {
     // Delta `txn` analogue: idempotent fold commit, replay no-ops
-    val p = Files.createTempDirectory("mig-txn").toString + "/t"
+    val p = graft.Tmp.dir("mig-txn").toString + "/t"
     val df = Seq((1L, 10.0)).toDF("k", "v")
     assert(graft.Meta.Versioned.writeOnce(df, p, "mig", 0L).contains(1L))
     assert(graft.Meta.Versioned.writeOnce(df, p, "mig", 0L).isEmpty)

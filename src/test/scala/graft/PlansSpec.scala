@@ -75,7 +75,7 @@ class PlansSpec extends SparkSuite {
   }
 
   test("partitioned layout: single-partition filter prunes the scan (q52)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val out = graft.Tmp.dir("graft-prune").toString
     Tables.events(spark, sfDir()).select("event_id", "user_id", "event_type", "value")
       .write.mode("overwrite").partitionBy("event_type").parquet(out)
     val df = spark.read.parquet(out).filter(col("event_type") === "purchase")
@@ -187,7 +187,7 @@ class PlansSpec extends SparkSuite {
   }
 
   test("partitioned write: one file per partition value (q52 write layout)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-writelayout").toString
+    val out = graft.Tmp.dir("graft-writelayout").toString
     Tables.events(spark, sfDir()).select("event_id", "user_id", "event_type", "value")
       .repartition(col("event_type"))
       .write.mode("overwrite").partitionBy("event_type").parquet(out)

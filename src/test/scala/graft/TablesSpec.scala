@@ -45,7 +45,7 @@ class TablesSpec extends SparkSuite {
 
   test("events ts-encoding probe re-probes after an in-place " +
       "regeneration (cache keys on mtime/size, not directory alone)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_spec")
+    val dir = graft.Tmp.dir("graft_tables_spec")
       .toFile.getAbsolutePath
     def writeEvents(nanosAsLong: Boolean): Unit = {
       val tmp = s"$dir/_stage"

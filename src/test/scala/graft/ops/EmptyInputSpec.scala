@@ -74,20 +74,20 @@ class EmptyInputSpec extends SparkSuite {
   }
 
   test("zorderWrite on empty and constant-column frames degrades cleanly") {
-    val out1 = java.nio.file.Files.createTempDirectory("graft-z-empty").toString
+    val out1 = graft.Tmp.dir("graft-z-empty").toString
     val empty = Seq.empty[(Long, Double)].toDF("k", "v")
     // empty input: stats are null → degenerate zero-bit address, no throw
     Scale.zorderWrite(empty, Seq("k", "v"), numFiles = 2, out1)
     assert(spark.read.parquet(out1).count() == 0)
     // constant columns carry zero clustering information but full data
-    val out2 = java.nio.file.Files.createTempDirectory("graft-z-const").toString
+    val out2 = graft.Tmp.dir("graft-z-const").toString
     val const = (1 to 100).map(i => (7L, 1.5)).toDF("k", "v")
     Scale.zorderWrite(const, Seq("k", "v"), numFiles = 2, out2)
     assert(spark.read.parquet(out2).count() == 100)
   }
 
   test("Versioned.changes between identical commits is an empty feed") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cdf-empty").toString
+    val root = graft.Tmp.dir("graft-cdf-empty").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     graft.Meta.Versioned.publishAll(root, Seq("t" -> df))
     graft.Meta.Versioned.publishAll(root, Seq("t" -> df))

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.{Meta, SparkSuite}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +10,7 @@ class IncrementalAggSpec extends SparkSuite {
   import spark.implicits._
 
   test("changes preimages=true: updates emit BOTH images, insert/delete one") {
-    val root = Files.createTempDirectory("cdf-pre").toString
+    val root = graft.Tmp.dir("cdf-pre").toString
     val v1 = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v")
     val v2 = Seq((2L, 25.0), (3L, 30.0), (4L, 40.0)).toDF("k", "v")
     Meta.Versioned.publishAll(root, Seq("t" -> v1))
@@ -63,7 +61,7 @@ class IncrementalAggSpec extends SparkSuite {
       "version (randomized churn with nulls)") {
     val rnd = new scala.util.Random(20260812L)
     for (round <- 1 to 3) {
-      val root = Files.createTempDirectory(s"ivm-$round").toString
+      val root = graft.Tmp.dir(s"ivm-$round").toString
       def rows(n: Int) = (1 to n).map { i =>
         val g = if (rnd.nextInt(10) == 0) None else Some(s"g${rnd.nextInt(7)}")
         // g0 is the ALL-NULL-value group: its sum must stay SQL NULL

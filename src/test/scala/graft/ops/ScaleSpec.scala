@@ -44,7 +44,7 @@ class ScaleSpec extends SparkSuite {
 
   test("zorderWrite: every file covers a narrow slice of BOTH clustering " +
       "dimensions — a lead-column sort leaves the second dimension unprunable") {
-    val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val out = graft.Tmp.dir("graft-zorder").toString
     val o = Tables.orders(spark, sfDir()).select("o_orderkey", "o_custkey", "o_totalprice")
     val n = Scale.zorderWrite(o, Seq("o_custkey", "o_totalprice"), numFiles = 16, out)
     assert(n == 16, s"expected 16 files, wrote $n")
@@ -78,7 +78,7 @@ class ScaleSpec extends SparkSuite {
     assert(meanCk <= 0.6 && meanTp <= 0.6,
       s"z-order not clustering: mean file coverage custkey=$meanCk price=$meanTp")
     // contrast: the single-sort layout cannot prune the second dimension
-    val sortedOut = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+    val sortedOut = graft.Tmp.dir("graft-sorted").toString
     o.repartitionByRange(16, org.apache.spark.sql.functions.col("o_custkey"))
       .sortWithinPartitions("o_custkey").write.mode("overwrite").parquet(sortedOut)
     val sortedCov = coverage(sortedOut)
@@ -109,8 +109,8 @@ class ScaleSpec extends SparkSuite {
       }
       spans.sum / spans.size
     }
-    val linOut = java.nio.file.Files.createTempDirectory("graft-z-lin").toString
-    val rnkOut = java.nio.file.Files.createTempDirectory("graft-z-rnk").toString
+    val linOut = graft.Tmp.dir("graft-z-lin").toString
+    val rnkOut = graft.Tmp.dir("graft-z-rnk").toString
     Scale.zorderWrite(df, Seq("skewed", "uniform"), 16, linOut, bitsPerCol = 6)
     Scale.zorderWrite(df, Seq("skewed", "uniform"), 16, rnkOut,
       bitsPerCol = 6, rankBuckets = true)
@@ -153,7 +153,7 @@ class ScaleSpec extends SparkSuite {
 
   test("compact: merges a many-file layout, preserves every row") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = graft.Tmp.dir("graft-compact").toString + "/t"
     (1L to 5000L).toDF("id").repartition(40).write.parquet(dir)
     val before = spark.read.parquet(dir).as[Long].collect().sorted.toSeq
     val (nBefore, nAfter) = Scale.compact(spark, dir, targetRowsPerFile = 2500L)
@@ -189,7 +189,7 @@ class ScaleSpec extends SparkSuite {
   test("data skipping: pruned scan loses no matching row, reads only the " +
       "admitted files, and an impossible bound reads none") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-skip").toString
+    val root = graft.Tmp.dir("graft-skip").toString
     val o = Tables.orders(spark, sfDir())
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val n = Scale.writeWithStats(o, Seq("o_custkey", "o_totalprice"),

@@ -8,7 +8,7 @@ class GoldModelsSpec extends SparkSuite {
 
   test("materialize: CTAS write + read-back equals the model output (M5)") {
     Tables.orders(spark, sfDir()).createOrReplaceTempView("orders")
-    val path = java.nio.file.Files.createTempDirectory("gold").toString + "/t"
+    val path = graft.Tmp.dir("gold").toString + "/t"
     val out = GoldModels.materialize(spark, GoldModels.attritionMonthly, path)
     val direct = GoldModels.run(spark, GoldModels.attritionMonthly)
     assert(out.collect().toSeq.sortBy(_.toString) ==

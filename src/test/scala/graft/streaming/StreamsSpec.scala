@@ -469,6 +469,22 @@ class StreamsSpec extends SparkSuite {
     } finally spark.streams.resetTerminated()
   }
 
+  test("fold: `via` runs between the feed and the step, on every batch") {
+    val seen = scala.collection.mutable.Buffer[(Long, Seq[String], Set[Long])]()
+    val batches = foldBatches
+    Streams.fold(tmp("fold-via").toString, batches,
+        via = _.withColumn("tag", col("id") * 10)) { (batch, bid) =>
+      seen += ((bid, batch.columns.toSeq,
+        batch.filter(col("tag") === col("id") * 10)
+          .select("id").as[Long].collect().toSet))
+      ()
+    }
+    assert(seen.map(_._1) == Seq(0L, 1L, 2L), s"batch ids: $seen")
+    assert(seen.forall(_._2 == Seq("id", "tag")), s"columns: $seen")
+    assert(seen.map(_._3) ==
+      batches.map(_.select("id").as[Long].collect().toSet))
+  }
+
   test("fold: an empty batch list fails with IllegalArgumentException") {
     intercept[IllegalArgumentException] {
       Streams.fold(tmp("fold-empty").toString, Seq.empty)((_, _) => ())

@@ -11,10 +11,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   */
 object Sessions {
 
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"$fn expects a literal int, got $other")
+  /** One graft_* call's arguments; `int` reads a literal int argument
+    * (failing with the function's name), with a default when absent. */
+  private final class Args(name: String, e: Seq[Expression]) {
+    def apply(i: Int): Expression = e(i)
+    def int(i: Int): Int = e(i) match {
+      case Literal(v: Int, _) => v
+      case other =>
+        throw new IllegalArgumentException(s"$name expects a literal int, got $other")
+    }
+    def int(i: Int, default: Int): Int = if (e.length > i) int(i) else default
   }
 
   /** Registers the graft_* functions (see graft.functions.TextKernels)
@@ -23,127 +29,53 @@ object Sessions {
     ext.injectOptimizerRule(graft.plans.KernelFusion.apply)
     ext.injectResolutionRule(_ => graft.plans.AsOfRewrite)
     ext.injectPlannerStrategy(graft.plans.AsOfJoinStrategy.apply)
-    def info(name: String, clazz: Class[_]) = new ExpressionInfo(clazz.getName, name)
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", classOf[ShingleHashes]),
-      (e: Seq[Expression]) => ShingleHashes(e.head, intArg(e(1), "graft_shingle_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_window_hashes"),
-      info("graft_window_hashes", classOf[WindowHashes]),
-      (e: Seq[Expression]) => WindowHashes(e.head, intArg(e(1), "graft_window_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_token_hashes"),
-      info("graft_token_hashes", classOf[TokenHashes]),
-      (e: Seq[Expression]) => TokenHashes(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_signature"),
-      info("graft_minhash_signature", classOf[MinHashSignature]),
-      (e: Seq[Expression]) => MinHashSignature(e.head, intArg(e(1), "graft_minhash_signature"))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", classOf[SimHash]),
-      (e: Seq[Expression]) => SimHash(e.head, intArg(e(1), "graft_simhash"))))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect_size"),
-      info("graft_sorted_intersect_size", classOf[SortedIntersectSize]),
-      (e: Seq[Expression]) => SortedIntersectSize(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_dot_product"),
-      info("graft_dot_product", classOf[DotProduct]),
-      (e: Seq[Expression]) => DotProduct(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_hll_distinct"),
-      info("graft_hll_distinct", classOf[HllDistinct]),
-      (e: Seq[Expression]) => HllDistinct(e.head,
-        if (e.length > 1) intArg(e(1), "graft_hll_distinct") else 12)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_sketch"),
-      info("graft_hll_sketch", classOf[HllSketch]),
-      (e: Seq[Expression]) => HllSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_hll_sketch") else 12)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_merge"),
-      info("graft_hll_merge", classOf[HllMergeAgg]),
-      (e: Seq[Expression]) => HllMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_estimate"),
-      info("graft_hll_estimate", classOf[HllEstimate]),
-      (e: Seq[Expression]) => HllEstimate(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_sketch"),
-      info("graft_kmv_sketch", classOf[KmvSketch]),
-      (e: Seq[Expression]) => KmvSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_kmv_sketch") else 1024)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_merge"),
-      info("graft_kmv_merge", classOf[KmvMergeAgg]),
-      (e: Seq[Expression]) => KmvMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_estimate"),
-      info("graft_kmv_estimate", classOf[KmvEstimate]),
-      (e: Seq[Expression]) => KmvEstimate(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_jaccard"),
-      info("graft_kmv_jaccard", classOf[KmvJaccard]),
-      (e: Seq[Expression]) => KmvJaccard(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_kll_sketch"),
-      info("graft_kll_sketch", classOf[KllSketchAgg]),
-      (e: Seq[Expression]) => KllSketchAgg(e.head,
-        if (e.length > 1) intArg(e(1), "graft_kll_sketch") else 256)))
-    ext.injectFunction((FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge", classOf[KllMergeAgg]),
-      (e: Seq[Expression]) => KllMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kll_quantile"),
-      info("graft_kll_quantile", classOf[KllQuantile]),
-      (e: Seq[Expression]) => KllQuantile(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      info("graft_bloom_contains", classOf[BloomContains]),
-      (e: Seq[Expression]) => BloomContains(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_sketch"),
-      info("graft_cm_sketch", classOf[CmSketch]),
-      (e: Seq[Expression]) => CmSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_cm_sketch") else 2048,
-        if (e.length > 2) intArg(e(2), "graft_cm_sketch") else 4)))
-    ext.injectFunction((FunctionIdentifier("graft_cm_merge"),
-      info("graft_cm_merge", classOf[CmMergeAgg]),
-      (e: Seq[Expression]) => CmMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_cm_estimate"),
-      info("graft_cm_estimate", classOf[CmEstimate]),
-      (e: Seq[Expression]) => CmEstimate(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_join_size"),
-      info("graft_cm_join_size", classOf[CmJoinSize]),
-      (e: Seq[Expression]) => CmJoinSize(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_total"),
-      info("graft_cm_total", classOf[CmTotal]),
-      (e: Seq[Expression]) => CmTotal(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_freq_sketch"),
-      info("graft_freq_sketch", classOf[FreqSketch]),
-      (e: Seq[Expression]) => FreqSketch(e.head, intArg(e(1), "graft_freq_sketch"))))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      info("graft_topk", classOf[TopKRows]),
-      (e: Seq[Expression]) => TopKRows(e.head, e(1), intArg(e(2), "graft_topk"))))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_buckets"),
-      info("graft_lsh_buckets", classOf[LshBuckets]),
-      (e: Seq[Expression]) => LshBuckets(e.head,
-        intArg(e(1), "graft_lsh_buckets"), intArg(e(2), "graft_lsh_buckets"),
-        intArg(e(3), "graft_lsh_buckets"))))
-    ext.injectFunction((FunctionIdentifier("graft_cdc_boundaries"),
-      info("graft_cdc_boundaries", classOf[CdcBoundaries]),
-      (e: Seq[Expression]) => CdcBoundaries(e.head,
-        intArg(e(1), "graft_cdc_boundaries"), intArg(e(2), "graft_cdc_boundaries"))))
-    ext.injectFunction((FunctionIdentifier("graft_ahash"),
-      info("graft_ahash", classOf[AHash64]),
-      (e: Seq[Expression]) => AHash64(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_asof"),
-      info("graft_asof", classOf[graft.plans.AsOfMarker]),
-      (e: Seq[Expression]) => graft.plans.AsOfMarker(e.head, e(1), e(2))))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_sketch"),
-      info("graft_bitmap_sketch", classOf[BitmapSketch]),
-      (e: Seq[Expression]) => BitmapSketch(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_merge"),
-      info("graft_bitmap_merge", classOf[BitmapMergeAgg]),
-      (e: Seq[Expression]) => BitmapMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_count"),
-      info("graft_bitmap_count", classOf[BitmapCount]),
-      (e: Seq[Expression]) => BitmapCount(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_norm_text"),
-      info("graft_norm_text", classOf[NormText]),
-      (e: Seq[Expression]) => NormText(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_pair_products"),
-      info("graft_pair_products", classOf[PairProducts]),
-      (e: Seq[Expression]) => PairProducts(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_counts"),
-      info("graft_char_counts", classOf[CharCounts]),
-      (e: Seq[Expression]) => CharCounts(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_rolling_hash"),
-      info("graft_rolling_hash", classOf[RollingHash]),
-      (e: Seq[Expression]) => RollingHash(e.head)))
+    def fn(name: String, clazz: Class[_])(build: Args => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name),
+        (e: Seq[Expression]) => build(new Args(name, e))))
+    fn("graft_shingle_hashes", classOf[ShingleHashes])(a => ShingleHashes(a(0), a.int(1)))
+    fn("graft_window_hashes", classOf[WindowHashes])(a => WindowHashes(a(0), a.int(1)))
+    fn("graft_token_hashes", classOf[TokenHashes])(a => TokenHashes(a(0)))
+    fn("graft_minhash_signature", classOf[MinHashSignature])(a =>
+      MinHashSignature(a(0), a.int(1)))
+    fn("graft_simhash", classOf[SimHash])(a => SimHash(a(0), a.int(1)))
+    fn("graft_sorted_intersect_size", classOf[SortedIntersectSize])(a =>
+      SortedIntersectSize(a(0), a(1)))
+    fn("graft_dot_product", classOf[DotProduct])(a => DotProduct(a(0), a(1)))
+    fn("graft_hll_distinct", classOf[HllDistinct])(a => HllDistinct(a(0), a.int(1, 12)))
+    fn("graft_hll_sketch", classOf[HllSketch])(a => HllSketch(a(0), a.int(1, 12)))
+    fn("graft_hll_merge", classOf[HllMergeAgg])(a => HllMergeAgg(a(0)))
+    fn("graft_hll_estimate", classOf[HllEstimate])(a => HllEstimate(a(0)))
+    fn("graft_kmv_sketch", classOf[KmvSketch])(a => KmvSketch(a(0), a.int(1, 1024)))
+    fn("graft_kmv_merge", classOf[KmvMergeAgg])(a => KmvMergeAgg(a(0)))
+    fn("graft_kmv_estimate", classOf[KmvEstimate])(a => KmvEstimate(a(0)))
+    fn("graft_kmv_jaccard", classOf[KmvJaccard])(a => KmvJaccard(a(0), a(1)))
+    fn("graft_kll_sketch", classOf[KllSketchAgg])(a => KllSketchAgg(a(0), a.int(1, 256)))
+    fn("graft_kll_merge", classOf[KllMergeAgg])(a => KllMergeAgg(a(0)))
+    fn("graft_kll_quantile", classOf[KllQuantile])(a => KllQuantile(a(0), a(1)))
+    fn("graft_bloom_contains", classOf[BloomContains])(a => BloomContains(a(0), a(1)))
+    fn("graft_cm_sketch", classOf[CmSketch])(a =>
+      CmSketch(a(0), a.int(1, 2048), a.int(2, 4)))
+    fn("graft_cm_merge", classOf[CmMergeAgg])(a => CmMergeAgg(a(0)))
+    fn("graft_cm_estimate", classOf[CmEstimate])(a => CmEstimate(a(0), a(1)))
+    fn("graft_cm_join_size", classOf[CmJoinSize])(a => CmJoinSize(a(0), a(1)))
+    fn("graft_cm_total", classOf[CmTotal])(a => CmTotal(a(0)))
+    fn("graft_freq_sketch", classOf[FreqSketch])(a => FreqSketch(a(0), a.int(1)))
+    fn("graft_topk", classOf[TopKRows])(a => TopKRows(a(0), a(1), a.int(2)))
+    fn("graft_lsh_buckets", classOf[LshBuckets])(a =>
+      LshBuckets(a(0), a.int(1), a.int(2), a.int(3)))
+    fn("graft_cdc_boundaries", classOf[CdcBoundaries])(a =>
+      CdcBoundaries(a(0), a.int(1), a.int(2)))
+    fn("graft_ahash", classOf[AHash64])(a => AHash64(a(0)))
+    fn("graft_asof", classOf[graft.plans.AsOfMarker])(a =>
+      graft.plans.AsOfMarker(a(0), a(1), a(2)))
+    fn("graft_bitmap_sketch", classOf[BitmapSketch])(a => BitmapSketch(a(0)))
+    fn("graft_bitmap_merge", classOf[BitmapMergeAgg])(a => BitmapMergeAgg(a(0)))
+    fn("graft_bitmap_count", classOf[BitmapCount])(a => BitmapCount(a(0)))
+    fn("graft_norm_text", classOf[NormText])(a => NormText(a(0)))
+    fn("graft_pair_products", classOf[PairProducts])(a => PairProducts(a(0)))
+    fn("graft_char_counts", classOf[CharCounts])(a => CharCounts(a(0)))
+    fn("graft_rolling_hash", classOf[RollingHash])(a => RollingHash(a(0)))
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` = n, restoring the

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.Incremental
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -11,6 +12,22 @@ import org.apache.spark.sql.types.DecimalType
   * TypedImperativeAggregate in graft.functions.HllDistinct).
   */
 object AnalyticsQueries {
+
+  /** The orders snapshot pair the change-feed maintenance queries replay
+    * (q100, q103, q109, q118, q124): the projected orders `o`, `v1`
+    * (o_orderkey % 7 ≠ 0, +50 on every % 13 price) and `v2`
+    * (o_orderkey % 11 ≠ 0). */
+  private[queries] def orderVersions(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val o = Tables.orders(spark, dir)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
+      .withColumn("o_totalprice",
+        when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
+          .otherwise(col("o_totalprice")))
+    val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+    (o, v1, v2)
+  }
 
   private val priorities =
     Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
@@ -953,13 +970,7 @@ object AnalyticsQueries {
         |FROM orders WHERE o_orderkey % 11 <> 0
         |GROUP BY o_custkey""".stripMargin) { (spark, dir) =>
       val root = graft.Tmp.dir("graft-q100").toString
-      val o = Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
-            .otherwise(col("o_totalprice")))
-      val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+      val (_, v1, v2) = orderVersions(spark, dir)
       graft.Meta.Versioned.publishAll(root, Seq("orders" -> v1.repartition(4)))
       graft.Meta.Versioned.publishAll(root, Seq("orders" -> v2.repartition(4)))
       val feed = graft.Meta.Versioned.changes(spark, root, "orders",
@@ -1007,13 +1018,7 @@ object AnalyticsQueries {
         |SELECT b.o_orderkey, b.o_custkey, b.o_totalprice, 'update_postimage'
         |FROM v1 a JOIN v3 b USING (o_orderkey)
         |WHERE a.o_totalprice <> b.o_totalprice""".stripMargin) { (spark, dir) =>
-      val o = Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
-            .otherwise(col("o_totalprice")))
-      val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+      val (o, v1, v2) = orderVersions(spark, dir)
       val v3 = o.filter(col("o_orderkey") % 5 =!= 0)
         .withColumn("o_totalprice",
           when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
@@ -1040,29 +1045,8 @@ object AnalyticsQueries {
     // scales chosen so |value|·10^scale < 2^53 (mean 6dp, var 2dp) and
     // the driver's decimal→float64 conversion stays uniquely rounded.
     Q(
-      "q109_incremental_moments",
-      """WITH s AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt,
-        |    sum(pc) AS s1c, sum(pc * pc) AS s2c4
-        |  FROM (SELECT o_custkey,
-        |          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT) AS pc
-        |        FROM orders WHERE o_orderkey % 11 <> 0) t
-        |  GROUP BY o_custkey)
-        |SELECT o_custkey, cnt,
-        |  CAST(((2 * s1c * 1000000 + cnt * 100) // (2 * cnt * 100))
-        |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS mean_price,
-        |  CAST(CASE WHEN cnt > 1 THEN
-        |    ((2 * (s2c4 * cnt - s1c * s1c) * 100 + cnt * (cnt - 1) * 10000)
-        |      // (2 * cnt * (cnt - 1) * 10000))
-        |      * CAST(0.01 AS DECIMAL(3,2)) END AS DOUBLE) AS var_price
-        |FROM s""".stripMargin) { (spark, dir) =>
-      val o = Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
-            .otherwise(col("o_totalprice")))
-      val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+      "q109_incremental_moments", OracleSql.momentsOracleSql) { (spark, dir) =>
+      val (_, v1, v2) = orderVersions(spark, dir)
       val feed = graft.Meta.Versioned
         .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
       val seed = Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")

@@ -18,33 +18,7 @@ import org.apache.spark.sql.types.DecimalType
   * boundary as DOUBLE, every count as BIGINT.
   */
 object CorpusStatsQueries {
-
-  /** Shared novelty oracle (q157/q158/q165): first-owner counts over the
-    * full corpus, restricted by `where` at the boundary. */
-  private[queries] def noveltyOracleSql(where: String): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, ${LlmQueries.toksSql} AS t FROM documents),
-       |sh AS (
-       |  SELECT doc_id, ${LlmQueries.shinglesSql} AS s FROM toks),
-       |hvt AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(s, x -> ${LlmQueries.strHashSql("x")})) AS hv
-       |  FROM sh WHERE len(s) > 0),
-       |e AS (
-       |  SELECT doc_id, h FROM hvt, unnest(hv) u(h)),
-       |own AS (
-       |  SELECT h, min(doc_id) AS owner FROM e GROUP BY h),
-       |per AS (
-       |  SELECT e.doc_id,
-       |    CAST(count(*) AS BIGINT) AS n_shingles,
-       |    CAST(sum(CASE WHEN o.owner = e.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_novel
-       |  FROM e JOIN own o USING (h) GROUP BY e.doc_id)
-       |SELECT doc_id, n_shingles, n_novel,
-       |  CAST(((2 * CAST(n_novel AS HUGEINT) * 1000000 + n_shingles)
-       |    // (2 * CAST(n_shingles AS HUGEINT)))
-       |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS novelty
-       |FROM per $where""".stripMargin
+  import OracleSql._
 
   /** Vocab sizes for the coverage curve — spaced to bracket the fixture
     * vocabulary (the SQL literal and the Spark stack() share this). */
@@ -104,23 +78,8 @@ object CorpusStatsQueries {
     * pairs → closure → full labels → hash-rank kept set → exact pairs
     * among kept. */
   private def sampledGraphCtes: String =
-    s"""ranked AS (
-       |  SELECT doc_id, sim, band, band_key,
-       |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-       |  FROM banded),
-       |cpairs AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM ranked a JOIN banded b USING (band, band_key)
-       |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-       |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM cpairs
-       |  UNION SELECT id_b, id_a FROM cpairs),
-       |reach AS (
-       |  SELECT DISTINCT src AS id, src AS comp FROM edges
-       |  UNION
-       |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-       |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+    s"""${simhashPairsCtes("cpairs")},
+       |${componentCtes("cpairs")},
        |lab AS (
        |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
        |  FROM documents d LEFT JOIN cmp c ON c.id = d.doc_id),
@@ -158,7 +117,7 @@ object CorpusStatsQueries {
           .mkString(",\n        |    ")
         val cases = VocabSizes.map(k => s"WHEN $k THEN c$k").mkString(" ")
         val values = VocabSizes.map(k => s"($k)").mkString(",")
-        s"""WITH toks AS (SELECT ${LlmQueries.toksSql} AS t FROM documents),
+        s"""WITH toks AS (SELECT $toksSql AS t FROM documents),
         |tok AS (SELECT unnest(t) AS term FROM toks),
         |tc AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
         |       FROM tok GROUP BY term),
@@ -218,21 +177,14 @@ object CorpusStatsQueries {
     // top-20 by size is a bounded TakeOrdered heap.
     Q(
       "q141_cluster_cohesion",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
+      s"""WITH RECURSIVE $simhashCtes,
          |pairs AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
          |    bit_count(xor(a.sim, b.sim)) AS ham
          |  FROM banded a JOIN banded b USING (band, band_key)
          |  WHERE a.doc_id < b.doc_id
          |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-         |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+         |${componentCtes("pairs")},
          |sz AS (SELECT component, CAST(count(*) AS BIGINT) AS n_docs
          |       FROM cmp GROUP BY component),
          |es AS (SELECT c.component, CAST(count(*) AS BIGINT) AS n_edges,
@@ -288,7 +240,7 @@ object CorpusStatsQueries {
     // Wedges = Σ_v C(deg_v, 2) is one aggregate over degrees.
     Q(
       "q142_triangle_stats",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
+      s"""WITH RECURSIVE $simhashCtes,
          |pairs AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM banded a JOIN banded b USING (band, band_key)
@@ -453,16 +405,8 @@ object CorpusStatsQueries {
         val ladder = (30 to 1 by -1).map(k =>
           s"WHEN degree >= ${1L << k} THEN CAST(${1L << k} AS BIGINT)")
           .mkString("\n    ")
-        s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-           |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+        s"""WITH RECURSIVE $simhashCtes,
+           |${simhashPairsCtes()},
            |deg AS (
            |  SELECT id, CAST(count(*) AS BIGINT) AS degree FROM (
            |    SELECT id_a AS id FROM pairs
@@ -573,7 +517,7 @@ object CorpusStatsQueries {
       "q164_token_gini",
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    CAST(len(${LlmQueries.toksSql}) AS BIGINT) AS ntok
+         |    CAST(len($toksSql) AS BIGINT) AS ntok
          |  FROM documents),
          |r AS (
          |  SELECT source, ntok,
@@ -629,27 +573,12 @@ object CorpusStatsQueries {
     // rollup; survival ratios round in integer space and present DOUBLE.
     Q(
       "q168_dedup_survival_by_source",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-         |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${componentCtes("pairs")},
          |lab AS (
          |  SELECT d.doc_id, d.source,
-         |    CAST(len(${LlmQueries.toksSql}) AS BIGINT) AS ntok,
+         |    CAST(len($toksSql) AS BIGINT) AS ntok,
          |    coalesce(c.component, d.doc_id) = d.doc_id AS keep
          |  FROM documents d LEFT JOIN cmp c ON c.id = d.doc_id)
          |SELECT source,
@@ -743,16 +672,8 @@ object CorpusStatsQueries {
     // rollup.
     Q(
       "q160_cross_source_dup_matrix",
-      s"""WITH ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+      s"""WITH $simhashCtes,
+         |${simhashPairsCtes()},
          |lab AS (
          |  SELECT LEAST(da.source, db.source) AS source_a,
          |    GREATEST(da.source, db.source) AS source_b
@@ -801,16 +722,8 @@ object CorpusStatsQueries {
              |$next AS (
              |  SELECT p.id, coalesce(b.nl, p.lab) AS lab
              |  FROM $prev p LEFT JOIN ${next}_best b USING (id))""".stripMargin
-        s"""WITH ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-           |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+        s"""WITH $simhashCtes,
+           |${simhashPairsCtes()},
            |edges AS (
            |  SELECT id_a AS src, id_b AS dst FROM pairs
            |  UNION ALL SELECT id_b, id_a FROM pairs),
@@ -842,7 +755,7 @@ object CorpusStatsQueries {
          |  FROM embeddings),
          |j AS (
          |  SELECT d.source, v.dv,
-         |    sqrt(${CurationQueries.dot64Sql("v.dv", "v.dv")}) AS nrm
+         |    sqrt(${dot64Sql("v.dv", "v.dv")}) AS nrm
          |  FROM v JOIN documents d ON d.doc_id = v.vec_id),
          |e AS (
          |  SELECT source, i, CAST(dv[i] / nrm AS DECIMAL(27,10)) AS c
@@ -851,7 +764,7 @@ object CorpusStatsQueries {
          |  SELECT source, i, sum(c) AS sd FROM e GROUP BY 1, 2),
          |agg AS (
          |  SELECT source,
-         |    ${LlmQueries.foldSumSql(
+         |    ${foldSumSql(
                "list_transform(list(CAST(sd AS DOUBLE) ORDER BY i), x -> x * x)",
                "CAST(0 AS DOUBLE)")} AS sum_norm_sq
          |  FROM s GROUP BY source),
@@ -888,16 +801,8 @@ object CorpusStatsQueries {
              |  SELECT e.src AS id FROM edges e
              |  JOIN $prev a ON e.src = a.id JOIN $prev b ON e.dst = b.id
              |  GROUP BY 1 HAVING count(*) >= $k)""".stripMargin
-        s"""WITH ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-           |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+        s"""WITH $simhashCtes,
+           |${simhashPairsCtes()},
            |edges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM pairs
            |  UNION ALL SELECT id_b, id_a FROM pairs),
@@ -947,11 +852,8 @@ object CorpusStatsQueries {
              |    CAST(count(*) AS BIGINT) AS n_docs_touched,
              |    CAST(count(DISTINCT comp) AS BIGINT) AS n_clusters
              |  FROM lab$t)""".stripMargin
-        s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
+        s"""WITH RECURSIVE $simhashCtes,
+           |${rankedCte()},
            |cpairs AS (
            |  SELECT id_a, id_b, min(h) AS h FROM (
            |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1002,16 +904,8 @@ object CorpusStatsQueries {
     // the Pregel step, linear in edges; mean rounds in integer space.
     Q(
       "q199_neighbor_degrees",
-      s"""WITH ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+      s"""WITH $simhashCtes,
+         |${simhashPairsCtes()},
          |edges AS (
          |  SELECT id_a AS src, id_b AS dst FROM pairs
          |  UNION ALL SELECT id_b, id_a FROM pairs),
@@ -1111,7 +1005,7 @@ object CorpusStatsQueries {
     // the sampled subgraph.
     Q(
       "q205_cohesion_sampled",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
+      s"""WITH RECURSIVE $simhashCtes,
          |$sampledGraphCtes,
          |sz AS (SELECT component, CAST(count(*) AS BIGINT) AS n_docs
          |       FROM lab GROUP BY component),
@@ -1170,7 +1064,7 @@ object CorpusStatsQueries {
     // DuckDB's tiny scale.
     Q(
       "q206_triangle_sampled",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
+      s"""WITH RECURSIVE $simhashCtes,
          |$sampledGraphCtes,
          |deg AS (
          |  SELECT id, CAST(count(*) AS BIGINT) AS d FROM (
@@ -1240,7 +1134,7 @@ object CorpusStatsQueries {
     Q(
       "q207_zipf_slope",
       s"""WITH toks AS (
-         |  SELECT unnest(${LlmQueries.toksSql}) AS term FROM documents),
+         |  SELECT unnest($toksSql) AS term FROM documents),
          |freq AS (
          |  SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY 1),
          |ranked AS (
@@ -1306,7 +1200,7 @@ object CorpusStatsQueries {
     Q(
       "q245_chao_richness",
       s"""WITH tok AS (
-         |  SELECT source, unnest(${LlmQueries.toksSql}) AS term
+         |  SELECT source, unnest($toksSql) AS term
          |  FROM documents),
          |tc AS (
          |  SELECT source, term, CAST(count(*) AS HUGEINT) AS c
@@ -1373,11 +1267,11 @@ object CorpusStatsQueries {
     // 10% of union for the derived intersection/difference.
     Q(
       "q285_kmv_setops", {
-        val h = LlmQueries.strHashSql("x")
+        val h = strHashSql("x")
         s"""WITH toks AS (
-           |  SELECT doc_id, ${LlmQueries.toksSql} AS t FROM documents),
+           |  SELECT doc_id, $toksSql AS t FROM documents),
            |sh AS (
-           |  SELECT doc_id, ${LlmQueries.shinglesSql} AS s FROM toks),
+           |  SELECT doc_id, $shinglesSql AS s FROM toks),
            |hv AS (
            |  SELECT DISTINCT doc_id % 2 AS side,
            |    unnest(list_transform(s, x -> $h)) AS h
@@ -1460,7 +1354,7 @@ object CorpusStatsQueries {
     Q(
       "q289_skipgram_pmi",
       s"""WITH toks AS (
-         |  SELECT doc_id, ${LlmQueries.toksSql} AS t FROM documents),
+         |  SELECT doc_id, $toksSql AS t FROM documents),
          |fwd AS (
          |  SELECT t[i] AS w, t[i + j] AS c
          |  FROM toks, unnest(range(1, len(t) + 1)) u(i),
@@ -1550,17 +1444,8 @@ object CorpusStatsQueries {
              |    UNION ALL
              |    SELECT b.src, e.dst FROM $prev b JOIN edges e ON b.dst = e.src))"""
             .stripMargin
-        s"""WITH ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
-           |    AND a.doc_id < b.doc_id
-           |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+        s"""WITH $simhashCtes,
+           |${simhashPairsCtes()},
            |edges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM pairs
            |  UNION ALL SELECT id_b, id_a FROM pairs),

@@ -14,134 +14,106 @@ import org.apache.spark.sql.types.DecimalType
   */
 object CurationQueries {
   import graft.ops.Text.{Mult, P}
+  import OracleSql._
 
-  /** tokens CTE body shared with LlmQueries (DuckDB dialect). */
-  private val toksSql =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
-  /** q277's one-shot exact-substring rewrite SQL — ALSO the oracle of
-    * the streamed fold (q280): ascending-id arrival makes per-batch
-    * ownership equal the global (doc, pos) order, so the streamed
-    * result must be bit-identical to this one-shot replay. */
-  private[queries] def exactSubstrOracleSql: String =
-    s"""WITH toks AS (
+  /** Winnowing fingerprints (k = 3, w = 4, rightmost-min key
+    * (h+1)·2²² − p, df ≤ 64): `kept(doc_id, h)` and per-doc counts
+    * `nf(doc_id, nfp)` — the oracle of `Dedup.winnowingPairs` (q297/q303). */
+  private val winnowCtes: String = {
+    val C = 1L << 22
+    s"""toks AS (
        |  SELECT doc_id, $toksSql AS t FROM documents),
        |shp AS (
-       |  SELECT doc_id, i AS spos, array_to_string(t[i:i+19], ' ') AS s
-       |  FROM toks, unnest(CASE WHEN len(t) < 20 THEN []
-       |    ELSE range(1, len(t)-18) END) u(i)),
-       |r AS (
-       |  SELECT doc_id, spos,
-       |    row_number() OVER (PARTITION BY s ORDER BY doc_id, spos) AS rk,
-       |    count(*) OVER (PARTITION BY s) AS occ
+       |  SELECT doc_id, i AS p,
+       |    ${strHashSql(shingle3Sql)}
+       |      AS h
+       |  FROM toks, unnest(range(1, len(t) - 1)) u(i)),
+       |win AS (
+       |  SELECT doc_id, p,
+       |    min((h + 1) * $C - p) OVER (
+       |      PARTITION BY doc_id ORDER BY p
+       |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS selkey,
+       |    count(*) OVER (PARTITION BY doc_id) AS m
        |  FROM shp),
-       |covered AS (
-       |  SELECT DISTINCT doc_id, spos + o AS p
-       |  FROM r, unnest(range(0, 20)) v(o)
-       |  WHERE occ >= 2 AND rk > 1),
-       |toklist AS (
-       |  SELECT doc_id, i AS p, t[i] AS tok
-       |  FROM toks, unnest(CASE WHEN len(t) = 0 THEN []
-       |    ELSE range(1, len(t)+1) END) u(i)),
+       |fp AS (
+       |  SELECT DISTINCT doc_id, selkey // $C AS h
+       |  FROM win WHERE p <= greatest(m - 3, 1)),
        |kept AS (
-       |  SELECT k.doc_id,
-       |    string_agg(k.tok, ' ' ORDER BY k.p) AS clean_text,
-       |    CAST(count(*) AS BIGINT) AS n_kept
-       |  FROM toklist k LEFT JOIN covered c
-       |    ON k.doc_id = c.doc_id AND k.p = c.p
-       |  WHERE c.doc_id IS NULL GROUP BY 1)
-       |SELECT d.doc_id,
-       |  coalesce(k.clean_text, '') AS clean_text,
-       |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
-       |  CAST(len($toksSql) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed
-       |FROM documents d LEFT JOIN kept k USING (doc_id)""".stripMargin
+       |  SELECT doc_id, h FROM (
+       |    SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS df
+       |    FROM fp)
+       |  WHERE df <= 64),
+       |nf AS (
+       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
+       |  FROM kept GROUP BY 1)""".stripMargin
+  }
 
-  /** 64-dim sequential-fold dot product (DuckDB dialect) — the oracle
-    * twin of the graft_dot_product kernel. */
-  private[queries] def dot64Sql(a: String, b: String) =
-    LlmQueries.foldSumSql(
-      s"list_transform(range(1, 65), i -> $a[i]*$b[i])", "CAST(0 AS DOUBLE)")
+  /** Recall of the approximate top-k `ak` against the exact `ek`, per
+    * query: (query_id, n_exact, n_hit, recall). */
+  private val recallSql =
+    """SELECT e.query_id,
+      |  CAST(count(*) AS BIGINT) AS n_exact,
+      |  CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
+      |  round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6) AS recall
+      |FROM ek e LEFT JOIN ak a
+      |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+      |GROUP BY e.query_id""".stripMargin
 
-  /** Euclidean argmin assignment CTE (kmeans): nearest of `cents` per
-    * vector from the `vn` CTE, ties to the lower cluster id. */
-  private[queries] def kmeansAssignSql(name: String, cents: String) =
-    s"""$name AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT vn.vec_id, c.cluster,
-       |      row_number() OVER (PARTITION BY vn.vec_id
-       |        ORDER BY vn.vn2 + ${dot64Sql("c.cv", "c.cv")}
-       |          - 2.0 * ${dot64Sql("vn.dv", "c.cv")}, c.cluster) AS rn
-       |    FROM vn, $cents c) x WHERE rn = 1)""".stripMargin
+  /** Token lines `lines(doc_id, pos, line)`: each doc's tokens of
+    * `toks(doc_id, t)` chunked into 10-token lines (the oracle of
+    * `tokenChunkLines(docs, 10)`). */
+  private val tokenLinesCte =
+    """lines AS (
+      |  SELECT doc_id, CAST(k + 1 AS BIGINT) AS pos,
+      |    array_to_string(t[(k*10+1):(k*10+10)], ' ') AS line
+      |  FROM toks, unnest(range(0, (len(t) + 9) // 10)) u(k))""".stripMargin
 
-  /** Centroid-update CTE pair (kmeans): DECIMAL(30,12) component means
-    * of `assign`'s clusters; empty clusters keep `prev`'s centroid. */
-  private[queries] def kmeansUpdateSql(sums: String, assign: String,
-      prev: String, next: String) =
-    s"""$sums AS (
-       |  SELECT a.cluster, i,
-       |    CAST(sum(CAST(vn.dv[i] AS DECIMAL(30,12))) AS DOUBLE)
-       |      / count(*) AS m
-       |  FROM $assign a JOIN vn USING (vec_id),
-       |    unnest(range(1, 65)) u(i)
-       |  GROUP BY 1, 2),
-       |$next AS (
-       |  SELECT p.cluster, coalesce(n.cv, p.cv) AS cv
-       |  FROM $prev p LEFT JOIN (
-       |    SELECT cluster, list(m ORDER BY i) AS cv FROM $sums GROUP BY 1) n
-       |  USING (cluster))""".stripMargin
+  /** Exact line dedup: a line survives iff it is first among its equal
+    * values under the ownership `order` (q308 one-shot; q310's
+    * arrival-priority rebuild). */
+  private def lineDedupOracleSql(order: String): String =
+    s"""WITH toks AS (
+       |  SELECT doc_id, $toksSql AS t FROM documents),
+       |$tokenLinesCte,
+       |k AS (
+       |  SELECT doc_id, pos, line,
+       |    row_number() OVER (PARTITION BY md5(line)
+       |      ORDER BY $order) = 1 AS kept
+       |  FROM lines),
+       |p AS (
+       |  SELECT doc_id,
+       |    CAST(count(*) AS BIGINT) AS n_lines,
+       |    CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
+       |    coalesce(string_agg(line, ' ' ORDER BY pos)
+       |      FILTER (WHERE kept), '') AS clean_text
+       |  FROM k GROUP BY 1)
+       |SELECT doc_id, n_lines, n_kept,
+       |  n_lines - n_kept AS n_removed,
+       |  CAST((2 * n_kept * 1000000 + n_lines) // (2 * n_lines)
+       |    AS DOUBLE) / 1000000 AS kept_frac,
+       |  clean_text
+       |FROM p""".stripMargin
 
-  /** The full deterministic 2-iteration k=4 training chain (v, vn, c0 …
-    * c2) shared by q113 (reports the model) and q116 (uses it as the
-    * IVF coarse quantizer). */
-  private[queries] val kmeansCtes: String =
-    s"""v AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-       |  FROM embeddings),
-       |vn AS (SELECT vec_id, dv, ${dot64Sql("dv", "dv")} AS vn2 FROM v),
-       |c0 AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, dv AS cv
-       |  FROM v ORDER BY vec_id LIMIT 4),
-       |${kmeansAssignSql("a1", "c0")},
-       |${kmeansUpdateSql("s1", "a1", "c0", "c1")},
-       |${kmeansAssignSql("a2", "c1")},
-       |${kmeansUpdateSql("s2", "a2", "c1", "c2")}""".stripMargin
+  /** Per-token repetition features `tlp(doc_id, p, plen, h2, gmass, h5)`
+    * over `toks(doc_id, t)`: token length, the 2-gram hash and mass and
+    * the 5-gram hash starting at each position. */
+  private val tokenNgramCte =
+    """tlp AS (
+      |  SELECT doc_id, i AS p, CAST(length(t[i]) AS BIGINT) AS plen,
+      |    CASE WHEN i + 1 <= len(t) THEN
+      |      CAST(concat('0x', substr(md5(
+      |        array_to_string(t[i:i+1], ' ')),1,8)) AS BIGINT)
+      |        % 2147483647 END AS h2,
+      |    CASE WHEN i + 1 <= len(t) THEN
+      |      CAST(length(t[i]) + length(t[i+1]) AS BIGINT) END AS gmass,
+      |    CASE WHEN i + 4 <= len(t) THEN
+      |      CAST(concat('0x', substr(md5(
+      |        array_to_string(t[i:i+4], ' ')),1,8)) AS BIGINT)
+      |        % 2147483647 END AS h5
+      |  FROM toks, unnest(CASE WHEN len(t) = 0 THEN []
+      |    ELSE range(1, len(t)+1) END) u(i))""".stripMargin
 
-  /** PQ (q179/q189) oracle chain: two 32-dim subspaces, each the
-    * deterministic 2-iteration k=4 training + final encoding — the
-    * kmeansCtes recipe parameterized per subspace, from the same
-    * constants as `Similarity.pqTrain(dim=64, m=2, ksub=4, iters=2)`. */
-  private[queries] val PqSubDim = 32
-  private[queries] val PqKsub = 4
-
-  private[queries] def pqDotSql(a: String, b: String) = LlmQueries.foldSumSql(
-    s"list_transform(range(1, ${PqSubDim + 1}), i -> $a[i]*$b[i])",
-    "CAST(0 AS DOUBLE)")
-
-  private[queries] def pqAssignSql(name: String, vn: String, cents: String) =
-    s"""$name AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT v.vec_id, c.cluster,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY v.vn2 + ${pqDotSql("c.cv", "c.cv")}
-       |          - 2.0 * ${pqDotSql("v.dv", "c.cv")}, c.cluster) AS rn
-       |    FROM $vn v, $cents c) x WHERE rn = 1)""".stripMargin
-
-  private[queries] def pqUpdateSql(sums: String, assign: String, vn: String,
-      prev: String, next: String) =
-    s"""$sums AS (
-       |  SELECT a.cluster, i,
-       |    CAST(sum(CAST(v.dv[i] AS DECIMAL(30,12))) AS DOUBLE)
-       |      / count(*) AS mval
-       |  FROM $assign a JOIN $vn v USING (vec_id),
-       |    unnest(range(1, ${PqSubDim + 1})) u(i)
-       |  GROUP BY 1, 2),
-       |$next AS (
-       |  SELECT p.cluster, coalesce(n.cv, p.cv) AS cv
-       |  FROM $prev p LEFT JOIN (
-       |    SELECT cluster, list(mval ORDER BY i) AS cv FROM $sums
-       |    GROUP BY 1) n
-       |  USING (cluster))""".stripMargin
-
+  /** One PQ subspace's 2-iteration training + encoding chain. */
   private def pqSubspaceSql(j: Int): String = {
     val lo = j * PqSubDim + 1; val hi = (j + 1) * PqSubDim
     s"""sv$j AS (SELECT vec_id, dvall[$lo:$hi] AS dv FROM vall),
@@ -208,19 +180,13 @@ object CurationQueries {
     // closure (min reachable id), over the same pair CTEs as q28.
     Q(
       "q49_dedup_clusters",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
+      s"""WITH RECURSIVE $simhashCtes,
          |pairs AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM banded a JOIN banded b USING (band, band_key)
          |  WHERE a.doc_id < b.doc_id
          |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
+         |${reachCtes("pairs")},
          |cmp AS (
          |  SELECT id, min(comp) AS component FROM reach GROUP BY id)
          |SELECT d.doc_id,
@@ -242,11 +208,8 @@ object CurationQueries {
       "q50_tfidf_terms",
       s"""WITH toks AS (
          |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dfx AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+         |${termFreqCte()},
+         |$docFreqCte,
          |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
          |scored AS (
          |  SELECT doc_id, term,
@@ -327,22 +290,10 @@ object CurationQueries {
       "q54_bm25_terms",
       s"""WITH toks AS (
          |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dl AS (
-         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfx AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |stats AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
+         |$bm25StatsCtes,
          |scored AS (
          |  SELECT tf.doc_id, tf.term,
-         |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-         |      * (tf * 2.2)
-         |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-         |          / (CAST(sum_dl AS DOUBLE) / n_docs)))) AS bm25
+         |    $bm25Sql AS bm25
          |  FROM tf JOIN dfx USING (term) JOIN dl USING (doc_id), stats),
          |ranked AS (
          |  SELECT doc_id, term, bm25,
@@ -402,7 +353,8 @@ object CurationQueries {
     Q(
       "q71_incremental_dedup", {
         def hvSig(prefix: String, src: String): String = {
-          import LlmQueries.{toksSql => tok, shinglesSql, strHashSql, sigSql, bands, r}
+          import LlmQueries.{bands, r}
+          val tok = toksSql
           val banded = (0 until bands).map(b =>
             s"SELECT doc_id, $b AS band, array_to_string(sig[${b * r + 1}:${b * r + r}], ',') AS band_key FROM ${prefix}_sigs")
             .mkString("\n  UNION ALL ")
@@ -427,7 +379,7 @@ object CurationQueries {
            |  SELECT DISTINCT c.doc_id AS corpus_id, b.doc_id AS batch_id
            |  FROM c_banded c JOIN b_banded b USING (band, band_key))
            |SELECT corpus_id, batch_id, jaccard FROM (
-           |  SELECT corpus_id, batch_id, ${LlmQueries.jaccardSql} AS jaccard
+           |  SELECT corpus_id, batch_id, $jaccardSql AS jaccard
            |  FROM cand
            |  JOIN c_hv ha ON ha.doc_id = corpus_id
            |  JOIN b_hv hb ON hb.doc_id = batch_id)
@@ -819,23 +771,9 @@ object CurationQueries {
     // convergence TextDedupSpec pins.
     Q(
       "q87_cluster_survivors",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${reachCtes("pairs")},
          |cmp AS (
          |  SELECT id, min(comp) AS component FROM reach GROUP BY id),
          |tagged AS (
@@ -917,16 +855,7 @@ object CurationQueries {
     // the doc — no join, no cached intermediate, no second corpus pass.
     Q(
       "q93_boilerplate",
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN []
-        |    ELSE list_transform(range(1, len(t)-1), i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS x FROM sh WHERE len(s) > 0),
-        |pairs AS (SELECT DISTINCT doc_id,
-        |  CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT) % 2147483647 AS h FROM ex),
+      s"""WITH $shingleHashPairsCtes,
         |wdf AS (SELECT doc_id, count(*) OVER (PARTITION BY h) AS df FROM pairs)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
         |  CAST(sum(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
@@ -947,9 +876,9 @@ object CurationQueries {
     // as DECIMAL so the normalizer is merge-order-exact.
     Q(
       "q94_mixture_weights",
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> ''))) AS BIGINT) AS n_tokens
+        |    CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY source),
         |s AS (SELECT *, CAST(round(sqrt(CAST(n_tokens AS DOUBLE)), 6) AS DECIMAL(38,6)) AS sq FROM per),
         |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tt,
@@ -1040,11 +969,11 @@ object CurationQueries {
     Q(
       "q98_ann_recall", {
         val nbits = 4; val tables = 4; val kk = 10
-        def dotSql(a: String, b: String) = LlmQueries.foldSumSql(
+        def dotSql(a: String, b: String) = foldSumSql(
           s"list_transform(range(1, 65), i -> $a[i]*$b[i])", "CAST(0 AS DOUBLE)")
         def bucketSql(t: Int) = (0 until nbits).map { bit =>
           val g = t * nbits + bit
-          val proj = LlmQueries.foldSumSql(
+          val proj = foldSumSql(
             s"""list_transform(dv, (x, i) ->
                |        x * CASE WHEN (($g*64 + (i-1)) * $Mult) % $P % 2 = 0
                |            THEN 1.0 ELSE -1.0 END)""".stripMargin,
@@ -1084,13 +1013,7 @@ object CurationQueries {
            |    SELECT query_id, neighbor_id,
            |      row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
            |    FROM scored) WHERE rn <= $kk)
-           |SELECT e.query_id,
-           |  CAST(count(*) AS BIGINT) AS n_exact,
-           |  CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           |  round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6) AS recall
-           |FROM ek e LEFT JOIN ak a
-           |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-           |GROUP BY e.query_id""".stripMargin
+           |$recallSql""".stripMargin
       }) { (spark, dir) =>
       val e = Tables.embeddings(spark, dir)
       val qs = e.filter(col("vec_id") < 20)
@@ -1124,7 +1047,7 @@ object CurationQueries {
       "q153_truncated_recall", {
         val kk = 10
         val dims = Seq(8, 16, 32, 64)
-        def dotD(a: String, b: String, d: Int) = LlmQueries.foldSumSql(
+        def dotD(a: String, b: String, d: Int) = foldSumSql(
           s"list_transform(range(1, ${d + 1}), i -> $a[i]*$b[i])",
           "CAST(0 AS DOUBLE)")
         def exD(d: Int) =
@@ -1193,11 +1116,9 @@ object CurationQueries {
         s"""WITH toks AS (
            |  SELECT doc_id, source, $toksSql AS t FROM documents),
            |shs AS (
-           |  SELECT source, unnest(CASE WHEN len(t) < 3 THEN []
-           |    ELSE list_transform(range(1, len(t)-1),
-           |           i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END) AS s
+           |  SELECT source, unnest($shingleListSql) AS s
            |  FROM toks),
-           |sh AS (SELECT DISTINCT source, ${LlmQueries.strHashSql("s")} AS h FROM shs),
+           |sh AS (SELECT DISTINCT source, ${strHashSql("s")} AS h FROM shs),
            |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
            |px AS (
            |  SELECT a.source AS source_a, b.source AS source_b,
@@ -1277,8 +1198,8 @@ object CurationQueries {
            |toks AS (
            |  SELECT doc_id, $toksSql AS t FROM documents),
            |shp AS (
-           |  SELECT doc_id, i AS spos, concat_ws(' ', t[i], t[i+1], t[i+2]) AS s
-           |  FROM toks, unnest(CASE WHEN len(t) < 3 THEN [] ELSE range(1, len(t)-1) END) u(i)),
+           |  SELECT doc_id, i AS spos, $shingle3Sql AS s
+           |  FROM toks, unnest($shinglePosSql) u(i)),
            |boiler AS (
            |  SELECT s FROM shp, nd GROUP BY s, min_df
            |  HAVING count(DISTINCT doc_id) >= min_df),
@@ -1515,11 +1436,9 @@ object CurationQueries {
         s"""WITH toks AS (
            |  SELECT doc_id, $toksSql AS t FROM documents),
            |shs AS (
-           |  SELECT doc_id, unnest(CASE WHEN len(t) < 3 THEN []
-           |    ELSE list_transform(range(1, len(t)-1),
-           |           i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END) AS s
+           |  SELECT doc_id, unnest($shingleListSql) AS s
            |  FROM toks),
-           |sh AS (SELECT DISTINCT doc_id, ${LlmQueries.strHashSql("s")} AS h FROM shs),
+           |sh AS (SELECT DISTINCT doc_id, ${strHashSql("s")} AS h FROM shs),
            |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
            |px AS (
            |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
@@ -1579,12 +1498,7 @@ object CurationQueries {
            |    row_number() OVER (PARTITION BY query_id
            |      ORDER BY cos DESC, neighbor_id) AS rn
            |  FROM es) z WHERE rn <= 5)
-           |SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-           |  CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           |  round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6) AS recall
-           |FROM ek e LEFT JOIN ak a
-           |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-           |GROUP BY e.query_id""".stripMargin
+           |$recallSql""".stripMargin
       }) { (spark, dir) =>
       val e = Tables.embeddings(spark, dir)
       val (mins, maxs) = Similarity.sqTrain(e, "embedding")
@@ -1625,23 +1539,9 @@ object CurationQueries {
     // TextDedupSpec's pinned convergence).
     Q(
       "q119_incremental_components",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${reachCtes("pairs")},
          |cmp AS (
          |  SELECT id, min(comp) AS component FROM reach GROUP BY id)
          |SELECT d.doc_id,
@@ -1678,23 +1578,9 @@ object CurationQueries {
     // links; see Dedup.simhashPairsCapped.
     Q(
       "q151_degree_capped_dedup",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${reachCtes("pairs")},
          |cmp AS (
          |  SELECT id, min(comp) AS component FROM reach GROUP BY id)
          |SELECT d.doc_id,
@@ -1742,21 +1628,8 @@ object CurationQueries {
            |    row_number() OVER (PARTITION BY query_id
            |      ORDER BY cos DESC, neighbor_id) AS rn
            |  FROM scored) y WHERE rn <= 5),
-           |es AS (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |    ${dot64Sql("q.dv", "c.dv")} / (sqrt(q.vn2) * sqrt(c.vn2)) AS cos
-           |  FROM vn q, vn c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
-           |ek AS (SELECT query_id, neighbor_id FROM (
-           |  SELECT query_id, neighbor_id,
-           |    row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, neighbor_id) AS rn
-           |  FROM es) z WHERE rn <= 5)
-           |SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-           |  CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           |  round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6) AS recall
-           |FROM ek e LEFT JOIN ak a
-           |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-           |GROUP BY e.query_id""".stripMargin
+           |${exactTop5Ctes("vn")}
+           |$recallSql""".stripMargin
       }) { (spark, dir) =>
       val e = Tables.embeddings(spark, dir)
       val (_, cents) = Similarity.kmeansLloyd(e, "vec_id", "embedding",
@@ -1788,7 +1661,7 @@ object CurationQueries {
     Q(
       "q163_label_noise_knn", {
         val kk = 10
-        def dotSql(a: String, b: String) = LlmQueries.foldSumSql(
+        def dotSql(a: String, b: String) = foldSumSql(
           s"list_transform(range(1, 65), i -> $a[i]*$b[i])", "CAST(0 AS DOUBLE)")
         s"""WITH v AS (
            |  SELECT vec_id, label,
@@ -1878,21 +1751,10 @@ object CurationQueries {
         val terms = Seq("table", "window", "batch")
         def bmTerm(t: String) =
           s"""sum(CASE WHEN term = '$t' THEN
-             |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * (tf * 2.2)
-             |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-             |          / (CAST(sum_dl AS DOUBLE) / n_docs)))) END)""".stripMargin
+             |    $bm25Sql END)""".stripMargin
         s"""WITH toks AS (
            |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-           |tf AS (
-           |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-           |  FROM toks GROUP BY 1, 2),
-           |dl AS (
-           |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-           |dfx AS (
-           |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-           |stats AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           |         CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
+           |$bm25StatsCtes,
            |lex AS (
            |  SELECT tf.doc_id,
            |    ${terms.map(t => s"${bmTerm(t)} AS s_$t").mkString(",\n    ")}
@@ -2070,8 +1932,8 @@ object CurationQueries {
              |  FROM sig)""".stripMargin
         s"""WITH sig AS (
            |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-           |    CAST(len(list_distinct(${LlmQueries.toksSql})) AS BIGINT) AS n_distinct,
-           |    CAST(len(list_filter(${LlmQueries.toksSql}, w -> w IN (${Text.StopWords.head._2.map(w => s"'$w'").mkString(",")}))) AS BIGINT) AS stop_hits
+           |    CAST(len(list_distinct($toksSql)) AS BIGINT) AS n_distinct,
+           |    CAST(len(list_filter($toksSql, w -> w IN ($stopListSql))) AS BIGINT) AS stop_hits
            |  FROM documents),
            |${rankSql("len", "r1")},
            |${rankSql("n_distinct", "r2")},
@@ -2210,7 +2072,7 @@ object CurationQueries {
           .map { case (c, i) => s"WHEN ${i + 1} THEN ${c.toPlainString}" }
           .mkString(" ")
         def dotSql(a: String, b: String) =
-          LlmQueries.foldSumSql(
+          foldSumSql(
             s"list_transform(range(1, 65), i -> $a[i]*$b[i])",
             "CAST(0 AS DOUBLE)")
         s"""WITH v AS (
@@ -2297,7 +2159,7 @@ object CurationQueries {
     Q(
       "q211_matryoshka_fidelity", {
         def dotSql(a: String, b: String, d: Int) =
-          LlmQueries.foldSumSql(
+          foldSumSql(
             s"list_transform(range(1, ${d + 1}), i -> $a[i]*$b[i])",
             "CAST(0 AS DOUBLE)")
         def cosSql(d: Int) =
@@ -2394,7 +2256,7 @@ object CurationQueries {
       s"""WITH d AS (
          |  SELECT doc_id,
          |    CAST(n_chars AS BIGINT) AS n_chars,
-         |    CAST(len(${LlmQueries.toksSql}) AS BIGINT) AS n_tokens
+         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
          |  FROM documents)
          |SELECT a.doc_id, a.n_chars, a.n_tokens FROM d a
          |WHERE NOT EXISTS (
@@ -2424,7 +2286,7 @@ object CurationQueries {
       s"""WITH d AS (
          |  SELECT doc_id,
          |    CAST(n_chars AS BIGINT) AS n_chars,
-         |    CAST(len(${LlmQueries.toksSql}) AS BIGINT) AS n_tokens
+         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
          |  FROM documents)
          |SELECT a.doc_id, a.n_chars, a.n_tokens FROM d a
          |WHERE NOT EXISTS (
@@ -2458,24 +2320,9 @@ object CurationQueries {
     // replays the capped closure and both window picks.
     Q(
       "q217_golden_record",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |cpairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM cpairs
-         |  UNION SELECT id_b, id_a FROM cpairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-         |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes("cpairs")},
+         |${componentCtes("cpairs")},
          |m AS (
          |  SELECT coalesce(c.component, d.doc_id) AS component,
          |    d.doc_id, d.n_chars, d.lang
@@ -2711,8 +2558,6 @@ object CurationQueries {
     // margins of a homogeneous corpus cannot flip cross-engine.
     Q(
       "q253_gate_stack_audit", {
-        val stopList = graft.ops.Text.StopWords.head._2
-          .map(w => s"'$w'").mkString(",")
         s"""WITH tr AS (
            |  SELECT unnest($toksSql) AS term FROM documents
            |  WHERE doc_id % 7 <> 0),
@@ -2726,16 +2571,7 @@ object CurationQueries {
            |  WHERE doc_id % 7 = 0),
            |sig AS (
            |  SELECT doc_id,
-           |    CAST(len(t) AS BIGINT) AS n,
-           |    ${LlmQueries.foldSumSql(
-              "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-              "CAST(0 AS BIGINT)")} AS sum_len,
-           |    CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-           |      AS BIGINT) AS alpha,
-           |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT)
-           |      AS symbols,
-           |    CAST(len(list_filter(t, w -> w IN ($stopList))) AS BIGINT)
-           |      AS stop_hits
+           |    $gopherFeaturesSql
            |  FROM base),
            |ga AS (
            |  SELECT doc_id,
@@ -2759,31 +2595,8 @@ object CurationQueries {
            |g AS (
            |  SELECT ga.ga, coalesce(gb.gb, 0) AS gb
            |  FROM ga LEFT JOIN gb USING (doc_id)),
-           |c AS (
-           |  SELECT
-           |    CAST(sum(ga * gb) AS HUGEINT) AS a,
-           |    CAST(sum(ga * (1 - gb)) AS HUGEINT) AS b,
-           |    CAST(sum((1 - ga) * gb) AS HUGEINT) AS c,
-           |    CAST(sum((1 - ga) * (1 - gb)) AS HUGEINT) AS d,
-           |    CAST(count(*) AS HUGEINT) AS n
-           |  FROM g),
-           |k AS (
-           |  SELECT a, b, c, d, n,
-           |    (a + b) * (a + c) + (c + d) * (b + d) AS pe,
-           |    n * (a + d) AS po
-           |  FROM c)
-           |SELECT CAST(a AS BIGINT) AS n_both, CAST(b AS BIGINT) AS n_a_only,
-           |  CAST(c AS BIGINT) AS n_b_only, CAST(d AS BIGINT) AS n_neither,
-           |  CASE WHEN n = 0 THEN 1.0 ELSE
-           |    CAST((2 * (a + d) * 1000000 + n) // (2 * n) AS DOUBLE)
-           |      / 1000000 END AS observed_agreement,
-           |  CASE WHEN n * n - pe = 0 THEN 1.0 ELSE
-           |    CAST(CASE WHEN po - pe >= 0
-           |      THEN (2 * (po - pe) * 1000000 + (n * n - pe))
-           |        // (2 * (n * n - pe))
-           |      ELSE -((2 * (pe - po) * 1000000 + (n * n - pe))
-           |        // (2 * (n * n - pe))) END AS DOUBLE) / 1000000 END
-           |    AS kappa
+           |$kappaCtes
+           |SELECT $kappaSql
            |FROM k""".stripMargin
       }) { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
@@ -3080,26 +2893,9 @@ object CurationQueries {
       "q292_postdedup_mixture", {
         def rr(x: String, t: String) =
           s"((2 * CAST($x AS HUGEINT) * 1000000 + $t) // (2 * CAST($t AS HUGEINT))) * CAST(0.000001 AS DECIMAL(7,6))"
-        s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key
-           |      ORDER BY doc_id) AS rk
-           |  FROM banded),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
-           |    AND a.doc_id < b.doc_id
-           |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-           |edges AS (
-           |  SELECT id_a AS src, id_b AS dst FROM pairs
-           |  UNION SELECT id_b, id_a FROM pairs),
-           |reach AS (
-           |  SELECT DISTINCT src AS id, src AS comp FROM edges
-           |  UNION
-           |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-           |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+        s"""WITH RECURSIVE $simhashCtes,
+           |${simhashPairsCtes()},
+           |${componentCtes("pairs")},
            |tk AS (
            |  SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS ntok
            |  FROM documents),
@@ -3173,7 +2969,7 @@ object CurationQueries {
     // measurable.
     Q(
       "q293_weighted_jaccard", {
-        import LlmQueries.{hvCte, sigSql, bands, r, jaccardSql}
+        import LlmQueries.{bands, r}
         s"""$hvCte,
            |sigs AS (
            |  SELECT doc_id, hv, $sigSql AS sig FROM hvt),
@@ -3189,7 +2985,7 @@ object CurationQueries {
            |prs AS (
            |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
            |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
+           |  WHERE a.rk <= ${Dedup.DefaultDegreeCap}
            |    AND a.doc_id < b.doc_id),
            |cand AS (
            |  SELECT id_a, id_b, set_jaccard FROM (
@@ -3198,10 +2994,7 @@ object CurationQueries {
            |    JOIN hvt ha ON ha.doc_id = id_a
            |    JOIN hvt hb ON hb.doc_id = id_b)
            |  WHERE set_jaccard >= 0.5),
-           |tf AS (
-           |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-           |    SELECT doc_id, unnest($toksSql) AS term FROM documents)
-           |  GROUP BY 1, 2),
+           |${termFreqCte(s"(\n    SELECT doc_id, unnest($toksSql) AS term FROM documents)")},
            |pt AS (
            |  SELECT c.id_a, c.id_b, t.term, t.tf AS tfa, CAST(0 AS BIGINT) AS tfb
            |  FROM cand c JOIN tf t ON t.doc_id = c.id_a
@@ -3324,32 +3117,7 @@ object CurationQueries {
     // size. overlap = n_shared ∕ min(|fp_a|, |fp_b|), half-up 6-dp.
     Q(
       "q297_winnowing_matches", {
-        val C = 1L << 22
-        s"""WITH toks AS (
-           |  SELECT doc_id, $toksSql AS t FROM documents),
-           |shp AS (
-           |  SELECT doc_id, i AS p,
-           |    ${LlmQueries.strHashSql("concat_ws(' ', t[i], t[i+1], t[i+2])")}
-           |      AS h
-           |  FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-           |win AS (
-           |  SELECT doc_id, p,
-           |    min((h + 1) * $C - p) OVER (
-           |      PARTITION BY doc_id ORDER BY p
-           |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS selkey,
-           |    count(*) OVER (PARTITION BY doc_id) AS m
-           |  FROM shp),
-           |fp AS (
-           |  SELECT DISTINCT doc_id, selkey // $C AS h
-           |  FROM win WHERE p <= greatest(m - 3, 1)),
-           |kept AS (
-           |  SELECT doc_id, h FROM (
-           |    SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS df
-           |    FROM fp)
-           |  WHERE df <= 64),
-           |nf AS (
-           |  SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
-           |  FROM kept GROUP BY 1),
+        s"""WITH $winnowCtes,
            |pr AS (
            |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            |    CAST(count(*) AS BIGINT) AS n_shared
@@ -3484,32 +3252,7 @@ object CurationQueries {
     // arrivals; output (corpus_id, batch_id, n_shared, overlap).
     Q(
       "q303_winnowing_ingest", {
-        val C = 1L << 22
-        s"""WITH toks AS (
-           |  SELECT doc_id, $toksSql AS t FROM documents),
-           |shp AS (
-           |  SELECT doc_id, i AS p,
-           |    ${LlmQueries.strHashSql("concat_ws(' ', t[i], t[i+1], t[i+2])")}
-           |      AS h
-           |  FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-           |win AS (
-           |  SELECT doc_id, p,
-           |    min((h + 1) * $C - p) OVER (
-           |      PARTITION BY doc_id ORDER BY p
-           |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS selkey,
-           |    count(*) OVER (PARTITION BY doc_id) AS m
-           |  FROM shp),
-           |fp AS (
-           |  SELECT DISTINCT doc_id, selkey // $C AS h
-           |  FROM win WHERE p <= greatest(m - 3, 1)),
-           |kept AS (
-           |  SELECT doc_id, h FROM (
-           |    SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS df
-           |    FROM fp)
-           |  WHERE df <= 64),
-           |nf AS (
-           |  SELECT doc_id, CAST(count(*) AS BIGINT) AS nfp
-           |  FROM kept GROUP BY 1),
+        s"""WITH $winnowCtes,
            |pr AS (
            |  SELECT a.doc_id AS corpus_id, b.doc_id AS batch_id,
            |    CAST(count(*) AS BIGINT) AS n_shared
@@ -3550,7 +3293,7 @@ object CurationQueries {
     // over the tail-sized pair set.
     Q(
       "q304_lsh_s_curve", {
-        import LlmQueries.{hvCte, sigSql, bands, r => rr0, jaccardSql}
+        import LlmQueries.{bands, r => rr0}
         val configs = Seq((1, 12), (2, 6), (3, 4), (4, 3), (6, 2), (12, 1))
         def mid(b: Int, r: Int) =
           BigDecimal(math.pow(1.0 / b, 1.0 / r))
@@ -3591,7 +3334,7 @@ object CurationQueries {
            |prs AS (
            |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
            |  FROM ranked a JOIN banded b USING (band, band_key)
-           |  WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
+           |  WHERE a.rk <= ${Dedup.DefaultDegreeCap}
            |    AND a.doc_id < b.doc_id),
            |sc AS (
            |  SELECT s FROM (
@@ -3654,30 +3397,7 @@ object CurationQueries {
     // corpus-axis self-join anywhere.
     Q(
       "q308_line_dedup",
-      s"""WITH toks AS (
-         |  SELECT doc_id, $toksSql AS t FROM documents),
-         |lines AS (
-         |  SELECT doc_id, CAST(k + 1 AS BIGINT) AS pos,
-         |    array_to_string(t[(k*10+1):(k*10+10)], ' ') AS line
-         |  FROM toks, unnest(range(0, (len(t) + 9) // 10)) u(k)),
-         |k AS (
-         |  SELECT doc_id, pos, line,
-         |    row_number() OVER (PARTITION BY md5(line)
-         |      ORDER BY doc_id, pos) = 1 AS kept
-         |  FROM lines),
-         |p AS (
-         |  SELECT doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_lines,
-         |    CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
-         |    coalesce(string_agg(line, ' ' ORDER BY pos)
-         |      FILTER (WHERE kept), '') AS clean_text
-         |  FROM k GROUP BY 1)
-         |SELECT doc_id, n_lines, n_kept,
-         |  n_lines - n_kept AS n_removed,
-         |  CAST((2 * n_kept * 1000000 + n_lines) // (2 * n_lines)
-         |    AS DOUBLE) / 1000000 AS kept_frac,
-         |  clean_text
-         |FROM p""".stripMargin) { (spark, dir) =>
+      lineDedupOracleSql("doc_id, pos")) { (spark, dir) =>
       Dedup.dedupLines(
         tokenChunkLines(Tables.documents(spark, dir), 10),
         "doc_id", "pos", "line")
@@ -3695,30 +3415,7 @@ object CurationQueries {
     // TEXT — only the md5 value index (metadata beside the corpus).
     Q(
       "q310_line_dedup_ingest",
-      s"""WITH toks AS (
-         |  SELECT doc_id, $toksSql AS t FROM documents),
-         |lines AS (
-         |  SELECT doc_id, CAST(k + 1 AS BIGINT) AS pos,
-         |    array_to_string(t[(k*10+1):(k*10+10)], ' ') AS line
-         |  FROM toks, unnest(range(0, (len(t) + 9) // 10)) u(k)),
-         |k AS (
-         |  SELECT doc_id, pos, line,
-         |    row_number() OVER (PARTITION BY md5(line)
-         |      ORDER BY (doc_id % 10 = 3), doc_id, pos) = 1 AS kept
-         |  FROM lines),
-         |p AS (
-         |  SELECT doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_lines,
-         |    CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
-         |    coalesce(string_agg(line, ' ' ORDER BY pos)
-         |      FILTER (WHERE kept), '') AS clean_text
-         |  FROM k GROUP BY 1)
-         |SELECT doc_id, n_lines, n_kept,
-         |  n_lines - n_kept AS n_removed,
-         |  CAST((2 * n_kept * 1000000 + n_lines) // (2 * n_lines)
-         |    AS DOUBLE) / 1000000 AS kept_frac,
-         |  clean_text
-         |FROM p""".stripMargin) { (spark, dir) =>
+      lineDedupOracleSql("(doc_id % 10 = 3), doc_id, pos")) { (spark, dir) =>
       val lines = tokenChunkLines(Tables.documents(spark, dir), 10)
       Dedup.dedupLinesIncremental(
         lines.filter(col("doc_id") % 10 =!= 3),
@@ -3745,10 +3442,7 @@ object CurationQueries {
       "q311_repetition_gates",
       s"""WITH toks AS (
          |  SELECT doc_id, $toksSql AS t FROM documents),
-         |lines AS (
-         |  SELECT doc_id, CAST(k + 1 AS BIGINT) AS pos,
-         |    array_to_string(t[(k*10+1):(k*10+10)], ' ') AS line
-         |  FROM toks, unnest(range(0, (len(t) + 9) // 10)) u(k)),
+         |$tokenLinesCte,
          |lg AS (
          |  SELECT doc_id, line, CAST(count(*) AS BIGINT) AS c,
          |    CAST(length(regexp_replace(lower(line), '[^a-z0-9]', '', 'g'))
@@ -3759,20 +3453,7 @@ object CurationQueries {
          |    CAST(sum(c - 1) AS BIGINT) AS n_dup,
          |    CAST(sum((c - 1) * lchars) AS BIGINT) AS dupchars
          |  FROM lg GROUP BY 1),
-         |tlp AS (
-         |  SELECT doc_id, i AS p, CAST(length(t[i]) AS BIGINT) AS plen,
-         |    CASE WHEN i + 1 <= len(t) THEN
-         |      CAST(concat('0x', substr(md5(
-         |        array_to_string(t[i:i+1], ' ')),1,8)) AS BIGINT)
-         |        % 2147483647 END AS h2,
-         |    CASE WHEN i + 1 <= len(t) THEN
-         |      CAST(length(t[i]) + length(t[i+1]) AS BIGINT) END AS gmass,
-         |    CASE WHEN i + 4 <= len(t) THEN
-         |      CAST(concat('0x', substr(md5(
-         |        array_to_string(t[i:i+4], ' ')),1,8)) AS BIGINT)
-         |        % 2147483647 END AS h5
-         |  FROM toks, unnest(CASE WHEN len(t) = 0 THEN []
-         |    ELSE range(1, len(t)+1) END) u(i)),
+         |$tokenNgramCte,
          |w AS (
          |  SELECT doc_id, p, plen, h2, gmass, h5,
          |    count(*) OVER (PARTITION BY doc_id, h2) AS c2,
@@ -3843,7 +3524,6 @@ object CurationQueries {
       "q313_curation_funnel", {
         val tgt = Seq("src0", "src1").map(s => s"'$s'").mkString(", ")
         val B = 256
-        val stops = Text.StopWords.head._2.map(w => s"'$w'").mkString(",")
         s"""WITH raw AS (
            |  SELECT doc_id, source, text, $toksSql AS t,
            |    concat('https://',
@@ -3870,27 +3550,12 @@ object CurationQueries {
            |  FROM toks),
            |gop AS (
            |  SELECT doc_id,
-           |    (n >= 20 AND n <= 100000 AND n > 0
-           |     AND sum_len >= n * 3 AND sum_len <= n * 10
-           |     AND symbols * 10 <= n AND alpha * 10 >= n * 8
-           |     AND stop_hits >= 2) AS k1
+           |    ($gopherGateSql) AS k1
            |  FROM (
            |    SELECT doc_id,
-           |      CAST(len(t) AS BIGINT) AS n,
-           |      ${LlmQueries.foldSumSql(
-                    "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-                    "CAST(0 AS BIGINT)")} AS sum_len,
-           |      CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-           |        AS BIGINT) AS alpha,
-           |      CAST(len(regexp_extract_all(text, '#|\\.\\.\\.'))
-           |        AS BIGINT) AS symbols,
-           |      CAST(len(list_filter(t, w -> w IN ($stops))) AS BIGINT)
-           |        AS stop_hits
+           |      $gopherFeaturesSql
            |    FROM toks)),
-           |lines AS (
-           |  SELECT doc_id, CAST(k + 1 AS BIGINT) AS pos,
-           |    array_to_string(t[(k*10+1):(k*10+10)], ' ') AS line
-           |  FROM toks, unnest(range(0, (len(t) + 9) // 10)) u(k)),
+           |$tokenLinesCte,
            |ld AS (
            |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_lines,
            |    CAST(sum(c - 1) AS BIGINT) AS n_dup,
@@ -3900,20 +3565,7 @@ object CurationQueries {
            |      CAST(length(regexp_replace(lower(line), '[^a-z0-9]', '',
            |        'g')) AS BIGINT) AS lchars
            |    FROM lines GROUP BY 1, 2) GROUP BY 1),
-           |tlp AS (
-           |  SELECT doc_id, i AS p, CAST(length(t[i]) AS BIGINT) AS plen,
-           |    CASE WHEN i + 1 <= len(t) THEN
-           |      CAST(concat('0x', substr(md5(
-           |        array_to_string(t[i:i+1], ' ')),1,8)) AS BIGINT)
-           |        % 2147483647 END AS h2,
-           |    CASE WHEN i + 1 <= len(t) THEN
-           |      CAST(length(t[i]) + length(t[i+1]) AS BIGINT) END AS gmass,
-           |    CASE WHEN i + 4 <= len(t) THEN
-           |      CAST(concat('0x', substr(md5(
-           |        array_to_string(t[i:i+4], ' ')),1,8)) AS BIGINT)
-           |        % 2147483647 END AS h5
-           |  FROM toks, unnest(CASE WHEN len(t) = 0 THEN []
-           |    ELSE range(1, len(t)+1) END) u(i)),
+           |$tokenNgramCte,
            |pc AS (
            |  SELECT doc_id, CAST(sum(plen) AS BIGINT) AS totchars,
            |    CAST(coalesce(sum(plen) FILTER (WHERE cvr = 1), 0) AS BIGINT)
@@ -3958,27 +3610,7 @@ object CurationQueries {
            |    coalesce(string_agg(line, ' ' ORDER BY pos)
            |      FILTER (WHERE kept), '') AS clean_text
            |  FROM own GROUP BY 1),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $B AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |bc AS (
-           |  SELECT b,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT)
-           |      AS cpos,
-           |    CAST(count(*) FILTER (WHERE source NOT IN ($tgt)) AS BIGINT)
-           |      AS cneg
-           |  FROM tb GROUP BY 1),
-           |nbt AS (SELECT CAST(sum(cpos) AS BIGINT) AS npos,
-           |    CAST(sum(cneg) AS BIGINT) AS nneg FROM bc),
-           |nbw AS (SELECT b,
-           |    CAST(round(ln(((cpos + 1.0) * (nneg + $B)) /
-           |      ((cneg + 1.0) * (npos + $B))), 9) AS DECIMAL(13,9)) AS w9
-           |  FROM bc, nbt),
+           |${nbWeightCtes(tgt, B)},
            |sc AS (SELECT d.doc_id,
            |    sum(CAST(d.n AS DECIMAL(10,0)) * nbw.w9) AS s
            |  FROM (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS n
@@ -3999,9 +3631,7 @@ object CurationQueries {
            |      CASE WHEN f4 THEN 1 ELSE 0 END ORDER BY doc_id) = 1 AS f5
            |  FROM v),
            |sh AS (
-           |  SELECT doc_id, CASE WHEN len(t) < 3 THEN []
-           |    ELSE list_transform(range(1, len(t)-1),
-           |      i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END AS s
+           |  SELECT doc_id, $shingleListSql AS s
            |  FROM toks),
            |ex AS (SELECT doc_id, unnest(s) AS x FROM sh WHERE len(s) > 0),
            |prs AS (SELECT DISTINCT doc_id,
@@ -4215,7 +3845,6 @@ object CurationQueries {
     * fold == rebuild, so both queries hash-match the same one-shot
     * full-corpus SQL (the q89/q101 shared-oracle pattern). */
   private[queries] def urlDomainOracleSql: String = {
-        val stops = Text.StopWords.head._2.map(w => s"'$w'").mkString(",")
         s"""WITH u AS (
            |  SELECT doc_id, source, text,
            |    concat('https://',
@@ -4244,22 +3873,10 @@ object CurationQueries {
            |  FROM documents GROUP BY 1),
            |gop AS (
            |  SELECT doc_id,
-           |    (n >= 20 AND n <= 100000 AND n > 0
-           |     AND sum_len >= n * 3 AND sum_len <= n * 10
-           |     AND symbols * 10 <= n AND alpha * 10 >= n * 8
-           |     AND stop_hits >= 2) AS k1
+           |    ($gopherGateSql) AS k1
            |  FROM (
            |    SELECT doc_id,
-           |      CAST(len(t) AS BIGINT) AS n,
-           |      ${LlmQueries.foldSumSql(
-                    "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-                    "CAST(0 AS BIGINT)")} AS sum_len,
-           |      CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-           |        AS BIGINT) AS alpha,
-           |      CAST(len(regexp_extract_all(text, '#|\\.\\.\\.'))
-           |        AS BIGINT) AS symbols,
-           |      CAST(len(list_filter(t, w -> w IN ($stops))) AS BIGINT)
-           |        AS stop_hits
+           |      $gopherFeaturesSql
            |    FROM u)),
            |p AS (
            |  SELECT gate.domain,

@@ -14,15 +14,25 @@ import org.apache.spark.sql.functions._
   */
 object GovernanceQueries {
   import graft.ops.Text.{Mult, P}
-
-  /** tokens CTE body shared with LlmQueries (DuckDB dialect). */
-  private val toksSql =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
+  import OracleSql._
 
   /** PII regexes — single-sourced from Privacy so the oracle strings
     * below can never drift from the Spark rules. */
   private val emailRe = Privacy.Email.pattern
   private val phoneRe = Privacy.Phone.pattern
+
+  /** q89's benchmark-overlap oracle (benchmark = doc_id % 97 = 0) — also
+    * the oracle of the Bloom-prefiltered (q101) and streamed (q97)
+    * decontamination, which must drop nothing q89 keeps. */
+  private val decontaminationOracleSql: String =
+    s"""WITH $shingleHashPairsCtes,
+       |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM pairs GROUP BY doc_id),
+       |bench AS (SELECT DISTINCT h FROM pairs WHERE doc_id % 97 = 0),
+       |corpus AS (SELECT * FROM pairs WHERE doc_id % 97 <> 0)
+       |SELECT c.doc_id, n.n_shingles, CAST(count(*) AS BIGINT) AS n_overlap,
+       |  round(CAST(count(*) AS DOUBLE) / n.n_shingles, 6) AS contamination
+       |FROM corpus c JOIN bench USING (h) JOIN n ON n.doc_id = c.doc_id
+       |GROUP BY c.doc_id, n.n_shingles""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -34,24 +44,7 @@ object GovernanceQueries {
     // scanned once, exploded, and partially aggregated — never shuffled
     // on the shingle key, never self-joined.
     Q(
-      "q89_decontamination",
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN []
-        |    ELSE list_transform(range(1, len(t)-1), i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS x FROM sh WHERE len(s) > 0),
-        |pairs AS (SELECT DISTINCT doc_id,
-        |  CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT) % 2147483647 AS h FROM ex),
-        |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM pairs GROUP BY doc_id),
-        |bench AS (SELECT DISTINCT h FROM pairs WHERE doc_id % 97 = 0),
-        |corpus AS (SELECT * FROM pairs WHERE doc_id % 97 <> 0)
-        |SELECT c.doc_id, n.n_shingles, CAST(count(*) AS BIGINT) AS n_overlap,
-        |  round(CAST(count(*) AS DOUBLE) / n.n_shingles, 6) AS contamination
-        |FROM corpus c JOIN bench USING (h) JOIN n ON n.doc_id = c.doc_id
-        |GROUP BY c.doc_id, n.n_shingles""".stripMargin) {
+      "q89_decontamination", decontaminationOracleSql) {
       (spark, dir) =>
         val docs = Tables.documents(spark, dir)
         Dedup.contamination(
@@ -69,24 +62,7 @@ object GovernanceQueries {
     // the Bloom's false positives; a hash-match against q89's oracle is
     // the proof that the prefilter dropped nothing it shouldn't.
     Q(
-      "q101_bloom_decontamination",
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN []
-        |    ELSE list_transform(range(1, len(t)-1), i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS x FROM sh WHERE len(s) > 0),
-        |pairs AS (SELECT DISTINCT doc_id,
-        |  CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT) % 2147483647 AS h FROM ex),
-        |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM pairs GROUP BY doc_id),
-        |bench AS (SELECT DISTINCT h FROM pairs WHERE doc_id % 97 = 0),
-        |corpus AS (SELECT * FROM pairs WHERE doc_id % 97 <> 0)
-        |SELECT c.doc_id, n.n_shingles, CAST(count(*) AS BIGINT) AS n_overlap,
-        |  round(CAST(count(*) AS DOUBLE) / n.n_shingles, 6) AS contamination
-        |FROM corpus c JOIN bench USING (h) JOIN n ON n.doc_id = c.doc_id
-        |GROUP BY c.doc_id, n.n_shingles""".stripMargin) {
+      "q101_bloom_decontamination", decontaminationOracleSql) {
       (spark, dir) =>
         val docs = Tables.documents(spark, dir)
         Dedup.contaminationBloom(
@@ -228,9 +204,9 @@ object GovernanceQueries {
     // ONE aggregation pass produces the whole card.
     Q(
       "q96_data_card",
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT source, lang, n_chars, text,
-        |    len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS n_toks
+        |    len($toksSql) AS n_toks
         |  FROM documents)
         |SELECT source,
         |  CAST(count(*) AS BIGINT) AS n_docs,
@@ -283,24 +259,7 @@ object GovernanceQueries {
     // equals the batch result for ANY batching — the oracle is q89's,
     // verbatim. Stream side carries zero state; the sink accumulates.
     Q(
-      "q97_stream_decontamination",
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN []
-        |    ELSE list_transform(range(1, len(t)-1), i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS x FROM sh WHERE len(s) > 0),
-        |pairs AS (SELECT DISTINCT doc_id,
-        |  CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT) % 2147483647 AS h FROM ex),
-        |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles FROM pairs GROUP BY doc_id),
-        |bench AS (SELECT DISTINCT h FROM pairs WHERE doc_id % 97 = 0),
-        |corpus AS (SELECT * FROM pairs WHERE doc_id % 97 <> 0)
-        |SELECT c.doc_id, n.n_shingles, CAST(count(*) AS BIGINT) AS n_overlap,
-        |  round(CAST(count(*) AS DOUBLE) / n.n_shingles, 6) AS contamination
-        |FROM corpus c JOIN bench USING (h) JOIN n ON n.doc_id = c.doc_id
-        |GROUP BY c.doc_id, n.n_shingles""".stripMargin) {
+      "q97_stream_decontamination", decontaminationOracleSql) {
       (spark, dir) =>
         import org.apache.spark.sql.streaming.Trigger
         val docsSchema = Tables.documents(spark, dir).schema
@@ -357,10 +316,10 @@ object GovernanceQueries {
     Q(
       "q161_span_decontamination",
       s"""WITH toks AS (
-         |  SELECT doc_id, ${LlmQueries.toksSql} AS t FROM documents),
+         |  SELECT doc_id, $toksSql AS t FROM documents),
          |shp AS (
-         |  SELECT doc_id, i AS spos, concat_ws(' ', t[i], t[i+1], t[i+2]) AS s
-         |  FROM toks, unnest(CASE WHEN len(t) < 3 THEN [] ELSE range(1, len(t)-1) END) u(i)),
+         |  SELECT doc_id, i AS spos, $shingle3Sql AS s
+         |  FROM toks, unnest($shinglePosSql) u(i)),
          |bench AS (SELECT DISTINCT s FROM shp WHERE doc_id % 97 = 0),
          |covered AS (
          |  SELECT DISTINCT shp.doc_id, spos + o AS p
@@ -378,8 +337,8 @@ object GovernanceQueries {
          |  WHERE c.doc_id IS NULL GROUP BY 1)
          |SELECT d.doc_id,
          |  coalesce(k.clean_text, '') AS clean_text,
-         |  CAST(len(${LlmQueries.toksSql}) AS BIGINT) AS n_tokens,
-         |  CAST(len(${LlmQueries.toksSql}) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed
+         |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
+         |  CAST(len($toksSql) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed
          |FROM documents d LEFT JOIN kept k USING (doc_id)
          |WHERE d.doc_id % 97 <> 0""".stripMargin) { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
@@ -521,7 +480,7 @@ object GovernanceQueries {
         val lst = terms.map(t => s"'$t'").mkString(", ")
         s"""WITH g AS (SELECT unnest([$lst]) AS term),
            |tk AS (
-           |  SELECT doc_id, unnest(${LlmQueries.toksSql}) AS tok
+           |  SELECT doc_id, unnest($toksSql) AS tok
            |  FROM documents),
            |h AS (
            |  SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_hits,

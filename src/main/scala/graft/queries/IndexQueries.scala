@@ -23,10 +23,123 @@ import org.apache.spark.sql.types.DecimalType
   * tolerance verdict compares INTEGER hit counts.
   */
 object IndexQueries {
-  import CurationQueries.dot64Sql
+  import OracleSql._
+
+  /** Embedding component `embedding[i]` quantized to 5 dp as a scaled
+    * integer `uv` — the exactness contract of the q227 family. */
+  private val embUvSql =
+    """CAST(CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(9,5))
+      |      * 100000 AS HUGEINT) AS HUGEINT) AS uv""".stripMargin
+
+  /** One PQ subspace's codebook trained on the history rows (vec_id %
+    * 3 ≠ 0) over `vall`, and the encoding `enc<j>(vec_id, cluster)` of
+    * every vector against it (q236, q255). */
+  private def pqHistSubspaceSql(j: Int): String = {
+    val lo = j * PqSubDim + 1; val hi = (j + 1) * PqSubDim
+    s"""sv$j AS (SELECT vec_id, dvall[$lo:$hi] AS dv FROM vall),
+       |vn$j AS MATERIALIZED (
+       |  SELECT vec_id, dv, ${pqDotSql("dv", "dv")} AS vn2 FROM sv$j),
+       |hvn$j AS MATERIALIZED (
+       |  SELECT * FROM vn$j WHERE vec_id % 3 <> 0),
+       |c0_$j AS (
+       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
+       |    dv AS cv
+       |  FROM sv$j WHERE vec_id % 3 <> 0 ORDER BY vec_id LIMIT $PqKsub),
+       |${pqAssignSql(s"a1_$j", s"hvn$j", s"c0_$j")},
+       |${pqUpdateSql(s"s1_$j", s"a1_$j", s"hvn$j", s"c0_$j", s"c1_$j")},
+       |${pqAssignSql(s"a2_$j", s"hvn$j", s"c1_$j")},
+       |${pqUpdateSql(s"s2_$j", s"a2_$j", s"hvn$j", s"c1_$j", s"c2_$j")},
+       |${pqAssignSql(s"enc$j", s"vn$j", s"c2_$j")}""".stripMargin
+  }
+
+  /** The corpus centroid `cent(i, m)` of the embeddings matching
+    * `where` (6-dp means, half away in integer space) and its norm
+    * `cn(cn)` — the conformal gates' reference point (q225, q232). */
+  private def centroidCtes(where: String): String =
+    s"""cent AS MATERIALIZED (
+       |  SELECT i,
+       |    CAST(CAST(CASE WHEN s10 < 0
+       |          THEN -((2 * (-s10) + d) // (2 * d))
+       |          ELSE (2 * s10 + d) // (2 * d) END AS DECIMAL(12,0))
+       |      * CAST(0.000001 AS DECIMAL(7,6)) AS DECIMAL(12,6)) AS m
+       |  FROM (
+       |    SELECT i,
+       |      CAST(sum(CAST(CAST(CAST(embedding[i] AS DOUBLE)
+       |          AS DECIMAL(27,10))
+       |        * CAST(10000000000 AS DECIMAL(11,0)) AS HUGEINT))
+       |        AS HUGEINT) AS s10,
+       |      CAST(count(*) AS HUGEINT) * 10000 AS d
+       |    FROM embeddings, range(1, 65) t(i) $where GROUP BY i)),
+       |cn AS (SELECT sqrt(CAST(sum(CAST(m * m AS DECIMAL(27,12)))
+       |  AS DOUBLE)) AS cn FROM cent)""".stripMargin
+
+  /** The IVF index-lifecycle fixture (q242, q249, q254): codebook `cb`
+    * trained on the history (vec_id % 3 ≠ 0), the re-embedded corpus
+    * `upd`, and the index `log` — history codes, the new batch's and the
+    * re-embeds' upserts, then tombstones for vec_id % 7 = 1. */
+  private def ivfIndexLog(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (Seq[(Int, Seq[Double])], org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame) = {
+    val e = Tables.embeddings(spark, dir)
+    val hist = e.filter(col("vec_id") % 3 =!= 0)
+    val (_, cb) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
+      k = 4, iters = 2)
+    // corpus as the pipeline now sees it: re-embeds applied, deletes
+    // still PRESENT (the index, not the scan, must drop them)
+    val upd = e.withColumn("embedding",
+      when(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1,
+        reverse(col("embedding"))).otherwise(col("embedding")))
+    val log = IndexLog.initial(
+        Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")
+      .unionByName(IndexLog.upserts(
+        Similarity.ivfEncode(upd.filter(col("vec_id") % 3 === 0),
+          "vec_id", "embedding", cb), "vec_id", 1L))
+      .unionByName(IndexLog.upserts(
+        Similarity.ivfEncode(
+          upd.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1),
+          "vec_id", "embedding", cb), "vec_id", 2L))
+      .unionByName(IndexLog.tombstones(
+        e.filter(col("vec_id") % 7 === 1).select("vec_id"), "vec_id", 3L))
+    (cb, upd, log)
+  }
+
+  /** Quantized components `u(vec_id, i, uv)` and the exact per-dim-pair
+    * moments `p(i, j, n, sij, si, sj)` over i < j. */
+  private val pairMomentsCtes: String =
+    s"""u AS (
+       |  SELECT vec_id, i, $embUvSql
+       |  FROM embeddings, range(1, 65) t(i)),
+       |p AS MATERIALIZED (
+       |  SELECT a.i AS i, b.i AS j, CAST(count(*) AS HUGEINT) AS n,
+       |    CAST(sum(a.uv * b.uv) AS HUGEINT) AS sij,
+       |    CAST(sum(a.uv) AS HUGEINT) AS si,
+       |    CAST(sum(b.uv) AS HUGEINT) AS sj
+       |  FROM u a JOIN u b ON a.vec_id = b.vec_id AND b.i > a.i
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** q243's covariance grid oracle — also the oracle of its exact fold
+    * (q248): fold == one-shot to the bit. */
+  private val covarianceOracleSql: String =
+    s"""WITH $pairMomentsCtes,
+       |c AS MATERIALIZED (
+       |  SELECT i, j, n, n * sij - si * sj AS covn FROM p),
+       |t AS (SELECT CAST(sum(abs(covn)) AS HUGEINT) AS tc FROM c)
+       |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+       |  CAST(n AS BIGINT) AS n,
+       |  CAST(CASE WHEN covn >= 0
+       |    THEN (2 * covn * 1000000 + n * n * 10000000000)
+       |      // (2 * n * n * 10000000000)
+       |    ELSE -((2 * (-covn) * 1000000 + n * n * 10000000000)
+       |      // (2 * n * n * 10000000000)) END AS DOUBLE) / 1000000
+       |    AS cov,
+       |  CAST((2 * abs(covn) * 1000000 + tc) // (2 * tc) AS DOUBLE)
+       |    / 1000000 AS cov_share,
+       |  CAST(row_number() OVER (ORDER BY abs(covn) DESC, i, j)
+       |    AS BIGINT) AS cov_rank
+       |FROM c, t""".stripMargin
 
   /** Euclidean argmin assignment CTE (kmeans training) over a
-    * parameterized vector CTE — CurationQueries.kmeansAssignSql with
+    * parameterized vector CTE — kmeansAssignSql with
     * the `vn` name freed so two training chains can coexist. */
   private def kmAssignSql(vn: String, name: String, cents: String) =
     s"""$name AS (
@@ -134,15 +247,7 @@ object IndexQueries {
          |${cellSql("qar", "rvn", "ccr", " WHERE t.vec_id < 10", 2)},
          |${searchSql("ss", "aks", "qas", "cas")},
          |${searchSql("sr", "akr", "qar", "car")},
-         |es AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${dot64Sql("q.dv", "c.dv")} / (sqrt(q.vn2) * sqrt(c.vn2)) AS cos
-         |  FROM rvn q, rvn c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
-         |ek AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rn
-         |  FROM es) z WHERE rn <= 5)
+         |${exactTop5Ctes("rvn")}
          |SELECT e.query_id,
          |  CAST(count(*) AS BIGINT) AS n_exact,
          |  CAST(count(s.neighbor_id) AS BIGINT) AS hits_stale,
@@ -219,16 +324,8 @@ object IndexQueries {
     // denominator (both labelings trivial ⇒ identical) pins to 1.
     Q(
       "q224_clustering_agreement",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |rankedc AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |cpairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rankedc a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes("cpairs", "rankedc")},
          |epairs AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM banded a JOIN banded b USING (band, band_key)
@@ -345,22 +442,7 @@ object IndexQueries {
     // presented round(6) (q26/q144 recipe).
     Q(
       "q225_conformal_novelty",
-      s"""WITH cent AS MATERIALIZED (
-         |  SELECT i,
-         |    CAST(CAST(CASE WHEN s10 < 0
-         |          THEN -((2 * (-s10) + d) // (2 * d))
-         |          ELSE (2 * s10 + d) // (2 * d) END AS DECIMAL(12,0))
-         |      * CAST(0.000001 AS DECIMAL(7,6)) AS DECIMAL(12,6)) AS m
-         |  FROM (
-         |    SELECT i,
-         |      CAST(sum(CAST(CAST(CAST(embedding[i] AS DOUBLE)
-         |          AS DECIMAL(27,10))
-         |        * CAST(10000000000 AS DECIMAL(11,0)) AS HUGEINT))
-         |        AS HUGEINT) AS s10,
-         |      CAST(count(*) AS HUGEINT) * 10000 AS d
-         |    FROM embeddings, range(1, 65) t(i) GROUP BY i)),
-         |cn AS (SELECT sqrt(CAST(sum(CAST(m * m AS DECIMAL(27,12)))
-         |  AS DOUBLE)) AS cn FROM cent),
+      s"""WITH ${centroidCtes("")},
          |ex AS (
          |  SELECT vec_id, i,
          |    CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(14,10)) AS v
@@ -496,10 +578,8 @@ object IndexQueries {
     // vector ever collected.
     Q(
       "q227_embedding_variance",
-      """WITH u AS (
-        |  SELECT i,
-        |    CAST(CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(9,5))
-        |      * 100000 AS HUGEINT) AS HUGEINT) AS uv
+      s"""WITH u AS (
+        |  SELECT i, $embUvSql
         |  FROM embeddings, range(1, 65) t(i)),
         |m AS MATERIALIZED (
         |  SELECT i, CAST(count(*) AS HUGEINT) AS n,
@@ -764,9 +844,9 @@ object IndexQueries {
         val bandedSql = (0 until LlmQueries.bands).map(b =>
           s"SELECT doc_id, $b AS band, array_to_string(sig[${b * LlmQueries.r + 1}:${b * LlmQueries.r + LlmQueries.r}], ',') AS band_key FROM sigs")
           .mkString("\n  UNION ALL ")
-        s"""${LlmQueries.hvCte},
+        s"""$hvCte,
            |sigs AS (
-           |  SELECT doc_id, hv, ${LlmQueries.sigSql} AS sig FROM hvt),
+           |  SELECT doc_id, hv, $sigSql AS sig FROM hvt),
            |banded AS (
            |  $bandedSql),
            |rankedm AS (
@@ -965,23 +1045,7 @@ object IndexQueries {
     // test rows by vec_id, replayed by rank).
     Q(
       "q232_stream_conformal",
-      s"""WITH cent AS MATERIALIZED (
-         |  SELECT i,
-         |    CAST(CAST(CASE WHEN s10 < 0
-         |          THEN -((2 * (-s10) + d) // (2 * d))
-         |          ELSE (2 * s10 + d) // (2 * d) END AS DECIMAL(12,0))
-         |      * CAST(0.000001 AS DECIMAL(7,6)) AS DECIMAL(12,6)) AS m
-         |  FROM (
-         |    SELECT i,
-         |      CAST(sum(CAST(CAST(CAST(embedding[i] AS DOUBLE)
-         |          AS DECIMAL(27,10))
-         |        * CAST(10000000000 AS DECIMAL(11,0)) AS HUGEINT))
-         |        AS HUGEINT) AS s10,
-         |      CAST(count(*) AS HUGEINT) * 10000 AS d
-         |    FROM embeddings, range(1, 65) t(i)
-         |    WHERE vec_id % 5 <> 0 GROUP BY i)),
-         |cn AS (SELECT sqrt(CAST(sum(CAST(m * m AS DECIMAL(27,12)))
-         |  AS DOUBLE)) AS cn FROM cent),
+      s"""WITH ${centroidCtes("WHERE vec_id % 5 <> 0")},
          |ex AS (
          |  SELECT vec_id, i,
          |    CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(14,10)) AS v
@@ -1121,7 +1185,7 @@ object IndexQueries {
              |  SELECT term, rk FROM (
              |    SELECT term,
              |      row_number() OVER (ORDER BY count(*) DESC, term) AS rk
-             |    FROM (SELECT unnest(${LlmQueries.toksSql}) AS term
+             |    FROM (SELECT unnest($toksSql) AS term
              |      FROM documents WHERE $filt) GROUP BY term) x
              |  WHERE rk <= $D)""".stripMargin
         s"""WITH ${rankSql("r1", "doc_id % 10 <> 0")},
@@ -1324,30 +1388,12 @@ object IndexQueries {
     // by re-encoding the corpus).
     Q(
       "q236_incremental_pq_index", {
-        import CurationQueries.{pqAssignSql, pqDotSql, pqUpdateSql, PqKsub, PqSubDim}
-        def sub(j: Int) = {
-          val lo = j * PqSubDim + 1; val hi = (j + 1) * PqSubDim
-          s"""sv$j AS (SELECT vec_id, dvall[$lo:$hi] AS dv FROM vall),
-             |vn$j AS MATERIALIZED (
-             |  SELECT vec_id, dv, ${pqDotSql("dv", "dv")} AS vn2 FROM sv$j),
-             |hvn$j AS MATERIALIZED (
-             |  SELECT * FROM vn$j WHERE vec_id % 3 <> 0),
-             |c0_$j AS (
-             |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
-             |    dv AS cv
-             |  FROM sv$j WHERE vec_id % 3 <> 0 ORDER BY vec_id LIMIT $PqKsub),
-             |${pqAssignSql(s"a1_$j", s"hvn$j", s"c0_$j")},
-             |${pqUpdateSql(s"s1_$j", s"a1_$j", s"hvn$j", s"c0_$j", s"c1_$j")},
-             |${pqAssignSql(s"a2_$j", s"hvn$j", s"c1_$j")},
-             |${pqUpdateSql(s"s2_$j", s"a2_$j", s"hvn$j", s"c1_$j", s"c2_$j")},
-             |${pqAssignSql(s"enc$j", s"vn$j", s"c2_$j")}""".stripMargin
-        }
         s"""WITH vall AS (
            |  SELECT vec_id,
            |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dvall
            |  FROM embeddings),
-           |${sub(0)},
-           |${sub(1)}
+           |${pqHistSubspaceSql(0)},
+           |${pqHistSubspaceSql(1)}
            |SELECT e0.vec_id, CAST(e0.cluster AS BIGINT) AS code0,
            |  CAST(e1.cluster AS BIGINT) AS code1
            |FROM enc0 e0 JOIN enc1 e1 USING (vec_id)""".stripMargin
@@ -1387,11 +1433,8 @@ object IndexQueries {
     // the shingle join touches only candidate ids.
     Q(
       "q237_neardup_evidence",
-      s"""WITH ${LlmQueries.simhashCtes},
-         |rankedc AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
+      s"""WITH $simhashCtes,
+         |${rankedCte("rankedc")},
          |cpairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |    min(bit_count(xor(a.sim, b.sim))) AS hamming
@@ -1399,11 +1442,11 @@ object IndexQueries {
          |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
          |    AND bit_count(xor(a.sim, b.sim)) <= 3
          |  GROUP BY 1, 2),
-         |sh2 AS (SELECT doc_id, ${LlmQueries.shinglesSql} AS s FROM toks),
+         |sh2 AS (SELECT doc_id, $shinglesSql AS s FROM toks),
          |hvt AS (
          |  SELECT doc_id,
          |    list_sort(list_distinct(list_transform(s, x ->
-         |      ${LlmQueries.strHashSql("x")}))) AS hv
+         |      ${strHashSql("x")}))) AS hv
          |  FROM sh2),
          |ev AS (
          |  SELECT id_a, id_b, hamming,
@@ -1520,32 +1563,9 @@ object IndexQueries {
          |    CASE WHEN len(t) >= 30
          |      AND CAST(n_chars AS HUGEINT) <= 8 * len(t) THEN 1 ELSE 0 END
          |      AS gb
-         |  FROM (SELECT n_chars, ${LlmQueries.toksSql} AS t FROM documents)),
-         |c AS (
-         |  SELECT
-         |    CAST(sum(ga * gb) AS HUGEINT) AS a,
-         |    CAST(sum(ga * (1 - gb)) AS HUGEINT) AS b,
-         |    CAST(sum((1 - ga) * gb) AS HUGEINT) AS c,
-         |    CAST(sum((1 - ga) * (1 - gb)) AS HUGEINT) AS d,
-         |    CAST(count(*) AS HUGEINT) AS n
-         |  FROM g),
-         |k AS (
-         |  SELECT a, b, c, d, n,
-         |    (a + b) * (a + c) + (c + d) * (b + d) AS pe,
-         |    n * (a + d) AS po
-         |  FROM c)
-         |SELECT CAST(a AS BIGINT) AS n_both, CAST(b AS BIGINT) AS n_a_only,
-         |  CAST(c AS BIGINT) AS n_b_only, CAST(d AS BIGINT) AS n_neither,
-         |  CASE WHEN n = 0 THEN 1.0 ELSE
-         |    CAST((2 * (a + d) * 1000000 + n) // (2 * n) AS DOUBLE)
-         |      / 1000000 END AS observed_agreement,
-         |  CASE WHEN n * n - pe = 0 THEN 1.0 ELSE
-         |    CAST(CASE WHEN po - pe >= 0
-         |      THEN (2 * (po - pe) * 1000000 + (n * n - pe))
-         |        // (2 * (n * n - pe))
-         |      ELSE -((2 * (pe - po) * 1000000 + (n * n - pe))
-         |        // (2 * (n * n - pe))) END AS DOUBLE) / 1000000 END
-         |    AS kappa
+         |  FROM (SELECT n_chars, $toksSql AS t FROM documents)),
+         |$kappaCtes
+         |SELECT $kappaSql
          |FROM k""".stripMargin) { (spark, dir) =>
       import graft.ops.Text
       // kernel: ops/Stats.cohensKappa (degenerate gates pinned in StatsSpec)
@@ -1725,26 +1745,7 @@ object IndexQueries {
          |    row_number() OVER (PARTITION BY query_id
          |      ORDER BY cos DESC, neighbor_id) AS rn
          |  FROM sc) y WHERE rn <= 5""".stripMargin) { (spark, dir) =>
-      val e = Tables.embeddings(spark, dir)
-      val hist = e.filter(col("vec_id") % 3 =!= 0)
-      val (_, cb) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
-        k = 4, iters = 2)
-      // corpus as the pipeline now sees it: re-embeds applied, deletes
-      // still PRESENT (the index, not the scan, must drop them)
-      val upd = e.withColumn("embedding",
-        when(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1,
-          reverse(col("embedding"))).otherwise(col("embedding")))
-      val log = IndexLog.initial(
-          Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(upd.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", cb), "vec_id", 1L))
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(
-            upd.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1),
-            "vec_id", "embedding", cb), "vec_id", 2L))
-        .unionByName(IndexLog.tombstones(
-          e.filter(col("vec_id") % 7 === 1).select("vec_id"), "vec_id", 3L))
+      val (cb, upd, log) = ivfIndexLog(spark, dir)
       val codes = IndexLog.resolve(log, "vec_id")
       val queries = upd.filter(col("vec_id") < 10 && col("vec_id") % 7 =!= 1)
       Similarity.topKIvfEncoded(upd, codes, queries,
@@ -1766,35 +1767,7 @@ object IndexQueries {
     // key) and partially aggregated map-side into the 2016-key grid;
     // the DuckDB oracle takes the equivalent self-join route.
     Q(
-      "q243_embedding_covariance",
-      """WITH u AS (
-        |  SELECT vec_id, i,
-        |    CAST(CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(9,5))
-        |      * 100000 AS HUGEINT) AS HUGEINT) AS uv
-        |  FROM embeddings, range(1, 65) t(i)),
-        |p AS MATERIALIZED (
-        |  SELECT a.i AS i, b.i AS j, CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(a.uv * b.uv) AS HUGEINT) AS sij,
-        |    CAST(sum(a.uv) AS HUGEINT) AS si,
-        |    CAST(sum(b.uv) AS HUGEINT) AS sj
-        |  FROM u a JOIN u b ON a.vec_id = b.vec_id AND b.i > a.i
-        |  GROUP BY 1, 2),
-        |c AS MATERIALIZED (
-        |  SELECT i, j, n, n * sij - si * sj AS covn FROM p),
-        |t AS (SELECT CAST(sum(abs(covn)) AS HUGEINT) AS tc FROM c)
-        |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-        |  CAST(n AS BIGINT) AS n,
-        |  CAST(CASE WHEN covn >= 0
-        |    THEN (2 * covn * 1000000 + n * n * 10000000000)
-        |      // (2 * n * n * 10000000000)
-        |    ELSE -((2 * (-covn) * 1000000 + n * n * 10000000000)
-        |      // (2 * n * n * 10000000000)) END AS DOUBLE) / 1000000
-        |    AS cov,
-        |  CAST((2 * abs(covn) * 1000000 + tc) // (2 * tc) AS DOUBLE)
-        |    / 1000000 AS cov_share,
-        |  CAST(row_number() OVER (ORDER BY abs(covn) DESC, i, j)
-        |    AS BIGINT) AS cov_rank
-        |FROM c, t""".stripMargin) { (spark, dir) =>
+      "q243_embedding_covariance", covarianceOracleSql) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
       val spk = spark
       import spk.implicits._
@@ -1858,7 +1831,7 @@ object IndexQueries {
     // of the doc blocks, per-(query,doc) state is four doubles.
     Q(
       "q247_maxsim_retrieval", {
-        def dot16(a: String, b: String) = LlmQueries.foldSumSql(
+        def dot16(a: String, b: String) = foldSumSql(
           s"list_transform(range(1, 17), i -> $a[i]*$b[i])",
           "CAST(0 AS DOUBLE)")
         val pivots = (0 until 4).map(b =>
@@ -1931,35 +1904,7 @@ object IndexQueries {
     // BIT — the oracle is q243's one-shot SQL verbatim, so the folded
     // audit must reproduce the full 2 016-row grid row-for-row.
     Q(
-      "q248_stream_covariance_fold",
-      """WITH u AS (
-        |  SELECT vec_id, i,
-        |    CAST(CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(9,5))
-        |      * 100000 AS HUGEINT) AS HUGEINT) AS uv
-        |  FROM embeddings, range(1, 65) t(i)),
-        |p AS MATERIALIZED (
-        |  SELECT a.i AS i, b.i AS j, CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(a.uv * b.uv) AS HUGEINT) AS sij,
-        |    CAST(sum(a.uv) AS HUGEINT) AS si,
-        |    CAST(sum(b.uv) AS HUGEINT) AS sj
-        |  FROM u a JOIN u b ON a.vec_id = b.vec_id AND b.i > a.i
-        |  GROUP BY 1, 2),
-        |c AS MATERIALIZED (
-        |  SELECT i, j, n, n * sij - si * sj AS covn FROM p),
-        |t AS (SELECT CAST(sum(abs(covn)) AS HUGEINT) AS tc FROM c)
-        |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-        |  CAST(n AS BIGINT) AS n,
-        |  CAST(CASE WHEN covn >= 0
-        |    THEN (2 * covn * 1000000 + n * n * 10000000000)
-        |      // (2 * n * n * 10000000000)
-        |    ELSE -((2 * (-covn) * 1000000 + n * n * 10000000000)
-        |      // (2 * n * n * 10000000000)) END AS DOUBLE) / 1000000
-        |    AS cov,
-        |  CAST((2 * abs(covn) * 1000000 + tc) // (2 * tc) AS DOUBLE)
-        |    / 1000000 AS cov_share,
-        |  CAST(row_number() OVER (ORDER BY abs(covn) DESC, i, j)
-        |    AS BIGINT) AS cov_rank
-        |FROM c, t""".stripMargin) { (spark, dir) =>
+      "q248_stream_covariance_fold", covarianceOracleSql) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
       val spk = spark
       import spk.implicits._
@@ -2070,15 +2015,7 @@ object IndexQueries {
          |    row_number() OVER (PARTITION BY query_id
          |      ORDER BY cos DESC, neighbor_id) AS rn
          |  FROM sc) y WHERE rn <= 5),
-         |es AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${dot64Sql("q.dv", "c.dv")} / (sqrt(q.vn2) * sqrt(c.vn2)) AS cos
-         |  FROM lvn q, lvn c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
-         |ek AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rn
-         |  FROM es) z WHERE rn <= 5),
+         |${exactTop5Ctes("lvn")},
          |dd AS (SELECT CAST(count(CASE WHEN neighbor_id % 7 = 1 THEN 1 END)
          |  AS BIGINT) AS n_deleted_neighbors FROM tk)
          |SELECT e.query_id,
@@ -2093,24 +2030,7 @@ object IndexQueries {
          |    AND a.neighbor_id = e.neighbor_id, dd
          |GROUP BY e.query_id, dd.n_deleted_neighbors""".stripMargin) {
       (spark, dir) =>
-      val e = Tables.embeddings(spark, dir)
-      val hist = e.filter(col("vec_id") % 3 =!= 0)
-      val (_, cb) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
-        k = 4, iters = 2)
-      val upd = e.withColumn("embedding",
-        when(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1,
-          reverse(col("embedding"))).otherwise(col("embedding")))
-      val log = IndexLog.initial(
-          Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(upd.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", cb), "vec_id", 1L))
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(
-            upd.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1),
-            "vec_id", "embedding", cb), "vec_id", 2L))
-        .unionByName(IndexLog.tombstones(
-          e.filter(col("vec_id") % 7 === 1).select("vec_id"), "vec_id", 3L))
+      val (cb, upd, log) = ivfIndexLog(spark, dir)
       val codes = IndexLog.compact(log, "vec_id")
       val live = upd.filter(col("vec_id") % 7 =!= 1)
       val qs = live.filter(col("vec_id") < 10)
@@ -2172,25 +2092,8 @@ object IndexQueries {
          |  CAST((2 * 4 * n2 * 1000000 + nt * nt) // (2 * nt * nt)
          |    AS DOUBLE) / 1000000 AS imbalance_factor
          |FROM g, t""".stripMargin) { (spark, dir) =>
-      val e = Tables.embeddings(spark, dir)
       val I = DecimalType(38, 0)
-      val hist = e.filter(col("vec_id") % 3 =!= 0)
-      val (_, cb) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
-        k = 4, iters = 2)
-      val upd = e.withColumn("embedding",
-        when(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1,
-          reverse(col("embedding"))).otherwise(col("embedding")))
-      val log = IndexLog.initial(
-          Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(upd.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", cb), "vec_id", 1L))
-        .unionByName(IndexLog.upserts(
-          Similarity.ivfEncode(
-            upd.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1),
-            "vec_id", "embedding", cb), "vec_id", 2L))
-        .unionByName(IndexLog.tombstones(
-          e.filter(col("vec_id") % 7 === 1).select("vec_id"), "vec_id", 3L))
+      val (_, _, log) = ivfIndexLog(spark, dir)
       val g = IndexLog.resolve(log, "vec_id")
         .groupBy("cid").agg(count(lit(1)).cast(I).as("n"))
       val t = g.agg(sum("n").cast(I).as("nt"),
@@ -2217,23 +2120,8 @@ object IndexQueries {
     // divide. Codebooks broadcast; one scan + an 8-group aggregate.
     Q(
       "q255_pq_distortion", {
-        import CurationQueries.{pqAssignSql, pqDotSql, pqUpdateSql, PqKsub, PqSubDim}
-        def sub(j: Int) = {
-          val lo = j * PqSubDim + 1; val hi = (j + 1) * PqSubDim
-          s"""sv$j AS (SELECT vec_id, dvall[$lo:$hi] AS dv FROM vall),
-             |vn$j AS MATERIALIZED (
-             |  SELECT vec_id, dv, ${pqDotSql("dv", "dv")} AS vn2 FROM sv$j),
-             |hvn$j AS MATERIALIZED (
-             |  SELECT * FROM vn$j WHERE vec_id % 3 <> 0),
-             |c0_$j AS (
-             |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
-             |    dv AS cv
-             |  FROM sv$j WHERE vec_id % 3 <> 0 ORDER BY vec_id LIMIT $PqKsub),
-             |${pqAssignSql(s"a1_$j", s"hvn$j", s"c0_$j")},
-             |${pqUpdateSql(s"s1_$j", s"a1_$j", s"hvn$j", s"c0_$j", s"c1_$j")},
-             |${pqAssignSql(s"a2_$j", s"hvn$j", s"c1_$j")},
-             |${pqUpdateSql(s"s2_$j", s"a2_$j", s"hvn$j", s"c1_$j", s"c2_$j")},
-             |${pqAssignSql(s"enc$j", s"vn$j", s"c2_$j")},
+        def sub(j: Int) =
+          s"""${pqHistSubspaceSql(j)},
              |err$j AS (
              |  SELECT $j AS subspace, a.cluster AS code,
              |    CAST(round(t.vn2 + ${pqDotSql("c.cv", "c.cv")}
@@ -2241,7 +2129,6 @@ object IndexQueries {
              |      AS DECIMAL(18,9)) AS e
              |  FROM enc$j a JOIN vn$j t USING (vec_id)
              |    JOIN c2_$j c ON a.cluster = c.cluster)""".stripMargin
-        }
         s"""WITH vall AS (
            |  SELECT vec_id,
            |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dvall
@@ -2265,7 +2152,6 @@ object IndexQueries {
            |    / 1000000 AS sse_share
            |FROM g JOIN t ON g.subspace = t.subspace""".stripMargin
       }) { (spark, dir) =>
-      import CurationQueries.PqSubDim
       val spk = spark
       import spk.implicits._
       val e = Tables.embeddings(spark, dir)
@@ -2380,7 +2266,7 @@ object IndexQueries {
     // the planner costs one histogram however large the corpus.
     Q(
       "q257_cap_planner",
-      s"""WITH ${LlmQueries.simhashCtes},
+      s"""WITH $simhashCtes,
          |bk AS (
          |  SELECT band, band_key, CAST(count(*) AS HUGEINT) AS s
          |  FROM banded GROUP BY 1, 2),
@@ -2512,18 +2398,7 @@ object IndexQueries {
           s"list_reduce(list_prepend(0.0, list_transform(range(1, 65), " +
             s"j -> $r[j] * $v[j])), (a, x) -> a + x)"
         val b = new StringBuilder
-        b ++= s"""WITH u AS (
-           |  SELECT vec_id, i,
-           |    CAST(CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(9,5))
-           |      * 100000 AS HUGEINT) AS HUGEINT) AS uv
-           |  FROM embeddings, range(1, 65) t(i)),
-           |p AS MATERIALIZED (
-           |  SELECT a.i AS i, b.i AS j, CAST(count(*) AS HUGEINT) AS n,
-           |    CAST(sum(a.uv * b.uv) AS HUGEINT) AS sij,
-           |    CAST(sum(a.uv) AS HUGEINT) AS si,
-           |    CAST(sum(b.uv) AS HUGEINT) AS sj
-           |  FROM u a JOIN u b ON a.vec_id = b.vec_id AND b.i > a.i
-           |  GROUP BY 1, 2),
+        b ++= s"""WITH $pairMomentsCtes,
            |cd AS (
            |  SELECT i, j,
            |    CAST(CASE WHEN n * sij - si * sj >= 0

@@ -18,41 +18,24 @@ import org.apache.spark.sql.functions._
   * across engines.
   */
 object LinkageQueries {
+  import OracleSql._
 
-  /** q127 oracle — also the oracle for q133 (the STREAMED
-    * maintenance of the same drift table must land on identical
-    * values; sharing the string makes that exactness literal). */
-  private[queries] val driftSql: String =
-    """WITH v1 AS (SELECT lang, source, n_chars FROM documents WHERE doc_id % 10 <> 0),
-          |v2 AS (SELECT lang, source, n_chars FROM documents WHERE doc_id % 7 <> 0),
-          |a AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n_v1,
-          |        CAST(sum(n_chars) AS BIGINT) AS chars_v1
-          |      FROM v1 GROUP BY lang, source),
-          |b AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n_v2,
-          |        CAST(sum(n_chars) AS BIGINT) AS chars_v2
-          |      FROM v2 GROUP BY lang, source),
-          |t AS (SELECT (SELECT count(*) FROM v1) AS t1, (SELECT count(*) FROM v2) AS t2),
-          |j AS (SELECT coalesce(a.lang, b.lang) AS lang,
-          |        coalesce(a.source, b.source) AS source,
-          |        coalesce(n_v1, 0) AS n_v1, coalesce(n_v2, 0) AS n_v2,
-          |        coalesce(chars_v1, 0) AS chars_v1, coalesce(chars_v2, 0) AS chars_v2
-          |      FROM a FULL OUTER JOIN b ON a.lang = b.lang AND a.source = b.source)
-          |SELECT lang, source, n_v1, n_v2,
-          |  CAST(CASE WHEN n_v1 > 0 THEN
-          |    ((2 * chars_v1 * 1000000 + n_v1) // (2 * n_v1))
-          |      * CAST(0.000001 AS DECIMAL(7,6)) END AS DOUBLE) AS mean_chars_v1,
-          |  CAST(CASE WHEN n_v2 > 0 THEN
-          |    ((2 * chars_v2 * 1000000 + n_v2) // (2 * n_v2))
-          |      * CAST(0.000001 AS DECIMAL(7,6)) END AS DOUBLE) AS mean_chars_v2,
-          |  CAST(((2 * n_v1 * 1000000 + t1) // (2 * t1))
-          |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS share_v1,
-          |  CAST(((2 * n_v2 * 1000000 + t2) // (2 * t2))
-          |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS share_v2,
-          |  CAST(((2 * n_v2 * 1000000 + t2) // (2 * t2))
-          |    * CAST(0.000001 AS DECIMAL(7,6))
-          |  - ((2 * n_v1 * 1000000 + t1) // (2 * t1))
-          |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS share_drift
-          |FROM j CROSS JOIN t""".stripMargin
+  /** Strict event funnel: each user's first signup → view → click →
+    * purchase timestamps `t1` … `t4`, each after the previous step. */
+  private val funnelCtes: String =
+    """e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+      |           FROM events),
+      |t1 AS (SELECT user_id, min(ts) AS t1 FROM e
+      |       WHERE event_type = 'signup' GROUP BY user_id),
+      |t2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM e
+      |       JOIN t1 ON e.user_id = t1.user_id
+      |       WHERE e.event_type = 'view' AND e.ts > t1.t1 GROUP BY e.user_id),
+      |t3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM e
+      |       JOIN t2 ON e.user_id = t2.user_id
+      |       WHERE e.event_type = 'click' AND e.ts > t2.t2 GROUP BY e.user_id),
+      |t4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM e
+      |       JOIN t3 ON e.user_id = t3.user_id
+      |       WHERE e.event_type = 'purchase' AND e.ts > t3.t3 GROUP BY e.user_id)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -390,10 +373,10 @@ object LinkageQueries {
     // measurement, not a pretty number, is the contract.
     Q(
       "q130_random_projection", {
-        def dotSql(n: Int)(a: String, b: String) = LlmQueries.foldSumSql(
+        def dotSql(n: Int)(a: String, b: String) = foldSumSql(
           s"list_transform(range(1, ${n + 1}), i -> $a[i]*$b[i])",
           "CAST(0 AS DOUBLE)")
-        def projSql(j: Int) = LlmQueries.foldSumSql(
+        def projSql(j: Int) = foldSumSql(
           s"""list_transform(range(1, 65), i -> dv[i] *
              |      (CASE WHEN ((${1000 + j}*64 + (i-1)) * ${graft.ops.Text.Mult})
              |         % ${graft.ops.Text.P} % 2 = 0
@@ -521,7 +504,7 @@ object LinkageQueries {
       "q131_collocations",
       s"""WITH toks AS (
          |  SELECT doc_id,
-         |    list_sort(list_distinct(list_filter(${LlmQueries.toksSql},
+         |    list_sort(list_distinct(list_filter($toksSql,
          |      t -> length(t) >= 4)))[1:15] AS lst
          |  FROM documents),
          |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
@@ -724,19 +707,7 @@ object LinkageQueries {
     // the oracle boundary via the q32 CAST-to-micros idiom.
     Q(
       "q136_event_funnel",
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events),
-        |t1 AS (SELECT user_id, min(ts) AS t1 FROM e
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |t2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM e
-        |       JOIN t1 ON e.user_id = t1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > t1.t1 GROUP BY e.user_id),
-        |t3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM e
-        |       JOIN t2 ON e.user_id = t2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > t2.t2 GROUP BY e.user_id),
-        |t4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM e
-        |       JOIN t3 ON e.user_id = t3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > t3.t3 GROUP BY e.user_id)
+      s"""WITH $funnelCtes
         |SELECT u.user_id, t1.t1, t2.t2, t3.t3, t4.t4,
         |  CAST(CASE WHEN t4.user_id IS NOT NULL THEN 4
         |            WHEN t3.user_id IS NOT NULL THEN 3
@@ -821,19 +792,7 @@ object LinkageQueries {
     // with pure integer ceil arithmetic. 9 rows out, all BIGINT.
     Q(
       "q138_time_to_convert",
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events),
-        |t1 AS (SELECT user_id, min(ts) AS t1 FROM e
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |t2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM e
-        |       JOIN t1 ON e.user_id = t1.user_id
-        |       WHERE e.event_type = 'view' AND e.ts > t1.t1 GROUP BY e.user_id),
-        |t3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM e
-        |       JOIN t2 ON e.user_id = t2.user_id
-        |       WHERE e.event_type = 'click' AND e.ts > t2.t2 GROUP BY e.user_id),
-        |t4 AS (SELECT e.user_id, min(e.ts) AS t4 FROM e
-        |       JOIN t3 ON e.user_id = t3.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts > t3.t3 GROUP BY e.user_id),
+      s"""WITH $funnelCtes,
         |conv AS (SELECT t1.user_id,
         |    epoch_us(t4.t4) - epoch_us(t1.t1) AS delta_us
         |  FROM t1 JOIN t4 ON t1.user_id = t4.user_id),

@@ -18,26 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object LlmQueries {
   import Text.{Mult, P}
-
-  // ---- shared oracle fragments (DuckDB dialect) -------------------------
-
-  /** tokens CTE body: lowercase alnum tokens of `text`. */
-  private[queries] val toksSql =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
-  /** distinct 3-gram shingles over token list `t`. */
-  private[queries] val shinglesSql =
-    """list_distinct(CASE WHEN len(t) < 3 THEN []
-      |    ELSE list_transform(range(1, len(t)-1),
-      |           i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END)""".stripMargin
-
-  /** md5-prefix 32-bit string hash of `x`, reduced mod P. */
-  private[queries] def strHashSql(x: String) =
-    s"CAST(concat('0x', substr(md5($x),1,8)) AS BIGINT) % $P"
-
-  /** Sequential left fold: sum of `elems` starting at `init`. */
-  private[queries] def foldSumSql(elems: String, init: String, step: String = "a + x") =
-    s"list_reduce(list_prepend($init, $elems), (a, x) -> $step)"
+  import OracleSql._
 
   /** Content-defined chunk table CTE chain (q178/q191): per-position
     * window hashes as the DEFINING per-window fold (the compiled
@@ -74,53 +55,6 @@ object LlmQueries {
   private[queries] val k = 12
   private[queries] val bands = 4
   private[queries] val r = 3
-
-  /** SimHash CTE chain (toks → th → sims → banded) shared by q28 and the
-    * q49 component clustering oracle — generated from the same constants
-    * as Dedup.simhashPairs. */
-  private[queries] val simhashCtes: String = {
-    val simSql = (0 until Dedup.SimHashBits).map { j =>
-      val pow = 1L << j
-      val bitSum = foldSumSql(
-        s"list_transform(th, x -> ((x // $pow) % 2) * 2 - 1)",
-        "CAST(0 AS BIGINT)")
-      s"(CASE WHEN $bitSum > 0 THEN $pow ELSE 0 END)"
-    }.mkString("\n     + ")
-    val bitsPerBand = Dedup.SimHashBits / 4
-    val bandedSql = (0 until 4).map(b =>
-      s"SELECT doc_id, sim, $b AS band, (sim // ${1L << (b * bitsPerBand)}) % ${1 << bitsPerBand} AS band_key FROM sims")
-      .mkString("\n  UNION ALL ")
-    s"""toks AS (
-       |  SELECT doc_id, $toksSql AS t FROM documents),
-       |th AS (
-       |  SELECT doc_id,
-       |    list_transform(t, x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-       |  FROM toks WHERE len(t) > 0),
-       |sims AS (
-       |  SELECT doc_id, $simSql AS sim FROM th),
-       |banded AS (
-       |  $bandedSql)""".stripMargin
-  }
-
-  /** The k MinHash signature expressions over hash-set column `hv`. */
-  private[queries] val sigSql = (1 to k).map(i =>
-    s"list_min(list_transform(hv, x -> (${Dedup.minhashA(i)}*x + ${Dedup.minhashB(i)}) % $P))")
-    .mkString("[", ",\n    ", "]")
-
-  /** Shared CTE prefix: documents → tokens → shingles → hash sets. */
-  private[queries] val hvCte =
-    s"""WITH toks AS (
-       |  SELECT doc_id, source, $toksSql AS t FROM documents),
-       |sh AS (
-       |  SELECT doc_id, source, $shinglesSql AS s FROM toks),
-       |hvt AS (
-       |  SELECT doc_id, source,
-       |    list_sort(list_distinct(list_transform(s, x -> ${strHashSql("x")}))) AS hv
-       |  FROM sh WHERE len(s) > 0)""".stripMargin
-
-  private[queries] val jaccardSql =
-    """CAST(len(list_intersect(ha.hv, hb.hv)) AS DOUBLE)
-      |      / (len(ha.hv) + len(hb.hv) - len(list_intersect(ha.hv, hb.hv)))""".stripMargin
 
   // ---- queries ---------------------------------------------------------
 
@@ -560,11 +494,7 @@ object LlmQueries {
          |  SELECT doc_id, text, $toksSql AS t FROM documents),
          |sig AS (
          |  SELECT doc_id,
-         |    CAST(len(t) AS BIGINT) AS n,
-         |    ${foldSumSql("list_transform(t, w -> CAST(length(w) AS BIGINT))", "CAST(0 AS BIGINT)")} AS sum_len,
-         |    CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT) AS symbols,
-         |    CAST(len(list_filter(t, w -> w IN (${Text.StopWords.head._2.map(w => s"'$w'").mkString(",")}))) AS BIGINT) AS stop_hits
+         |    $gopherFeaturesSql
          |  FROM base)
          |SELECT doc_id,
          |  n AS n_words,
@@ -700,25 +630,20 @@ object LlmQueries {
     // bounded pair stream + two id-keyed joins + a 4-row rollup.
     Q(
       "q204_simhash_precision", {
-        s"""WITH ${simhashCtes},
-           |ranked AS (
-           |  SELECT doc_id, sim, band, band_key,
-           |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-           |  FROM banded),
+        s"""WITH $simhashCtes,
+           |${rankedCte()},
            |cpairs AS (
            |  SELECT id_a, id_b, min(h) AS ham FROM (
            |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            |      bit_count(xor(a.sim, b.sim)) AS h
            |    FROM ranked a JOIN banded b USING (band, band_key)
-           |    WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
+           |    WHERE a.rk <= ${Dedup.DefaultDegreeCap}
            |      AND a.doc_id < b.doc_id
            |      AND bit_count(xor(a.sim, b.sim)) <= 3) x
            |  GROUP BY 1, 2),
            |toks2 AS (SELECT doc_id, $toksSql AS t FROM documents),
            |shs AS (
-           |  SELECT doc_id, unnest(CASE WHEN len(t) < 3 THEN []
-           |    ELSE list_transform(range(1, len(t)-1),
-           |           i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END) AS s
+           |  SELECT doc_id, unnest($shingleListSql) AS s
            |  FROM toks2),
            |sh AS (SELECT DISTINCT doc_id, ${strHashSql("s")} AS hh FROM shs),
            |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
@@ -825,7 +750,7 @@ object LlmQueries {
            |  CAST(bit_count(xor(a.hi, b2.hi))
            |    + bit_count(xor(a.lo, b2.lo)) AS BIGINT) AS hamming
            |FROM rb a JOIN b b2 USING (band, band_val)
-           |WHERE a.rk <= ${graft.ops.Dedup.DefaultDegreeCap}
+           |WHERE a.rk <= ${Dedup.DefaultDegreeCap}
            |  AND a.doc_id < b2.doc_id
            |  AND bit_count(xor(a.hi, b2.hi)) + bit_count(xor(a.lo, b2.lo)) <= 6""".stripMargin
       }) { (spark, dir) =>

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
   * plays the employee CDC fact ('F' status = departed employee).
   */
 object PipelineQueries {
+  import OracleSql._
 
   val all: Seq[Q] = Seq(
 
@@ -226,7 +227,7 @@ object PipelineQueries {
       "q187_rendezvous_shards",
       s"""WITH a AS (
          |  SELECT doc_id, s,
-         |    ${LlmQueries.strHashSql("doc_id || ':' || s")} AS h
+         |    ${strHashSql("doc_id || ':' || s")} AS h
          |  FROM documents, unnest(range(0, 9)) u(s)),
          |r8 AS (SELECT doc_id, s AS shard8 FROM (
          |    SELECT doc_id, s,

@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
   * length.
   */
 object RetrievalQueries {
-
-  private val toksSql = LlmQueries.toksSql
+  import OracleSql._
 
   /** Shared workload derivation (DuckDB): top `k` word n-grams of the
     * corpus by occurrence count, ties broken by the n-gram string — the
@@ -54,6 +53,32 @@ object RetrievalQueries {
        |  SELECT q, i AS slot, string_split(q, ' ')[i] AS term
        |  FROM rq_top, unnest(range(1, ${n + 1})) u(i))""".stripMargin
   }
+
+  /** q281's top-3-docs-per-trigram phrase search oracle — also the
+    * oracle of its streamed index fold (q286): fold == one-shot. */
+  private def phraseSearchOracleSql: String =
+    s"""WITH ${topNgramSql(n = 3, k = 10)},
+       |post AS (
+       |  SELECT doc_id, i AS pos1, t[i] AS term
+       |  FROM rq_tokl, unnest(range(1, len(t) + 1)) u(i)),
+       |hits AS (
+       |  SELECT p.q, post.doc_id, post.pos1 - p.slot AS anchor
+       |  FROM post JOIN rq_terms p USING (term)
+       |  GROUP BY 1, 2, 3
+       |  HAVING count(DISTINCT p.slot) = 3),
+       |pd AS (
+       |  SELECT q, doc_id, CAST(count(*) AS BIGINT) AS n_hits
+       |  FROM hits GROUP BY 1, 2),
+       |nd AS (
+       |  SELECT q, CAST(count(*) AS BIGINT) AS n_docs FROM pd GROUP BY 1)
+       |SELECT q AS phrase, doc_id, CAST(rk AS INT) AS rank, n_hits, n_docs
+       |FROM (
+       |  SELECT q, doc_id, n_hits,
+       |    row_number() OVER (PARTITION BY q
+       |      ORDER BY n_hits DESC, doc_id) AS rk
+       |  FROM pd) r
+       |JOIN nd USING (q)
+       |WHERE rk <= 3""".stripMargin
 
   /** Per-corpus n-gram occurrence counts: (q, cnt) — the aggregate the
     * workload derivation (batch) and the count fold (streaming) share.
@@ -135,29 +160,7 @@ object RetrievalQueries {
     // per phrase by hit count (ties → doc_id), with the phrase's
     // total matched-doc count.
     Q(
-      "q281_phrase_search",
-      s"""WITH ${topNgramSql(n = 3, k = 10)},
-         |post AS (
-         |  SELECT doc_id, i AS pos1, t[i] AS term
-         |  FROM rq_tokl, unnest(range(1, len(t) + 1)) u(i)),
-         |hits AS (
-         |  SELECT p.q, post.doc_id, post.pos1 - p.slot AS anchor
-         |  FROM post JOIN rq_terms p USING (term)
-         |  GROUP BY 1, 2, 3
-         |  HAVING count(DISTINCT p.slot) = 3),
-         |pd AS (
-         |  SELECT q, doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM hits GROUP BY 1, 2),
-         |nd AS (
-         |  SELECT q, CAST(count(*) AS BIGINT) AS n_docs FROM pd GROUP BY 1)
-         |SELECT q AS phrase, doc_id, CAST(rk AS INT) AS rank, n_hits, n_docs
-         |FROM (
-         |  SELECT q, doc_id, n_hits,
-         |    row_number() OVER (PARTITION BY q
-         |      ORDER BY n_hits DESC, doc_id) AS rk
-         |  FROM pd) r
-         |JOIN nd USING (q)
-         |WHERE rk <= 3""".stripMargin) { (spark, dir) =>
+      "q281_phrase_search", phraseSearchOracleSql) { (spark, dir) =>
       val tokDf = Tables.documents(spark, dir)
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       // Deliberately NOT sharing one cached postings frame here (the
@@ -188,22 +191,10 @@ object RetrievalQueries {
       s"""WITH ${topNgramSql(n = 2, k = 10)},
          |toks AS (
          |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dl AS (
-         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfx AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |stats AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
+         |$bm25StatsCtes,
          |scored AS (
          |  SELECT qt.q, tf.doc_id,
-         |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-         |      * (tf * 2.2)
-         |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-         |          / (CAST(sum_dl AS DOUBLE) / n_docs)))) AS s
+         |    $bm25Sql AS s
          |  FROM rq_terms qt
          |  JOIN tf USING (term) JOIN dfx USING (term) JOIN dl USING (doc_id),
          |  stats),
@@ -353,29 +344,7 @@ object RetrievalQueries {
     // the oracle is q281's one-shot SQL VERBATIM, pinning
     // fold(b₁) ⊕ fold(b₂) == one-shot row-for-row.
     Q(
-      "q286_stream_phrase_index",
-      s"""WITH ${topNgramSql(n = 3, k = 10)},
-         |post AS (
-         |  SELECT doc_id, i AS pos1, t[i] AS term
-         |  FROM rq_tokl, unnest(range(1, len(t) + 1)) u(i)),
-         |hits AS (
-         |  SELECT p.q, post.doc_id, post.pos1 - p.slot AS anchor
-         |  FROM post JOIN rq_terms p USING (term)
-         |  GROUP BY 1, 2, 3
-         |  HAVING count(DISTINCT p.slot) = 3),
-         |pd AS (
-         |  SELECT q, doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM hits GROUP BY 1, 2),
-         |nd AS (
-         |  SELECT q, CAST(count(*) AS BIGINT) AS n_docs FROM pd GROUP BY 1)
-         |SELECT q AS phrase, doc_id, CAST(rk AS INT) AS rank, n_hits, n_docs
-         |FROM (
-         |  SELECT q, doc_id, n_hits,
-         |    row_number() OVER (PARTITION BY q
-         |      ORDER BY n_hits DESC, doc_id) AS rk
-         |  FROM pd) r
-         |JOIN nd USING (q)
-         |WHERE rk <= 3""".stripMargin) { (spark, dir) =>
+      "q286_stream_phrase_index", phraseSearchOracleSql) { (spark, dir) =>
       import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q286").toString
       val postPath = s"$root/postings"
@@ -427,22 +396,10 @@ object RetrievalQueries {
       s"""WITH toks AS (
          |  SELECT doc_id, unnest($toksSql) AS term FROM documents
          |  WHERE doc_id % 11 <> 0),
-         |tf AS (
-         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dl AS (
-         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfx AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |stats AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
+         |$bm25StatsCtes,
          |scored AS (
          |  SELECT tf.doc_id, tf.term,
-         |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-         |      * (tf * 2.2)
-         |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-         |          / (CAST(sum_dl AS DOUBLE) / n_docs)))) AS bm25
+         |    $bm25Sql AS bm25
          |  FROM tf JOIN dfx USING (term) JOIN dl USING (doc_id), stats),
          |ranked AS (
          |  SELECT doc_id, term, bm25,

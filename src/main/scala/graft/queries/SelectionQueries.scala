@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.DecimalType
   * q65 absorb-or-present-rounded recipe.
   */
 object SelectionQueries {
-  import CurationQueries.{dot64Sql, kmeansAssignSql, kmeansCtes}
+  import OracleSql._
 
   /** SemDeDup keep/drop threshold, tuned to the fixture's cosine range
     * (same-cluster p99 ≈ 0.3 — the fixture's embeddings are not
@@ -40,49 +40,53 @@ object SelectionQueries {
     * for the curated high-quality corpus DSIR reweights toward. */
   private val DsirTarget = Seq("src0", "src1")
 
+  /** `DsirTarget` as an SQL IN-list. */
+  private val dsirTgtSql = DsirTarget.map(s => s"'$s'").mkString(", ")
+
+  /** DSIR bucket weights `w(b, w9)` over hashed tokens `tb` (the q145
+    * recipe): ln of the Laplace-smoothed target/raw bucket frequency
+    * ratio at scale 9. */
+  private val dsirWeightCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, source, $toksSql AS t FROM documents),
+       |${tokenBucketCtes(DsirBuckets)},
+       |rc AS (SELECT b, CAST(count(*) AS BIGINT) AS rcnt FROM tb GROUP BY b),
+       |tc AS (SELECT b, CAST(count(*) AS BIGINT) AS tcnt
+       |       FROM tb WHERE source IN ($dsirTgtSql) GROUP BY b),
+       |tot AS (SELECT CAST(count(*) AS BIGINT) AS rtot,
+       |    CAST(count(*) FILTER (WHERE source IN ($dsirTgtSql)) AS BIGINT) AS ttot
+       |  FROM tb),
+       |w AS (SELECT rc.b,
+       |    CAST(round(ln(
+       |      ((coalesce(tc.tcnt, 0) + 1.0) * (tot.rtot + $DsirBuckets)) /
+       |      ((rc.rcnt + 1.0) * (tot.ttot + $DsirBuckets))), 9)
+       |      AS DECIMAL(13,9)) AS w9
+       |  FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot)""".stripMargin
+
+  /** q296's DSIR Gumbel-top-50 selection oracle — also the oracle of its
+    * incremental maintenance (q301): fold == rebuild. */
+  private val dsirSelectionSql: String =
+    s"""WITH $dsirWeightCtes,
+       |d AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS n
+       |      FROM tb WHERE source NOT IN ($dsirTgtSql) GROUP BY 1, 2, 3),
+       |lw AS (SELECT d.doc_id, d.source,
+       |    CAST(sum(d.n) AS BIGINT) AS n_tokens,
+       |    sum(CAST(d.n AS DECIMAL(10,0)) * w.w9) AS lw
+       |  FROM d JOIN w USING (b) GROUP BY 1, 2),
+       |keyed AS (SELECT doc_id, source, n_tokens, lw,
+       |    CAST(round(-ln(-ln(
+       |      CAST((doc_id * ${Text.Mult}) % ${Text.P} + 1 AS DOUBLE)
+       |        / 2147483648.0)), 9) AS DECIMAL(13,9)) AS g
+       |  FROM lw)
+       |SELECT doc_id, source, n_tokens,
+       |  CAST(lw AS DOUBLE) AS log_weight,
+       |  CAST(lw + g AS DOUBLE) AS gumbel_key
+       |FROM keyed ORDER BY lw + g DESC, doc_id LIMIT 50""".stripMargin
+
   /** q148 epoch token budget. Large enough that every source's exact
     * quota clears 10^4 (remainder ranking meaningful), small enough
     * that B·Σtokens stays far inside BIGINT at any fixture scale. */
   private val ApportionBudget = 1000000L
-
-  /** The q299 packing oracle — shared verbatim by q307's streamed twin
-    * (fold == rebuild is that query's contract). Packed/truncated token
-    * totals are ORDER-FREE plain sums; only (bins, remainder) is the
-    * sequential fold, packed into ONE BIGINT (nb·1024 + rem, rem <
-    * 1024 > L) — a scalar list_reduce (the q178 fold idiom; DuckDB
-    * 1.0.0's list_reduce mis-computes multi-field STRUCT accumulators
-    * through CASE branches — found while building this oracle, worked
-    * around by design). */
-  private[queries] val packingOracleSql: String =
-    s"""WITH t AS (
-       |  SELECT source, doc_id, CAST(len(${LlmQueries.toksSql}) AS BIGINT)
-       |    AS ntok
-       |  FROM documents),
-       |o AS (
-       |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(ntok) AS BIGINT) AS n_tokens,
-       |    CAST(sum(least(ntok, 512)) AS BIGINT) AS pk,
-       |    CAST(sum(greatest(ntok - 512, 0)) AS BIGINT) AS tr,
-       |    list(ntok ORDER BY doc_id) AS ls
-       |  FROM t GROUP BY 1),
-       |f AS (
-       |  SELECT source, n_docs, n_tokens, pk, tr,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(ls, x -> CAST(least(x, 512) AS BIGINT))),
-       |      (a, x) -> CASE WHEN x <= a % 1024 THEN a - x
-       |        ELSE ((a // 1024) + 1) * 1024 + 512 - x END) // 1024
-       |      AS nb
-       |  FROM o)
-       |SELECT source, n_docs, n_tokens, nb AS n_bins,
-       |  CAST(CASE WHEN nb = 0 THEN 0 ELSE
-       |      ((2 * CAST(pk AS HUGEINT) * 1000000 + nb * 512)
-       |        // (2 * CAST(nb * 512 AS HUGEINT))) END AS DOUBLE)
-       |    / 1000000 AS fill_rate,
-       |  CAST(CASE WHEN n_tokens = 0 THEN 0 ELSE
-       |      ((2 * CAST(tr AS HUGEINT) * 1000000 + n_tokens)
-       |        // (2 * CAST(n_tokens AS HUGEINT))) END AS DOUBLE)
-       |    / 1000000 AS trunc_rate
-       |FROM f""".stripMargin
 
   /** q150 per-(lang, source)-cell guaranteed minimum and the global
     * fill budget drawn from the post-floor remainder. */
@@ -219,29 +223,7 @@ object SelectionQueries {
     // sum is exact DECIMAL, presented as DOUBLE (unique under 2^53).
     Q(
       "q145_importance_weights", {
-        val tgt = DsirTarget.map(s => s"'$s'").mkString(", ")
-        s"""WITH toks AS (
-           |  SELECT doc_id, source, ${LlmQueries.toksSql} AS t FROM documents),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $DsirBuckets AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |rc AS (SELECT b, CAST(count(*) AS BIGINT) AS rcnt FROM tb GROUP BY b),
-           |tc AS (SELECT b, CAST(count(*) AS BIGINT) AS tcnt
-           |       FROM tb WHERE source IN ($tgt) GROUP BY b),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS rtot,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT) AS ttot
-           |  FROM tb),
-           |w AS (SELECT rc.b,
-           |    CAST(round(ln(
-           |      ((coalesce(tc.tcnt, 0) + 1.0) * (tot.rtot + $DsirBuckets)) /
-           |      ((rc.rcnt + 1.0) * (tot.ttot + $DsirBuckets))), 9)
-           |      AS DECIMAL(13,9)) AS w9
-           |  FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot),
+        s"""WITH $dsirWeightCtes,
            |d AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS n
            |      FROM tb GROUP BY doc_id, b)
            |SELECT d.doc_id, CAST(sum(d.n) AS BIGINT) AS n_tokens,
@@ -354,24 +336,9 @@ object SelectionQueries {
     // over the capped pairs.
     Q(
       "q147_cluster_balanced_weights",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-         |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${componentCtes("pairs")},
          |lab AS (
          |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
          |  FROM documents d LEFT JOIN cmp c ON c.id = d.doc_id),
@@ -472,13 +439,11 @@ object SelectionQueries {
     Q(
       "q149_containment_join",
       s"""WITH toks AS (
-         |  SELECT doc_id, ${LlmQueries.toksSql} AS t FROM documents),
+         |  SELECT doc_id, $toksSql AS t FROM documents),
          |shs AS (
-         |  SELECT doc_id, unnest(CASE WHEN len(t) < 3 THEN []
-         |    ELSE list_transform(range(1, len(t)-1),
-         |           i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END) AS s
+         |  SELECT doc_id, unnest($shingleListSql) AS s
          |  FROM toks),
-         |sh AS (SELECT DISTINCT doc_id, ${LlmQueries.strHashSql("s")} AS h
+         |sh AS (SELECT DISTINCT doc_id, ${strHashSql("s")} AS h
          |       FROM shs),
          |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
          |px AS (
@@ -570,24 +535,9 @@ object SelectionQueries {
     // and that no consumed (capped) pair crosses splits.
     Q(
       "q152_leakage_safe_split",
-      s"""WITH RECURSIVE ${LlmQueries.simhashCtes},
-         |ranked AS (
-         |  SELECT doc_id, sim, band, band_key,
-         |    row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) AS rk
-         |  FROM banded),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ranked a JOIN banded b USING (band, band_key)
-         |  WHERE a.rk <= ${Dedup.DefaultDegreeCap} AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.sim, b.sim)) <= 3),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS comp FROM edges
-         |  UNION
-         |  SELECT e.src AS id, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-         |cmp AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $simhashCtes,
+         |${simhashPairsCtes()},
+         |${componentCtes("pairs")},
          |labeled AS (
          |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
          |  FROM documents d LEFT JOIN cmp c ON c.id = d.doc_id)
@@ -643,7 +593,7 @@ object SelectionQueries {
            |                / (n_rows - 1)) END AS wt
            |  FROM s),
            |tot AS (
-           |  SELECT ${LlmQueries.foldSumSql("list(wt ORDER BY source)", "CAST(0 AS DOUBLE)")}
+           |  SELECT ${foldSumSql("list(wt ORDER BY source)", "CAST(0 AS DOUBLE)")}
            |      AS w_total,
            |    CAST(sum(n_rows) AS BIGINT) AS total_rows
            |  FROM w),
@@ -698,7 +648,7 @@ object SelectionQueries {
       "q188_source_kl_divergence", {
         val B = DsirBuckets
         s"""WITH toks AS (
-           |  SELECT doc_id, source, ${LlmQueries.toksSql} AS t FROM documents),
+           |  SELECT doc_id, source, $toksSql AS t FROM documents),
            |tb AS (
            |  SELECT source,
            |    CAST(concat('0x', substr(md5(u.x),1,8)) AS BIGINT) % $B AS b
@@ -784,47 +734,9 @@ object SelectionQueries {
     // aggregates + a scan-level Gumbel projection — linear, no corpus-
     // axis joins, selection state is k rows.
     Q(
-      "q296_dsir_selection", {
-        val tgt = DsirTarget.map(s => s"'$s'").mkString(", ")
-        val B = DsirBuckets
-        s"""WITH toks AS (
-           |  SELECT doc_id, source, ${LlmQueries.toksSql} AS t FROM documents),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $B AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |rc AS (SELECT b, CAST(count(*) AS BIGINT) AS rcnt FROM tb GROUP BY b),
-           |tc AS (SELECT b, CAST(count(*) AS BIGINT) AS tcnt
-           |       FROM tb WHERE source IN ($tgt) GROUP BY b),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS rtot,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT) AS ttot
-           |  FROM tb),
-           |w AS (SELECT rc.b,
-           |    CAST(round(ln(
-           |      ((coalesce(tc.tcnt, 0) + 1.0) * (tot.rtot + $B)) /
-           |      ((rc.rcnt + 1.0) * (tot.ttot + $B))), 9)
-           |      AS DECIMAL(13,9)) AS w9
-           |  FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot),
-           |d AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS n
-           |      FROM tb WHERE source NOT IN ($tgt) GROUP BY 1, 2, 3),
-           |lw AS (SELECT d.doc_id, d.source,
-           |    CAST(sum(d.n) AS BIGINT) AS n_tokens,
-           |    sum(CAST(d.n AS DECIMAL(10,0)) * w.w9) AS lw
-           |  FROM d JOIN w USING (b) GROUP BY 1, 2),
-           |keyed AS (SELECT doc_id, source, n_tokens, lw,
-           |    CAST(round(-ln(-ln(
-           |      CAST((doc_id * ${Text.Mult}) % ${Text.P} + 1 AS DOUBLE)
-           |        / 2147483648.0)), 9) AS DECIMAL(13,9)) AS g
-           |  FROM lw)
-           |SELECT doc_id, source, n_tokens,
-           |  CAST(lw AS DOUBLE) AS log_weight,
-           |  CAST(lw + g AS DOUBLE) AS gumbel_key
-           |FROM keyed ORDER BY lw + g DESC, doc_id LIMIT 50""".stripMargin
-      }) { (spark, dir) => dsirTop50(spark, dir) },
+      "q296_dsir_selection", dsirSelectionSql) { (spark, dir) =>
+      dsirTop50(spark, dir)
+    },
 
     // ---- SEQUENCE PACKING audit (L280): pack documents into fixed
     // L=512-token context windows with the boundary-preserving NEXT-FIT
@@ -850,7 +762,7 @@ object SelectionQueries {
     // running remainder with reset. The DuckDB oracle replays the fold
     // as a per-shard list_reduce over the identically-ordered lengths.
     Q(
-      "q299_sequence_packing", SelectionQueries.packingOracleSql) {
+      "q299_sequence_packing", packingOracleSql) {
       (spark, dir) =>
       val t = Tables.documents(spark, dir)
         .select(col("source"), col("doc_id"),
@@ -874,49 +786,7 @@ object SelectionQueries {
     // full-corpus selection — the row-for-row hash match IS the
     // maintenance == rebuild proof (the q294 contract).
     Q(
-      "q301_dsir_incremental", {
-        // the one-shot oracle: identical to q296's — maintenance must
-        // reproduce the rebuild bit for bit
-        val tgt = DsirTarget.map(s => s"'$s'").mkString(", ")
-        val B = DsirBuckets
-        s"""WITH toks AS (
-           |  SELECT doc_id, source, ${LlmQueries.toksSql} AS t FROM documents),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $B AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |rc AS (SELECT b, CAST(count(*) AS BIGINT) AS rcnt FROM tb GROUP BY b),
-           |tc AS (SELECT b, CAST(count(*) AS BIGINT) AS tcnt
-           |       FROM tb WHERE source IN ($tgt) GROUP BY b),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS rtot,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT) AS ttot
-           |  FROM tb),
-           |w AS (SELECT rc.b,
-           |    CAST(round(ln(
-           |      ((coalesce(tc.tcnt, 0) + 1.0) * (tot.rtot + $B)) /
-           |      ((rc.rcnt + 1.0) * (tot.ttot + $B))), 9)
-           |      AS DECIMAL(13,9)) AS w9
-           |  FROM rc LEFT JOIN tc USING (b) CROSS JOIN tot),
-           |d AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS n
-           |      FROM tb WHERE source NOT IN ($tgt) GROUP BY 1, 2, 3),
-           |lw AS (SELECT d.doc_id, d.source,
-           |    CAST(sum(d.n) AS BIGINT) AS n_tokens,
-           |    sum(CAST(d.n AS DECIMAL(10,0)) * w.w9) AS lw
-           |  FROM d JOIN w USING (b) GROUP BY 1, 2),
-           |keyed AS (SELECT doc_id, source, n_tokens, lw,
-           |    CAST(round(-ln(-ln(
-           |      CAST((doc_id * ${Text.Mult}) % ${Text.P} + 1 AS DOUBLE)
-           |        / 2147483648.0)), 9) AS DECIMAL(13,9)) AS g
-           |  FROM lw)
-           |SELECT doc_id, source, n_tokens,
-           |  CAST(lw AS DOUBLE) AS log_weight,
-           |  CAST(lw + g AS DOUBLE) AS gumbel_key
-           |FROM keyed ORDER BY lw + g DESC, doc_id LIMIT 50""".stripMargin
-      }) { (spark, dir) =>
+      "q301_dsir_incremental", dsirSelectionSql) { (spark, dir) =>
       val B = DsirBuckets
       val docs = Tables.documents(spark, dir)
       def feats(part: org.apache.spark.sql.DataFrame) = part
@@ -983,7 +853,7 @@ object SelectionQueries {
     Q(
       "q302_unimax_mixture", {
         s"""WITH tl0 AS (
-           |  SELECT lang, CAST(sum(len(${LlmQueries.toksSql})) AS BIGINT)
+           |  SELECT lang, CAST(sum(len($toksSql)) AS BIGINT)
            |    AS nl
            |  FROM documents GROUP BY 1),
            |tl AS (SELECT * FROM tl0 WHERE nl > 0),
@@ -1048,9 +918,8 @@ object SelectionQueries {
         .localCheckpoint() // grid; read for k, pk, and the output
       val kk = g.agg(coalesce(min(when(col("cap") > col("lvl"), col("rk"))),
         max(col("n")) + 1).as("k"))
-      val kp = g.join(broadcast(kk), col("rk") === col("k"), "right")
-        .select(col("k"),
-          coalesce(col("pfx"), lit(null)).as("pk0"))
+      val kp = g.join(kk, col("rk") === col("k"), "right")
+        .select(col("k"), col("pfx").as("pk0"))
         .crossJoin(broadcast(g.agg(sum("cap").as("allcap"))))
         .select(col("k"), coalesce(col("pk0"), col("allcap")).as("pk"))
       val alloc = when(col("rk") < col("k"), col("cap")).otherwise(
@@ -1079,7 +948,7 @@ object SelectionQueries {
     Q(
       "q305_temperature_mixture",
       s"""WITH tl AS (
-         |  SELECT lang, CAST(sum(len(${LlmQueries.toksSql})) AS BIGINT)
+         |  SELECT lang, CAST(sum(len($toksSql)) AS BIGINT)
          |    AS nl
          |  FROM documents GROUP BY 1),
          |st AS (SELECT CAST(sum(nl) AS BIGINT) AS b FROM tl),
@@ -1166,64 +1035,30 @@ object SelectionQueries {
     // aggregate candidate-count rows to 2 output rows.
     Q(
       "q309_quality_classifier", {
-        val tgt = DsirTarget.map(s => s"'$s'").mkString(", ")
         val B = DsirBuckets
-        val stops = Text.StopWords.head._2.map(w => s"'$w'").mkString(",")
         s"""WITH toks AS (
-           |  SELECT doc_id, source, text, ${LlmQueries.toksSql} AS t
+           |  SELECT doc_id, source, text, $toksSql AS t
            |  FROM documents),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $B AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |bc AS (
-           |  SELECT b,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT)
-           |      AS cpos,
-           |    CAST(count(*) FILTER (WHERE source NOT IN ($tgt)) AS BIGINT)
-           |      AS cneg
-           |  FROM tb GROUP BY 1),
-           |nbt AS (SELECT CAST(sum(cpos) AS BIGINT) AS npos,
-           |    CAST(sum(cneg) AS BIGINT) AS nneg FROM bc),
-           |nbw AS (SELECT b,
-           |    CAST(round(ln(((cpos + 1.0) * (nneg + $B)) /
-           |      ((cneg + 1.0) * (npos + $B))), 9) AS DECIMAL(13,9)) AS w9
-           |  FROM bc, nbt),
+           |${nbWeightCtes(dsirTgtSql, DsirBuckets)},
            |d AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS n
-           |      FROM tb WHERE source NOT IN ($tgt) GROUP BY 1, 2, 3),
+           |      FROM tb WHERE source NOT IN ($dsirTgtSql) GROUP BY 1, 2, 3),
            |sc AS (SELECT d.doc_id,
            |    sum(CAST(d.n AS DECIMAL(10,0)) * nbw.w9) AS score
            |  FROM d JOIN nbw USING (b) GROUP BY 1),
            |cls AS (SELECT doc_id, score > 0 AS ka FROM sc),
            |gop AS (
            |  SELECT doc_id,
-           |    (n >= 20 AND n <= 100000 AND n > 0
-           |     AND sum_len >= n * 3 AND sum_len <= n * 10
-           |     AND symbols * 10 <= n AND alpha * 10 >= n * 8
-           |     AND stop_hits >= 2) AS kb
+           |    ($gopherGateSql) AS kb
            |  FROM (
            |    SELECT doc_id,
-           |      CAST(len(t) AS BIGINT) AS n,
-           |      ${LlmQueries.foldSumSql(
-                    "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-                    "CAST(0 AS BIGINT)")} AS sum_len,
-           |      CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-           |        AS BIGINT) AS alpha,
-           |      CAST(len(regexp_extract_all(text, '#|\\.\\.\\.'))
-           |        AS BIGINT) AS symbols,
-           |      CAST(len(list_filter(t, w -> w IN ($stops))) AS BIGINT)
-           |        AS stop_hits
-           |    FROM toks WHERE source NOT IN ($tgt))),
+           |      $gopherFeaturesSql
+           |    FROM toks WHERE source NOT IN ($dsirTgtSql))),
            |rc AS (SELECT b, CAST(count(*) AS BIGINT) AS rcnt
            |       FROM tb GROUP BY b),
            |tc AS (SELECT b, CAST(count(*) AS BIGINT) AS tcnt
-           |       FROM tb WHERE source IN ($tgt) GROUP BY b),
+           |       FROM tb WHERE source IN ($dsirTgtSql) GROUP BY b),
            |tt AS (SELECT CAST(count(*) AS BIGINT) AS rtot,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT)
+           |    CAST(count(*) FILTER (WHERE source IN ($dsirTgtSql)) AS BIGINT)
            |      AS ttot
            |  FROM tb),
            |dw AS (SELECT rc.b,
@@ -1267,22 +1102,10 @@ object SelectionQueries {
            |  FROM v),
            |u AS (SELECT * FROM kg UNION ALL SELECT * FROM kd),
            |w2 AS (SELECT comparator, a, b, c, d, n,
-           |    (a + b) * (a + c) + (c + d) * (b + d) AS pe,
-           |    n * (a + d) AS po
+           |    $kappaTermsSql
            |  FROM u)
            |SELECT comparator,
-           |  CAST(a AS BIGINT) AS n_both, CAST(b AS BIGINT) AS n_a_only,
-           |  CAST(c AS BIGINT) AS n_b_only, CAST(d AS BIGINT) AS n_neither,
-           |  CASE WHEN n = 0 THEN 1.0 ELSE
-           |    CAST((2 * (a + d) * 1000000 + n) // (2 * n) AS DOUBLE)
-           |      / 1000000 END AS observed_agreement,
-           |  CASE WHEN n * n - pe = 0 THEN 1.0 ELSE
-           |    CAST(CASE WHEN po - pe >= 0
-           |      THEN (2 * (po - pe) * 1000000 + (n * n - pe))
-           |        // (2 * (n * n - pe))
-           |      ELSE -((2 * (pe - po) * 1000000 + (n * n - pe))
-           |        // (2 * (n * n - pe))) END AS DOUBLE) / 1000000 END
-           |    AS kappa
+           |  $kappaSql
            |FROM w2""".stripMargin
       }) { (spark, dir) =>
       import graft.ops.{Classify, Stats}
@@ -1333,34 +1156,12 @@ object SelectionQueries {
     // conversion in both engines, the q296 log_weight precedent).
     Q(
       "q312_classifier_incremental", {
-        val tgt = DsirTarget.map(s => s"'$s'").mkString(", ")
-        val B = DsirBuckets
         s"""WITH toks AS (
-           |  SELECT doc_id, source, ${LlmQueries.toksSql} AS t
+           |  SELECT doc_id, source, $toksSql AS t
            |  FROM documents),
-           |thc AS (
-           |  SELECT doc_id, source,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
-           |  FROM toks WHERE len(t) > 0),
-           |tb AS (
-           |  SELECT doc_id, source, u.h % $B AS b
-           |  FROM thc, unnest(thc.th) AS u(h)),
-           |bc AS (
-           |  SELECT b,
-           |    CAST(count(*) FILTER (WHERE source IN ($tgt)) AS BIGINT)
-           |      AS cpos,
-           |    CAST(count(*) FILTER (WHERE source NOT IN ($tgt)) AS BIGINT)
-           |      AS cneg
-           |  FROM tb GROUP BY 1),
-           |nbt AS (SELECT CAST(sum(cpos) AS BIGINT) AS npos,
-           |    CAST(sum(cneg) AS BIGINT) AS nneg FROM bc),
-           |nbw AS (SELECT b,
-           |    CAST(round(ln(((cpos + 1.0) * (nneg + $B)) /
-           |      ((cneg + 1.0) * (npos + $B))), 9) AS DECIMAL(13,9)) AS w9
-           |  FROM bc, nbt),
+           |${nbWeightCtes(dsirTgtSql, DsirBuckets)},
            |d AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS n
-           |      FROM tb WHERE source NOT IN ($tgt) GROUP BY 1, 2, 3),
+           |      FROM tb WHERE source NOT IN ($dsirTgtSql) GROUP BY 1, 2, 3),
            |sc AS (SELECT d.doc_id, d.source,
            |    CAST(sum(d.n) AS BIGINT) AS n_tokens,
            |    sum(CAST(d.n AS DECIMAL(10,0)) * nbw.w9) AS s
@@ -1447,12 +1248,11 @@ object SelectionQueries {
              |    AS kappa
              |  FROM d$tag, p$tag)""".stripMargin
         s"""WITH toks AS (
-           |  SELECT doc_id, lang, ${LlmQueries.toksSql} AS t
+           |  SELECT doc_id, lang, $toksSql AS t
            |  FROM documents),
            |thc AS (
            |  SELECT doc_id, lang,
-           |    list_transform(t,
-           |      x -> CAST(concat('0x', substr(md5(x),1,8)) AS BIGINT)) AS th
+           |    $tokHashSql AS th
            |  FROM toks WHERE len(t) > 0),
            |feats AS (
            |  SELECT doc_id, lang, u.h % $B AS b,

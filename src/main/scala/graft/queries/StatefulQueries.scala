@@ -15,6 +15,7 @@ import org.apache.spark.sql.types._
   */
 object StatefulQueries {
   import Text.{Mult, P}
+  import OracleSql._
 
   // The ts physical type varies by fixture vintage (INT64 TIMESTAMP(NANOS)
   // read as long vs native TIMESTAMP(MICROS) read as NTZ) — the stream
@@ -417,13 +418,7 @@ object StatefulQueries {
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q103").toString
       val aggPath = s"$root/agg"
-      val o = Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
-            .otherwise(col("o_totalprice")))
-      val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+      val (_, v1, v2) = AnalyticsQueries.orderVersions(spark, dir)
       // two deterministic key-parity batches (update pre/post images of
       // one key may land in DIFFERENT batches; the abelian fold absorbs
       // it)
@@ -461,11 +456,10 @@ object StatefulQueries {
     Q(
       "q115_stream_sketch_maintenance",
       s"""WITH toks AS (
-         |  SELECT doc_id, source, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS t
+         |  SELECT doc_id, source, $toksSql AS t
          |  FROM documents),
          |shs AS (
-         |  SELECT doc_id, source, unnest(CASE WHEN len(t) < 3 THEN []
-         |    ELSE list_transform(range(1, len(t)-1), i -> concat_ws(' ', t[i], t[i+1], t[i+2])) END) AS s
+         |  SELECT doc_id, source, unnest($shingleListSql) AS s
          |  FROM toks),
          |sh AS (SELECT DISTINCT source,
          |  CAST(concat('0x', substr(md5(s),1,8)) AS BIGINT) % 2147483647 AS h FROM shs)
@@ -529,32 +523,11 @@ object StatefulQueries {
     // through ExactRound's integer-space rounding, same contract and
     // same HUGEINT oracle shape as q109.
     Q(
-      "q124_stream_moments",
-      """WITH s AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt,
-        |    sum(pc) AS s1c, sum(pc * pc) AS s2c4
-        |  FROM (SELECT o_custkey,
-        |          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT) AS pc
-        |        FROM orders WHERE o_orderkey % 11 <> 0) t
-        |  GROUP BY o_custkey)
-        |SELECT o_custkey, cnt,
-        |  CAST(((2 * s1c * 1000000 + cnt * 100) // (2 * cnt * 100))
-        |    * CAST(0.000001 AS DECIMAL(7,6)) AS DOUBLE) AS mean_price,
-        |  CAST(CASE WHEN cnt > 1 THEN
-        |    ((2 * (s2c4 * cnt - s1c * s1c) * 100 + cnt * (cnt - 1) * 10000)
-        |      // (2 * cnt * (cnt - 1) * 10000))
-        |      * CAST(0.01 AS DECIMAL(3,2)) END AS DOUBLE) AS var_price
-        |FROM s""".stripMargin) { (spark, dir) =>
+      "q124_stream_moments", momentsOracleSql) { (spark, dir) =>
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q124").toString
       val aggPath = s"$root/agg"
-      val o = Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 50)
-            .otherwise(col("o_totalprice")))
-      val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
+      val (_, v1, v2) = AnalyticsQueries.orderVersions(spark, dir)
       // key-parity batches; foldOnce replays the last one (Σv² doubling
       // would be visible in var_price, so the oracle match pins
       // exactly-once)
@@ -595,7 +568,7 @@ object StatefulQueries {
     // streamed maintenance must land on the recompute's exact values.
     Q(
       "q133_stream_drift",
-      LinkageQueries.driftSql) { (spark, dir) =>
+      driftSql) { (spark, dir) =>
       import graft.ops.Incremental
       val root = graft.Tmp.dir("graft-q133").toString
       val aggPath = s"$root/agg"
@@ -656,7 +629,7 @@ object StatefulQueries {
     // partitioned index), never in executor memory.
     Q(
       "q165_stream_novelty",
-      CorpusStatsQueries.noveltyOracleSql("WHERE doc_id % 3 = 0")) {
+      noveltyOracleSql("WHERE doc_id % 3 = 0")) {
       (spark, dir) =>
       val root = graft.Tmp.dir("graft-q165").toString
       val ownPath = s"$root/own"
@@ -736,7 +709,7 @@ object StatefulQueries {
     // but the replay never executes it.)
     Q(
       "q280_stream_exact_substring",
-      CurationQueries.exactSubstrOracleSql) { (spark, dir) =>
+      exactSubstrOracleSql) { (spark, dir) =>
       val root = graft.Tmp.dir("graft-q280").toString
       val ownPath = s"$root/own"
       val resPath = s"$root/res"
@@ -782,7 +755,7 @@ object StatefulQueries {
     Q(
       "q121_stream_heavy_hitters",
       s"""WITH toks AS (
-         |  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS term
+         |  SELECT unnest($toksSql) AS term
          |  FROM documents),
          |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM toks)
          |SELECT term, CAST(count(*) AS BIGINT) AS cnt,
@@ -1085,19 +1058,10 @@ object StatefulQueries {
     Q(
       "q270_sprt_monitor",
       s"""WITH sbase AS (
-         |  SELECT doc_id, text, ${LlmQueries.toksSql} AS t FROM documents),
+         |  SELECT doc_id, text, $toksSql AS t FROM documents),
          |ssig AS (
          |  SELECT doc_id,
-         |    CAST(len(t) AS BIGINT) AS n,
-         |    ${LlmQueries.foldSumSql(
-              "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-              "CAST(0 AS BIGINT)")} AS sum_len,
-         |    CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-         |      AS BIGINT) AS alpha,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT)
-         |      AS symbols,
-         |    CAST(len(list_filter(t, w -> w IN (${StatefulQueries.stopListSql})))
-         |      AS BIGINT) AS stop_hits
+         |    $gopherFeaturesSql
          |  FROM sbase),
          |slab AS (
          |  SELECT doc_id % 4 AS bid,
@@ -1189,7 +1153,7 @@ object StatefulQueries {
     // SQL — the row-for-row hash match is the fold == rebuild proof.
     Q(
       "q307_stream_packing",
-      SelectionQueries.packingOracleSql) { (spark, dir) =>
+      packingOracleSql) { (spark, dir) =>
       import graft.ops.Packing
       val root = graft.Tmp.dir("graft-q307").toString
       val stPath = s"$root/state"
@@ -1205,9 +1169,4 @@ object StatefulQueries {
       }
       Packing.economics(state, 512L)
     })
-
-  /** The Gopher stop-word list as a SQL IN-list fragment (shared by the
-    * q270 oracle; same list `Text.gopherSignals` gates on). */
-  private[queries] def stopListSql: String =
-    Text.StopWords.head._2.map(w => s"'$w'").mkString(",")
 }

@@ -33,10 +33,39 @@ import org.apache.spark.sql.functions._
   * IEEE divisions — bit-identical on any engine.
   */
 object StatsQueries {
+  import OracleSql._
 
-  /** tokens CTE body (DuckDB dialect) — the shared corpus tokenizer. */
-  private val toksSql =
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
+  /** Poisson(1) multiplier-bootstrap 95% CI over `u(x, rep, u)` (u the
+    * per-row uniform hash): weights `w`, replica means and the
+    * order-statistic CI row `ci(b_replicas, ci_lo, ci_hi)` — the oracle
+    * of `Stats.poissonBootstrapMean` (q261/q266). */
+  private val bootstrapCiCtes: String = {
+    val wCase = Stats.PoissonT.zipWithIndex
+      .map { case (t, k) => s"WHEN u < $t THEN $k" }
+      .mkString(" ")
+    s"""w AS (SELECT x, rep, CASE $wCase ELSE 8 END AS w FROM u),
+       |mb AS (
+       |  SELECT rep, CAST(sum(w * x) AS HUGEINT) AS num,
+       |    CAST(sum(w) AS HUGEINT) AS den
+       |  FROM w GROUP BY 1),
+       |means AS (
+       |  SELECT rep,
+       |    CAST((2 * num * 1000000 + den) // (2 * den) AS DOUBLE)
+       |      / 1000000 AS mean_b
+       |  FROM mb WHERE den > 0),
+       |ranked AS (
+       |  SELECT mean_b,
+       |    row_number() OVER (ORDER BY mean_b, rep) AS rn,
+       |    count(*) OVER () AS rr
+       |  FROM means),
+       |ci AS (
+       |  SELECT CAST(max(rr) AS BIGINT) AS b_replicas,
+       |    min(CASE WHEN rn = (rr * 25) // 1000 + 1 THEN mean_b END)
+       |      AS ci_lo,
+       |    min(CASE WHEN rn = rr - (rr * 25) // 1000 THEN mean_b END)
+       |      AS ci_hi
+       |  FROM ranked)""".stripMargin
+  }
 
   /** The grouped Mann–Whitney verdict SQL over a CTE `d(rep, side, v)`
     * — mirror of Stats.mannWhitneyBy (side 0 = A, side 1 = B). */
@@ -80,21 +109,11 @@ object StatsQueries {
     * (source for the jackknife/EB queries, lang for the
     * disparate-impact audit). */
   private def gopherPartsSql(grp: String = "source") = {
-    val stopList = Text.StopWords.head._2.map(w => s"'$w'").mkString(",")
     s"""gbase AS (
        |  SELECT doc_id, $grp, n_chars, text, $toksSql AS t FROM documents),
        |gsig AS (
        |  SELECT doc_id, $grp, n_chars,
-       |    CAST(len(t) AS BIGINT) AS n,
-       |    ${LlmQueries.foldSumSql(
-          "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-          "CAST(0 AS BIGINT)")} AS sum_len,
-       |    CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-       |      AS BIGINT) AS alpha,
-       |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT)
-       |      AS symbols,
-       |    CAST(len(list_filter(t, w -> w IN ($stopList))) AS BIGINT)
-       |      AS stop_hits
+       |    $gopherFeaturesSql
        |  FROM gbase),
        |glab AS (
        |  SELECT $grp,
@@ -123,22 +142,11 @@ object StatsQueries {
     * verbatim — the fold == one-shot identity over the abelian bin
     * counts). */
   private def isotonicOracleSql: String = {
-    val stopList = Text.StopWords.head._2
-      .map(w => s"'$w'").mkString(",")
     s"""WITH base AS (
            |  SELECT doc_id, text, n_chars, $toksSql AS t FROM documents),
            |sig AS (
            |  SELECT doc_id, n_chars,
-           |    CAST(len(t) AS BIGINT) AS n,
-           |    ${LlmQueries.foldSumSql(
-                "list_transform(t, w -> CAST(length(w) AS BIGINT))",
-                "CAST(0 AS BIGINT)")} AS sum_len,
-           |    CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-           |      AS BIGINT) AS alpha,
-           |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT)
-           |      AS symbols,
-           |    CAST(len(list_filter(t, w -> w IN ($stopList))) AS BIGINT)
-           |      AS stop_hits
+           |    $gopherFeaturesSql
            |  FROM base),
            |lab AS (
            |  SELECT least(n_chars // 100, 15) AS bin,
@@ -295,9 +303,6 @@ object StatsQueries {
     // corpus size.
     Q(
       "q261_bootstrap_ci", {
-        val wCase = Stats.PoissonT.zipWithIndex
-          .map { case (t, k) => s"WHEN u < $t THEN $k" }
-          .mkString(" ")
         s"""WITH reps AS (
            |  SELECT doc_id, n_chars AS x, r.rep
            |  FROM documents, range(0, 50) r(rep)),
@@ -306,28 +311,7 @@ object StatsQueries {
            |    (((doc_id * 50 + rep) % 2147483647) * 2654435761 + 77)
            |      % 2147483647 AS u
            |  FROM reps),
-           |w AS (SELECT x, rep, CASE $wCase ELSE 8 END AS w FROM u),
-           |mb AS (
-           |  SELECT rep, CAST(sum(w * x) AS HUGEINT) AS num,
-           |    CAST(sum(w) AS HUGEINT) AS den
-           |  FROM w GROUP BY 1),
-           |means AS (
-           |  SELECT rep,
-           |    CAST((2 * num * 1000000 + den) // (2 * den) AS DOUBLE)
-           |      / 1000000 AS mean_b
-           |  FROM mb WHERE den > 0),
-           |ranked AS (
-           |  SELECT mean_b,
-           |    row_number() OVER (ORDER BY mean_b, rep) AS rn,
-           |    count(*) OVER () AS rr
-           |  FROM means),
-           |ci AS (
-           |  SELECT CAST(max(rr) AS BIGINT) AS b_replicas,
-           |    min(CASE WHEN rn = (rr * 25) // 1000 + 1 THEN mean_b END)
-           |      AS ci_lo,
-           |    min(CASE WHEN rn = rr - (rr * 25) // 1000 THEN mean_b END)
-           |      AS ci_hi
-           |  FROM ranked),
+           |$bootstrapCiCtes,
            |pt AS (
            |  SELECT CAST(count(*) AS BIGINT) AS n,
            |    CAST((2 * CAST(sum(n_chars) AS HUGEINT) * 1000000 + count(*))
@@ -542,9 +526,6 @@ object StatsQueries {
     // shared kernel.
     Q(
       "q266_cluster_bootstrap", {
-        val wCase = Stats.PoissonT.zipWithIndex
-          .map { case (t, k) => s"WHEN u < $t THEN $k" }
-          .mkString(" ")
         s"""WITH reps AS (
            |  SELECT CAST(concat('0x', substr(md5(source), 1, 8)) AS BIGINT)
            |      AS cid,
@@ -555,28 +536,7 @@ object StatsQueries {
            |    (((cid * 50 + rep) % 2147483647) * 2654435761 + 91)
            |      % 2147483647 AS u
            |  FROM reps),
-           |w AS (SELECT x, rep, CASE $wCase ELSE 8 END AS w FROM u),
-           |mb AS (
-           |  SELECT rep, CAST(sum(w * x) AS HUGEINT) AS num,
-           |    CAST(sum(w) AS HUGEINT) AS den
-           |  FROM w GROUP BY 1),
-           |means AS (
-           |  SELECT rep,
-           |    CAST((2 * num * 1000000 + den) // (2 * den) AS DOUBLE)
-           |      / 1000000 AS mean_b
-           |  FROM mb WHERE den > 0),
-           |ranked AS (
-           |  SELECT mean_b,
-           |    row_number() OVER (ORDER BY mean_b, rep) AS rn,
-           |    count(*) OVER () AS rr
-           |  FROM means),
-           |ci AS (
-           |  SELECT CAST(max(rr) AS BIGINT) AS b_replicas,
-           |    min(CASE WHEN rn = (rr * 25) // 1000 + 1 THEN mean_b END)
-           |      AS ci_lo,
-           |    min(CASE WHEN rn = rr - (rr * 25) // 1000 THEN mean_b END)
-           |      AS ci_hi
-           |  FROM ranked),
+           |$bootstrapCiCtes,
            |pt AS (
            |  SELECT CAST(count(*) AS BIGINT) AS n,
            |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
@@ -798,8 +758,8 @@ object StatsQueries {
          |sh AS (
          |  SELECT sr.rk, u.h
          |  FROM (SELECT source,
-         |      list_transform(${LlmQueries.shinglesSql.replace("\n", " ")},
-         |        x -> ${LlmQueries.strHashSql("x")}) AS hs
+         |      list_transform(${shinglesSql.replace("\n", " ")},
+         |        x -> ${strHashSql("x")}) AS hs
          |    FROM tbase) q JOIN sr USING (source), unnest(q.hs) u(h)),
          |fv AS (SELECT h, min(rk) AS frk FROM sh GROUP BY 1),
          |vb AS (SELECT frk AS rk, CAST(count(*) AS HUGEINT) AS nv

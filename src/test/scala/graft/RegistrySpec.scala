@@ -31,6 +31,17 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("oracle SQL carries no leftover margin and no uninterpolated ${") {
+    // A fragment interpolated without `.stripMargin`, or a plain string
+    // that should have been `s"""`, reaches DuckDB as invalid SQL text.
+    val margin = """^\s*\|(?!\|)""".r
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (q, sql) =>
+      val bad = sql.linesIterator.filter(margin.findFirstIn(_).isDefined).toList
+      assert(bad.isEmpty, s"$q keeps margin lines: ${bad.mkString(" / ")}")
+      assert(!sql.contains("${"), s"$q has an uninterpolated $${...}")
+    }
+  }
+
   test("no orphan oracles or pins for unregistered queries") {
     val orphans = (SparkEntry.oracleSql.keySet ++ specPinned.keySet) --
       SparkEntry.queries.keySet

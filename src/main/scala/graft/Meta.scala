@@ -125,14 +125,6 @@ object Meta {
     (total, rows.take(n))
   }
 
-  /** M3 extended: versioned snapshot writes over plain parquet — the
-    * time-travel surface the reference gets from Delta (`dt.version()`,
-    * jobs/silver/silver_reader.py:71), rebuilt on directory layout:
-    * every write lands in `path/v=<n+1>`, readers resolve latest or any
-    * retained historical version. Writers never mutate a published
-    * snapshot, so concurrent readers of version n are isolated from the
-    * n+1 write — the same immutability contract a transaction log gives,
-    * minus cross-table atomicity. */
   /** A manifest commit lost its claim race: another writer committed
     * between this writer's read of the chain and its rename-if-absent.
     * Retryable by construction — re-read the newest commit and redo the
@@ -141,6 +133,24 @@ object Meta {
   final class CommitConflictException(msg: String, cause: Throwable)
     extends java.io.IOException(msg, cause)
 
+  /** M3 extended: versioned tables over plain parquet — the time-travel
+    * surface the reference gets from Delta (`dt.version()`,
+    * jobs/silver/silver_reader.py:71), rebuilt on directory layout.
+    *
+    * A table is a chain of immutable `path/v=<n>` dirs: [[write]] stages
+    * the next version aside and publishes it by one fail-if-exists
+    * rename, so a reader of version n is isolated from the n+1 write.
+    * Tables under one root commit as a SET through one protocol: each
+    * writer stages its tables' next versions, then claims the root's
+    * next `_commit=<id>` manifest ([[commitManifest]]), which names, per
+    * table, the list of versions whose union it is. Readers resolve
+    * versions only through a manifest ([[readCommitted]]), so a staged
+    * version no manifest names is invisible, a crash before the claim
+    * leaves only debris for [[gc]], and a lost claim race throws
+    * [[CommitConflictException]] instead of overwriting the winner.
+    * [[publishAll]], [[compactTable]] and `graft.streaming.Streams.foldOnce`
+    * (whose commit id doubles as the Delta `txn` of its last applied
+    * batch) all commit this way. */
   object Versioned {
     // STRICTLY v=<digits> — maintenance debris (e.g. Scale.compact's
     // sibling `v=1_compacting` / `v=1_old` work dirs) must be invisible
@@ -156,22 +166,18 @@ object Meta {
         .sorted
     }
 
-    /** Publish `df` as the next version ([[publish]]); returns the new
-      * version number. */
-    def write(df: DataFrame, path: String): Long = publish(df, path, None)
-
-    /** Stage `df` (and the `marker` file, if any) in `v=N_staging_<uuid>`,
-      * N = latest + 1, then rename it to `v=N` (fail-if-exists): readers
-      * see the whole version or none of it, and a write that fails
-      * before the rename leaves only debris for [[sweepStaging]]. */
-    private def publish(df: DataFrame, path: String, marker: Option[String]): Long = {
+    /** Publish `df` as the next version; returns the new version number.
+      * Stages it in `v=N_staging_<uuid>`, N = latest + 1, then renames
+      * that to `v=N` (fail-if-exists): readers see the whole version or
+      * none of it, and a write that fails before the rename leaves only
+      * debris for [[sweepStaging]]. */
+    def write(df: DataFrame, path: String): Long = {
       val spark = df.sparkSession
       val next = versions(spark, path).lastOption.getOrElse(0L) + 1
       val (f, _) = fs(spark, path)
       val staging = new org.apache.hadoop.fs.Path(
         s"$path/v=${next}_staging_${java.util.UUID.randomUUID}")
       df.write.mode("errorifexists").parquet(staging.toString)
-      marker.foreach(m => f.create(new org.apache.hadoop.fs.Path(staging, m), true).close())
       val dst = new org.apache.hadoop.fs.Path(s"$path/v=$next")
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         f.getUri, spark.sparkContext.hadoopConfiguration)
@@ -183,126 +189,37 @@ object Meta {
       next
     }
 
-    // ------- exactly-once streaming folds (the Delta `txn` pattern) -------
-    //
-    // foreachBatch is AT-LEAST-once: Spark retries a batch whose function
-    // threw after a partial write, so a non-idempotent fold (a sum, a
-    // moments update) applied with plain [[write]] would double the
-    // replayed delta. Delta solves this with a `txn` action (appId +
-    // monotonically increasing version) committed atomically WITH the
-    // data; [[writeOnce]] replays that shape on the `v=` chain: the
-    // snapshot is staged with a `_txn_<appId>_<batchId>` marker file
-    // inside it and published by one directory rename, so the marker
-    // becomes visible atomically with the data, and a replayed batch
-    // (same appId, batchId ≤ the newest recorded) is detected and
-    // skipped. Underscore-prefixed files are invisible to parquet scans
-    // — but ONLY while the name contains no '=': Spark's hidden-path
-    // filter keeps `_`-names with '=' (they look like partition dirs),
-    // so the marker must never use '=' and appId must not contain '_'
-    // (it would make the name parse ambiguous).
-
-    private val TxnFile = "^_txn_([A-Za-z0-9.-]+)_(\\d+)$".r
-
-    /** Newest recorded batchId for `appId` across retained versions, or
-      * None. Scans version dirs newest-first (driver-side listing at
-      * manifest scale — O(versions), no data read). */
-    def lastTxn(spark: SparkSession, path: String, appId: String): Option[Long] = {
-      val (f, _) = fs(spark, path)
-      versions(spark, path).reverseIterator.flatMap { v =>
-        f.listStatus(new org.apache.hadoop.fs.Path(s"$path/v=$v")).toSeq
-          .map(_.getPath.getName)
-          .collectFirst { case TxnFile(a, b) if a == appId => b.toLong }
-      }.nextOption()
-    }
-
-    /** Exactly-once [[write]] for streaming foreachBatch folds: applies
-      * `df` as the next version tagged (appId, batchId), or no-ops when
-      * that batch was already applied (an at-least-once replay). Returns
-      * Some(version) when applied, None when skipped.
-      *
-      * Crash windows: failure before the publish rename leaves only an
-      * unreferenced staging dir (debris — the retry re-applies from the
-      * unchanged standing table); failure after it finds the marker and
-      * skips. One writer per (path, appId) — concurrent folds of the
-      * same table need the manifest CAS layer, not this. Retention
-      * caveat (same as Delta's): [[vacuum]] must keep at least the
-      * newest marker-bearing version while the stream can still retry.
-      * `graft.streaming.Streams.foldOnce` commits through this, and seeds
-      * each declared `Streams.FoldTable` with it under the shape appId. */
-    def writeOnce(df: DataFrame, path: String, appId: String,
-        batchId: Long): Option[Long] = {
-      require(TxnFile.pattern.matcher(s"_txn_${appId}_0").matches,
-        s"appId '$appId' must match [A-Za-z0-9.-]+ (no underscores)")
-      if (lastTxn(df.sparkSession, path, appId).exists(_ >= batchId)) None
-      else Some(publish(df, path, Some(s"_txn_${appId}_$batchId")))
-    }
-
     /** Latest version number, if any snapshot exists. */
     def latestVersion(spark: SparkSession, path: String): Option[Long] =
       versions(spark, path).lastOption
 
-    /** True iff `(appId, batchId)` is already committed at `path` — the
-      * FOLD-side replay guard. [[writeOnce]] already skips the WRITE of
-      * a replayed batch, but it can only check the marker after the
-      * caller has built (and for eager folds, computed) the frame to
-      * write. `graft.streaming.Streams.foldOnce` runs this check for
-      * every declared `Streams.FoldTable` before calling its step, and
-      * skips the step when all of them record the batch; folds get the
-      * guard from that harness instead of calling this themselves. */
-    def committed(spark: SparkSession, path: String, appId: String,
-        batchId: Long): Boolean =
-      lastTxn(spark, path, appId).exists(_ >= batchId)
-
-    /** SEGMENT-LOG read: the union of EVERY retained version at `path`.
-      *
-      * [[writeOnce]] is commit machinery — it does not care whether the
-      * frame a fold hands it is a full rewritten snapshot or just the
-      * batch's delta. The round-20 streaming folds all passed
-      * `read(standing).unionByName(delta)`, i.e. full-snapshot-per-
-      * version: exactly-once, but the standing artifact is REWRITTEN
-      * every micro-batch — O(|standing|) write amplification per
-      * trigger, which at 100 TB means re-writing a corpus-sized
-      * postings/ownership table per arriving batch. Folds whose
-      * standing table is append-only (postings, owner rows, rewrite
-      * results, additive count deltas) instead writeOnce ONLY the delta
-      * and read the table back through this union — O(|delta|) written
-      * per batch, the parquet-segment shape every real index/lake
-      * maintains (plus periodic compaction, which here is [[write]] of
-      * the squashed union when a caller wants it). Txn markers, replay
-      * skip, and every crash window are unchanged — the marker scan
-      * ([[lastTxn]]) already walks all retained versions. Retention
-      * caveat: [[vacuum]] on a segment log would DROP DATA (old versions
-      * are segments, not superseded snapshots), so it refuses a path
-      * seeded as `Streams.Segments`; compact-then-rewrite instead. Folds
-      * declare such a table as a `Streams.Segments` `FoldTable`, which
-      * passes its seed's schema as `schema` instead of inferring it. */
-    def readAll(spark: SparkSession, path: String,
-        schema: Option[StructType] = None): DataFrame = {
-      val vs = versions(spark, path)
-      require(vs.nonEmpty, s"no versions at $path")
-      schema.fold(spark.read)(spark.read.schema).parquet(vs.map(v => s"$path/v=$v"): _*)
-    }
-
     /** Read latest (version = None) or a specific retained snapshot;
-      * a given `schema` replaces the inference job (see [[readAll]]). */
+      * a given `schema` replaces the inference job. */
     def read(spark: SparkSession, path: String, version: Option[Long] = None,
         schema: Option[StructType] = None): DataFrame = {
       val v = version.orElse(latestVersion(spark, path)).getOrElse(
         throw new IllegalArgumentException(s"no versions at $path"))
-      schema.fold(spark.read)(spark.read.schema).parquet(s"$path/v=$v")
+      readVersions(spark, path, Seq(v), schema)
     }
 
-    /** The seed appId that marks a `Streams.Segments` log. */
-    private[graft] val SegmentsAppId = "segments"
+    /** The union of versions `vs` at `path`, read with `schema` when one
+      * is given, so no job infers it from the files. */
+    private def readVersions(spark: SparkSession, path: String,
+        vs: Seq[Long], schema: Option[StructType]): DataFrame =
+      schema.fold(spark.read)(spark.read.schema).parquet(vs.map(v => s"$path/v=$v"): _*)
 
     /** Drop all but the newest `keep` snapshots (VACUUM). Also reclaims
       * pre-publish crash debris older than `stagingGraceMs`
-      * ([[sweepStaging]]). Refuses a segment log (a `Streams.Segments`
-      * seed marker), see [[readAll]]. */
+      * ([[sweepStaging]]). Refuses a table whose parent holds a
+      * `_commit=` manifest: a manifest may name any of its versions (every
+      * segment of a `Streams.Segments` table), so [[gc]] is the retention
+      * path for such a table. */
     def vacuum(spark: SparkSession, path: String, keep: Int,
         stagingGraceMs: Long = 10 * 60 * 1000L): Seq[Long] = {
-      require(lastTxn(spark, path, SegmentsAppId).isEmpty,
-        s"$path is a segment log: vacuum would drop its data")
+      val root = new org.apache.hadoop.fs.Path(path).getParent.toString
+      require(latestCommit(spark, root).isEmpty,
+        s"$path is a manifest table: vacuum would drop versions a commit " +
+          s"names; gc $root instead")
       val dead = versions(spark, path).dropRight(keep)
       val (f, _) = fs(spark, path)
       dead.foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$path/v=$v"), true))
@@ -310,7 +227,7 @@ object Meta {
       dead
     }
 
-    /** Reclaims pre-publish crash debris: a [[publish]] that died before its
+    /** Reclaims pre-publish crash debris: a [[write]] that died before its
       * rename leaves a `v=N_staging_<uuid>` dir with full parquet data.
       * Any staging dir whose N is ≤ the latest PUBLISHED version is
       * provably dead (a publish only claims latest+1, so that N has
@@ -360,7 +277,9 @@ object Meta {
     // a torn mix; a crash between staging and commit leaves only
     // unreferenced version dirs (debris, not corruption). Commit ids are
     // claimed by rename-if-absent, so a lost race throws rather than
-    // overwriting another writer's manifest.
+    // overwriting another writer's manifest. A manifest line is a table
+    // name and the versions whose union it is, tab-separated: one for a
+    // snapshot, one per segment for an append-only log.
 
     private val CommitFile = "^_commit=(\\d+)$".r
 
@@ -372,6 +291,10 @@ object Meta {
         .collect { case CommitFile(n) => n.toLong }
         .sorted
     }
+
+    /** Newest commit id at `root`, if any manifest exists. */
+    def latestCommit(spark: SparkSession, root: String): Option[Long] =
+      commits(spark, root).lastOption
 
     /** Claim the next commit id by writing the manifest aside (under a
       * writer-unique staging name — two racers must never share one) and
@@ -401,13 +324,13 @@ object Meta {
       * would silently revert it. With the pin, any intervening commit
       * makes the rename-if-absent CAS fail — a retryable conflict. */
     private[graft] def commitManifest(spark: SparkSession, root: String,
-        versions: Seq[(String, Long)], claim: Option[Long] = None): Long = {
+        versions: Seq[(String, Seq[Long])], claim: Option[Long] = None): Long = {
       val (f, _) = fs(spark, root)
-      val id = claim.getOrElse(commits(spark, root).lastOption.getOrElse(0L) + 1)
+      val id = claim.getOrElse(latestCommit(spark, root).getOrElse(0L) + 1)
       val tmp = new org.apache.hadoop.fs.Path(
         s"$root/_commit_staging_${id}_${java.util.UUID.randomUUID}")
       val out = f.create(tmp, true)
-      try out.write(versions.map { case (n, v) => s"$n\t$v" }.mkString("\n")
+      try out.write(versions.map { case (n, vs) => (n +: vs).mkString("\t") }.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       val dst = new org.apache.hadoop.fs.Path(s"$root/_commit=$id")
@@ -475,15 +398,16 @@ object Meta {
       }
       val spark = tables.head._2.sparkSession
       // stage: each table's next version dir, not yet referenced anywhere
-      val staged = tables.map { case (name, df) => name -> write(df, s"$root/$name") }
+      val staged = tables.map { case (name, df) => name -> Seq(write(df, s"$root/$name")) }
       commitManifest(spark, root, staged)
     }
 
     /** Compact one table of the newest commit THROUGH the manifest: the
-      * committed version's files are rewritten (row-proportional file
-      * count, as [[graft.ops.Scale.compact]]) into a NEW staged `v=` dir,
-      * then a new manifest commits the whole set with only this table's
-      * version advanced. No readable path is ever renamed or deleted, so
+      * committed versions' files (every segment of an append-only log)
+      * are rewritten (row-proportional file count, as
+      * [[graft.ops.Scale.compact]]) into ONE new staged `v=` dir, then a
+      * new manifest commits the whole set with only this table's
+      * versions replaced. No readable path is ever renamed or deleted, so
       * a reader resolving the old manifest keeps its files and a reader
       * resolving the new one gets the rewrite — never neither. This is
       * the live-table compaction path (the reference's Delta OPTIMIZE,
@@ -501,7 +425,7 @@ object Meta {
       * reclaimed by [[gc]]). */
     def compactTable(spark: SparkSession, root: String, table: String,
         targetRowsPerFile: Long): (Long, Int, Int) = {
-      val baseId = commits(spark, root).lastOption.getOrElse(
+      val baseId = latestCommit(spark, root).getOrElse(
         throw new IllegalArgumentException(s"no commits at $root"))
       compactTableFrom(spark, root, table, targetRowsPerFile, baseId)
     }
@@ -513,28 +437,27 @@ object Meta {
         table: String, targetRowsPerFile: Long, baseId: Long): (Long, Int, Int) = {
       val current = committedVersions(spark, root, Some(baseId)).getOrElse(
         throw new IllegalArgumentException(s"no commit $baseId at $root"))
-      val v = current.getOrElse(table,
+      val vs = current.getOrElse(table,
         throw new IllegalArgumentException(s"table $table not in commit: $current"))
-      val src = s"$root/$table/v=$v"
       val (f, _) = fs(spark, root)
-      def parquetFiles(p: String): Int =
-        f.listStatus(new org.apache.hadoop.fs.Path(p))
+      def parquetFiles(v: Long): Int =
+        f.listStatus(new org.apache.hadoop.fs.Path(s"$root/$table/v=$v"))
           .count(_.getPath.getName.endsWith(".parquet"))
-      val df = spark.read.parquet(src)
+      val df = readVersions(spark, s"$root/$table", vs, None)
       val files = math.max(1,
         math.ceil(df.count().toDouble / targetRowsPerFile).toInt)
       val newV = write(df.repartition(files), s"$root/$table")
       val id = commitManifest(spark, root,
-        (current.updated(table, newV)).toSeq.sortBy(_._1),
+        current.updated(table, Seq(newV)).toSeq.sortBy(_._1),
         claim = Some(baseId + 1))
-      (id, parquetFiles(src), parquetFiles(s"$root/$table/v=$newV"))
+      (id, vs.map(parquetFiles).sum, parquetFiles(newV))
     }
 
-    /** The (table → version) set of `commit` (default: newest commit);
+    /** The (table → versions) set of `commit` (default: newest commit);
       * None if the root has no commits yet. */
     def committedVersions(spark: SparkSession, root: String,
-        commit: Option[Long] = None): Option[Map[String, Long]] = {
-      val id = commit.orElse(commits(spark, root).lastOption)
+        commit: Option[Long] = None): Option[Map[String, Seq[Long]]] = {
+      val id = commit.orElse(latestCommit(spark, root))
       id.map { c =>
         val (f, _) = fs(spark, root)
         val in = f.open(new org.apache.hadoop.fs.Path(s"$root/_commit=$c"))
@@ -549,8 +472,8 @@ object Meta {
         new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").toSeq.filter(_.nonEmpty)
           .map { line =>
-            val Array(name, v) = line.split("\t")
-            name -> v.toLong
+            val name +: vs = line.split("\t").toSeq
+            name -> vs.map(_.toLong)
           }.toMap
       }
     }
@@ -576,6 +499,7 @@ object Meta {
       val (f, rootPath) = fs(spark, root)
       val live: Set[(String, Long)] = keep.flatMap { c =>
         committedVersions(spark, root, Some(c)).get.toSeq
+          .flatMap { case (t, vs) => vs.map(t -> _) }
       }.toSet
       dead.foreach(c =>
         f.delete(new org.apache.hadoop.fs.Path(s"$root/_commit=$c"), false))
@@ -792,14 +716,14 @@ object Meta {
 
     /** Read `table` at the committed version set — never a staged (torn)
       * write. `commit` pins a historical commit for cross-table time
-      * travel. */
+      * travel; a given `schema` replaces the inference job. */
     def readCommitted(spark: SparkSession, root: String, table: String,
-        commit: Option[Long] = None): DataFrame = {
+        commit: Option[Long] = None, schema: Option[StructType] = None): DataFrame = {
       val versions = committedVersions(spark, root, commit).getOrElse(
         throw new IllegalArgumentException(s"no commits at $root"))
-      val v = versions.getOrElse(table,
+      val vs = versions.getOrElse(table,
         throw new IllegalArgumentException(s"table $table not in commit: $versions"))
-      read(spark, s"$root/$table", version = Some(v))
+      readVersions(spark, s"$root/$table", vs, schema)
     }
   }
 

@@ -1167,7 +1167,7 @@ object Dedup {
     * matches state and its owner site (inside the replayed batch) is
     * excluded from cover, so the rewrite reproduces itself and the
     * new-owner set is empty — the algebraic half of the exactly-once
-    * story, next to the caller's writeOnce markers. */
+    * story, next to the caller's commit guard. */
   def exactSubstrBatch(standing: DataFrame, batch: DataFrame,
       lake: DataFrame, idCol: String, textCol: String, minLen: Int)
       : (DataFrame, DataFrame) = {

@@ -138,35 +138,6 @@ object IndexQueries {
        |    AS BIGINT) AS cov_rank
        |FROM c, t""".stripMargin
 
-  /** Euclidean argmin assignment CTE (kmeans training) over a
-    * parameterized vector CTE — kmeansAssignSql with
-    * the `vn` name freed so two training chains can coexist. */
-  private def kmAssignSql(vn: String, name: String, cents: String) =
-    s"""$name AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT t.vec_id, c.cluster,
-       |      row_number() OVER (PARTITION BY t.vec_id
-       |        ORDER BY t.vn2 + ${dot64Sql("c.cv", "c.cv")}
-       |          - 2.0 * ${dot64Sql("t.dv", "c.cv")}, c.cluster) AS rn
-       |    FROM $vn t, $cents c) x WHERE rn = 1)""".stripMargin
-
-  /** Centroid-update CTE pair (kmeans), `vn` parameterized; empty
-    * clusters keep the previous centroid. */
-  private def kmUpdateSql(vn: String, sums: String, assign: String,
-      prev: String, next: String) =
-    s"""$sums AS (
-       |  SELECT a.cluster, i,
-       |    CAST(sum(CAST(t.dv[i] AS DECIMAL(30,12))) AS DOUBLE)
-       |      / count(*) AS m
-       |  FROM $assign a JOIN $vn t USING (vec_id),
-       |    unnest(range(1, 65)) u(i)
-       |  GROUP BY 1, 2),
-       |$next AS (
-       |  SELECT p.cluster, coalesce(n.cv, p.cv) AS cv
-       |  FROM $prev p LEFT JOIN (
-       |    SELECT cluster, list(m ORDER BY i) AS cv FROM $sums GROUP BY 1) n
-       |  USING (cluster))""".stripMargin
-
   /** Full deterministic 2-iteration k=4 training chain over
     * `embeddings$filt`, every CTE name prefixed with `p` — the
     * kmeansCtes recipe, instantiable twice in one query (stale train
@@ -180,10 +151,10 @@ object IndexQueries {
        |${p}c0 AS (
        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, dv AS cv
        |  FROM ${p}v ORDER BY vec_id LIMIT 4),
-       |${kmAssignSql(s"${p}vn", s"${p}a1", s"${p}c0")},
-       |${kmUpdateSql(s"${p}vn", s"${p}s1", s"${p}a1", s"${p}c0", s"${p}c1")},
-       |${kmAssignSql(s"${p}vn", s"${p}a2", s"${p}c1")},
-       |${kmUpdateSql(s"${p}vn", s"${p}s2", s"${p}a2", s"${p}c1", s"${p}c2")}""".stripMargin
+       |${kmeansAssignSql(s"${p}a1", s"${p}c0", s"${p}vn", "t")},
+       |${kmeansUpdateSql(s"${p}s1", s"${p}a1", s"${p}c0", s"${p}c1", s"${p}vn", "t")},
+       |${kmeansAssignSql(s"${p}a2", s"${p}c1", s"${p}vn", "t")},
+       |${kmeansUpdateSql(s"${p}s2", s"${p}a2", s"${p}c1", s"${p}c2", s"${p}vn", "t")}""".stripMargin
 
   /** Cosine cell-assignment CTE (the IVF search rule, ties to lower
     * cid) against centroid set `cc` from vector CTE `vn`. */
@@ -271,9 +242,10 @@ object IndexQueries {
         k = 4, iters = 2)
       // history seeds the standing index; the batch encodes against the
       // STANDING codebook and folds in exactly-once (the final-batch
-      // replay is the redelivery; its marker skip keeps the codes single)
-      val idxPath = graft.Tmp.dir("graft-q223").toString + "/codes"
-      val Seq(codes) = Streams.foldOnce(Seq(batch), Seq(Streams.Snapshot(idxPath,
+      // replay is the redelivery; the commit guard skips it, so the codes
+      // stay single)
+      val Seq(codes) = Streams.foldOnce(graft.Tmp.dir("graft-q223").toString,
+          Seq(batch), Seq(Streams.Snapshot("codes",
           Similarity.ivfEncode(hist, "vec_id", "embedding", stale)))) {
         case (b, _, Seq(s)) =>
           Seq(s.unionByName(Similarity.ivfEncode(b, "vec_id", "embedding", stale)))
@@ -543,8 +515,6 @@ object IndexQueries {
       val hist = e.filter(col("vec_id") % 3 =!= 0)
       val (_, stale) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
         k = 4, iters = 2)
-      val root = graft.Tmp.dir("graft-q226").toString
-      val idxPath = s"$root/codes"
       // The fold is per-row encode + union (no per-batch output), so
       // the final index is independent of batch MEMBERSHIP — the
       // residue split vec_id ≡ 0 / ≡ 3 (mod 6) over the feed.
@@ -553,10 +523,10 @@ object IndexQueries {
       // Segment-append fold (round 21): code rows are append-only (each
       // vec_id arrives once) — commit the batch's encode only, instead
       // of re-writing the full code table every micro-batch.
-      val Seq(codes) = Streams.foldOnce(Seq(
+      val Seq(codes) = Streams.foldOnce(graft.Tmp.dir("graft-q226").toString, Seq(
           feedDf.filter(col("vec_id") % 6 === 0),
           feedDf.filter(col("vec_id") % 6 === 3)),
-          Seq(Streams.Segments(idxPath,
+          Seq(Streams.Segments("codes",
             Similarity.ivfEncode(hist, "vec_id", "embedding", stale)))) {
         (batch, _, _) => Seq(Similarity.ivfEncode(batch, "vec_id", "embedding", stale))
       }
@@ -1122,8 +1092,6 @@ object IndexQueries {
         .select(col("s").as("thr"))
         .localCheckpoint()
       // test rows fold in two vec_id-ordered micro-batches
-      val root = graft.Tmp.dir("graft-q232").toString
-      val resPath = s"$root/res"
       // The oracle pins batch membership to the sorted-half split
       // (rn ≤ n div 2 over vec_id), reproduced here via the exact
       // ⌊n∕2⌋-th-smallest vec_id cutoff — the cutoff probe is
@@ -1138,10 +1106,10 @@ object IndexQueries {
       // segment-append fold (round 21): one result row per batch is
       // append-only — commit the delta only
       import spark.implicits._
-      val Seq(res) = Streams.foldOnce(Seq(
+      val Seq(res) = Streams.foldOnce(graft.Tmp.dir("graft-q232").toString, Seq(
           feedDf.filter(col("vec_id") <= cutoff),
           feedDf.filter(col("vec_id") > cutoff)),
-          Seq(Streams.Segments(resPath,
+          Seq(Streams.Segments("res",
             Seq.empty[(Long, Long, Long, Double, Boolean)]
               .toDF("batch", "n", "n_flagged", "coverage", "breach")))) {
         (batch, bid, _) => Seq(scores(batch)
@@ -1411,9 +1379,8 @@ object IndexQueries {
           .cast("long").as("code1"))
       // history seeds the standing index; the batch folds in through
       // Streams.foldOnce, whose final-batch replay is its redelivery
-      val idxPath = graft.Tmp.dir("graft-q236").toString + "/codes"
-      val Seq(folded) = Streams.foldOnce(Seq(batch),
-          Seq(Streams.Snapshot(idxPath, codes(hist)))) {
+      val Seq(folded) = Streams.foldOnce(graft.Tmp.dir("graft-q236").toString,
+          Seq(batch), Seq(Streams.Snapshot("codes", codes(hist)))) {
         case (b, _, Seq(s)) => Seq(s.unionByName(codes(b)))
       }
       folded.select("vec_id", "code0", "code1")
@@ -1664,7 +1631,6 @@ object IndexQueries {
       val (_, cb) = Similarity.kmeansLloyd(hist, "vec_id", "embedding",
         k = 4, iters = 2)
       val root = graft.Tmp.dir("graft-q241").toString
-      val idxPath = s"$root/codes"
       // Batch membership of the adds halves is irrelevant to the
       // post-compact snapshot (each add id appears once; upserts and
       // tombstones arrive in strictly later batches and IndexLog keeps
@@ -1683,10 +1649,10 @@ object IndexQueries {
       // batch commits only its delta rows; the standing log is the
       // union of retained segments. The full-rewrite fold re-wrote the
       // whole log every batch.
-      val Seq(log) = Streams.foldOnce(Seq(
+      val Seq(log) = Streams.foldOnce(root, Seq(
           adds.filter(col("vec_id") % 6 === 0),
           adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
-          dels), Seq(Streams.Segments(idxPath, IndexLog.initial(
+          dels), Seq(Streams.Segments("codes", IndexLog.initial(
             Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id")))) {
         (b, bid, _) =>
         val ups = IndexLog.upserts(
@@ -1698,11 +1664,12 @@ object IndexQueries {
         Seq(ups.unionByName(tmb))
       }
       // the compaction pass: squash the segment log (the union of every
-      // retained version), publish as the next version; the post-compact
-      // snapshot must equal the one-shot encode of the live corpus (the
-      // oracle's side). Readers from here on use the latest version only.
-      graft.Meta.Versioned.write(IndexLog.compact(log, "vec_id"), idxPath)
-      graft.Meta.Versioned.read(spark, idxPath)
+      // committed segment) and publish it as the table's next commit,
+      // which names the squashed version alone; the post-compact snapshot
+      // must equal the one-shot encode of the live corpus (the oracle's
+      // side).
+      graft.Meta.Versioned.publishAll(root, Seq("codes" -> IndexLog.compact(log, "vec_id")))
+      graft.Meta.Versioned.readCommitted(spark, root, "codes")
         .select(col("vec_id"), col("cid"))
     },
 
@@ -1924,8 +1891,6 @@ object IndexQueries {
               .cast(I).as("s"))
         pairs.unionByName(dims)
       }
-      val root = graft.Tmp.dir("graft-q248").toString
-      val statePath = s"$root/moments"
       // Batch membership: batch 0 = vec_id ≡ 0 (mod 4), batch 1 = the
       // remaining evens.
       val feedDf = e.select(col("vec_id"), col("embedding"))
@@ -1936,10 +1901,10 @@ object IndexQueries {
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
       // re-writing the full dims+pairs grid.
-      val Seq(segs) = Streams.foldOnce(Seq(
+      val Seq(segs) = Streams.foldOnce(graft.Tmp.dir("graft-q248").toString, Seq(
           feedDf.filter(col("vec_id") % 4 === 0),
           feedDf.filter(col("vec_id") % 4 =!= 0)),
-          Seq(Streams.Segments(statePath,
+          Seq(Streams.Segments("moments",
             moments(e.filter(col("vec_id") % 2 === 1))))) {
         (batch, _, _) => Seq(moments(batch))
       }

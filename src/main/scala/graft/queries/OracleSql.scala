@@ -278,26 +278,33 @@ object OracleSql {
        |      ORDER BY cos DESC, neighbor_id) AS rn
        |  FROM es) z WHERE rn <= 5)""".stripMargin
 
+  /** `vn` read under alias `t` in a FROM list: the bare CTE name when
+    * the alias is the name itself. */
+  private def aliased(vn: String, t: String) = if (t == vn) vn else s"$vn $t"
+
   /** Euclidean argmin assignment CTE (kmeans): nearest of `cents` per
-    * vector from the `vn` CTE, ties to the lower cluster id. */
-  private[queries] def kmeansAssignSql(name: String, cents: String) =
+    * vector from the `vn` CTE (read as `t`), ties to the lower cluster
+    * id. A free `vn` lets two training chains coexist in one query. */
+  private[queries] def kmeansAssignSql(name: String, cents: String,
+      vn: String = "vn", t: String = "vn") =
     s"""$name AS (
        |  SELECT vec_id, cluster FROM (
-       |    SELECT vn.vec_id, c.cluster,
-       |      row_number() OVER (PARTITION BY vn.vec_id
-       |        ORDER BY vn.vn2 + ${dot64Sql("c.cv", "c.cv")}
-       |          - 2.0 * ${dot64Sql("vn.dv", "c.cv")}, c.cluster) AS rn
-       |    FROM vn, $cents c) x WHERE rn = 1)""".stripMargin
+       |    SELECT $t.vec_id, c.cluster,
+       |      row_number() OVER (PARTITION BY $t.vec_id
+       |        ORDER BY $t.vn2 + ${dot64Sql("c.cv", "c.cv")}
+       |          - 2.0 * ${dot64Sql(s"$t.dv", "c.cv")}, c.cluster) AS rn
+       |    FROM ${aliased(vn, t)}, $cents c) x WHERE rn = 1)""".stripMargin
 
   /** Centroid-update CTE pair (kmeans): DECIMAL(30,12) component means
-    * of `assign`'s clusters; empty clusters keep `prev`'s centroid. */
+    * of `assign`'s clusters over the `vn` CTE (read as `t`); empty
+    * clusters keep `prev`'s centroid. */
   private[queries] def kmeansUpdateSql(sums: String, assign: String,
-      prev: String, next: String) =
+      prev: String, next: String, vn: String = "vn", t: String = "vn") =
     s"""$sums AS (
        |  SELECT a.cluster, i,
-       |    CAST(sum(CAST(vn.dv[i] AS DECIMAL(30,12))) AS DOUBLE)
+       |    CAST(sum(CAST($t.dv[i] AS DECIMAL(30,12))) AS DOUBLE)
        |      / count(*) AS m
-       |  FROM $assign a JOIN vn USING (vec_id),
+       |  FROM $assign a JOIN ${aliased(vn, t)} USING (vec_id),
        |    unnest(range(1, 65)) u(i)
        |  GROUP BY 1, 2),
        |$next AS (

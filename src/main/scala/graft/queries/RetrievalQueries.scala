@@ -346,9 +346,6 @@ object RetrievalQueries {
     Q(
       "q286_stream_phrase_index", phraseSearchOracleSql) { (spark, dir) =>
       import graft.streaming.Streams
-      val root = graft.Tmp.dir("graft-q286").toString
-      val postPath = s"$root/postings"
-      val cntPath = s"$root/tricnt"
       val feedDf = Tables.documents(spark, dir).select("doc_id", "text")
       def toks(df: org.apache.spark.sql.DataFrame) =
         df.select(col("doc_id"), Text.tokens(col("text")).as("t"))
@@ -359,11 +356,11 @@ object RetrievalQueries {
       // The full-rewrite fold re-wrote the corpus-token-sized postings
       // table every micro-batch; now a batch writes O(|batch|).
       // Seeds: an empty index and an empty count state.
-      val Seq(posts, counts) = Streams.foldOnce(Seq(
+      val Seq(posts, counts) = Streams.foldOnce(graft.Tmp.dir("graft-q286").toString, Seq(
           feedDf.filter(col("doc_id") % 2 === 0),
           feedDf.filter(col("doc_id") % 2 =!= 0)),
-          Seq(Streams.Segments(postPath, postings(toks(feedDf)).limit(0)),
-            Streams.Segments(cntPath, ngramCounts(toks(feedDf), 3).limit(0)))) {
+          Seq(Streams.Segments("postings", postings(toks(feedDf)).limit(0)),
+            Streams.Segments("tricnt", ngramCounts(toks(feedDf), 3).limit(0)))) {
         (batch, _, _) =>
         // one tokenize+posexplode of the batch, materialized once and
         // read by both commits (the postings append and the trigram-

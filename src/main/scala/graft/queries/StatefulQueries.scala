@@ -405,8 +405,8 @@ object StatefulQueries {
     // aggregate of v2, same contract as q100. Per-batch cost is
     // |micro-batch| + |groups|; the orders snapshot is never rescanned.
     // Delivery (round 8): a redelivered batch must not reach a sum fold,
-    // which is NOT idempotent, so each fold commits exactly-once under
-    // foldOnce's txn markers, whose final-batch replay the oracle match pins
+    // which is NOT idempotent, so each fold commits exactly-once through
+    // foldOnce's manifest commits, whose final-batch replay the oracle match pins
     // (q115 pins the idempotent sketch twin; this pins the
     // non-idempotent one).
     Q(
@@ -416,8 +416,6 @@ object StatefulQueries {
         |FROM orders WHERE o_orderkey % 11 <> 0
         |GROUP BY o_custkey""".stripMargin) { (spark, dir) =>
       import graft.ops.Incremental
-      val root = graft.Tmp.dir("graft-q103").toString
-      val aggPath = s"$root/agg"
       val (_, v1, v2) = AnalyticsQueries.orderVersions(spark, dir)
       // two deterministic key-parity batches (update pre/post images of
       // one key may land in DIFFERENT batches; the abelian fold absorbs
@@ -431,8 +429,9 @@ object StatefulQueries {
       // seed: direct aggregate of v1. The feed diffs the two frames
       // directly (snapshotDiff — q100 covers the committed-chain path);
       // only the MAINTAINED aggregate needs the version-chain machinery.
-      val Seq(agg) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
-          aggPath, Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice")))) {
+      val Seq(agg) = Streams.foldOnce(graft.Tmp.dir("graft-q103").toString,
+          Seq(even, odd), Seq(Streams.Snapshot(
+          "agg", Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
           standing, batch, Seq("o_custkey"), "o_totalprice"))
       }
@@ -445,9 +444,9 @@ object StatefulQueries {
     // sketch twin of q103's sum fold, with an ALGEBRAIC replay shield
     // on top of the transactional one: bottom-k union is idempotent as
     // well as abelian, so a whole batch redelivered under a NEW batch
-    // id (which no txn marker can recognise) is absorbed by the math
+    // id (which no commit guard can recognise) is absorbed by the math
     // itself (byte-level merge idempotence pinned in KmvSpec), where
-    // q103's non-idempotent sums rely on the markers alone.
+    // q103's non-idempotent sums rely on the commit guard alone.
     // The query stages
     // one batch twice deliberately; the streamed estimate must still EQUAL the
     // one-shot direct sketch bit for bit (bottom-k of a union is
@@ -466,8 +465,6 @@ object StatefulQueries {
          |SELECT source, CAST(count(*) AS BIGINT) AS exact_ndv,
          |  TRUE AS est_ok, TRUE AS rolled_matches
          |FROM sh GROUP BY source""".stripMargin) { (spark, dir) =>
-      val root = graft.Tmp.dir("graft-q115").toString
-      val skPath = s"$root/sketches"
       val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
       def sketchOf(df: DataFrame) =
         Dedup.withShingleHashes(df, "text", 3)
@@ -476,13 +473,13 @@ object StatefulQueries {
           .agg(call_function("graft_kmv_sketch", col("h"), lit(1024)).as("sk"))
       // Batch membership: key parity, with the first half staged
       // verbatim as its own batch — it arrives under a NEW batch id, so
-      // the txn markers cannot skip it and KMV merge, idempotent set
+      // the commit guard cannot skip it and KMV merge, idempotent set
       // union, must absorb the doubled batch. The seed is an empty
       // standing table.
       val even = docs.filter(col("doc_id") % 2 === 0)
-      val Seq(sketches) = Streams.foldOnce(Seq(even, even,
-          docs.filter(col("doc_id") % 2 =!= 0)),
-          Seq(Streams.Snapshot(skPath, sketchOf(docs.limit(0))))) {
+      val Seq(sketches) = Streams.foldOnce(graft.Tmp.dir("graft-q115").toString,
+          Seq(even, even, docs.filter(col("doc_id") % 2 =!= 0)),
+          Seq(Streams.Snapshot("sketches", sketchOf(docs.limit(0))))) {
         case (batch, _, Seq(sk)) =>
           Seq(sk.unionByName(sketchOf(batch))
             .groupBy("source")
@@ -525,8 +522,6 @@ object StatefulQueries {
     Q(
       "q124_stream_moments", momentsOracleSql) { (spark, dir) =>
       import graft.ops.Incremental
-      val root = graft.Tmp.dir("graft-q124").toString
-      val aggPath = s"$root/agg"
       val (_, v1, v2) = AnalyticsQueries.orderVersions(spark, dir)
       // key-parity batches; foldOnce replays the last one (Σv² doubling
       // would be visible in var_price, so the oracle match pins
@@ -537,8 +532,9 @@ object StatefulQueries {
           col("o_totalprice"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("o_orderkey") % 2 === 0),
         feedDf.filter(col("o_orderkey") % 2 =!= 0))
-      val Seq(m) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
-          aggPath, Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")))) {
+      val Seq(m) = Streams.foldOnce(graft.Tmp.dir("graft-q124").toString,
+          Seq(even, odd), Seq(Streams.Snapshot(
+          "agg", Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainMoments(
           standing, batch, Seq("o_custkey"), "o_totalprice"))
       }
@@ -561,8 +557,8 @@ object StatefulQueries {
     // table maintained from the v1→v2 change feed instead of recomputed
     // — the standing data-observability dashboard shape. The per-cell
     // (cnt, Σ n_chars) fold is Incremental.maintainSumCount through
-    // Streams.foldOnce (batchId txn markers, the exactly-once contract,
-    // with the final batch replayed as the proof), and the presentation
+    // Streams.foldOnce (one manifest commit per batch id, the
+    // exactly-once contract, with the final batch replayed as the proof), and the presentation
     // joins the maintained table
     // against the direct v1 aggregate. The oracle IS q127's SQL — the
     // streamed maintenance must land on the recompute's exact values.
@@ -570,8 +566,6 @@ object StatefulQueries {
       "q133_stream_drift",
       driftSql) { (spark, dir) =>
       import graft.ops.Incremental
-      val root = graft.Tmp.dir("graft-q133").toString
-      val aggPath = s"$root/agg"
       val docs = Tables.documents(spark, dir)
         .select("doc_id", "lang", "source", "n_chars")
       val v1 = docs.filter(col("doc_id") % 10 =!= 0)
@@ -585,8 +579,9 @@ object StatefulQueries {
           col("n_chars"), col("change_type"))
       val (even, odd) = (feedDf.filter(col("doc_id") % 2 === 0),
         feedDf.filter(col("doc_id") % 2 =!= 0))
-      val Seq(agg) = Streams.foldOnce(Seq(even, odd), Seq(Streams.Snapshot(
-          aggPath, Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars")))) {
+      val Seq(agg) = Streams.foldOnce(graft.Tmp.dir("graft-q133").toString,
+          Seq(even, odd), Seq(Streams.Snapshot(
+          "agg", Incremental.aggSumCount(v1, Seq("lang", "source"), "n_chars")))) {
         case (batch, _, Seq(standing)) => Seq(Incremental.maintainSumCount(
           standing, batch, Seq("lang", "source"), "n_chars"))
       }
@@ -631,9 +626,6 @@ object StatefulQueries {
       "q165_stream_novelty",
       noveltyOracleSql("WHERE doc_id % 3 = 0")) {
       (spark, dir) =>
-      val root = graft.Tmp.dir("graft-q165").toString
-      val ownPath = s"$root/own"
-      val resPath = s"$root/res"
       val docs = Tables.documents(spark, dir)
       val hvAll = Dedup.withShingleHashes(
         docs.select("doc_id", "text"), "text", 3)
@@ -654,17 +646,18 @@ object StatefulQueries {
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = Streams.halfCutoffByKey(feedDf, "doc_id")
       // The fold materializes two localCheckpoints, so foldOnce's replay
-      // guard (skip a batch both tables already record) is what keeps
+      // guard (skip a batch the newest commit already records) is what keeps
       // the final-batch replay from paying a full shingle+fold pass.
       // own stays a full-rewrite fold: a batch doc with a smaller id
       // can STEAL ownership of a standing hash (least() below), so the
       // table is a keyed upsert, not an append-only log. res IS
       // append-only (per-doc scores, batch doc sets disjoint) — the
       // round-21 segment-append shape: commit the delta only.
-      val Seq(_, res) = Streams.foldOnce(Seq(feedDf.filter(col("doc_id") <= cutoff),
+      val Seq(_, res) = Streams.foldOnce(graft.Tmp.dir("graft-q165").toString,
+          Seq(feedDf.filter(col("doc_id") <= cutoff),
           feedDf.filter(col("doc_id") > cutoff)),
-          Seq(Streams.Snapshot(ownPath, standing0),
-            Streams.Segments(resPath, Seq.empty[(Long, Long, Long, Double)]
+          Seq(Streams.Snapshot("own", standing0),
+            Streams.Segments("res", Seq.empty[(Long, Long, Long, Double)]
               .toDF("doc_id", "n_shingles", "n_novel", "novelty")))) {
         case (batch, _, Seq(standing, _)) =>
         val bsh = Dedup.withShingleHashes(batch, "text", 3)
@@ -698,21 +691,18 @@ object StatefulQueries {
     // state (h → owner site; strings re-derived from the lake at
     // hash-hits only, so state stays ~24 B/window — the scale story on
     // Dedup.exactSubstrBatch) and appends its rewrite + new owners
-    // with exactly-once txn markers (Streams.foldOnce). Ascending
+    // in one exactly-once manifest commit (Streams.foldOnce). Ascending
     // arrival makes per-batch ownership equal the global (doc, pos)
     // order, so the streamed result is BIT-identical to q277's one-shot
     // rewrite — the oracle IS q277's SQL. foldOnce replays the final
-    // batch; its guard finds both tables' markers and skips the step,
-    // so what the oracle pins is the marker skip. (Re-applying the fold
+    // batch; its guard finds the batch's commit and skips the step,
+    // so what the oracle pins is the guard's skip. (Re-applying the fold
     // would also be an algebraic no-op — every window matches state,
     // owner sites are excluded from cover, the owner append is empty —
     // but the replay never executes it.)
     Q(
       "q280_stream_exact_substring",
       exactSubstrOracleSql) { (spark, dir) =>
-      val root = graft.Tmp.dir("graft-q280").toString
-      val ownPath = s"$root/own"
-      val resPath = s"$root/res"
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
       import spark.implicits._
       // doc_id is the documents PK — distinctness asserted inside
@@ -727,11 +717,12 @@ object StatefulQueries {
       // and a corpus rewrite per trigger). exactSubstrBatch materializes
       // its kernels eagerly (caches + localCheckpoints), so foldOnce's
       // replay guard is what spares the final-batch replay that work.
-      val Seq(_, res) = Streams.foldOnce(Seq(docs.filter(col("doc_id") <= cutoff),
+      val Seq(_, res) = Streams.foldOnce(graft.Tmp.dir("graft-q280").toString,
+          Seq(docs.filter(col("doc_id") <= cutoff),
           docs.filter(col("doc_id") > cutoff)),
-          Seq(Streams.Segments(ownPath, Seq.empty[(Long, Long, Int)]
+          Seq(Streams.Segments("own", Seq.empty[(Long, Long, Int)]
               .toDF("h", "own_id", "own_spos")),
-            Streams.Segments(resPath, Seq.empty[(Long, String, Long, Long)]
+            Streams.Segments("res", Seq.empty[(Long, String, Long, Long)]
               .toDF("doc_id", "clean_text", "n_tokens", "n_removed")))) {
         case (batch, _, Seq(own, _)) =>
         val (rewritten, newOwners) =
@@ -763,8 +754,6 @@ object StatefulQueries {
          |FROM toks, tot
          |GROUP BY term, n_total
          |HAVING count(*) * 200 > n_total""".stripMargin) { (spark, dir) =>
-      val root = graft.Tmp.dir("graft-q121").toString
-      val cmPath = s"$root/cm"; val candPath = s"$root/cands"
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
       def toksOf(df: DataFrame) =
         df.select(explode(Text.tokens(col("text"))).as("term"))
@@ -775,20 +764,20 @@ object StatefulQueries {
           .agg(call_function("graft_freq_sketch", col("term"), lit(400)).as("c"))
           .select(explode(col("c")).as("term"))
       // Key-parity batch membership. CM merge is elementwise ADDITION
-      // — a replayed batch would double its counts — so both folds
-      // commit exactly-once through foldOnce (txn markers, round 8). The two tables are separate
-      // commit points: a crash between them replays the batch, the cm
-      // commit no-ops on its marker, and only the missing cands commit
-      // applies.
+      // — a replayed batch would double its counts — so both tables
+      // commit exactly-once through foldOnce, together in one manifest
+      // commit per batch: a crash before that commit leaves neither
+      // table moved, and the re-run applies the batch to both.
       // Segment-append folds (round 21): CM merge is associative
       // elementwise addition and the candidate set is a distinct
       // union — both resolve order-free from per-batch segments, so
       // each batch commits only its OWN sketch / candidate rows
       // and the standing read+rewrite per trigger disappears.
-      val Seq(cms, candSegs) = Streams.foldOnce(Seq(docs.filter(col("doc_id") % 2 === 0),
+      val Seq(cms, candSegs) = Streams.foldOnce(graft.Tmp.dir("graft-q121").toString,
+          Seq(docs.filter(col("doc_id") % 2 === 0),
           docs.filter(col("doc_id") % 2 =!= 0)),
-          Seq(Streams.Segments(cmPath, cmOf(docs.limit(0))),
-            Streams.Segments(candPath, candsOf(docs.limit(0))))) {
+          Seq(Streams.Segments("cm", cmOf(docs.limit(0))),
+            Streams.Segments("cands", candsOf(docs.limit(0))))) {
         (batch, _, _) => Seq(cmOf(batch), candsOf(batch))
       }
       // resolve the segment logs: one CM merge over all per-batch
@@ -821,7 +810,7 @@ object StatefulQueries {
     // the continuous form of the exact distinct-users cube, with q115's
     // ALGEBRAIC replay shield (page-OR is idempotent as well as
     // abelian, so a whole batch redelivered under a new batch id, which
-    // no txn marker recognises, is absorbed by the math). Where the KMV twin pins
+    // no commit guard recognises, is absorbed by the math). Where the KMV twin pins
     // bounds booleans, this pins EQUALITY: the streamed bitmap must
     // match the one-shot corpus bitmap BYTE FOR BYTE (page-sorted
     // serialization), and the count must equal COUNT(DISTINCT) — the
@@ -832,19 +821,17 @@ object StatefulQueries {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  TRUE AS rolled_matches
         |FROM events GROUP BY 1""".stripMargin) { (spark, dir) =>
-      val root = graft.Tmp.dir("graft-q184").toString
-      val bmPath = s"$root/bitmaps"
       val ev = Tables.events(spark, dir).select("event_id", "event_type", "user_id")
       def bitmapOf(df: DataFrame) =
         df.groupBy("event_type")
           .agg(call_function("graft_bitmap_sketch", col("user_id")).as("bm"))
       // Key-parity batch membership, with the first half staged TWICE
-      // — the copy arrives under a new batch id, so no txn marker
-      // skips it and OR must absorb it
+      // — the copy arrives under a new batch id, so the commit guard
+      // does not skip it and OR must absorb it
       val even = ev.filter(col("event_id") % 2 === 0)
-      val Seq(bitmaps) = Streams.foldOnce(Seq(even, even,
-          ev.filter(col("event_id") % 2 =!= 0)),
-          Seq(Streams.Snapshot(bmPath, bitmapOf(ev.limit(0))))) {
+      val Seq(bitmaps) = Streams.foldOnce(graft.Tmp.dir("graft-q184").toString,
+          Seq(even, even, ev.filter(col("event_id") % 2 =!= 0)),
+          Seq(Streams.Snapshot("bitmaps", bitmapOf(ev.limit(0))))) {
         case (batch, _, Seq(bm)) =>
           Seq(bm.unionByName(bitmapOf(batch))
             .groupBy("event_type")
@@ -1015,17 +1002,15 @@ object StatefulQueries {
       import graft.ops.Sample
       val n = 64
       val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")
-      val root = graft.Tmp.dir("graft-q267").toString
-      val path = s"$root/sample"
       // The top-(n+1) priority fold is an associative merge
       // (top-of-tops == top-of-all), so batch MEMBERSHIP is irrelevant
       // to the final sample — the residue split doc_id ≡ 0 ∕ ≡ 3
       // (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      val Seq(sample) = Streams.foldOnce(Seq(
+      val Seq(sample) = Streams.foldOnce(graft.Tmp.dir("graft-q267").toString, Seq(
           feedDf.filter(col("doc_id") % 6 === 0),
           feedDf.filter(col("doc_id") % 6 === 3)),
-          Seq(Streams.Snapshot(path, Sample.priorityTopK(
+          Seq(Streams.Snapshot("sample", Sample.priorityTopK(
             docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "n_chars", n)))) {
         case (batch, _, Seq(standing)) =>
           val bt = Sample.priorityTopK(batch,
@@ -1098,16 +1083,14 @@ object StatefulQueries {
       import org.apache.spark.sql.expressions.Window
       val C1 = -143100844L; val C2 = 336472237L; val A9 = 2944438979L
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      val root = graft.Tmp.dir("graft-q270").toString
-      val path = s"$root/sprt"
       import spark.implicits._
       // Batch membership: batch b = doc_id ≡ b (mod 4), exactly the
       // oracle's blog CTE.
       val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
       // segment-append fold (round 21): one (bid, n, k) row per batch
       // is append-only — commit the delta only
-      val Seq(log) = Streams.foldOnce(batches,
-          Seq(Streams.Segments(path,
+      val Seq(log) = Streams.foldOnce(graft.Tmp.dir("graft-q270").toString, batches,
+          Seq(Streams.Segments("sprt",
             Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k")))) {
         (batch, bid, _) => Seq(batch
           .select(col("doc_id"),
@@ -1145,25 +1128,23 @@ object StatefulQueries {
     // doc lands in the current open window if it fits). Exactly-once
     // is doubly shielded: rows at or below the shard's standing max_id
     // drop up front (a redelivery that reached the fold would be an
-    // algebraic no-op) AND the txn markers of Streams.foldOnce skip
+    // algebraic no-op) AND the commit guard of Streams.foldOnce skips
     // it. foldOnce replays the final batch, and its guard skips the
-    // step on the markers before the fold runs, so what the oracle
-    // pins is the marker skip. Ascending arrival makes the streamed state
+    // step on the batch's commit before the fold runs, so what the oracle
+    // pins is the guard's skip. Ascending arrival makes the streamed state
     // BIT-identical to the one-shot q299 fold, so the oracle IS q299's
     // SQL — the row-for-row hash match is the fold == rebuild proof.
     Q(
       "q307_stream_packing",
       packingOracleSql) { (spark, dir) =>
       import graft.ops.Packing
-      val root = graft.Tmp.dir("graft-q307").toString
-      val stPath = s"$root/state"
       val t = Tables.documents(spark, dir)
         .select(col("source"), col("doc_id"),
           size(graft.ops.Text.tokens(col("text"))).cast("long").as("ntok"))
       val cutoff = Streams.halfCutoffByKey(t, "doc_id")
-      val Seq(state) = Streams.foldOnce(Seq(t.filter(col("doc_id") <= cutoff),
-          t.filter(col("doc_id") > cutoff)),
-          Seq(Streams.Snapshot(stPath, Packing.emptyState(spark)))) {
+      val Seq(state) = Streams.foldOnce(graft.Tmp.dir("graft-q307").toString,
+          Seq(t.filter(col("doc_id") <= cutoff), t.filter(col("doc_id") > cutoff)),
+          Seq(Streams.Snapshot("state", Packing.emptyState(spark)))) {
         case (batch, _, Seq(st)) =>
           Seq(Packing.packFold(st, batch, 512L))
       }

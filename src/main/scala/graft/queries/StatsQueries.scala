@@ -674,16 +674,14 @@ object StatsQueries {
       "q272_stream_calibration_fold", isotonicOracleSql) { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
         .select("doc_id", "n_chars", "text")
-      val root = graft.Tmp.dir("graft-q272").toString
-      val path = s"$root/bins"
       import spark.implicits._
       // Batch membership: batch b = doc_id ≡ b (mod 4).
       // Segment-append fold (round 21): per-bin (n, pos) counts are
       // additive long sums — commit the batch's partial only,
       // re-reduce the retained segments at read.
-      val Seq(bins) = graft.streaming.Streams.foldOnce(
+      val Seq(bins) = graft.streaming.Streams.foldOnce(graft.Tmp.dir("graft-q272").toString,
           (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b)),
-          Seq(graft.streaming.Streams.Segments(path,
+          Seq(graft.streaming.Streams.Segments("bins",
             Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos")))) {
         (batch, _, _) => Seq(lengthBinnedGate(batch))
       }

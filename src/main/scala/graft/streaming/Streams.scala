@@ -150,43 +150,37 @@ object Streams {
     lastBid
   }
 
-  /** The txn appId every [[foldOnce]] commit carries. Markers are per
-    * table path, so one constant is enough. */
-  private[graft] val FoldAppId = "fold"
-
-  /** A table a [[foldOnce]] maintains: a `Meta.Versioned` chain at
-    * `path` whose first version is `seed`. The seed's schema, made
-    * nullable, is pinned: every version is read with it, so no read
-    * infers a schema from the files. */
+  /** A table a [[foldOnce]] maintains: a `Meta.Versioned` table named
+    * `name` under the fold's root, whose first version is `seed`. The
+    * seed's schema, made nullable, is pinned: every version is read with
+    * it, so no read infers a schema from the files. */
   sealed trait FoldTable {
-    def path: String
+    def name: String
     def seed: DataFrame
-    /** The seed commit's appId; it records the table's shape on disk. */
-    private[graft] def shape: String
     private[graft] def pinned: StructType = seed.schema.toNullable
-    /** The standing state `step` sees, read with [[pinned]]. */
-    private[graft] def standing: DataFrame
+    /** The versions the manifest names once version `staged` commits
+      * over the standing `committed` ones. */
+    private[graft] def next(committed: Seq[Long], staged: Long): Seq[Long]
   }
 
   /** Each batch rewrites the table; the standing state is its latest
     * version. */
-  final case class Snapshot(path: String, seed: DataFrame) extends FoldTable {
-    private[graft] def shape = "snapshot"
-    private[graft] def standing =
-      Meta.Versioned.read(seed.sparkSession, path, schema = Some(pinned))
+  final case class Snapshot(name: String, seed: DataFrame) extends FoldTable {
+    private[graft] def next(committed: Seq[Long], staged: Long) = Seq(staged)
   }
 
   /** An append-only segment log: each batch commits only its delta, and
-    * the standing state is the union of every version. */
-  final case class Segments(path: String, seed: DataFrame) extends FoldTable {
-    private[graft] def shape = Meta.Versioned.SegmentsAppId
-    private[graft] def standing =
-      Meta.Versioned.readAll(seed.sparkSession, path, Some(pinned))
+    * the standing state is the union of every committed version. A batch
+    * writes O(|delta|), not a rewrite of the standing table (postings,
+    * owner rows, rewrite results, additive count deltas). */
+  final case class Segments(name: String, seed: DataFrame) extends FoldTable {
+    private[graft] def next(committed: Seq[Long], staged: Long) = committed :+ staged
   }
 
   /** Fails unless `f` has `t`'s pinned column names, order and types,
-    * nullability aside, naming the table and the first column off. */
-  private def conform(t: FoldTable, f: DataFrame): Unit = {
+    * nullability aside, naming the table at `path` and the first column
+    * off. */
+  private def conform(path: String, t: FoldTable, f: DataFrame): Unit = {
     val (want, got) = (t.pinned.fields.lift, f.schema.toNullable.fields.lift)
     def key(c: Option[StructField]) = c.map(c => (c.name, c.dataType))
     def show(c: Option[StructField]) =
@@ -194,62 +188,74 @@ object Streams {
     (0 until (t.pinned.length max f.schema.length))
       .find(i => key(want(i)) != key(got(i)))
       .foreach { i =>
-        throw new IllegalArgumentException(s"fold table ${t.path}: column " +
+        throw new IllegalArgumentException(s"fold table $path: column " +
           s"${want(i).orElse(got(i)).get.name} is ${show(got(i))}, pinned ${show(want(i))}")
       }
   }
 
   /** The exactly-once micro-batch fold (the Delta `txn` pattern of an
-    * idempotent `foreachBatch` write) over the declared `tables`: batch
-    * i of `batches` (non-empty) is applied under batch id i, 4 shuffle
-    * partitions wide (a batch is a few thousand rows), and the
-    * `Meta.Versioned.writeOnce` markers are the only bookkeeping, so a
-    * re-run on the same tables resumes where they stop. `step` gets the
-    * caller's frame itself, so batches must be deterministic: a step
-    * that reads its batch twice evaluates it twice.
+    * idempotent `foreachBatch` write) over the declared `tables`, which
+    * live under `root` by name and commit together through its
+    * `Meta.Versioned` manifest. Batch i of `batches` (non-empty) is
+    * applied under batch id i, 4 shuffle partitions wide (a batch is a
+    * few thousand rows). `step` gets the caller's frame itself, so
+    * batches must be deterministic: a step that reads its batch twice
+    * evaluates it twice.
     *
-    * A table whose path has no version yet is first seeded with
-    * `Meta.Versioned.writeOnce(seed, path, shape, 0)`, so a crash
-    * mid-seed leaves only staging debris; an existing table is never
-    * reseeded. `step(batch, bid, standing)` gets each table's standing
-    * state, in order, and returns one frame per table. Every frame must
-    * match its table's pinned schema before any is committed with
-    * `Meta.Versioned.writeOnce(frame, path, FoldAppId, bid)`.
+    * A root with no commit yet is seeded first: every table stages its
+    * `seed` and one manifest claims them together as `_commit=0`; an
+    * existing root is never reseeded. `step(batch, bid, standing)` gets
+    * each table's standing state, in order, read through the newest
+    * manifest with its pinned schema, and returns one frame per table.
+    * Every frame must match its table's pinned schema before any is
+    * staged. Batch i then stages one version per table and claims
+    * `_commit=<i+1>`, which names a Snapshot's new version and a
+    * Segments table's committed versions plus the new one. So the newest
+    * commit id is the number of batches applied, and a crash before the
+    * claim leaves only unnamed versions, invisible to every reader.
     *
-    * Replay guard: a `(batch, bid)` whose every table already records
-    * `bid` skips `step` outright, so a re-run pays only the driver-side
-    * marker listings, not the fold's compute. A split marker state (a
-    * crash between two table commits) fails the guard; `step` then
-    * recomputes and `writeOnce` skips or applies per table.
+    * Replay guard: one root listing; a `(batch, bid)` with `bid` below
+    * the newest commit id skips `step` outright, so a re-run on the same
+    * root resumes where it stopped and pays no fold compute for what is
+    * committed. A stale or racing driver fails instead of applying a
+    * batch twice: at the fail-if-exists rename of a version the winner
+    * staged first, or at the manifest claim.
     *
     * Replay self-test: after the last batch, `batches.last` is applied
     * once more under the last batch id, through the same guard and
     * outside the 4-wide scope. The skip is what a fold's oracle match
     * pins: applying that batch twice would change any non-idempotent
     * output. Returns each table's standing state after that replay. */
-  def foldOnce(batches: Seq[DataFrame], tables: Seq[FoldTable])(
+  def foldOnce(root: String, batches: Seq[DataFrame], tables: Seq[FoldTable])(
       step: (DataFrame, Long, Seq[DataFrame]) => Seq[DataFrame]): Seq[DataFrame] = {
-    require(batches.nonEmpty, "foldOnce needs at least one batch")
-    tables.foreach { t =>
-      if (Meta.Versioned.latestVersion(t.seed.sparkSession, t.path).isEmpty)
-        Meta.Versioned.writeOnce(t.seed, t.path, t.shape, 0L)
-    }
+    require(batches.nonEmpty, s"foldOnce at $root needs at least one batch")
+    val spark = batches.head.sparkSession
+    val V = Meta.Versioned
+    def path(t: FoldTable) = s"$root/${t.name}"
+    def stage(t: FoldTable, f: DataFrame) = V.write(f, path(t))
+    if (V.latestCommit(spark, root).isEmpty)
+      V.commitManifest(spark, root,
+        tables.map(t => t.name -> Seq(stage(t, t.seed))), claim = Some(0L))
+    def standing(id: Long) = tables.map(t =>
+      V.readCommitted(spark, root, t.name, Some(id), Some(t.pinned)))
     def commit(batch: DataFrame, bid: Long): Unit = {
-      val spark = batch.sparkSession
-      if (!tables.forall(t => Meta.Versioned.committed(spark, t.path, FoldAppId, bid))) {
-        val frames = step(batch, bid, tables.map(_.standing))
+      val newest = V.latestCommit(spark, root).get
+      if (newest <= bid) {
+        val frames = step(batch, bid, standing(newest))
         require(frames.length == tables.length,
           s"fold step returned ${frames.length} frames for ${tables.length} tables")
-        tables.zip(frames).foreach { case (t, f) => conform(t, f) }
-        tables.zip(frames).foreach { case (t, f) =>
-          Meta.Versioned.writeOnce(f, t.path, FoldAppId, bid) }
+        tables.zip(frames).foreach { case (t, f) => conform(path(t), t, f) }
+        val vs = V.committedVersions(spark, root, Some(newest)).get
+        val next = tables.zip(frames).map { case (t, f) =>
+          t.name -> t.next(vs(t.name), stage(t, f)) }
+        V.commitManifest(spark, root, next, claim = Some(bid + 1))
       }
     }
-    graft.Sessions.withShufflePartitions(batches.head.sparkSession, 4) {
+    graft.Sessions.withShufflePartitions(spark, 4) {
       batches.zipWithIndex.foreach { case (b, i) => commit(b, i.toLong) }
     }
     commit(batches.last, batches.length - 1L)
-    tables.map(_.standing)
+    standing(V.latestCommit(spark, root).get)
   }
 
   /** Harness-side batch-staging cutoff for [[foldOnce]] callers: the

@@ -51,55 +51,27 @@ class MetaSpec extends SparkSuite {
     intercept[Exception] { Meta.Versioned.read(spark, dir, Some(1L)).count() }
   }
 
-  test("Versioned.readAll: segment-append fold == full-rewrite fold, " +
-      "row for row; replayed delta skips by marker (round-21 fold shape)") {
-    val base = graft.Tmp.dir("meta-seg").toString
-    val (segPath, snapPath) = (s"$base/seg", s"$base/snap")
+  test("foldOnce: a Segments table (delta only) equals a Snapshot table " +
+      "(union fold), row for row; the replayed last batch adds nothing") {
+    import graft.streaming.Streams
+    val root = graft.Tmp.dir("meta-seg").toString
     val seed = Seq.empty[(Long, String)].toDF("id", "v")
-    Meta.Versioned.write(seed, segPath)
-    Meta.Versioned.write(seed, snapPath)
     val batches = Seq(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
       Seq((3L, "c")).toDF("id", "v"),
       Seq((4L, "d"), (5L, "e")).toDF("id", "v"))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      // segment log: delta only
-      assert(Meta.Versioned.writeOnce(b, segPath, "seg", i.toLong).isDefined)
-      // reference: the round-20 full-rewrite fold
-      Meta.Versioned.writeOnce(
-        Meta.Versioned.read(spark, snapPath).unionByName(b),
-        snapPath, "snap", i.toLong)
+    // the segment log commits the delta only; the snapshot, as
+    // reference, rewrites the union of its standing state and the batch
+    val Seq(snap, seg) = Streams.foldOnce(root, batches,
+        Seq(Streams.Snapshot("snap", seed), Streams.Segments("seg", seed))) {
+      case (b, _, Seq(snap, _)) => Seq(snap.unionByName(b), b)
     }
-    // at-least-once replay of the last batch must no-op on the log too
-    assert(Meta.Versioned.writeOnce(batches.last, segPath, "seg", 2L).isEmpty)
-    val seg = Meta.Versioned.readAll(spark, segPath)
-      .orderBy("id").collect().toSeq
-    val snap = Meta.Versioned.read(spark, snapPath)
-      .orderBy("id").collect().toSeq
-    assert(seg == snap, s"segment union $seg != rewritten snapshot $snap")
-    assert(seg.size == 5)
-  }
-
-  test("Versioned.committed: the fold-side replay guard tracks writeOnce " +
-      "markers exactly (round-21 eager-fold skip)") {
-    val dir = graft.Tmp.dir("meta-comm").toString + "/t"
-    assert(!Meta.Versioned.committed(spark, dir, "app", 0L),
-      "no table yet => nothing committed")
-    Meta.Versioned.write(Seq(0L).toDF("x"), dir) // plain seed, no marker
-    assert(!Meta.Versioned.committed(spark, dir, "app", 0L),
-      "plain write carries no txn marker")
-    assert(Meta.Versioned.writeOnce(Seq(1L).toDF("x"), dir, "app", 0L).isDefined)
-    assert(Meta.Versioned.committed(spark, dir, "app", 0L))
-    assert(!Meta.Versioned.committed(spark, dir, "app", 1L),
-      "a future batch is not committed")
-    assert(!Meta.Versioned.committed(spark, dir, "other", 0L),
-      "markers are per appId")
-    assert(Meta.Versioned.writeOnce(Seq(2L).toDF("x"), dir, "app", 1L).isDefined)
-    // guard semantics == writeOnce skip semantics: committed(bid) iff a
-    // writeOnce of bid would no-op
-    assert(Meta.Versioned.committed(spark, dir, "app", 0L))
-    assert(Meta.Versioned.committed(spark, dir, "app", 1L))
-    assert(Meta.Versioned.writeOnce(Seq(9L).toDF("x"), dir, "app", 1L).isEmpty)
+    val segRows = seg.orderBy("id").collect().toSeq
+    val snapRows = snap.orderBy("id").collect().toSeq
+    assert(segRows == snapRows, s"segment union $segRows != rewritten snapshot $snapRows")
+    assert(segRows.size == 5)
+    assert(Meta.Versioned.committedVersions(spark, root).contains(
+      Map("snap" -> Seq(4L), "seg" -> Seq(1L, 2L, 3L, 4L))))
   }
 
   test("Versioned.write: after a write that fails mid-job, the latest " +
@@ -128,7 +100,7 @@ class MetaSpec extends SparkSuite {
     Meta.Versioned.write(Seq(1).toDF("x"), dir)  // v=1
     Meta.Versioned.write(Seq(2).toDF("x"), dir)  // v=2
     val root = new java.io.File(dir)
-    // crash debris from a writeOnce that died pre-rename at v=2 (dead:
+    // crash debris from a write that died pre-rename at v=2 (dead:
     // v=2 has since published) and one at v=3 (may be in flight)
     def mkStaging(v: Long): java.io.File = {
       val d = new java.io.File(root, s"v=${v}_staging_deadbeef$v")
@@ -153,27 +125,26 @@ class MetaSpec extends SparkSuite {
     assert(!inflight.exists(), "published-over staging debris must go")
   }
 
-  test("Versioned.vacuum: refuses a foldOnce Segments log and deletes " +
-      "nothing; a Snapshot table vacuums as before") {
+  test("Versioned.vacuum: refuses a manifest table and deletes nothing") {
     import graft.streaming.Streams
     val root = graft.Tmp.dir("meta-vac-fold").toString
-    val (snap, segs) = (s"$root/snap", s"$root/segs")
     val seed = Seq(0L).toDF("id")
-    Streams.foldOnce(Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
-        Seq(Streams.Snapshot(snap, seed), Streams.Segments(segs, seed))) {
+    Streams.foldOnce(root, Seq(Seq(1L).toDF("id"), Seq(2L).toDF("id")),
+        Seq(Streams.Snapshot("snap", seed), Streams.Segments("segs", seed))) {
       (batch, _, _) => Seq(batch, batch)
     }
-    val e = intercept[IllegalArgumentException] {
-      Meta.Versioned.vacuum(spark, segs, keep = 1)
+    for (t <- Seq("snap", "segs")) {
+      val e = intercept[IllegalArgumentException] {
+        Meta.Versioned.vacuum(spark, s"$root/$t", keep = 1)
+      }
+      assert(e.getMessage.contains("manifest table"), e.getMessage)
+      assert((1L to 3L).forall(v => new java.io.File(s"$root/$t/v=$v").isDirectory),
+        s"a refused vacuum of $t must delete nothing")
     }
-    assert(e.getMessage.contains("segment log"), e.getMessage)
-    assert((1L to 3L).forall(v => new java.io.File(s"$segs/v=$v").isDirectory),
-      "a refused vacuum must delete nothing")
-    assert(Meta.Versioned.readAll(spark, segs).as[Long].collect().sorted.toSeq ==
-      Seq(0L, 1L, 2L))
-    assert(Meta.Versioned.vacuum(spark, snap, keep = 1) == Seq(1L, 2L))
-    assert(Meta.Versioned.latestVersion(spark, snap).contains(3L))
-    assert(Meta.Versioned.read(spark, snap).as[Long].collect().toSeq == Seq(2L))
+    assert(Meta.Versioned.readCommitted(spark, root, "segs").as[Long]
+      .collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(Meta.Versioned.readCommitted(spark, root, "snap").as[Long]
+      .collect().toSeq == Seq(2L))
   }
 
   test("Versioned.publishAll: readers never observe a torn multi-table publish") {
@@ -183,13 +154,13 @@ class MetaSpec extends SparkSuite {
       "fact" -> Seq((1L, 10.0)).toDF("id", "v")))
     assert(c1 == 1L)
     assert(Meta.Versioned.committedVersions(spark, root)
-      .contains(Map("dim" -> 1L, "fact" -> 1L)))
+      .contains(Map("dim" -> Seq(1L), "fact" -> Seq(1L))))
     assert(Meta.Versioned.readCommitted(spark, root, "dim").count() == 1)
     // a TORN publish: a new version dir staged (crash before the manifest
     // rename) — manifest readers must keep resolving commit 1's versions
     Meta.Versioned.write(Seq((2L, "b")).toDF("id", "name"), s"$root/dim")
     assert(Meta.Versioned.committedVersions(spark, root)
-      .contains(Map("dim" -> 1L, "fact" -> 1L)))
+      .contains(Map("dim" -> Seq(1L), "fact" -> Seq(1L))))
     assert(Meta.Versioned.readCommitted(spark, root, "dim").count() == 1)
     // the next publishAll lands AFTER the debris version and flips the
     // whole set atomically
@@ -198,7 +169,7 @@ class MetaSpec extends SparkSuite {
       "fact" -> Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")))
     assert(c2 == 2L)
     assert(Meta.Versioned.committedVersions(spark, root)
-      .contains(Map("dim" -> 3L, "fact" -> 2L)))
+      .contains(Map("dim" -> Seq(3L), "fact" -> Seq(2L))))
     assert(Meta.Versioned.readCommitted(spark, root, "dim").count() == 2)
     assert(Meta.Versioned.readCommitted(spark, root, "fact").count() == 2)
     // cross-table time travel: the full consistent set of commit 1
@@ -251,7 +222,7 @@ class MetaSpec extends SparkSuite {
     val winner = if (results.head.isSuccess) "a" else "b"
     val loser = if (winner == "a") "b" else "a"
     assert(Meta.Versioned.committedVersions(spark, root)
-      .contains(Map(winner -> 1L)))
+      .contains(Map(winner -> Seq(1L))))
     assert(Meta.Versioned.readCommitted(spark, root, winner).count() == 1)
     // the loser's staged version dir is invisible debris, not a table
     intercept[IllegalArgumentException] {
@@ -291,7 +262,7 @@ class MetaSpec extends SparkSuite {
     // untouched sibling table's version forward
     assert(Meta.Versioned.readCommitted(spark, root, "t").count() == n)
     assert(Meta.Versioned.committedVersions(spark, root)
-      .contains(Map("t" -> 2L, "other" -> 1L)))
+      .contains(Map("t" -> Seq(2L), "other" -> Seq(1L))))
     assert(Meta.Versioned.readCommitted(spark, root, "other").count() == 2)
   }
 
@@ -350,7 +321,7 @@ class MetaSpec extends SparkSuite {
     }
     assert(err.getMessage.contains("claimed by a concurrent writer"))
     // the concurrent writer's commit is intact and still resolves
-    assert(Meta.Versioned.committedVersions(spark, root).contains(Map("t" -> 2L)))
+    assert(Meta.Versioned.committedVersions(spark, root).contains(Map("t" -> Seq(2L))))
     assert(Meta.Versioned.readCommitted(spark, root, "t").count() == 200)
     // retrying from the fresh chain succeeds and compacts the NEW version
     val (c3, _, after) = Meta.Versioned.compactTable(spark, root, "t", 1000000L)
@@ -487,6 +458,38 @@ class MetaSpec extends SparkSuite {
     assert(!debris.exists())
     assert(Meta.Versioned.readCommitted(spark, root, "t").as[Int].collect().toSeq ==
       Seq(3))
+  }
+
+  test("Versioned.gc on a fold root: after a two-table fold and one failed " +
+      "batch, keeps every segment the newest manifest names and reclaims " +
+      "the failed batch's staged version") {
+    import graft.streaming.Streams
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val root = graft.Tmp.dir("meta-gc-fold").toString
+    val seed = Seq(0L).toDF("id")
+    val tables = Seq(Streams.Snapshot("snap", seed), Streams.Segments("segs", seed))
+    val batches = (1L to 3L).map(i => Seq(i).toDF("id"))
+    Streams.foldOnce(root, batches, tables)((batch, _, _) => Seq(batch, batch))
+    // batch 3: snap stages v=5, then the segs frame fails mid-job
+    intercept[Exception] {
+      Streams.foldOnce(root, batches :+ Seq(4L).toDF("id"), tables) { (batch, _, _) =>
+        Seq(batch, spark.range(1).select(
+          when(col("id") === 0L, raise_error(lit("segs failed while staged")))
+            .otherwise(col("id")).as("id")))
+      }
+    }
+    def reads = tables.map(t => Meta.Versioned.readCommitted(spark, root, t.name)
+      .as[Long].collect().sorted.toSeq)
+    val before = reads
+    assert(before == Seq(Seq(3L), Seq(0L, 1L, 2L, 3L)))
+    assert(new java.io.File(s"$root/snap/v=5").isDirectory)
+    val (dead, deleted) = Meta.Versioned.gc(spark, root, keepCommits = 1, minAgeMs = 0L)
+    assert(dead == Seq(0L, 1L, 2L), s"$dead")
+    // superseded snapshots and the unclaimed staged version go; every
+    // segment stays, since the newest manifest names them all
+    assert(deleted.toSet == Set("snap/v=1", "snap/v=2", "snap/v=3", "snap/v=5"), s"$deleted")
+    assert((1L to 4L).forall(v => new java.io.File(s"$root/segs/v=$v").isDirectory))
+    assert(reads == before, "gc must not move a standing read")
   }
 
   test("Versioned.changes: snapshot-diff CDF tags insert/update/delete, " +

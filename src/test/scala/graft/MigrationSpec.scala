@@ -153,12 +153,15 @@ class MigrationSpec extends SparkSuite {
 
   test("incremental-view/maintenance layer (q100-q123 guide table): " +
       "txn folds, feed compose, moments maintenance") {
-    // Delta `txn` analogue: idempotent fold commit, replay no-ops
-    val p = graft.Tmp.dir("mig-txn").toString + "/t"
+    // Delta `txn` analogue: a fold batch commits through one manifest
+    // claim, and a replay no-ops
+    val root = graft.Tmp.dir("mig-txn").toString
     val df = Seq((1L, 10.0)).toDF("k", "v")
-    assert(graft.Meta.Versioned.writeOnce(df, p, "mig", 0L).contains(1L))
-    assert(graft.Meta.Versioned.writeOnce(df, p, "mig", 0L).isEmpty)
-    assert(graft.Meta.Versioned.lastTxn(spark, p, "mig").contains(0L))
+    def fold() = Streams.foldOnce(root, Seq(df),
+      Seq(Streams.Segments("t", df.limit(0))))((b, _, _) => Seq(b))
+    fold()
+    assert(fold().head.count() == 1L)
+    assert(graft.Meta.Versioned.latestCommit(spark, root).contains(1L))
     // CDF analogue: snapshotDiff feed → maintainMoments == direct rebuild
     val v1 = Seq((1L, 1L, 10.0), (2L, 1L, 5.0), (3L, 2L, 2.0))
       .toDF("id", "k", "v")

@@ -188,93 +188,76 @@ class StatefulStreamsSpec extends SparkSuite {
       s"expected versions seed+2, got ${graft.Meta.Versioned.latestVersion(spark, skPath)}")
   }
 
-  test("writeOnce makes a replayed non-idempotent moments fold exactly-once " +
-      "(the q103/q121 at-least-once window): streamed over a RANDOMIZED " +
-      "batching, with one batch replayed, equals the direct aggregate") {
+  test("foldOnce makes a replayed non-idempotent moments fold exactly-once " +
+      "(the q103/q121 at-least-once window): folded over a RANDOMIZED " +
+      "batching, with batches replayed, equals the direct aggregate") {
     import graft.ops.Incremental
-    val root = graft.Tmp.dir("graft-writeonce")
-    val aggPath = root.resolve("agg").toString
-    val cp = root.resolve("cp").toString
+    val root = graft.Tmp.dir("graft-foldonce").toString
     val o = graft.Tables.orders(spark, sfDir())
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val v1 = o.filter(col("o_orderkey") % 7 =!= 0)
     val v2 = o.filter(col("o_orderkey") % 11 =!= 0)
-    graft.Meta.Versioned.write(
-      Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
     val feedRows = graft.Meta.Versioned
       .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
       .select("o_orderkey", "o_custkey", "o_totalprice", "change_type")
       .as[(Long, Long, Double, String)].collect().toSeq
     // randomized batching: any split must fold to the same table (the
-    // abelian contract), and the txn marker must absorb the replays
+    // abelian contract), and the commit guard must absorb the replays
     val rnd = new scala.util.Random(42)
     val batches = feedRows.groupBy(_ => rnd.nextInt(5)).toSeq
-      .sortBy(_._1).map(_._2)
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Double, String)]
-    val src = ms.toDF()
-      .toDF("o_orderkey", "o_custkey", "o_totalprice", "change_type")
-    @volatile var lastBid = -1L
-    val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-      if (bid > lastBid) lastBid = bid
-      graft.Meta.Versioned.writeOnce(
-        Incremental.maintainMoments(
-          graft.Meta.Versioned.read(spark, aggPath), batch,
-          Seq("o_custkey"), "o_totalprice"),
-        aggPath, "moments", bid)
-      ()
-    }
-    graft.Sessions.withShufflePartitions(spark, 4) {
-      val q = src.writeStream
-        .foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .start()
-      try {
-        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-    }
-    val applied = graft.Meta.Versioned.latestVersion(spark, aggPath).get
-    // replay the LAST batch under its own batchId (what a mid-write
-    // retry does) and an OLDER one (the >= guard): both must no-op
-    fold(batches.last
-      .toDF("o_orderkey", "o_custkey", "o_totalprice", "change_type"), lastBid)
-    fold(batches.head
-      .toDF("o_orderkey", "o_custkey", "o_totalprice", "change_type"), 0L)
-    assert(graft.Meta.Versioned.latestVersion(spark, aggPath).contains(applied),
-      "replayed batches must not commit new versions")
-    val got = graft.Meta.Versioned.read(spark, aggPath)
-      .collect().map(_.toString).sorted
+      .sortBy(_._1).map(_._2
+        .toDF("o_orderkey", "o_custkey", "o_totalprice", "change_type"))
+    val tables = Seq(Streams.Snapshot("agg",
+      Incremental.aggMoments(v1, Seq("o_custkey"), "o_totalprice")))
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    def run(bs: Seq[org.apache.spark.sql.DataFrame]) =
+      Streams.foldOnce(root, bs, tables) { case (batch, _, Seq(agg)) =>
+        calls.incrementAndGet()
+        Seq(Incremental.maintainMoments(agg, batch, Seq("o_custkey"), "o_totalprice"))
+      }
+    run(batches)
+    // replay every batch (a restarted driver) and an OLDER prefix (the
+    // guard skips any id below the newest commit): both must no-op
+    run(batches)
+    val Seq(got) = run(batches.take(1))
+    assert(calls.get == batches.size, s"step ran ${calls.get} times for ${batches.size} batches")
+    assert(graft.Meta.Versioned.latestCommit(spark, root).contains(batches.size.toLong),
+      "replayed batches must not commit")
     val want = Incremental.aggMoments(v2, Seq("o_custkey"), "o_totalprice")
       .collect().map(_.toString).sorted
-    assert(got.sameElements(want),
-      s"maintained-under-replay != direct: ${got.take(3).mkString} vs ${want.take(3).mkString}")
-    // and the guard actually recorded the stream's last batch
-    assert(graft.Meta.Versioned.lastTxn(spark, aggPath, "moments")
-      .contains(lastBid))
+    val gotRows = got.collect().map(_.toString).sorted
+    assert(gotRows.sameElements(want),
+      s"maintained-under-replay != direct: ${gotRows.take(3).mkString} vs ${want.take(3).mkString}")
   }
 
-  test("writeOnce crash window: a staging dir left by a pre-publish failure " +
-      "is invisible to readers and does not block the retry") {
-    val root = graft.Tmp.dir("graft-writeonce-crash")
-    val p = root.resolve("t").toString
+  test("foldOnce crash window: an unclaimed staged version is invisible " +
+      "to readers, and the re-run applies the batch") {
+    val root = graft.Tmp.dir("graft-foldonce-crash").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    graft.Meta.Versioned.write(df, p)
-    // simulate a writer that died between parquet write and publish:
-    // a staged dir with data + marker, never renamed to v=2
-    val staged = new java.io.File(s"$p/v=2_staging_deadbeef")
-    df.write.parquet(staged.toString)
-    java.nio.file.Files.createFile(staged.toPath.resolve("_txn_app_7"))
-    assert(graft.Meta.Versioned.latestVersion(spark, p).contains(1L),
-      "staged dir must not surface as a version")
-    assert(graft.Meta.Versioned.lastTxn(spark, p, "app").isEmpty,
-      "a marker in an unpublished staging dir must not count as applied")
-    // the retry of batch 7 must still apply
-    assert(graft.Meta.Versioned.writeOnce(df, p, "app", 7L).contains(2L))
-    assert(graft.Meta.Versioned.lastTxn(spark, p, "app").contains(7L))
+    val tables = Seq(Streams.Segments("t", df))
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    def run() = Streams.foldOnce(root, Seq(df), tables) { (batch, _, _) =>
+      calls.incrementAndGet()
+      Seq(batch)
+    }
+    // a driver that died between staging batch 0 and claiming its
+    // commit: the seed is committed, v=2 is staged and no manifest names it
+    intercept[IllegalStateException] {
+      Streams.foldOnce(root, Seq(df), tables)((_, _, _) =>
+        throw new IllegalStateException("died before staging"))
+    }
+    assert(graft.Meta.Versioned.write(df, s"$root/t") == 2L)
+    assert(graft.Meta.Versioned.latestCommit(spark, root).contains(0L))
+    assert(graft.Meta.Versioned.readCommitted(spark, root, "t").count() == 2L,
+      "the unclaimed version must not surface")
+    // the re-run applies batch 0 on the committed state
+    assert(run().head.count() == 4L)
+    assert(calls.get == 1)
+    assert(graft.Meta.Versioned.committedVersions(spark, root).contains(
+      Map("t" -> Seq(1L, 3L))), "the staged v=2 stays unnamed debris")
     // and a second attempt of the same batch no-ops
-    assert(graft.Meta.Versioned.writeOnce(df, p, "app", 7L).isEmpty)
-    assert(graft.Meta.Versioned.read(spark, p).count() == 2L)
+    assert(run().head.count() == 4L)
+    assert(calls.get == 1)
   }
 
   test("observe metrics ride along streaming micro-batches (T6 observability)") {

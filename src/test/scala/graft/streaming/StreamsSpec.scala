@@ -502,43 +502,49 @@ class StreamsSpec extends SparkSuite {
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
+  private val V = graft.Meta.Versioned
+
   test("foldOnce: a non-idempotent sum equals the one-shot sum and the " +
       "guarded final-batch replay never reaches the step") {
     val root = tmp("fold-once").toString
     val calls = new AtomicInteger()
-    val Seq(total) = Streams.foldOnce(foldBatches,
-      Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(calls))
+    val Seq(total) = Streams.foldOnce(root, foldBatches,
+      Seq(Streams.Snapshot("sum", Seq(0L).toDF("total"))))(sumStep(calls))
     assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum))
     assert(calls.get == 3, s"step runs once per batch, ran ${calls.get}")
+    assert(V.latestCommit(spark, root).contains(3L),
+      "the seed claims commit 0 and each batch the next id")
   }
 
   test("foldOnce: a re-run on the same tables with the same batches " +
       "leaves the sum unchanged and never reaches the step") {
     val root = tmp("fold-rerun").toString
     val calls = new AtomicInteger()
-    def run() = Streams.foldOnce(foldBatches,
-      Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(calls))
+    def run() = Streams.foldOnce(root, foldBatches,
+      Seq(Streams.Snapshot("sum", Seq(0L).toDF("total"))))(sumStep(calls))
     run()
     val Seq(total) = run()
     assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum))
     assert(calls.get == 3, s"step runs once per batch in total, ran ${calls.get}")
+    assert(V.latestCommit(spark, root).contains(3L), "the re-run claims nothing")
   }
 
   test("foldOnce: a step that throws at batch k, then a re-run, equals " +
       "the uninterrupted sum and applies only the batches from k on") {
     for (k <- 0L to 2L) {
       val root = tmp(s"fold-crash$k").toString
-      val tables = Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total")))
+      val tables = Seq(Streams.Snapshot("sum", Seq(0L).toDF("total")))
       val e = intercept[Exception] {
-        Streams.foldOnce(foldBatches, tables) { (batch, bid, standing) =>
+        Streams.foldOnce(root, foldBatches, tables) { (batch, bid, standing) =>
           if (bid == k) throw new IllegalStateException(s"step failed at $k")
           sumStep(new AtomicInteger())(batch, bid, standing)
         }
       }
       assert(causes(e).exists(c => String.valueOf(c.getMessage)
         .contains(s"step failed at $k")), s"k = $k: $e")
+      assert(V.latestCommit(spark, root).contains(k), s"k = $k: one commit per applied batch")
       val calls = new AtomicInteger()
-      val Seq(total) = Streams.foldOnce(foldBatches, tables)(sumStep(calls))
+      val Seq(total) = Streams.foldOnce(root, foldBatches, tables)(sumStep(calls))
       assert(total.as[Long].collect().toSeq == Seq((0L until 30L).sum), s"k = $k")
       assert(calls.get == 3 - k, s"k = $k: the re-run ran the step ${calls.get} times")
     }
@@ -556,8 +562,8 @@ class StreamsSpec extends SparkSuite {
     val root = tmp("fold-nostream").toString
     spark.streams.addListener(listener)
     try {
-      Streams.foldOnce(foldBatches,
-        Seq(Streams.Snapshot(s"$root/sum", Seq(0L).toDF("total"))))(sumStep(new AtomicInteger()))
+      Streams.foldOnce(root, foldBatches,
+        Seq(Streams.Snapshot("sum", Seq(0L).toDF("total"))))(sumStep(new AtomicInteger()))
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(started.get == 0, s"foldOnce started ${started.get} streaming queries")
       // the listener does see the query a stream-driven fold starts
@@ -567,29 +573,38 @@ class StreamsSpec extends SparkSuite {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("foldOnce: a split marker state recomputes, and each table " +
-      "skips or applies on its own marker") {
-    // the crash window between two table commits: A already records
-    // bid 0, B does not
+  test("foldOnce: a second frame that fails while it is staged moves " +
+      "neither table and claims no commit; the re-run gives the " +
+      "uninterrupted answer") {
     val root = tmp("fold-split").toString
-    val (a, b) = (s"$root/a", s"$root/b")
-    graft.Meta.Versioned.writeOnce(Seq(-1L).toDF("total"), a,
-      Streams.FoldAppId, 0L)
-    val calls = new AtomicInteger()
-    val seed = Seq.empty[Long].toDF("total")
-    Streams.foldOnce(foldBatches.take(1),
-        Seq(Streams.Snapshot(a, seed), Streams.Snapshot(b, seed))) { (batch, _, _) =>
-      calls.incrementAndGet()
-      Seq.fill(2)(batch.agg(sum("id").as("total")))
+    val tables = Seq(Streams.Snapshot("a", Seq(0L).toDF("total")),
+      Streams.Snapshot("b", Seq(0L).toDF("total")))
+    def sums(calls: AtomicInteger)(batch: org.apache.spark.sql.DataFrame,
+        bid: Long, standing: Seq[org.apache.spark.sql.DataFrame]) =
+      standing.flatMap(s => sumStep(calls)(batch, bid, Seq(s)))
+    def reads = tables.map(t => V.readCommitted(spark, root, t.name)
+      .as[Long].collect().toSeq)
+    intercept[Exception] {
+      Streams.foldOnce(root, foldBatches, tables) { (batch, bid, standing) =>
+        val Seq(a, b) = sums(new AtomicInteger())(batch, bid, standing)
+        // a Range, not a local relation: the write job starts and fails
+        // in a task, after table a's version is already staged
+        if (bid == 1) Seq(a, spark.range(1).select(
+          when(col("id") === 0L, raise_error(lit("b failed while staged")))
+            .otherwise(col("id")).as("total")))
+        else Seq(a, b)
+      }
     }
-    assert(calls.get == 1, s"step must run once, ran ${calls.get}")
-    assert(graft.Meta.Versioned.latestVersion(spark, a).contains(1L),
-      "A already recorded bid 0 and must gain no version")
-    assert(graft.Meta.Versioned.read(spark, a).as[Long].collect().toSeq == Seq(-1L))
-    assert(graft.Meta.Versioned.latestVersion(spark, b).contains(2L),
-      "B must gain exactly one version over its seed")
-    assert(graft.Meta.Versioned.read(spark, b).as[Long].collect().toSeq ==
-      Seq((0L until 30L by 3).sum))
+    val batch0 = (0L until 30L by 3).sum
+    assert(reads == Seq(Seq(batch0), Seq(batch0)), "neither standing read moved")
+    assert(V.latestCommit(spark, root).contains(1L), "the failed batch claimed no commit")
+    assert(V.latestVersion(spark, s"$root/a").contains(3L),
+      "a's staged version exists, and no manifest names it")
+    val calls = new AtomicInteger()
+    val Seq(a, b) = Streams.foldOnce(root, foldBatches, tables)(sums(calls))
+    assert(calls.get == 4, s"the re-run applies batches 1 and 2 to both tables")
+    Seq(a, b).foreach(t => assert(t.as[Long].collect().toSeq == Seq((0L until 30L).sum)))
+    assert(reads == Seq.fill(2)(Seq((0L until 30L).sum)))
   }
 
   test("foldOnce: a step returning the wrong number of frames fails with " +
@@ -598,8 +613,8 @@ class StreamsSpec extends SparkSuite {
     val seed = Seq.empty[Long].toDF("id")
     try {
       val e = intercept[Exception] {
-        Streams.foldOnce(foldBatches, Seq(Streams.Snapshot(s"$root/a", seed),
-            Streams.Snapshot(s"$root/b", seed))) {
+        Streams.foldOnce(root, foldBatches, Seq(Streams.Snapshot("a", seed),
+            Streams.Snapshot("b", seed))) {
           (batch, _, _) => Seq(batch)
         }
       }
@@ -614,9 +629,9 @@ class StreamsSpec extends SparkSuite {
     val root = tmp("fold-shapes").toString
     val seen = scala.collection.mutable.Buffer[(Long, Seq[Long], Seq[Long])]()
     def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().sorted.toSeq
-    val Seq(snap, segs) = Streams.foldOnce(foldBatches, Seq(
-        Streams.Snapshot(s"$root/snap", Seq(-1L).toDF("id")),
-        Streams.Segments(s"$root/segs", Seq(-1L).toDF("id")))) {
+    val Seq(snap, segs) = Streams.foldOnce(root, foldBatches, Seq(
+        Streams.Snapshot("snap", Seq(-1L).toDF("id")),
+        Streams.Segments("segs", Seq(-1L).toDF("id")))) {
       case (batch, bid, Seq(snap, segs)) =>
         seen += ((bid, ids(snap), ids(segs)))
         Seq(batch.agg(max("id").as("id")), batch)
@@ -628,20 +643,23 @@ class StreamsSpec extends SparkSuite {
       (2L, Seq(28L), (-1L +: (b(0) ++ b(1))).sorted)))
     assert(ids(snap) == Seq(29L))
     assert(ids(segs) == -1L +: (0L until 30L))
-    assert(graft.Meta.Versioned.latestVersion(spark, s"$root/snap").contains(4L),
+    assert(V.latestVersion(spark, s"$root/snap").contains(4L),
       "the seed and one version per batch")
+    assert(V.committedVersions(spark, root).contains(
+      Map("snap" -> Seq(4L), "segs" -> Seq(1L, 2L, 3L, 4L))),
+      "the manifest names a Snapshot's newest version and every segment")
   }
 
   test("foldOnce: a table that already exists is not reseeded") {
     val root = tmp("fold-existing").toString
-    val path = s"$root/sum"
-    // an existing chain without any seed marker
-    graft.Meta.Versioned.write(Seq(100L).toDF("total"), path)
+    // an existing table: a version that commit 0 already names
+    V.write(Seq(100L).toDF("total"), s"$root/sum")
+    V.commitManifest(spark, root, Seq("sum" -> Seq(1L)), claim = Some(0L))
     val calls = new AtomicInteger()
-    val Seq(total) = Streams.foldOnce(foldBatches,
-      Seq(Streams.Snapshot(path, Seq(0L).toDF("total"))))(sumStep(calls))
+    val Seq(total) = Streams.foldOnce(root, foldBatches,
+      Seq(Streams.Snapshot("sum", Seq(0L).toDF("total"))))(sumStep(calls))
     assert(total.as[Long].collect().toSeq == Seq(100L + (0L until 30L).sum))
-    assert(graft.Meta.Versioned.latestVersion(spark, path).contains(4L),
+    assert(V.latestVersion(spark, s"$root/sum").contains(4L),
       "no seed version, one version per batch")
   }
 
@@ -651,16 +669,17 @@ class StreamsSpec extends SparkSuite {
     val path = s"$root/sum"
     try {
       val e = intercept[Exception] {
-        Streams.foldOnce(foldBatches,
-            Seq(Streams.Snapshot(path, Seq(0L).toDF("total")))) { (batch, _, _) =>
+        Streams.foldOnce(root, foldBatches,
+            Seq(Streams.Snapshot("sum", Seq(0L).toDF("total")))) { (batch, _, _) =>
           Seq(batch.agg(sum("id").cast("double").as("total")))
         }
       }
       assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
         c.getMessage.contains(s"fold table $path: column total is total double")),
         s"the schema check must name table and column: $e")
-      assert(graft.Meta.Versioned.latestVersion(spark, path).contains(1L),
+      assert(V.latestVersion(spark, path).contains(1L),
         "only the seed may be published")
+      assert(V.latestCommit(spark, root).contains(0L), "only the seed may be committed")
       assert(spark.streams.active.isEmpty)
     } finally spark.streams.resetTerminated()
   }
@@ -668,11 +687,11 @@ class StreamsSpec extends SparkSuite {
   test("foldOnce: a standing read launches no Spark job") {
     val root = tmp("fold-jobs").toString
     val seed = Seq((1L, "a")).toDF("id", "v")
-    val tables = Seq(Streams.Snapshot(s"$root/snap", seed),
-      Streams.Segments(s"$root/segs", seed))
-    Streams.foldOnce(foldBatches.take(1), tables) { (batch, _, _) =>
+    val tables = Seq(Streams.Snapshot("snap", seed), Streams.Segments("segs", seed))
+    def fold() = Streams.foldOnce(root, foldBatches.take(1), tables) { (batch, _, _) =>
       Seq.fill(2)(batch.select(col("id"), lit("b").as("v")))
     }
+    fold()
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -683,7 +702,9 @@ class StreamsSpec extends SparkSuite {
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
-      tables.foreach(_.standing)
+      // every batch is committed, so the re-run skips each step and only
+      // reads the standing state of both tables
+      fold()
       org.apache.spark.ListenerBusDrain(sc)
       assert(jobs.get == 0, s"standing reads launched ${jobs.get} jobs")
       // the listener does see the job an unpinned read runs to infer

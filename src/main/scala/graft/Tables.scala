@@ -2,14 +2,19 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** IO layer over the driver-provided parquet fixtures (TESTDATA.md).
   *
   * Mirrors the reference's scan surface (SURVEY.md §2.1 S1-S6): batch
   * parquet scans standing in for Delta/JDBC. All loaders are plain
-  * `spark.read.parquet` so Catalyst pushes filters/column pruning into
-  * the scan — same pattern as the reference's JDBC-subquery pushdown
-  * (reference: jobs/bronze/bronze_builder.py:95-104).
+  * `spark.read.schema(s).parquet` so Catalyst pushes filters/column pruning
+  * into the scan — same pattern as the reference's JDBC-subquery pushdown
+  * (reference: jobs/bronze/bronze_builder.py:95-104). `s` is cached per
+  * file identity (path, mtime, size), as a catalog keeps table metadata:
+  * inferred (one Spark job) and asserted once per file, so later loads
+  * start no job. A fixture regenerated in place changes the key and is
+  * checked again; a schema that fails the check is never cached.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,17 +24,30 @@ object Tables {
   /** Generic parquet table scan (reference: jobs/silver/silver_builder.py:93). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      assertFixtureSchema(name, df.schema)
-      df
-    }
+    else spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** `name`'s asserted schema from the file-identity cache. Spark 4 infers
+    * and scans an INT64 TIMESTAMP(NANOS) `events.ts` only under nanosAsLong;
+    * Verify/Bench/test sessions set it up front, and this idempotent set
+    * covers driver-owned sessions (e.g. the smoke check) that didn't. */
+  private def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val f = new java.io.File(s"$dir/$name.parquet")
+    schemas.computeIfAbsent((f.getPath, f.lastModified, f.length), { _ =>
+      val s = spark.read.parquet(f.getPath).schema
+      assertFixtureSchema(name, s)
+      s
+    })
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
 
   /** Expected fixture schemas — the contract the driver's TESTDATA
     * generator has actually shipped, as Spark reads it. The driver
     * regenerates the fixtures between rounds and has already flipped an
-    * encoding mid-round (events.ts, round 10, two lost hours); every
-    * load asserts the full schema and fails NAMING the drifted column,
+    * encoding mid-round (events.ts, round 10, two lost hours); each new
+    * file's full schema is asserted, failing NAMING the drifted column,
     * so the next regeneration is a one-line diagnosis instead of a
     * cryptic downstream analysis error. Columns with several historical
     * or equivalent encodings list every allowed `simpleString`
@@ -72,7 +90,7 @@ object Tables {
   /** Fail fast, naming every drifted/missing/extra column, when a
     * fixture's as-read schema leaves the contract above. */
   private[graft] def assertFixtureSchema(
-      name: String, schema: org.apache.spark.sql.types.StructType): Unit = {
+      name: String, schema: StructType): Unit = {
     val expected = FixtureSchemas.getOrElse(name,
       throw new IllegalStateException(s"no fixture-schema contract for '$name'"))
     val actual = schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
@@ -99,34 +117,20 @@ object Tables {
     * `CAST(ts AS TIMESTAMP)`.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Session-build code (Verify/Bench/test harness) sets this conf up
-    // front; this defensive set covers driver-owned sessions (e.g. the
-    // smoke check) that didn't. Idempotent — the value is always "true".
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    assertFixtureSchema("events", raw.schema)
+    val raw = spark.read.schema(schema(spark, dir, "events")).parquet(s"$dir/events.parquet")
     raw.withColumn("ts", eventsTsNtz(eventsTsIsNanosLong(spark, dir)))
   }
 
   /** True when the events fixture stores ts as INT64 TIMESTAMP(NANOS)
-    * (surfaced as LongType under nanosAsLong). Cached per (directory,
-    * file mtime, file size) — streaming queries probe this on every
-    * source build, but fixture directories are REGENERATED IN PLACE
-    * between driver rounds (the encoding flipped once already), so a
-    * directory-only key would pin a stale verdict for the JVM lifetime
-    * and build a mismatched stream schema after a regeneration.
+    * (surfaced as LongType under nanosAsLong). Read off the cached
+    * schema — streaming queries probe this on every source build, but
+    * fixture directories are REGENERATED IN PLACE between driver rounds
+    * (the encoding flipped once already), so a directory-only key would
+    * pin a stale verdict for the JVM lifetime and build a mismatched
+    * stream schema after a regeneration.
     */
-  def eventsTsIsNanosLong(spark: SparkSession, dir: String): Boolean = {
-    val f = new java.io.File(s"$dir/events.parquet")
-    tsKindCache.computeIfAbsent((dir, f.lastModified, f.length), { _ =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Boolean.box(spark.read.parquet(s"$dir/events.parquet")
-        .schema("ts").dataType == org.apache.spark.sql.types.LongType)
-    })
-  }
-
-  private val tsKindCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Boolean]()
+  def eventsTsIsNanosLong(spark: SparkSession, dir: String): Boolean =
+    schema(spark, dir, "events")("ts").dataType == LongType
 
   /** Normalized event-time column (wall-clock NTZ) for either encoding. */
   def eventsTsNtz(isNanosLong: Boolean): org.apache.spark.sql.Column =

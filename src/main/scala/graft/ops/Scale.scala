@@ -312,7 +312,7 @@ object Scale {
     val statCols = cols.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"min_$c"),
       max(col(c)).cast("double").as(s"max_$c")))
-    df.sparkSession.read.parquet(s"$root/data")
+    df.sparkSession.read.schema(df.schema).parquet(s"$root/data")
       .groupBy(input_file_name().as("file"))
       .agg(statCols.head, statCols.tail: _*)
       .coalesce(1)

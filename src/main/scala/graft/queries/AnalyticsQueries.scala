@@ -774,7 +774,7 @@ object AnalyticsQueries {
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       graft.ops.Scale.zorderWrite(o,
         Seq("o_custkey", "o_totalprice"), numFiles = 16, out)
-      spark.read.parquet(out)
+      spark.read.schema(o.schema).parquet(out)
         .filter(col("o_totalprice").between(100000, 150000) &&
           col("o_custkey").between(100, 500))
         .groupBy("o_orderstatus")

@@ -107,11 +107,13 @@ object PipelineQueries {
         StructField("id", LongType),
         StructField("payload", StringType),
         StructField("kafka_ts", StringType))))
-      Streams.dlqPipeline(raw, "payload", "kafka_ts",
-        StructType(Seq(StructField("k", LongType))), valid, dlq, cp).awaitAll()
-      spark.read.parquet(valid)
+      val rec = StructType(Seq(StructField("k", LongType)))
+      Streams.dlqPipeline(raw, "payload", "kafka_ts", rec, valid, dlq, cp).awaitAll()
+      // each read-back pins the schema its sink wrote: no inference pass
+      spark.read.schema(Cdc.split(raw, "payload", rec).valid.schema).parquet(valid)
         .agg(count(lit(1)).as("n_valid"), sum(col("k")).as("sum_valid_k"))
-        .crossJoin(spark.read.json(dlq).agg(count(lit(1)).as("n_dlq")))
+        .crossJoin(spark.read.schema("value STRING, kafka_ts STRING, reason STRING")
+          .json(dlq).agg(count(lit(1)).as("n_dlq")))
     },
 
     // ---- O2: deterministic top-k (dbt/dummyspark.py:29 LIMIT 5; TakeOrdered)

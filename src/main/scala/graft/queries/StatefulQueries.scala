@@ -156,7 +156,8 @@ object StatefulQueries {
       val root = graft.Tmp.dir("graft-q37")
       val target = s"$root/scd2"
       val c = Tables.customer(spark, dir)
-      Merge.asScd2(c, "2024-01-01 00:00:00").write.parquet(target)
+      val seed = Merge.asScd2(c, "2024-01-01 00:00:00")
+      seed.write.parquet(target)
 
       // file-backed feed (Streams.FileFeed, round 16): the CDC batches
       // are minted as column arithmetic over the customer scan and
@@ -173,7 +174,7 @@ object StatefulQueries {
           batchOf(20.0, "2024-03-01 00:00:00"))) { (batch, _) =>
         Streams.scd2Upsert(batch, target, "c_custkey", Seq("c_acctbal"))
       }
-      spark.read.parquet(target)
+      spark.read.schema(seed.schema.toNullable).parquet(target)
     },
 
     // ---- IVF-style ANN: 16 deterministic centroid cells, queries probe
@@ -868,9 +869,9 @@ object StatefulQueries {
       val ev = Tables.events(spark, dir).select(col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("event_us"))
       import spark.implicits._
-      graft.Meta.Versioned.write(
-        ev.limit(0).select(col("user_id"), lit(0L).as("n_events"),
-          col("event_us").as("last_us")), tblPath)
+      val seed = ev.limit(0).select(col("user_id"), lit(0L).as("n_events"),
+        col("event_us").as("last_us"))
+      graft.Meta.Versioned.write(seed, tblPath)
       // a deterministic row-hash split into 3 batches; the final
       // per-user count/max fixpoint is batch-membership-independent,
       // which the oracle match pins
@@ -879,7 +880,7 @@ object StatefulQueries {
             pmod(xxhash64(col("user_id"), col("event_us")), lit(3)) === b)),
           via = s => StateV2.runningUserStats(s.as[StateV2.EventIn]).toDF()) {
           (batch, _) =>
-            val merged = graft.Meta.Versioned.read(spark, tblPath)
+            val merged = graft.Meta.Versioned.read(spark, tblPath, schema = Some(seed.schema))
               .unionByName(batch)
               .groupBy("user_id")
               // both columns are monotone per key, so max = latest
@@ -887,7 +888,7 @@ object StatefulQueries {
             graft.Meta.Versioned.write(merged, tblPath)
         }
       }
-      graft.Meta.Versioned.read(spark, tblPath)
+      graft.Meta.Versioned.read(spark, tblPath, schema = Some(seed.schema))
         .filter(col("n_events") > 0)
         .select("user_id", "n_events", "last_us")
     },
@@ -941,16 +942,17 @@ object StatefulQueries {
             (col("event_id") % 64).as("seg"))
           .agg(sum("nbytes").as("bytes"))
           .withColumn("_bid", lit(bid))
+      val seed = partials(ev.limit(0), -1L)
       // the fold every commit runs: replace THIS batch's rows, keep the
       // rest — re-running the same (batch, bid) is a no-op by
       // construction, which IS the at-least-once shield
       def commit(batch: DataFrame, bid: Long): Unit = {
-        val standing = graft.Meta.Versioned.read(spark, manPath)
+        val standing = graft.Meta.Versioned.read(spark, manPath, schema = Some(seed.schema))
           .filter(col("_bid") =!= bid)
         graft.Meta.Versioned.write(
           standing.unionByName(partials(batch, bid)), manPath)
       }
-      graft.Meta.Versioned.write(partials(ev.limit(0), -1L), manPath)
+      graft.Meta.Versioned.write(seed, manPath)
       // file-backed feed (Streams.FileFeed, round 16): no driver
       // collect(); key-parity batch membership unchanged
       val (even, odd) = (ev.filter(col("event_id") % 2 === 0),
@@ -958,7 +960,7 @@ object StatefulQueries {
       // crash-replay the LAST commit manually: same batch, same bid —
       // the commit-overwrite shield must absorb it byte for byte
       commit(odd, Streams.fold(root, Seq(even, odd))(commit))
-      val folded = graft.Meta.Versioned.read(spark, manPath)
+      val folded = graft.Meta.Versioned.read(spark, manPath, schema = Some(seed.schema))
         .groupBy("part", "seg").agg(sum("bytes").as("bytes"))
       val direct = ev.groupBy(col("event_type").as("part"),
           (col("event_id") % 64).as("seg"))

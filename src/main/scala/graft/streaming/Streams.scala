@@ -362,7 +362,8 @@ object Streams {
       .trigger(trigger)
       .start()
 
-  /** One SCD2 micro-batch: merge into the parquet target and rewrite it.
+  /** One SCD2 micro-batch: merge into the parquet target (read with the
+    * schema the merge writes, so no job infers it) and rewrite it.
     * `localCheckpoint(eager)` materializes the merged result before the
     * overwrite so the read-then-overwrite cycle on one path is safe in
     * this single-JVM harness. On a real cluster the rewrite belongs in a
@@ -371,9 +372,9 @@ object Streams {
   def scd2Upsert(batch: DataFrame, targetPath: String, pk: String,
       trackedCols: Seq[String]): Unit = {
     val spark = batch.sparkSession
-    val target =
-      if (Meta.tableExists(spark, targetPath)) spark.read.parquet(targetPath)
-      else Merge.asScd2(batch.drop("updated_at").limit(0), "2000-01-01 00:00:00")
+    val seed = Merge.asScd2(batch.drop("updated_at").limit(0), "2000-01-01 00:00:00")
+    val target = if (!Meta.tableExists(spark, targetPath)) seed
+      else spark.read.schema(seed.schema.toNullable).parquet(targetPath)
     Merge.scd2Merge(target, batch, pk, trackedCols)
       .localCheckpoint(true)
       .write.mode("overwrite").parquet(targetPath)

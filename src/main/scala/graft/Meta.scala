@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Table-maintenance / metadata operators (SURVEY.md §2.11 M1-M4).
+/** Table-maintenance / metadata operators (SURVEY.md §2.11 M1, M3).
   *
   * The reference probes Delta tables (`DeltaTable.isDeltaTable`,
-  * jobs/bronze/bronze_builder.py:112), prints schema with nullability
-  * (jobs/bronze/delta_schema_inspector.py:35-37), reads the table version
-  * (jobs/silver/silver_reader.py:71) and previews count + first rows
-  * (jobs/silver/silver_reader.py:70-78). Parquet-path equivalents here.
+  * jobs/bronze/bronze_builder.py:112) and time-travels by table version
+  * (jobs/silver/silver_reader.py:71). Parquet-path equivalents here.
   */
 object Meta {
 
@@ -73,23 +71,6 @@ object Meta {
     }
   }
 
-  /** M2: schema inspection — (name, type, nullable) per field, the shape
-    * the reference's inspector prints. */
-  def describeSchema(df: DataFrame): Seq[(String, String, Boolean)] =
-    df.schema.fields.toSeq.map(f => (f.name, f.dataType.simpleString, f.nullable))
-
-  /** M3: version stand-in without a transaction log — the latest
-    * modification time (epoch millis) over the table's files. Monotone
-    * under append/overwrite, so usable as a snapshot marker. */
-  def snapshotVersion(spark: SparkSession, path: String): Option[Long] = {
-    val (f, p) = fs(spark, path)
-    if (!f.exists(p)) None
-    else f.listStatus(p).map(_.getModificationTime) match {
-      case Array() => None
-      case ts      => Some(ts.max)
-    }
-  }
-
   /** M2 extended: schema DIFF between two retained snapshot versions —
     * the release-notes view of evolution (what a consumer broke on):
     * columns ADDED/DROPPED and TYPE_CHANGED with both types named, one
@@ -114,15 +95,6 @@ object Meta {
     import spark.implicits._
     rows.sortBy(_._1)
       .toDF("column", "change", "from_type", "to_type")
-  }
-
-  /** M4: row count + first-n preview in one pass over a cached scan
-    * (the reference runs count() and head() as two scans). */
-  def preview(df: DataFrame, n: Int = 5): (Long, Seq[Row]) = {
-    val rows = df.limit(n + 1).collect().toSeq
-    // avoid a full count when the caller only wants a bounded preview probe
-    val total = if (rows.size <= n) rows.size.toLong else df.count()
-    (total, rows.take(n))
   }
 
   /** A manifest commit lost its claim race: another writer committed
@@ -725,17 +697,5 @@ object Meta {
         throw new IllegalArgumentException(s"table $table not in commit: $versions"))
       readVersions(spark, s"$root/$table", vs, schema)
     }
-  }
-
-  /** Single-pass pipeline observability (`Dataset.observe`): named
-    * metrics collected DURING an action over one scan — no second
-    * count()/agg() pass over the input, which at 100 TB is the
-    * difference between free metrics and a doubled read. */
-  def observed(df: DataFrame, name: String,
-      metrics: (String, org.apache.spark.sql.Column)*): (DataFrame, org.apache.spark.sql.Observation) = {
-    require(metrics.nonEmpty, "observed requires at least one metric")
-    val obs = org.apache.spark.sql.Observation(name)
-    val exprs = metrics.map { case (alias, c) => c.as(alias) }
-    (df.observe(obs, exprs.head, exprs.tail: _*), obs)
   }
 }

@@ -57,11 +57,6 @@ object Cdc {
       .withColumn("status", when(parseFailed, lit("dlq")).otherwise(lit("valid")))
       .withColumn("reason", when(parseFailed, lit(reason)))
 
-  /** DLQ payload: original value + kafka ts + literal reason, re-serialized
-    * to JSON (kafka_DLQ.py:68-71 `to_json(named_struct(...))`). */
-  def dlqPayload(valueCol: Column, tsCol: Column, reason: String): Column =
-    to_json(struct(valueCol.as("value"), tsCol.as("kafka_ts"), lit(reason).as("reason")))
-
   /** Debezium CDC envelope `{payload: {before, after, op}}` — schema for a
     * given `after` row schema (util/verify_spark.py:92-100). */
   def debeziumSchema(after: StructType): StructType =
@@ -76,10 +71,6 @@ object Cdc {
   def debeziumAfter(df: DataFrame, jsonCol: String, after: StructType): DataFrame =
     df.withColumn("_env", from_json(col(jsonCol), debeziumSchema(after)))
       .select(col("_env.payload.after.*"), col("_env.payload.op").as("op"))
-
-  /** The reference's literal per-field style (F2), kept for surface parity. */
-  def debeziumField(jsonCol: Column, field: String, dt: DataType): Column =
-    get_json_object(jsonCol, s"$$.payload.after.$field").cast(dt)
 
   /** Wrap rows into a Debezium-style envelope JSON (fixture/producer side). */
   def debeziumEnvelope(afterCols: Seq[Column], op: String): Column =

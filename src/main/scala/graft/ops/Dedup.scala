@@ -24,6 +24,9 @@ import org.apache.spark.sql.functions._
   * returning, so repeated calls — in particular the per-batch
   * `nearDupPairsAgainst` ingest path — never accumulate stale
   * O(corpus-signature) caches in executor storage memory.
+  * [[exactSubstrBatch]] is a fold step whose caller's stage write
+  * materializes its outputs: it caches nothing, and its shared subtrees
+  * are lazy local checkpoints freed with the frames it returns.
   */
 object Dedup {
   import Text.{Mult, P}
@@ -1160,9 +1163,10 @@ object Dedup {
     * arrival the fold is BIT-identical to the one-shot rewrite (a
     * later doc can never steal ownership from an earlier one), which
     * is the q280 oracle pin. Returns (rewritten batch docs in the
-    * [[stripDupSpans]] shape, new owner rows to append to state) —
-    * both materialized batch-/repeat-sized, the survivor cache
-    * released before return (the object-doc contract). Re-applying an
+    * [[stripDupSpans]] shape, new owner rows to append to state) as
+    * lazy plans over batch-/repeat-sized local checkpoints: the
+    * caller's write materializes them (the object-doc contract's
+    * fold-step exception). Re-applying an
     * already-folded batch is a NO-OP by construction: every window
     * matches state and its owner site (inside the replayed batch) is
     * excluded from cover, so the rewrite reproduces itself and the
@@ -1171,31 +1175,30 @@ object Dedup {
   def exactSubstrBatch(standing: DataFrame, batch: DataFrame,
       lake: DataFrame, idCol: String, textCol: String, minLen: Int)
       : (DataFrame, DataFrame) = {
+    // Shared subtrees (toksB → cand/rewrite, win → candH/cand/owner
+    // anti-join, candH → cand/anti-join, cand → stateHit/matched/fresh,
+    // stateHit → matched/fresh) are lazy local checkpoints: computed once,
+    // by the first job that reads them, and freed with the returned
+    // frames. Unshared, broadcast builds re-ran the hash kernel and the
+    // lake re-tokenization (13.6 of 15.7 s of a warm q280 pass, r20).
+    // Over a plain filtered scan, toksB would also get a runtime bloom
+    // filter in the rewrite's join that scans the batch a second time.
     val toksB = batch.select(col(idCol), Text.tokens(col(textCol)).as("t"))
-    // The three subtrees below are each consumed by SEVERAL of the
-    // downstream plans (win → candH/cand/unique-owner anti-join, candH →
-    // cand/anti-join, stateHit → matched/fresh), and several of those
-    // consumers are BROADCAST sides whose build jobs run the subtree
-    // again from scratch — a warm q280 pass spent 13.6 of 15.7 s in 25
-    // broadcast-build jobs re-running the rolling-hash kernel and the
-    // lake re-tokenization (ProbeJobs, r20). Caching them makes every
-    // re-read O(cached bytes); all are batch-/repeat-sized, never
-    // corpus-sized, and all are released before return (the object-doc
-    // caching contract, same as `cand`).
+      .localCheckpoint(eager = false)
     val win = batch.select(col(idCol), posexplode(
         call_function("graft_window_hashes", col(textCol), lit(minLen))))
       .select(col(idCol), (col("pos") + 1).as("spos"), col("col").as("h"))
-      .cache()
+      .localCheckpoint(eager = false)
     // candidate hashes: repeated within the batch OR present in state
     val candH = win.groupBy("h").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("h")
       .unionByName(standing.select("h")).distinct()
-      .cache()
+      .localCheckpoint(eager = false)
     val cand = win.join(candH, Seq("h"))
       .join(toksB, Seq(idCol))
       .select(col(idCol), col("spos"), col("h"),
         concat_ws(" ", slice(col("t"), col("spos"), lit(minLen))).as("s"))
-      .cache()
+      .localCheckpoint(eager = false)
     // owner strings from the LAKE at the stored sites, hash-hits only —
     // tokenization sits ABOVE the join so only hit rows pay it (below
     // it, every lake doc would re-tokenize per fold)
@@ -1205,7 +1208,7 @@ object Dedup {
       .select(col("h"), col("own_id"), col("own_spos"),
         concat_ws(" ", slice(Text.tokens(col("own_text")),
           col("own_spos"), lit(minLen))).as("s"))
-      .cache()
+      .localCheckpoint(eager = false)
     // state-owned occurrences: covered unless the occurrence IS the
     // owner site (the at-least-once replay path re-folds its own docs)
     val matched = cand.join(stateHit, Seq("h", "s"))
@@ -1232,7 +1235,6 @@ object Dedup {
         explode(sequence(col("spos"), col("spos") + (minLen - 1))).as("p"))
       .groupBy(idCol)
       .agg(array_sort(collect_set(col("p"))).as("cps"))
-      .localCheckpoint()
     // new owners: every distinct window state has not seen — the
     // candidate-path minima plus the unique-hash windows (whose string
     // never materializes: a unique h absent from state matches nothing)
@@ -1242,11 +1244,6 @@ object Dedup {
       .unionByName(win.join(candH, Seq("h"), "left_anti")
         .select(col("h"), col(idCol).as("own_id"),
           col("spos").as("own_spos")))
-      .localCheckpoint()
-    cand.unpersist()
-    win.unpersist()
-    candH.unpersist()
-    stateHit.unpersist()
     (rewriteMinusCovered(toksB, covered, idCol), newOwners)
   }
 

@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   * jobs/silver/silver_attrition_builder.py:71-137).
   *
   * The reference enriches facts with 7 *nondeterministic* Python UDFs
-  * (`rand_marital`, `rand_age`, ...). We provide both:
-  *  - [[syntheticFeatures]] — deterministic, seeded, pure-arithmetic
-  *    (oracle-reproducible in any SQL engine; used by SparkEntry), and
-  *  - [[randomFeatures]] — the faithful nondeterministic variant.
+  * (`rand_marital`, `rand_age`, ...). [[syntheticFeatures]] draws the
+  * same domains deterministically, seeded off the key, so any SQL engine
+  * reproduces them and the oracle can check them.
   *
   * Everything stays inside whole-stage codegen: no UDFs on the
   * deterministic path, just integer arithmetic + element_at.
@@ -45,22 +44,6 @@ object Facts {
       .withColumn("overtime", pick(k, 5, Seq("Yes", "No")))
       .withColumn("last_appraisal_score", (det(k, 6, 5) + lit(1)).cast("int"))
       .withColumn("years_at_company", det(k, 7, 21).cast("int"))
-  }
-
-  /** Faithful nondeterministic variant of all 7 reference UDFs
-    * (silver_attrition_builder.py:71-77; rand-based, nondeterministic by
-    * nature). Not oracle-checkable; tests pin domains only. */
-  def randomFeatures(df: DataFrame): DataFrame = {
-    def pickR(choices: String*): Column =
-      element_at(array(choices.map(lit): _*),
-        (floor(rand() * choices.size) + 1).cast("int"))
-    df.withColumn("marital_status", pickR("Single", "Married"))
-      .withColumn("persona", pickR("Remote", "Office"))
-      .withColumn("travel_time_hrs", (floor(rand() * 3) + 1).cast("int"))
-      .withColumn("age", (floor(rand() * 34) + 22).cast("int"))
-      .withColumn("overtime", pickR("Yes", "No"))
-      .withColumn("last_appraisal_score", (floor(rand() * 5) + 1).cast("int"))
-      .withColumn("years_at_company", floor(rand() * 21).cast("int"))
   }
 
   /** Attrition fact rows (silver_attrition_builder.py:96-111): filter the

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.sql.Timestamp
-
 /** Watermark-incremental batch ingestion (SURVEY.md §2.1 S1, §2.10 T7,
   * §2.4 A1; reference: jobs/bronze/bronze_builder.py:78-128 pulls
   * `WHERE updated_at > <high-water-mark>` and advances the mark to
@@ -21,13 +19,6 @@ object Incremental {
   /** The incremental slice: rows strictly newer than the watermark. */
   def slice(df: DataFrame, tsCol: String, watermark: String): DataFrame =
     df.filter(col(tsCol) > lit(watermark).cast("timestamp_ntz"))
-
-  /** Next high-water mark = max(tsCol) of the slice (A1). Driver-side
-    * scalar by design — this is control flow, not data flow. */
-  def nextWatermark(slice: DataFrame, tsCol: String): Option[Timestamp] = {
-    val row = slice.agg(max(col(tsCol)).cast("timestamp").as("wm")).first()
-    Option(row.getTimestamp(0))
-  }
 
   /** Incremental materialized-view maintenance for a grouped
     * count + sum: fold a change feed (the 4-value preimage surface of

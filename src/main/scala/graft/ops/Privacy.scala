@@ -31,11 +31,6 @@ object Privacy {
   val Phone: Rule =
     Rule("phone", "[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}", "<PHONE>")
 
-  /** Long digit runs (account / national-id lookalikes). Apply AFTER
-    * Phone — rule order is part of the contract, later rules see
-    * earlier rules' replacements. */
-  val DigitRun: Rule = Rule("digit_run", "[0-9]{6,}", "<ID>")
-
   def matchCount(text: Column, rule: Rule): Column =
     regexp_count(text, lit(rule.pattern))
 
@@ -172,22 +167,6 @@ object Privacy {
         when(col("_m") > 1,
           col("_sumabs") * tDen <= den * tNum).otherwise(lit(true))
           .as("t_close"): _*)
-  }
-
-  /** Suppression pass: rows whose QID combination has fewer than `k`
-    * members get every QID column masked (generalization to `mask`),
-    * everything else passes through. Group size comes from a
-    * whole-partition window over the QID key — ONE shuffle, no audit
-    * join back, no second scan. QID columns come back as strings (the
-    * mask sentinel must inhabit the type). */
-  def suppress(df: DataFrame, qids: Seq[String], k: Int,
-      mask: String = "*"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val n = count(lit(1)).over(Window.partitionBy(qids.map(col): _*))
-    qids.foldLeft(df.withColumn("_qid_n", n)) { (acc, q) =>
-      acc.withColumn(q,
-        when(col("_qid_n") < k, lit(mask)).otherwise(col(q).cast("string")))
-    }.drop("_qid_n")
   }
 
   /** Gazetteer (deny-list) redaction: terms live in a TABLE maintained

@@ -26,10 +26,6 @@ object Sample {
   def hashGate(key: Column): Column =
     pmod(pmod(key.cast("long") * Mult, lit(P)), lit(100))
 
-  /** Uniform pct% deterministic sample keyed on `key`. */
-  def hashSample(df: DataFrame, key: String, pct: Int): DataFrame =
-    df.filter(hashGate(col(key)) < pct)
-
   /** Stratified deterministic sample: per-stratum percentage with a
     * default for unlisted strata. The CASE ladder keeps the whole gate a
     * scan-level predicate — no join against a rate table, no shuffle. */

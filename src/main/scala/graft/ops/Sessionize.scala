@@ -3,23 +3,19 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import java.time.LocalDateTime
 import java.time.temporal.ChronoUnit
 
-/** Gap-based sessionization of an event stream — the canonical custom
-  * stateful operator (beyond the reference's stateless streams; builder
-  * brief: `mapGroupsWithState` for custom state).
-  *
-  * Three implementations, one semantics:
-  *  - [[sessionizeWindows]] — lag + running-sum window functions; one
-  *    shuffle, no per-key buffering: the 100 TB batch path.
+/** Gap-based sessionization of an event stream (beyond the reference's
+  * stateless streams). A session starts at a user's first event or after
+  * a gap of more than `gapSeconds`; both forms share that semantics:
+  *  - [[labelSessions]] — lag + running-sum window functions label every
+  *    event with its session id; one shuffle, no per-key buffering: the
+  *    100 TB batch path.
   *  - [[sessionizeTyped]] — typed `groupByKey.flatMapGroups`; buffers one
   *    key's events in memory (fine for bounded per-user cardinality;
-  *    cross-checked against the window variant in tests).
-  *  - [[sessionizeStream]] — Structured Streaming `mapGroupsWithState`:
-  *    per-key session state carried across micro-batches, update mode.
+  *    cross-checked against the window labels in tests).
   */
 object Sessionize {
 
@@ -32,22 +28,15 @@ object Sessionize {
       session_end: LocalDateTime,
       n_events: Long)
 
-  /** Streaming session state for one user. */
-  final case class SessionState(
-      sessionId: Long,
-      start: LocalDateTime,
-      last: LocalDateTime,
-      n: Long)
-
   /** Exact microsecond gap — NOT ChronoUnit.SECONDS/date_diff('second'),
     * whose truncation/boundary-crossing semantics differ across engines. */
   private def gapExceeded(prev: LocalDateTime, cur: LocalDateTime, gapSeconds: Long) =
     ChronoUnit.MICROS.between(prev, cur) > gapSeconds * 1000000L
 
   /** Per-EVENT session labels: every input row comes back with its
-    * `session_id` (running count of gap boundaries per user) — the
-    * labeling step [[sessionizeWindows]] aggregates and path/funnel
-    * analyses consume row-level. Single shuffle on the user key. */
+    * `session_id` (running count of gap boundaries per user), which
+    * path/funnel analyses consume row-level. Single shuffle on the user
+    * key. */
   def labelSessions(events: DataFrame, tsCol: String, userCol: String,
       tieBreak: String, gapSeconds: Long): DataFrame = {
     val byUser = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieBreak))
@@ -62,18 +51,6 @@ object Sessionize {
       .withColumn("session_id", sum(col("_new_session")).over(running))
       .drop("_prev", "_new_session")
   }
-
-  /** Window-function variant: session boundary = first event or gap >
-    * `gapSeconds` from the previous event; session id = running count of
-    * boundaries per user. Single shuffle on user_id. */
-  def sessionizeWindows(events: DataFrame, tsCol: String, userCol: String,
-      tieBreak: String, gapSeconds: Long): DataFrame =
-    labelSessions(events, tsCol, userCol, tieBreak, gapSeconds)
-      .groupBy(col(userCol), col("session_id"))
-      .agg(
-        min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        count(lit(1)).as("n_events"))
 
   /** Typed variant: per-user fold over time-sorted events. */
   def sessionizeTyped(events: Dataset[Event], gapSeconds: Long): Dataset[SessionRow] = {
@@ -100,43 +77,4 @@ object Sessionize {
       out.result().iterator
     }
   }
-
-  /** Streaming variant: `flatMapGroupsWithState` carries the open session
-    * per user across micro-batches; each batch emits the FINAL row of
-    * every session that closed inside the batch plus the current open
-    * session's snapshot (update mode) — so no session's last events are
-    * lost when it closes mid-batch. A production variant would add an
-    * event-time timeout to finalize idle sessions; the state transition
-    * logic is shared with the batch fold. */
-  def sessionizeStream(events: Dataset[Event], gapSeconds: Long): Dataset[SessionRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionRow](
-        StreamOutputMode, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state: GroupState[SessionState]) =>
-          val sorted = batch.toArray.sortWith { (a, b) =>
-            val c = a.ts.compareTo(b.ts)
-            c < 0 || (c == 0 && a.event_id < b.event_id)
-          }
-          val out = Seq.newBuilder[SessionRow]
-          var s = state.getOption.orNull
-          sorted.foreach { e =>
-            if (s == null) s = SessionState(1L, e.ts, e.ts, 1L)
-            else if (gapExceeded(s.last, e.ts, gapSeconds)) {
-              out += SessionRow(uid, s.sessionId, s.start, s.last, s.n) // closed
-              s = SessionState(s.sessionId + 1, e.ts, e.ts, 1L)
-            } else s = s.copy(last = e.ts, n = s.n + 1)
-          }
-          if (s != null) {
-            state.update(s)
-            out += SessionRow(uid, s.sessionId, s.start, s.last, s.n) // open snapshot
-          }
-          out.result().iterator
-      }
-  }
-
-  /** Streaming output mode the stream variant is designed for. */
-  val StreamOutputMode: OutputMode = OutputMode.Update()
 }

@@ -20,7 +20,6 @@ import org.apache.spark.sql.functions._
   * plans a 1000-executor cluster runs without a cartesian anywhere.
   */
 object Similarity {
-  import Text.{Mult, P}
 
   /** Sequential-fold dot product of two double arrays — compiled kernel
     * (graft.functions.DotProduct), bit-identical to the
@@ -120,17 +119,11 @@ object Similarity {
           .as("mean_pairwise_cos"))
   }
 
-  /** Deterministic ±1 hyperplane component for (bit, dim) — same det-hash
-    * family as Facts.det so the oracle reproduces the planes exactly. */
-  private def planeSign(bit: Int, d: Column, dim: Int): Column =
-    when(pmod((lit(bit.toLong * dim) + d) * Mult, lit(P)) % 2 === 0, lit(1.0))
-      .otherwise(lit(-1.0))
-
   /** Deterministic Rademacher (±1) projection planes for a
     * Johnson–Lindenstrauss dimensionality reduction (Achlioptas 2003,
     * "Database-friendly random projections": ±1 entries preserve
     * pairwise distances like Gaussians do). Same det-hash family as
-    * [[planeSign]] so any engine reproduces the planes exactly;
+    * the LSH planes so any engine reproduces the planes exactly;
     * `family` offsets past the LSH tables' plane ids (g ≤ tables·nbits)
     * so the two never share a plane. */
   def rademacherPlanes(outDim: Int, dim: Int,
@@ -164,17 +157,6 @@ object Similarity {
   /** Single-table LSH bucket id (see [[lshBuckets]]). */
   def lshBucket(v: Column, nbits: Int, dim: Int): Column =
     element_at(lshBuckets(v, nbits, dim, 1), 1)
-
-  /** Interpreted HOF formula of [[lshBuckets]] for hash `table` — kept as
-    * the executable spec the compiled kernel is pinned against
-    * (KernelEquivalenceSpec); the hot paths call the kernel. */
-  def lshBucketHof(v: Column, nbits: Int, dim: Int, table: Int = 0): Column =
-    (0 until nbits).map { b =>
-      val proj = aggregate(
-        transform(v, (x, i) => x * planeSign(table * nbits + b, i, dim)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** One row per (vector, table) with the table's bucket as key. */
   private def withTableBuckets(df: DataFrame, vCol: String, nbits: Int,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -75,38 +75,4 @@ object Temporal {
       .filter(col(tsCol) >= col(startCol) && col(tsCol) <= col(endCol))
       .drop("_bin")
   }
-
-  /** NATIVE as-of join (the [[graft.plans.AsOfJoinExec]] physical
-    * operator): same left-outer as-of semantics as [[asOfJoin]] —
-    * greatest `right.tsUsCol <= left.tsUsCol` per key, rightTie breaks
-    * equal timestamps upward, unmatched left rows keep NULL right
-    * columns — but executed as a co-partitioned per-partition MERGE
-    * instead of the union+window composition: each side shuffles once
-    * in its OWN row shape and the merge holds one candidate right row,
-    * where the composition unions both inputs into a widened shape and
-    * drags a right-row struct through a window. Key and timestamp
-    * columns must be BIGINT (epoch micros).
-    *
-    * The user-visible surface is the declarative marker join the
-    * injected rule recognizes — this helper just writes it:
-    * `left.join(right, lkey === rkey && graft_asof(lts, rts, tie))`.
-    * Output = left columns ++ right columns (right side nullable).
-    *
-    * Determinism contract: (key, ts, tie) must UNIQUELY identify
-    * right rows. The operator totally orders candidates by
-    * (ts, tie) only; on full (key, ts, tie) duplicates with
-    * different payloads, the merge exec keeps the last row in the
-    * shuffle-sort's (unspecified) order among equals while the
-    * broadcast exec keeps the last in broadcast-array order — two
-    * valid answers under the contract, possibly different rows.
-    * Feed version tables keyed by (key, ts, tie) (the SCD2 shape,
-    * where tie is a version/sequence number) — or add a unique tie
-    * column — and both paths, and every rerun, return the identical
-    * payload. */
-  def asOfJoinNative(left: DataFrame, right: DataFrame, key: String,
-      tsUsCol: String, rightTie: String): DataFrame =
-    left.join(right,
-      left(key) === right(key) &&
-        call_function("graft_asof", left(tsUsCol), right(tsUsCol),
-          right(rightTie)))
 }

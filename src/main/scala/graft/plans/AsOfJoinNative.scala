@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   *
   * Surface: users write the declarative marker
   * `left.join(right, key === key && graft_asof(lts, rts, tie))`
-  * (see [[graft.ops.Temporal.asOfJoinNative]]); the injected optimizer
+  * (q197 writes it with `call_function`); the injected optimizer
   * rule rewrites the Join into [[AsOfJoinPlan]], and the injected
   * strategy plans [[AsOfJoinExec]]. The marker is deliberately
   * UNEVALUABLE: if the rewrite does not fire (rule excluded), the query
@@ -48,6 +48,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * `rightTie`; unmatched left rows keep NULL right columns
   * (left-outer). Keys and timestamps are BIGINT (epoch micros — the
   * engine's instant encoding); NULL keys or timestamps never match.
+  * (key, ts, tie) must uniquely identify right rows: on full duplicates
+  * the merge exec and the broadcast exec may each keep a different one.
   */
 case class AsOfMarker(leftTs: Expression, rightTs: Expression,
     rightTie: Expression) extends Expression with Unevaluable {

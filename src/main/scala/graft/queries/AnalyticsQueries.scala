@@ -506,8 +506,8 @@ object AnalyticsQueries {
         s"unexpected compaction: commit $commit3, files $before -> $after")
       // row-for-row losslessness of compactTable is pinned in MetaSpec;
       // re-counting both commits here would just double-scan per bench pass
-      graft.Meta.Versioned.readCommitted(spark, root, "customer", commit = Some(1L))
-        .select("c_custkey", "c_name", "c_acctbal")
+      graft.Meta.Versioned.readCommitted(spark, root, "customer", commit = Some(1L),
+        schema = Some(v1.schema.toNullable)).select("c_custkey", "c_name", "c_acctbal")
     },
 
     // ---- Statistical moments from exact DECIMAL power sums: built-in
@@ -639,8 +639,10 @@ object AnalyticsQueries {
         "customer" -> customer, "orders" -> orders))
       // torn write: staged version dir, crash before the manifest commit
       graft.Meta.Versioned.write(customer.limit(1), s"$root/customer")
-      val c = graft.Meta.Versioned.readCommitted(spark, root, "customer")
-      val o = graft.Meta.Versioned.readCommitted(spark, root, "orders")
+      val c = graft.Meta.Versioned.readCommitted(spark, root, "customer",
+        schema = Some(customer.schema.toNullable))
+      val o = graft.Meta.Versioned.readCommitted(spark, root, "orders",
+        schema = Some(orders.schema.toNullable))
       o.join(c, col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(
@@ -820,7 +822,8 @@ object AnalyticsQueries {
       val feed = graft.Meta.Versioned.changes(spark, root, "customer",
         fromCommit = 1L, toCommit = 2L, keys = Seq("c_custkey"))
       graft.Meta.Versioned.applyChanges(
-        graft.Meta.Versioned.readCommitted(spark, root, "customer", Some(1L)),
+        graft.Meta.Versioned.readCommitted(spark, root, "customer", Some(1L),
+          Some(c.schema.toNullable)),
         feed, keys = Seq("c_custkey"))
     },
 
@@ -977,7 +980,8 @@ object AnalyticsQueries {
         fromCommit = 1L, toCommit = 2L, keys = Seq("o_orderkey"),
         preimages = true)
       val seed = Incremental.aggSumCount(
-        graft.Meta.Versioned.readCommitted(spark, root, "orders", Some(1L)),
+        graft.Meta.Versioned.readCommitted(spark, root, "orders", Some(1L),
+          Some(v1.schema.toNullable)),
         Seq("o_custkey"), "o_totalprice")
       Incremental.maintainSumCount(seed, feed, Seq("o_custkey"), "o_totalprice")
         .select(col("o_custkey"), col("cnt"), col("total").cast("double"))

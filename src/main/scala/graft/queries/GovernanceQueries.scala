@@ -287,8 +287,7 @@ object GovernanceQueries {
     // sensitive attribute (account-balance band), and the two release
     // gates. One hash aggregate over the QID key; output is
     // O(|QID combos|) — the pre-release privacy report for a corpus
-    // carrying user metadata. The row-level suppression pass
-    // (Privacy.suppress) is pinned in GovernanceSpec.
+    // carrying user metadata.
     Q(
       "q95_k_anonymity",
       """SELECT c_nationkey, c_mktsegment,
@@ -755,8 +754,8 @@ object GovernanceQueries {
       val tbl = s"$root/docs"
       graft.Meta.Versioned.write(docs, tbl) // v1: pre-erasure snapshot
       graft.Meta.Versioned.write(docs.filter(!erased), tbl) // v2: erased
-      val v1 = graft.Meta.Versioned.read(spark, tbl, Some(1L))
-      val v2 = graft.Meta.Versioned.read(spark, tbl, Some(2L))
+      val v1 = graft.Meta.Versioned.read(spark, tbl, Some(1L), Some(docs.schema.toNullable))
+      val v2 = graft.Meta.Versioned.read(spark, tbl, Some(2L), Some(docs.schema.toNullable))
       def chunkCount(d: org.apache.spark.sql.DataFrame) = d
         .select(size(Text.chunkStarts(
           Text.tokens(col("text")), stride = 30)).cast("long").as("nch"),

@@ -1668,8 +1668,10 @@ object IndexQueries {
       // which names the squashed version alone; the post-compact snapshot
       // must equal the one-shot encode of the live corpus (the oracle's
       // side).
-      graft.Meta.Versioned.publishAll(root, Seq("codes" -> IndexLog.compact(log, "vec_id")))
-      graft.Meta.Versioned.readCommitted(spark, root, "codes")
+      val compacted = IndexLog.compact(log, "vec_id")
+      graft.Meta.Versioned.publishAll(root, Seq("codes" -> compacted))
+      graft.Meta.Versioned.readCommitted(spark, root, "codes",
+        schema = Some(compacted.schema.toNullable))
         .select(col("vec_id"), col("cid"))
     },
 

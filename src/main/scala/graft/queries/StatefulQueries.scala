@@ -82,7 +82,7 @@ object StatefulQueries {
 
     // ---- Gap sessionization (1-day gap) via the typed mapGroups fold;
     // the oracle replays it with lag + running-sum window functions —
-    // also exactly the shape of Sessionize.sessionizeWindows, the scale
+    // also exactly the shape of Sessionize.labelSessions, the scale
     // variant (equality of the two is pinned in tests).
     Q(
       "q32_sessionize",
@@ -715,9 +715,9 @@ object StatefulQueries {
       // union of deltas == last rewritten snapshot — but each batch
       // writes O(|delta|) instead of re-writing the corpus-sized
       // ownership table (at 100 TB, the difference between a micro-batch
-      // and a corpus rewrite per trigger). exactSubstrBatch materializes
-      // its kernels eagerly (caches + localCheckpoints), so foldOnce's
-      // replay guard is what spares the final-batch replay that work.
+      // and a corpus rewrite per trigger). exactSubstrBatch runs its
+      // kernels' shuffle stages at the call, so foldOnce's replay guard
+      // is what spares the final-batch replay that work.
       val Seq(_, res) = Streams.foldOnce(graft.Tmp.dir("graft-q280").toString,
           Seq(docs.filter(col("doc_id") <= cutoff),
           docs.filter(col("doc_id") > cutoff)),

@@ -16,7 +16,5 @@ package object queries {
   object Q {
     def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
       Q(name, fn, Some(oracle))
-    def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-      Q(name, fn, None)
   }
 }

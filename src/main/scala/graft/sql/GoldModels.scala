@@ -64,12 +64,4 @@ object GoldModels {
 
   /** Run a model the dbt way: SQL text → SparkSession.sql. */
   def run(spark: SparkSession, model: String): DataFrame = spark.sql(model)
-
-  /** M5: CTAS-style gold materialization — run the model and overwrite
-    * the gold table path (dbt materialized='table' + file_format/location,
-    * dbt_project.yml; Delta swapped for parquet per SURVEY §7.1). */
-  def materialize(spark: SparkSession, model: String, path: String): DataFrame = {
-    run(spark, model).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
 }

@@ -8,9 +8,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * successor API to `mapGroupsWithState` (SPARK-40434, state v2): typed
   * per-key state handles (ValueState/ListState/MapState) with explicit
   * TTL, timers, and schema-evolvable state, backed by the RocksDB state
-  * store. The engine keeps its older `flatMapGroupsWithState`
-  * sessionizer ([[graft.ops.Sessionize.sessionizeStream]]) for the v1
-  * surface; this file exercises the v2 surface the same way a
+  * store. This file exercises the v2 surface the same way a
   * production migration would — one operator, same exactly-once
   * semantics, state bounded by key cardinality.
   *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Structured Streaming layer (SURVEY.md §2.1 S4/K2-K6, §2.10 T1-T6;
+/** Structured Streaming layer (SURVEY.md §2.1 S4/K2/K4/K6, §2.10 T1-T5;
   * reference: kafka/consumer/kafka_DLQ.py:38-93,
   * kafka_consumer_contract_signing_events_DLQ.py:69-158,
   * util/verify_spark.py:108-114).
@@ -285,27 +285,6 @@ object Streams {
       .fold(Long.MinValue)(_.asInstanceOf[Long])
   }
 
-  /** S4 with the EXACT Kafka-source column contract — key/value binary,
-    * topic, partition, offset, timestamp, timestampType (the row shape of
-    * `format("kafka")`, kafka_DLQ.py:38-46). Downstream code written
-    * against this adapter runs unchanged when the file source is swapped
-    * for the real connector; `keyCol`/`valueCol` name columns of the
-    * staged JSON-lines input. `offset` is an OPAQUE stand-in (a row hash —
-    * monotone counters aren't expressible on a streaming frame); real
-    * offsets come from the connector. */
-  def kafkaShapedSource(spark: SparkSession, dir: String, inputSchema: StructType,
-      keyCol: String, valueCol: String, tsCol: String,
-      topic: String): DataFrame =
-    spark.readStream.schema(inputSchema).json(dir)
-      .select(
-        col(keyCol).cast("string").cast("binary").as("key"),
-        col(valueCol).cast("string").cast("binary").as("value"),
-        lit(topic).as("topic"),
-        spark_partition_id().as("partition"),
-        xxhash64(col(keyCol), col(valueCol), col(tsCol)).as("offset"),
-        col(tsCol).cast("timestamp").as("timestamp"),
-        lit(0).as("timestampType"))
-
   /** K2: exactly-once micro-batch append to a parquet table with a
     * checkpoint (kafka_DLQ.py:59-63; parquet for Delta per SURVEY §7.1). */
   def parquetAppend(df: DataFrame, path: String, checkpoint: String,
@@ -320,9 +299,7 @@ object Streams {
 
   /** K4: invalid rows as the DLQ body `{value, kafka_ts, reason}`
     * (kafka_DLQ.py:68-71) appended as JSON-lines, one file per micro-batch
-    * (kafka_DLQ.py:80-90). The json sink serializes the columns itself; a
-    * Kafka DLQ (K3) would instead send `Cdc.dlqPayload` pre-serialized as
-    * the message `value` — same body either way. */
+    * (kafka_DLQ.py:80-90); the json sink serializes the columns itself. */
   def jsonDlq(invalid: DataFrame, valueCol: String, tsCol: String, reason: String,
       path: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(), name: String = null): StreamingQuery = {
@@ -336,31 +313,6 @@ object Streams {
       .trigger(trigger)
     (if (name != null) w.queryName(name) else w).start()
   }
-
-  /** K5: console tee of a stream, debug aid
-    * (kafka_consumer_contract_signing_events_DLQ.py:99-103). */
-  def consoleTee(df: DataFrame, numRows: Int = 10,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream.format("console")
-      .option("numRows", numRows)
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
-
-  /** K6: `foreachBatch` SCD2 upsert into a parquet target
-    * (util/verify_spark.py:108-114 — the lost `upsert_department_to_delta`
-    * body, reconstructed from the dim_department output schema). */
-  def scd2Sink(source: DataFrame, targetPath: String, pk: String,
-      trackedCols: Seq[String], checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scd2Upsert(batch, targetPath, pk, trackedCols)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
 
   /** One SCD2 micro-batch: merge into the parquet target (read with the
     * schema the merge writes, so no job infers it) and rewrite it.
@@ -383,7 +335,6 @@ object Streams {
   /** Handles for the canonical two-sink DLQ pipeline (kafka_DLQ.py:38-93). */
   final case class DlqPipeline(valid: StreamingQuery, dlq: StreamingQuery) {
     def awaitAll(): Unit = { valid.awaitTermination(); dlq.awaitTermination() }
-    def stopAll(): Unit = { valid.stop(); dlq.stop() }
   }
 
   /** The reference's canonical consumer: raw stream → schema-validated
@@ -400,18 +351,4 @@ object Streams {
       dlq = jsonDlq(s.invalid, jsonCol, tsCol, "schema_parse_failed",
         dlqPath, s"$checkpointRoot/dlq", trigger, name = "dlq_pipeline_dlq"))
   }
-
-  /** T6: one status line per active query (the reference polls
-    * spark.streams.active / q.status / q.lastProgress,
-    * kafka_consumer_contract_signing_events_DLQ.py:143-155). */
-  def activeSummaries(spark: SparkSession): Seq[String] =
-    spark.streams.active.toSeq.map { q =>
-      val rows = Option(q.lastProgress).map(_.numInputRows).getOrElse(0L)
-      s"${Option(q.name).getOrElse(q.id.toString)}: active=${q.isActive} " +
-        s"status=${q.status.message} lastBatchRows=$rows"
-    }
-
-  /** T6: block until any active query terminates (kafka_DLQ.py:93). */
-  def awaitAnyTermination(spark: SparkSession, timeoutMs: Long): Boolean =
-    spark.streams.awaitAnyTermination(timeoutMs)
 }

@@ -248,8 +248,8 @@ class PlansSpec extends SparkSuite {
 
   test("deterministic sample gate stays a scan-level pushed filter") {
     // no Exchange anywhere: sampling must not shuffle
-    val p = plan(graft.ops.Sample.hashSample(
-      Tables.documents(spark, sfDir()), "doc_id", 25))
+    val p = plan(Tables.documents(spark, sfDir())
+      .filter(graft.ops.Sample.hashGate(col("doc_id")) < 25))
     assert(!p.contains("Exchange"), s"sampling introduced a shuffle:\n$p")
   }
 

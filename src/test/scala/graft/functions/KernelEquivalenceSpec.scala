@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSuite
 import graft.ops.{Dedup, Text}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Bit-identity pins: each compiled kernel must produce EXACTLY the value
@@ -159,7 +160,7 @@ class KernelEquivalenceSpec extends SparkSuite {
       val kernel = df.select(
         call_function("graft_lsh_buckets", col("v"), lit(4), lit(dim), lit(4)).as("bk"))
       val hof = df.select(array((0 until 4).map(t =>
-        graft.ops.Similarity.lshBucketHof(col("v"), 4, dim, t)): _*).as("bk"))
+        KernelEquivalenceSpec.lshBucketHof(col("v"), 4, dim, t)): _*).as("bk"))
       assert(kernel.as[Seq[Long]].collect().toSeq == hof.as[Seq[Long]].collect().toSeq,
         s"len=$len")
     }
@@ -275,4 +276,25 @@ class KernelEquivalenceSpec extends SparkSuite {
       .collect().head
     assert(n.isNullAt(0), "NULL input must stay NULL")
   }
+}
+
+object KernelEquivalenceSpec {
+  import graft.ops.Text.{Mult, P}
+
+  /** Deterministic ±1 hyperplane component for (bit, dim) — same det-hash
+    * family as Facts.det so the oracle reproduces the planes exactly. */
+  private def planeSign(bit: Int, d: Column, dim: Int): Column =
+    when(pmod((lit(bit.toLong * dim) + d) * Mult, lit(P)) % 2 === 0, lit(1.0))
+      .otherwise(lit(-1.0))
+
+  /** Interpreted HOF formula of `Similarity.lshBuckets` for hash `table` —
+    * kept as the executable spec the compiled kernel is pinned against;
+    * the hot paths call the kernel. */
+  def lshBucketHof(v: Column, nbits: Int, dim: Int, table: Int = 0): Column =
+    (0 until nbits).map { b =>
+      val proj = aggregate(
+        transform(v, (x, i) => x * planeSign(table * nbits + b, i, dim)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj > 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
 }

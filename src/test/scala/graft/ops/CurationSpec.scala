@@ -62,8 +62,8 @@ class CurationSpec extends SparkSuite {
 
   test("hashSample is reproducible and partitioning-independent") {
     val df = (1L to 10000L).toDF("id")
-    val a = Sample.hashSample(df, "id", 25).collect().map(_.getLong(0)).toSet
-    val b = Sample.hashSample(df.repartition(13), "id", 25)
+    val a = df.filter(Sample.hashGate(col("id")) < 25).collect().map(_.getLong(0)).toSet
+    val b = df.repartition(13).filter(Sample.hashGate(col("id")) < 25)
       .collect().map(_.getLong(0)).toSet
     assert(a == b)
     // the multiplicative gate is uniform-ish: 25% ± 2 points at n=10k

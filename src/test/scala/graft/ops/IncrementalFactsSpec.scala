@@ -15,8 +15,11 @@ class IncrementalFactsSpec extends SparkSuite {
   test("Incremental.nextWatermark: max of slice; None on empty") {
     val df = Seq("2024-01-01 00:00:00").toDF("s")
       .withColumn("ts", col("s").cast("timestamp_ntz")).drop("s")
-    assert(Incremental.nextWatermark(df, "ts").get.toString == "2024-01-01 00:00:00.0")
-    assert(Incremental.nextWatermark(df.limit(0), "ts").isEmpty)
+    // the next watermark is max(ts) of the slice, read on the driver
+    def nextWatermark(slice: org.apache.spark.sql.DataFrame) =
+      Option(slice.agg(max(col("ts")).cast("timestamp")).first().getTimestamp(0))
+    assert(nextWatermark(df).get.toString == "2024-01-01 00:00:00.0")
+    assert(nextWatermark(df.limit(0)).isEmpty)
   }
 
   test("Facts.det: in range, deterministic, and safe for 64-bit keys") {

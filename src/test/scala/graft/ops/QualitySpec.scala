@@ -77,12 +77,4 @@ class QualitySpec extends SparkSuite {
       "foreign_key:tag" -> 2, // 'y' and NULL tag rows
       "not_null:amount" -> 1))
   }
-
-  test("randomFeatures: all 7 features exist with valid domains") {
-    val out = Facts.randomFeatures(Seq(1L, 2L, 3L).toDF("id"))
-    assert(out.columns.toSeq == Seq("id", "marital_status", "persona", "travel_time_hrs",
-      "age", "overtime", "last_appraisal_score", "years_at_company"))
-    assert(out.filter(!col("persona").isin("Remote", "Office")).count() == 0)
-    assert(out.filter(col("last_appraisal_score") < 1 || col("last_appraisal_score") > 5).count() == 0)
-  }
 }

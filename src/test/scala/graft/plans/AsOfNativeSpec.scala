@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSuite
-import graft.ops.Temporal
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins for the native as-of join (AsOfMarker → AsOfRewrite →
@@ -35,8 +35,14 @@ class AsOfNativeSpec extends SparkSuite {
     (3L, 10L) -> None,
     (4L, 100L) -> None)
 
+  /** The declarative marker join the injected rule rewrites into the
+    * native operator (the surface q197 writes). */
+  private def asOf(left: DataFrame, right: DataFrame): DataFrame =
+    left.join(right, left("k") === right("k") &&
+      call_function("graft_asof", left("ts"), right("ts"), right("tie")))
+
   private def run(lParts: Int, rParts: Int): Map[(Long, Long), Option[String]] =
-    Temporal.asOfJoinNative(leftDf(lParts), rightDf(rParts), "k", "ts", "tie")
+    asOf(leftDf(lParts), rightDf(rParts))
       .select(col("lval"), col("rval"))
       .collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
@@ -70,7 +76,7 @@ class AsOfNativeSpec extends SparkSuite {
   test("strategy picks by stats like JoinSelection: small right side " +
       "broadcasts (left never shuffles), threshold off falls back to " +
       "the co-partitioned merge with exchanges and sorts") {
-    val bdf = Temporal.asOfJoinNative(leftDf(3), rightDf(3), "k", "ts", "tie")
+    val bdf = asOf(leftDf(3), rightDf(3))
     bdf.collect()
     val bp = bdf.queryExecution.executedPlan.toString()
     assert(bp.contains("AsOfBroadcast"), s"expected the broadcast exec:\n$bp")
@@ -79,7 +85,7 @@ class AsOfNativeSpec extends SparkSuite {
     assert(!bp.contains("Exchange hashpartitioning"),
       s"broadcast path must not shuffle the left side:\n$bp")
     withThreshold("-1") {
-      val df = Temporal.asOfJoinNative(leftDf(3), rightDf(3), "k", "ts", "tie")
+      val df = asOf(leftDf(3), rightDf(3))
       df.collect()
       val p = df.queryExecution.executedPlan.toString()
       assert(p.contains("AsOfJoin "), s"expected the merge exec:\n$p")
@@ -104,7 +110,7 @@ class AsOfNativeSpec extends SparkSuite {
         lit(1L).as("tie"), col("id").as("rval"))
     val l = spark.range(0, 100)
       .select((col("id") % 20).as("k"), (col("id") * 5000).as("ts"))
-    val df = Temporal.asOfJoinNative(l, bigRight, "k", "ts", "tie")
+    val df = asOf(l, bigRight)
     df.collect()
     val p = df.queryExecution.executedPlan.toString()
     assert(p.contains("AsOfJoin ") && !p.contains("AsOfBroadcast"),
@@ -112,7 +118,7 @@ class AsOfNativeSpec extends SparkSuite {
     val key = "spark.graft.asof.broadcastRowLimit"
     spark.conf.set(key, "1000000")
     try {
-      val bdf = Temporal.asOfJoinNative(l, bigRight, "k", "ts", "tie")
+      val bdf = asOf(l, bigRight)
       bdf.collect()
       val bp = bdf.queryExecution.executedPlan.toString()
       assert(bp.contains("AsOfBroadcast"),
@@ -129,8 +135,7 @@ class AsOfNativeSpec extends SparkSuite {
         rnd.nextInt(5).toLong))
     val l = ls.toDF("k", "ts", "lid")
     val r = rs.toDF("k", "ts", "rid", "tie")
-    val native = Temporal
-      .asOfJoinNative(l, r, "k", "ts", "tie")
+    val native = asOf(l, r)
       .select(col("lid"), col("rid"))
       .collect().map(x => x.getLong(0) ->
         (if (x.isNullAt(1)) -1L else x.getLong(1))).toMap

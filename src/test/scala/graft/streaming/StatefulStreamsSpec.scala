@@ -279,38 +279,6 @@ class StatefulStreamsSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("mapGroupsWithState sessionization: state carries across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, Long)]
-    val events = ms.toDF().toDF("user_id", "ts0", "event_id")
-      .withColumn("ts", col("ts0").cast("timestamp_ntz")).drop("ts0")
-      .as[Sessionize.Event]
-    val q = Sessionize.sessionizeStream(events, gapSeconds = 3600)
-      .writeStream.format("memory").queryName("graft_session_test")
-      .outputMode(Sessionize.StreamOutputMode.toString.toLowerCase).start()
-    try {
-      ms.addData((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1L),
-        (1L, Timestamp.valueOf("2024-01-01 10:30:00"), 2L))
-      q.processAllAvailable()
-      val s1 = spark.table("graft_session_test")
-        .select("session_id", "n_events").as[(Long, Long)].collect().last
-      assert(s1 == ((1L, 2L)), "one open session with 2 events")
-      // within the gap → same session grows across the batch boundary
-      ms.addData((1L, Timestamp.valueOf("2024-01-01 11:00:00"), 3L))
-      q.processAllAvailable()
-      // one batch holding BOTH a continuing event and a far event: the
-      // closing session's FINAL row must be emitted alongside the new
-      // session's snapshot (a session closing mid-batch loses nothing)
-      ms.addData((1L, Timestamp.valueOf("2024-01-01 11:30:00"), 4L),
-        (1L, Timestamp.valueOf("2024-01-02 10:00:00"), 5L))
-      q.processAllAvailable()
-      val all = spark.table("graft_session_test")
-        .select("session_id", "n_events").as[(Long, Long)].collect().toSeq
-      assert(all.contains((1L, 4L)), "closed session 1 emitted its final 4-event row")
-      assert(all.last == ((2L, 1L)), "gap exceeded -> new session")
-    } finally q.stop()
-  }
-
   test("typed sessionization equals the window-function variant on the fixture") {
     val ev = graft.Tables.events(spark, sfDir("0.001"))
     import spark.implicits._
@@ -320,7 +288,10 @@ class StatefulStreamsSpec extends SparkSuite {
       .toDF()
       .select("user_id", "session_start", "session_end", "n_events")
     val windowed = Sessionize
-      .sessionizeWindows(ev, "ts", "user_id", "event_id", 86400)
+      .labelSessions(ev, "ts", "user_id", "event_id", 86400)
+      .groupBy(col("user_id"), col("session_id"))
+      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"))
       .select("user_id", "session_start", "session_end", "n_events")
     assert(typed.collect().map(_.toString).sorted.toSeq ==
       windowed.collect().map(_.toString).sorted.toSeq)

@@ -9,9 +9,8 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Streaming semantics: DLQ fork (T5), exactly-once checkpoint replay
-  * (T2/T3), foreachBatch SCD2 (K6), console tee (K5) and multi-query
-  * monitoring (T6) — reference: kafka/consumer/kafka_DLQ.py:38-93,
-  * util/verify_spark.py:108-114. */
+  * (T2/T3) and foreachBatch SCD2 (K6) — reference:
+  * kafka/consumer/kafka_DLQ.py:38-93, util/verify_spark.py:108-114. */
 class StreamsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -97,78 +96,6 @@ class StreamsSpec extends SparkSuite {
       val after3 = spark.read.parquet(target.toString)
       assert(after3.filter(col("id") === 1 && col("is_current")).count() == 1)
     } finally q.stop()
-  }
-
-  test("kafkaShapedSource: exact Kafka-source column contract (S4)") {
-    val in = tmp("stream-in"); val cp = tmp("cp")
-    writeInput(in, "b.json", Seq(line(1, """{"k": 1}""")))
-    val src = Streams.kafkaShapedSource(spark, in.toString, eventSchema,
-      keyCol = "id", valueCol = "payload", tsCol = "kafka_ts", topic = "hr.events")
-    assert(src.schema.map(f => (f.name, f.dataType.simpleString)) == Seq(
-      "key" -> "binary", "value" -> "binary", "topic" -> "string",
-      "partition" -> "int", "offset" -> "bigint",
-      "timestamp" -> "timestamp", "timestampType" -> "int"))
-    // the canonical consumer's first step runs unchanged on this shape
-    // (kafka_DLQ.py:46 selectExpr CAST value AS STRING)
-    val q = src.selectExpr("CAST(value AS STRING) AS json_str", "topic")
-      .writeStream.format("memory").queryName("graft_kafka_shape")
-      .outputMode("append")
-      .option("checkpointLocation", cp.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("graft_kafka_shape").collect()
-    assert(rows.length == 1)
-    assert(rows.head.getString(0).contains(""""k": 1"""))
-    assert(rows.head.getString(1) == "hr.events")
-  }
-
-  test("K3 round-trip: dlqPayload published to a kafka-shaped topic reads back intact") {
-    // the Kafka SINK direction, closed testably without the connector jar:
-    // PRODUCE the DLQ message exactly as it would go to Kafka — value =
-    // Cdc.dlqPayload serialized body, key = event id (kafka_DLQ.py:66-79) —
-    // into a file-backed topic, then CONSUME it back through
-    // kafkaShapedSource's exact connector column contract and recover the
-    // {value, kafka_ts, reason} body.
-    val in = tmp("stream-in"); val topic = tmp("topic")
-    val cp = tmp("cp"); val cp2 = tmp("cp2")
-    writeInput(in, "b.json", Seq(line(1, """{"k": 1}"""), line(2, "not json")))
-    val raw = Streams.jsonFileSource(spark, in.toString, eventSchema)
-    val invalid = graft.ops.Cdc.split(raw, "payload", innerSchema).invalid
-    val produce = invalid.select(
-        col("id").cast("string").as("msg_key"),
-        graft.ops.Cdc.dlqPayload(col("payload"), col("kafka_ts"),
-          "schema_parse_failed").as("msg_value"),
-        col("kafka_ts").as("msg_ts"))
-      .writeStream.format("json")
-      .option("path", topic.toString)
-      .option("checkpointLocation", cp.toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    produce.awaitTermination()
-    val topicSchema = StructType(Seq(
-      StructField("msg_key", StringType),
-      StructField("msg_value", StringType),
-      StructField("msg_ts", StringType)))
-    val src = Streams.kafkaShapedSource(spark, topic.toString, topicSchema,
-      keyCol = "msg_key", valueCol = "msg_value", tsCol = "msg_ts", topic = "hr.dlq")
-    val body = StructType(Seq(
-      StructField("value", StringType),
-      StructField("kafka_ts", StringType),
-      StructField("reason", StringType)))
-    val consume = src
-      .select(from_json(col("value").cast("string"), body).as("b")).select("b.*")
-      .writeStream.format("memory").queryName("graft_dlq_roundtrip")
-      .option("checkpointLocation", cp2.toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    consume.awaitTermination()
-    val rows = spark.table("graft_dlq_roundtrip").collect()
-    assert(rows.length == 1)
-    assert(rows.head.getAs[String]("value") == "not json")
-    assert(rows.head.getAs[String]("reason") == "schema_parse_failed")
-    assert(rows.head.getAs[String]("kafka_ts") == "2024-01-01T00:00:02")
   }
 
   test("maxFilesPerTrigger: input drains over multiple micro-batches (T1/T2)") {
@@ -299,24 +226,6 @@ class StreamsSpec extends SparkSuite {
     val fin = spark.read.parquet(target.toString).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fin == Map(2L -> "B", 3L -> "c", 4L -> "D"), s"got $fin")
-  }
-
-  test("console tee + multi-query monitoring (K5/T6)") {
-    val in = tmp("stream-in"); val valid = tmp("valid"); val dlq = tmp("dlq"); val cp = tmp("cp")
-    writeInput(in, "b.json", Seq(line(1, """{"k": 1}""")))
-    val raw = Streams.jsonFileSource(spark, in.toString, eventSchema)
-    val p = Streams.dlqPipeline(raw, "payload", "kafka_ts", innerSchema,
-      valid.toString, dlq.toString, cp.toString)
-    val tee = Streams.consoleTee(
-      Streams.jsonFileSource(spark, in.toString, eventSchema))
-    try {
-      val summaries = Streams.activeSummaries(spark)
-      assert(summaries.nonEmpty)
-      assert(summaries.exists(_.contains("dlq_pipeline_valid")))
-      // awaitAnyTermination returns once the fastest AvailableNow query ends
-      assert(Streams.awaitAnyTermination(spark, 60000))
-    } finally { p.stopAll(); tee.stop() }
-    spark.streams.resetTerminated()
   }
 
   test("FileFeed: executor-side staging reproduces MemoryStream batch boundaries") {
